@@ -1,19 +1,23 @@
-"""Blocked (tiled) execution of pairwise score operators.
+"""The fold executor: one path choice for every tile fold.
 
-The reference's ``chunker`` enumerates the cross product of row tiles
-(reference attention.py:46-57: 256-row query tiles x 256-row key tiles;
-runtime-tunable in C++, gemm_map_reduce_attention.cpp:82-83).  The Spark
-equivalent is a join of block tables on block ids: each (left-block,
-right-block) pair becomes one ``applyInPandas`` group whose NumPy kernel
-plays ``proj_fold``; the per-pair partial accumulators are then merged
-per output row by an associative SQL aggregate (``binary_reduce``).
+Each op declares the reference's contract (core.py:15-64) once: a NumPy
+``kernel`` (``proj_fold`` over a tile), a ``merge`` (``binary_reduce``:
+one ``groupBy("i")`` returning the partial's own schema) and a
+``finish`` (partial rows -> output).  :func:`fold` resolves
+``broadcast="auto"`` from the right side's footer row count and runs:
 
-Shuffle accounting (the thing that matters at 100 TB): left rows are
-replicated once per right block and vice versa — the textbook blocked
-matmul communication bound O(|L| * nrb + |R| * nlb).  Choosing block
-sizes ~sqrt(memory) minimizes it; when the right side fits in executor
-memory, :func:`broadcast_right_partials` degenerates to replication
-factor 1 (a narrow map, no shuffle at all).
+- **broadcast path** — the right side is collected, broadcast, and one
+  narrow ``mapInPandas`` scores each left row against ALL of it, so
+  every partial is already final: ``finish`` runs on the kernel rows,
+  with no merge, shuffle or aggregate.
+- **tiled path** — the ``chunker``: a join of block tables on block ids
+  makes each (left-block, right-block) pair one ``applyInPandas``
+  group (reference attention.py:46-57); ``merge`` folds the per-tile
+  partials per row before ``finish``.  Left rows replicate once per
+  right block and vice versa, O(|L| * nrb + |R| * nlb) shuffle.
+
+Passes that scatter-add into both sides (the backwards' second sweep)
+take :func:`tile_partials` and merge on both paths.
 """
 
 from __future__ import annotations
@@ -26,12 +30,30 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gemmsql.numerics import collected_lse
+
 # kernel(left_ids, left_mat, left_extra, right_ids, right_mat) -> pdf
 Kernel = Callable[[np.ndarray, np.ndarray, pd.DataFrame, np.ndarray, np.ndarray], pd.DataFrame]
+Step = Callable[[DataFrame], DataFrame]
+
+BROADCAST_RIGHT_MAX_ROWS = 262_144  # ~128 MB at 64 dims of float64
 
 
-def _to_mat(series) -> np.ndarray:
+def vec_mat(series) -> np.ndarray:
+    """A vector column (pandas Series of arrays) as a float64 matrix."""
     return np.asarray(series.tolist(), dtype=np.float64)
+
+
+def use_broadcast(
+    broadcast: bool | str, frame: DataFrame, max_rows: int = BROADCAST_RIGHT_MAX_ROWS
+) -> bool:
+    """``"auto"`` -> ``frame`` has at most ``max_rows`` rows (footer
+    metadata when the plan allows, else one ``count()`` job)."""
+    if broadcast == "auto":
+        from gemmsql.stats import rows_for_choice
+
+        return rows_for_choice(frame) <= max_rows
+    return bool(broadcast)
 
 
 def blocked_partials(
@@ -75,10 +97,10 @@ def blocked_partials(
             return pd.DataFrame(columns=[f.split()[0] for f in partial_schema.split(",")])
         return kernel(
             lp["i"].to_numpy(),
-            _to_mat(lp["vec"]),
+            vec_mat(lp["vec"]),
             lp[extra].reset_index(drop=True),
             rp["i"].to_numpy(),
-            _to_mat(rp["vec"]),
+            vec_mat(rp["vec"]),
         )
 
     return both.groupBy("_lb", "_rb").applyInPandas(
@@ -99,7 +121,7 @@ def broadcast_right_partials(
     side fits in memory; e.g. a class-embedding table)."""
     spark = left.sparkSession
     rp = right.select("i", "vec").toPandas()
-    b = spark.sparkContext.broadcast((rp["i"].to_numpy(), _to_mat(rp["vec"])))
+    b = spark.sparkContext.broadcast((rp["i"].to_numpy(), vec_mat(rp["vec"])))
     extra = list(left_extra)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -108,15 +130,85 @@ def broadcast_right_partials(
             if len(pdf) == 0:
                 continue
             yield kernel(
-                pdf["i"].to_numpy(), _to_mat(pdf["vec"]),
+                pdf["i"].to_numpy(), vec_mat(pdf["vec"]),
                 pdf[extra].reset_index(drop=True), rids, rmat,
             )
 
     from gemmsql.ops.gate import _spread
 
-    # byte-light/compute-heavy spread (r18): the broadcast path only
-    # runs for bounded tables whose scan is ONE partition — without
-    # the fan-out the kernel serializes on a single core
+    # byte-light/compute-heavy spread (r18): a bounded left scan is
+    # often ONE partition, which would serialize the kernel on one core
     return _spread(left.select("i", "vec", *extra)).mapInPandas(
         run, partial_schema
     )
+
+
+def tile_partials(
+    left: DataFrame,
+    right: DataFrame,
+    kernel: Kernel,
+    partial_schema: str,
+    *,
+    broadcast: bool,
+    block: int,
+    left_extra: tuple[str, ...] = (),
+) -> DataFrame:
+    """The executor's partials step (``chunker`` + ``proj_fold``): kernel
+    rows from the broadcast map, or from every ``block``-row tile pair."""
+    if broadcast:
+        return broadcast_right_partials(
+            left, right, kernel, partial_schema, left_extra=left_extra
+        )
+    return blocked_partials(
+        left, right, kernel, partial_schema,
+        left_block=block, right_block=block, left_extra=left_extra,
+    )
+
+
+def fold(
+    left: DataFrame,
+    right: DataFrame,
+    kernel: Kernel,
+    partial_schema: str,
+    *,
+    merge: Step,
+    finish: Step | None = None,
+    broadcast: bool | str = "auto",
+    block: int = 4096,
+    left_extra: tuple[str, ...] = (),
+    max_rows: int = BROADCAST_RIGHT_MAX_ROWS,
+) -> DataFrame:
+    """Run one tile fold: partials, ``merge`` on the tiled path only,
+    then ``finish`` (identity when None).  ``"auto"`` sizes ``right``
+    against ``max_rows``.  The kernel emits ONE partial per left row
+    per call."""
+    bcast = use_broadcast(broadcast, right, max_rows)
+    parts = tile_partials(
+        left, right, kernel, partial_schema,
+        broadcast=bcast, block=block, left_extra=left_extra,
+    )
+    if not bcast:
+        parts = merge(parts)
+    return parts if finish is None else finish(parts)
+
+
+def lse_merge(z: str, weighted: str | None = None) -> Step:
+    """Merge of log-space partials ``(i, z[, weighted])`` in ONE
+    ``groupBy("i")``: ``z = logsumexp_b z_b``, ``weighted = sum_b
+    e^{z_b - z} weighted_b`` (reference entropy.py:18-23), folded
+    in-row over the collected partials (numerics.collected_lse)."""
+    fields = [z] if weighted is None else [z, weighted]
+
+    def merge(parts: DataFrame) -> DataFrame:
+        g = parts.groupBy("i").agg(
+            F.collect_list(F.struct(*fields)).alias("ps")
+        ).withColumn(z, collected_lse(F.col("ps"), z))
+        if weighted is None:
+            return g.select("i", z)
+        w = F.aggregate(
+            F.col("ps"), F.lit(0.0),
+            lambda acc, p: acc + p[weighted] * F.exp(p[z] - F.col(z)),
+        )
+        return g.select("i", z, w.alias(weighted))
+
+    return merge

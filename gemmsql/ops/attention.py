@@ -11,10 +11,12 @@ Two physical strategies, identical results:
   Catalyst hash aggregate; the full M x N score matrix exists only as a
   shuffled stream, never materialized per-node (the reference's whole
   point, README.md:19-21, holds natively).
-- :func:`attention_blocked` — the tiled fast path: per (query-block,
-  kv-block) NumPy online-softmax partials (reference attention.py:5-9)
-  merged per row in log space (the FlashAttention merge,
-  attention.py:31-36) by SQL aggregates.
+- :func:`attention_blocked` — the fold-executor path
+  (:func:`gemmsql.ops._blocked.fold`): NumPy online-softmax partials
+  (reference attention.py:5-9) per query row against a broadcast KV
+  side, or per (query-block, kv-block) tile pair merged per row in log
+  space (the FlashAttention merge, attention.py:31-36) — the merge runs
+  only on the tiled path.
 
 Output is COO ``(i, d, val)`` — row i of the M x D result, dimension d.
 """
@@ -28,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gemmsql.numerics import collected_lse, group_logsumexp
-from gemmsql.ops._blocked import blocked_partials, broadcast_right_partials
+from gemmsql.ops._blocked import fold, use_broadcast, vec_mat
 
 
 def attention_scores(
@@ -103,7 +105,28 @@ def _attention_kernel(scale: bool, k_dim: int | None = None):
     return kernel
 
 
-BROADCAST_KV_MAX_ROWS = 262_144  # ~128 MB at 64 dims of float64
+def _attention_merge(parts: DataFrame) -> DataFrame:
+    """FlashAttention combine in ONE groupBy: ``z = logsumexp_b z_b``,
+    ``v = sum_b e^{z_b - z} v_b`` folded in-row over the collected
+    partials — one struct shuffled per (row, tile), not per dim."""
+    g = parts.groupBy("i").agg(
+        F.collect_list(F.struct("z", "v")).alias("ps")
+    ).withColumn("z", collected_lse(F.col("ps"), "z"))
+    zero = F.transform(F.element_at(F.col("ps"), 1)["v"], lambda _: F.lit(0.0))
+    v = F.aggregate(
+        F.col("ps"),
+        zero,
+        lambda acc, p: F.zip_with(
+            acc, p["v"], lambda a, b: a + F.exp(p["z"] - F.col("z")) * b
+        ),
+    )
+    return g.select("i", "z", v.alias("v"))
+
+
+def _attention_finish(rows: DataFrame) -> DataFrame:
+    return rows.select("i", F.posexplode("v").alias("d", "val")).select(
+        "i", F.col("d").cast("long").alias("d"), "val"
+    )
 
 
 def attention_blocked(
@@ -122,8 +145,8 @@ def attention_blocked(
     fast path: K and V are packed side by side per key row (one narrow
     join, co-keyed on ``i``) so tiling/broadcast plumbing is unchanged.
 
-    Stage 1: per-tile partials ``(i, z_b, v_b)``; stage 2: log-space
-    merge per row: ``z = logsumexp_b(z_b)``, ``val_d = sum_b
+    Stage 1: partials ``(i, z_b, v_b)``; stage 2 (tiled path only):
+    log-space merge per row: ``z = logsumexp_b(z_b)``, ``val_d = sum_b
     exp(z_b - z) * v_b[d]`` — associative and order-independent, the
     exact ``binary_reduce`` of reference attention.py:31-36.
     """
@@ -139,43 +162,11 @@ def attention_blocked(
         right = kv_vec.join(vv, "i").select(
             "i", F.concat("vec", "_vv").alias("vec")
         )
-    schema = "i long, z double, v array<double>"
-    if broadcast_kv == "auto":
-        # stats-based physical choice, same rule Catalyst applies to
-        # joins: when the KV side fits in executor memory, replication
-        # factor drops to 1 (narrow map, no shuffle); the blocked path
-        # stays for genuinely large KV
-        from gemmsql.stats import rows_for_choice
-
-        broadcast_kv = rows_for_choice(kv_vec) <= BROADCAST_KV_MAX_ROWS
-    if broadcast_kv:
-        partials = broadcast_right_partials(q_vec, right, kernel, schema)
-    else:
-        partials = blocked_partials(
-            q_vec, right, kernel, schema,
-            left_block=block, right_block=block,
-        )
-    # fused merge: ONE groupBy collects all tile partials per row, then
-    # the FlashAttention combine (z = logsumexp_b z_b, val = sum_b
-    # e^{z_b - z} v_b) runs entirely in-row with higher-order functions.
-    # The earlier plan (logsumexp agg + join back + posexplode-then-agg)
-    # shuffled every (row, tile, dim) triple; this shuffles one compact
-    # struct per (row, tile) and explodes only the final M x D rows.
-    g = partials.groupBy("i").agg(
-        F.collect_list(F.struct("z", "v")).alias("ps")
-    ).withColumn("zt", collected_lse(F.col("ps"), "z"))
-    zero = F.transform(F.element_at(F.col("ps"), 1)["v"], lambda _: F.lit(0.0))
-    vec = F.aggregate(
-        F.col("ps"),
-        zero,
-        lambda acc, p: F.zip_with(
-            acc, p["v"], lambda a, b: a + F.exp(p["z"] - F.col("zt")) * b
-        ),
-    )
-    return (
-        g.select("i", vec.alias("vec"))
-        .select("i", F.posexplode("vec").alias("d", "val"))
-        .select("i", F.col("d").cast("long").alias("d"), "val")
+    # size kv_vec itself: the K|V join's row count would take a job
+    return fold(
+        q_vec, right, kernel, "i long, z double, v array<double>",
+        merge=_attention_merge, finish=_attention_finish,
+        broadcast=use_broadcast(broadcast_kv, kv_vec), block=block,
     )
 
 
@@ -203,8 +194,8 @@ def attention_batched(
             return pd.DataFrame(
                 {"b": [], "i": [], "d": [], "val": []}
             ).astype({"b": "int64", "i": "int64", "d": "int64", "val": "float64"})
-        q = np.asarray(left["vec"].tolist(), dtype=np.float64)
-        kv = np.asarray(right["kv_vec"].tolist(), dtype=np.float64)
+        q = vec_mat(left["vec"])
+        kv = vec_mat(right["kv_vec"])
         s = q @ kv.T
         if scale:
             s /= np.sqrt(q.shape[1])

@@ -8,6 +8,11 @@ backward is a second Spark job over the same tiled layout; the
 scatter-add is a ``groupBy(input id).agg(sum)`` — Spark's partial+final
 aggregation is the scatter-add monoid.
 
+Both sweeps share one broadcast-or-tiled pick: pass 1 (per-row forward
+statistics) is a :func:`gemmsql.ops._blocked.fold`, merged only on the
+tiled path; pass 2 scatter-adds into both sides, so it takes the
+executor's partials step and always merges (:func:`_merge_vec_partials`).
+
 Implemented (matching the reference's coverage):
 - matmul grads (the primitive under MLP, reference mlp.py:9-16)
 - mlp_bwd   (M2, reference mlp.py:9-16)
@@ -26,8 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gemmsql.numerics import collected_lse, group_logsumexp
-from gemmsql.ops._blocked import blocked_partials, broadcast_right_partials
+from gemmsql.ops._blocked import fold, lse_merge, tile_partials, use_broadcast, vec_mat
 from gemmsql.ops.matmul import coo_matmul
 
 
@@ -38,10 +42,6 @@ def matmul_grads(
     bt = b.select(F.col("j").alias("i"), F.col("i").alias("j"), "v")
     at = a.select(F.col("j").alias("i"), F.col("i").alias("j"), "v")
     return coo_matmul(g, bt), coo_matmul(at, g)
-
-
-def _mat(series) -> np.ndarray:
-    return np.asarray(series.tolist(), dtype=np.float64)
 
 
 def mlp_bwd(
@@ -71,7 +71,7 @@ def mlp_bwd(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = _mat(pdf["vec"]); g = _mat(pdf["gvec"])
+            x = vec_mat(pdf["vec"]); g = vec_mat(pdf["gvec"])
             h = x @ wp
             gh = (g @ wq.T) * (h > 0)
             yield pd.DataFrame({"i": pdf["i"].values, "vec": list(gh @ wp.T)})
@@ -83,7 +83,7 @@ def mlp_bwd(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = _mat(pdf["vec"]); g = _mat(pdf["gvec"])
+            x = vec_mat(pdf["vec"]); g = vec_mat(pdf["gvec"])
             h = x @ wp
             a = np.maximum(h, 0.0)
             gq_p = a.T @ g                    # (K, N)
@@ -122,29 +122,6 @@ def _merge_vec_partials(parts: DataFrame, keys: list[str]) -> DataFrame:
     return g.select(*keys, vec.alias("vec"))
 
 
-def _partials_auto(
-    left: DataFrame,
-    right: DataFrame,
-    kernel,
-    schema: str,
-    *,
-    block: int,
-    broadcast_right: bool,
-    extra: tuple[str, ...] = (),
-) -> DataFrame:
-    """Stats-based physical pick shared with the forward pass: broadcast
-    the right side when it fits in executor memory (replication factor
-    1, narrow map), else the blocked shuffle plan."""
-    if broadcast_right:
-        return broadcast_right_partials(
-            left, right, kernel, schema, left_extra=extra
-        )
-    return blocked_partials(
-        left, right, kernel, schema,
-        left_block=block, right_block=block, left_extra=extra,
-    )
-
-
 def attention_bwd(
     q_vec: DataFrame,
     kv_vec: DataFrame,
@@ -163,13 +140,7 @@ def attention_bwd(
     both reduce in one sweep; pass 2 emits per-tile gradient partials,
     scatter-added by the one-shuffle in-row fold.  Returns vector-row
     (gQ, gK, gV)."""
-    if broadcast_kv == "auto":
-        from gemmsql.ops.attention import BROADCAST_KV_MAX_ROWS
-
-        from gemmsql.stats import rows_for_choice
-
-        broadcast_kv = rows_for_choice(kv_vec) <= BROADCAST_KV_MAX_ROWS
-
+    bcast = use_broadcast(broadcast_kv, kv_vec)
     q_g = q_vec.select("i", "vec").join(
         g_vec.select("i", F.col("vec").alias("gvec")), "i"
     )
@@ -177,29 +148,23 @@ def attention_bwd(
     # pass 1 (fused z + r): per-tile logsumexp z_t and in-tile
     # softmax-weighted row term r_t, merged per row in log space
     def zr_kernel(lids, lmat, extra, rids, rmat):
-        g = _mat(extra["gvec"])
+        g = vec_mat(extra["gvec"])
         s = lmat @ rmat.T
         z = np.logaddexp.reduce(s, axis=1)
         w = np.exp(s - z[:, None])
         r = (w * (g @ rmat.T)).sum(axis=1)
         return pd.DataFrame({"i": lids, "z": z, "r": r})
 
-    zrp = _partials_auto(
+    zr = fold(
         q_g, kv_vec, zr_kernel, "i long, z double, r double",
-        block=block, broadcast_right=broadcast_kv, extra=("gvec",),
+        merge=lse_merge("z", "r"), broadcast=bcast, block=block,
+        left_extra=("gvec",),
     )
-    gz = zrp.groupBy("i").agg(F.collect_list(F.struct("z", "r")).alias("ps"))
-    gz = gz.withColumn("z", collected_lse(F.col("ps"), "z"))
-    r_merged = F.aggregate(
-        F.col("ps"), F.lit(0.0),
-        lambda acc, p: acc + F.exp(p["z"] - F.col("z")) * p["r"],
-    )
-    zr = gz.select("i", "z", r_merged.alias("r"))
     q_aug = q_g.join(zr, "i")
 
     # pass 2: per-tile gradient partials
     def grad_kernel(lids, lmat, extra, rids, rmat):
-        g = _mat(extra["gvec"]); zz = extra["z"].to_numpy()
+        g = vec_mat(extra["gvec"]); zz = extra["z"].to_numpy()
         rr = extra["r"].to_numpy()
         s = lmat @ rmat.T
         w = np.exp(s - zz[:, None])
@@ -214,11 +179,10 @@ def attention_bwd(
         ]
         return pd.concat(out, ignore_index=True)
 
-    parts = _partials_auto(
+    parts = tile_partials(
         q_aug, kv_vec, grad_kernel,
         "which string, i long, vec array<double>",
-        block=block, broadcast_right=broadcast_kv,
-        extra=("gvec", "z", "r"),
+        broadcast=bcast, block=block, left_extra=("gvec", "z", "r"),
     )
     summed = _merge_vec_partials(parts, ["which", "i"])
     gq = summed.where(F.col("which") == "gq").select("i", "vec")
@@ -238,22 +202,16 @@ def xentropy_bwd(
     (cotangent = ones): gPred_m = sum_n (softmax_mn - onehot_mn) trg_n;
     gTrg_n = sum_m (softmax_mn - onehot_mn) pred_m
     (reference xentropy.py:15-37 with g_p = 1, g_n = -1)."""
-    if broadcast_trg == "auto":
-        from gemmsql.ops.attention import BROADCAST_KV_MAX_ROWS
-
-        from gemmsql.stats import rows_for_choice
-
-        broadcast_trg = rows_for_choice(trg_vec) <= BROADCAST_KV_MAX_ROWS
+    bcast = use_broadcast(broadcast_trg, trg_vec)
 
     def z_kernel(lids, lmat, _extra, rids, rmat):
         s = lmat @ rmat.T
         return pd.DataFrame({"i": lids, "z": np.logaddexp.reduce(s, axis=1)})
 
-    zp = _partials_auto(
+    z = fold(
         pred_vec.select("i", "vec"), trg_vec, z_kernel, "i long, z double",
-        block=block, broadcast_right=broadcast_trg,
+        merge=lse_merge("z"), broadcast=bcast, block=block,
     )
-    z = group_logsumexp(zp, ["i"], "z", "z")
     p_aug = pred_vec.select("i", "vec", "label").join(z, "i")
 
     def grad_kernel(lids, lmat, extra, rids, rmat):
@@ -271,10 +229,10 @@ def xentropy_bwd(
             ignore_index=True,
         )
 
-    parts = _partials_auto(
+    parts = tile_partials(
         p_aug, trg_vec, grad_kernel,
         "which string, i long, vec array<double>",
-        block=block, broadcast_right=broadcast_trg, extra=("label", "z"),
+        broadcast=bcast, block=block, left_extra=("label", "z"),
     )
     summed = _merge_vec_partials(parts, ["which", "i"])
     gpred = summed.where(F.col("which") == "gpred").select("i", "vec")

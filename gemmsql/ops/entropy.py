@@ -7,7 +7,11 @@ Monoid (entropy.py:18-23): ``(p, n)`` with p merged by logaddexp and n —
 an *unnormalized softmax-weighted score sum* ``sum(exp(s - p_b) * s)`` —
 merged by the weighted-average rule ``n = n_a e^{p_a - p} + n_b e^{p_b - p}``.
 That merge is order-independent, so in SQL it collapses to one global
-two-pass aggregate.  Backward is NOT implemented in the reference
+two-pass aggregate.  :func:`row_entropy` runs through the fold executor
+(:func:`gemmsql.ops._blocked.fold`) with that merge as
+:func:`gemmsql.ops._blocked.lse_merge` (shared with attention_bwd's
+first pass); the merge runs only on the tiled path, and finish is
+``H = p - n``.  Backward is NOT implemented in the reference
 (entropy.py:14-16) and intentionally not here either.  Output ``(i, entropy)``.
 """
 
@@ -19,8 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gemmsql.numerics import collected_lse, group_logsumexp
-from gemmsql.ops._blocked import blocked_partials
+from gemmsql.numerics import group_logsumexp
+from gemmsql.ops._blocked import fold, lse_merge
 from gemmsql.ops.attention import attention_scores
 
 
@@ -55,31 +59,9 @@ def row_entropy(
 ) -> DataFrame:
     """Blocked path -> ``(i, entropy)``.  Small trg sides broadcast
     (narrow map, replication 1) exactly like attention's KV rule."""
-    from gemmsql.ops._blocked import broadcast_right_partials
-    from gemmsql.ops.attention import BROADCAST_KV_MAX_ROWS
-
-    schema = "i long, p double, n double"
-    if broadcast_trg == "auto":
-        from gemmsql.stats import rows_for_choice
-
-        broadcast_trg = rows_for_choice(trg_vec) <= BROADCAST_KV_MAX_ROWS
-    if broadcast_trg:
-        partials = broadcast_right_partials(
-            pred_vec, trg_vec, _entropy_kernel, schema
-        )
-    else:
-        partials = blocked_partials(
-            pred_vec, trg_vec, _entropy_kernel, schema,
-            left_block=block, right_block=block,
-        )
-    # fused one-shuffle merge (see attention_blocked): z and the
-    # softmax-weighted score mean fold in-row over the partial list
-    g = partials.groupBy("i").agg(
-        F.collect_list(F.struct("p", "n")).alias("ps")
-    ).withColumn("z", collected_lse(F.col("ps"), "p"))
-    wsum = F.aggregate(
-        F.col("ps"),
-        F.lit(0.0),
-        lambda acc, p: acc + p["n"] * F.exp(p["p"] - F.col("z")),
+    return fold(
+        pred_vec, trg_vec, _entropy_kernel, "i long, p double, n double",
+        merge=lse_merge("p", "n"),
+        finish=lambda r: r.select("i", (F.col("p") - F.col("n")).alias("entropy")),
+        broadcast=broadcast_trg, block=block,
     )
-    return g.select("i", (F.col("z") - wsum).alias("entropy"))

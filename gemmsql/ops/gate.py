@@ -80,7 +80,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gemmsql.ops._blocked import blocked_partials
+from gemmsql.ops._blocked import blocked_partials, vec_mat
 from gemmsql.stats import list_dim, rows_for_choice
 
 Q_IN = 1_000_000.0       # input quantization: v -> floor(v*1e6 + .5)
@@ -123,15 +123,20 @@ def _spread(df: DataFrame) -> DataFrame:
     count, never a job), capped at defaultParallelism — a fixed
     32-way fan measured as pure scheduling overhead for the cheap
     softmax kernels while still leaving the heavy ones (gumbel noise,
-    fused grads) under-parallelized at small N on few-core boxes."""
+    fused grads) under-parallelized at small N on few-core boxes.
+    It only fans OUT: a side with at least that many partitions
+    (``stats.frame_partitions``, job-free) is returned as is."""
     sc = df.sparkSession.sparkContext
-    from gemmsql.stats import frame_rows
+    from gemmsql.stats import frame_partitions, frame_rows
 
     n = frame_rows(df)
     cap = sc.defaultParallelism
     parts = cap if n is None else max(
         2, min(cap, -(-n // SPREAD_ROWS_PER_TASK))
     )
+    have = frame_partitions(df)
+    if have is not None and have >= parts:
+        return df
     return df.repartition(parts)
 
 
@@ -140,15 +145,11 @@ def _quant(mat: np.ndarray) -> np.ndarray:
     return np.floor(mat * Q_IN + 0.5)
 
 
-def _vec_mat(series) -> np.ndarray:
-    return np.asarray(series.tolist(), dtype=np.float64)
-
-
 def _collect_kv(kv_vec: DataFrame):
     """Collect + quantize the broadcast side: (ids, int-valued float64)."""
     pdf = kv_vec.select("i", "vec").toPandas()
     rids = pdf["i"].to_numpy(dtype=np.int64)
-    rq = _quant(_vec_mat(pdf["vec"]))
+    rq = _quant(vec_mat(pdf["vec"]))
     return rids, rq
 
 
@@ -242,8 +243,8 @@ def attention_gate(
                 .toPandas()
             )
             rids = pdf_kv["i"].to_numpy(dtype=np.int64)
-            rq = _quant(_vec_mat(pdf_kv["vec"]))
-            vq = _quant(_vec_mat(pdf_kv["vvec"]))
+            rq = _quant(vec_mat(pdf_kv["vec"]))
+            vq = _quant(vec_mat(pdf_kv["vvec"]))
         denom = 1e12 * np.sqrt(rq.shape[1]) if scale else 1e12
         spark = q_vec.sparkSession
         b = spark.sparkContext.broadcast((rids, rq, vq))
@@ -254,7 +255,7 @@ def attention_gate(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                lq = _quant(_vec_mat(pdf["vec"]))
+                lq = _quant(vec_mat(pdf["vec"]))
                 _s, _mx, e, S = _softmax_den_num(lq, rmat, denom)
                 num = e @ vmat                      # exact: ints < 2^53
                 # val = num / (S * 1e6) rounded 6 == round(num/S) / 1e6
@@ -408,7 +409,7 @@ def _attention_grads_parts(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            lq = _quant(_vec_mat(pdf["vec"]))
+            lq = _quant(vec_mat(pdf["vec"]))
             _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
             rnum = e.astype(np.int64) @ vs.astype(np.int64)  # exact int64
             w = e / S[:, None]
@@ -513,8 +514,8 @@ def attention_batched_gate(bvec: DataFrame, *, scale: bool = True) -> DataFrame:
             return pd.DataFrame({"b": [], "i": [], "d": [], "val": []}).astype(
                 {"b": "int64", "i": "int64", "d": "int64", "val": "float64"}
             )
-        lq = _quant(_vec_mat(left["vec"]))
-        rq = _quant(_vec_mat(right["kv_vec"]))
+        lq = _quant(vec_mat(left["vec"]))
+        rq = _quant(vec_mat(right["kv_vec"]))
         denom = 1e12 * np.sqrt(lq.shape[1]) if scale else 1e12
         _s, _mx, e, S = _softmax_den_num(lq, rq, denom)
         num = e @ rq
@@ -562,7 +563,7 @@ def xentropy_gate(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            lq = _quant(_vec_mat(pdf["vec"]))
+            lq = _quant(vec_mat(pdf["vec"]))
             s, mx, _e, S = _softmax_den_num(lq, rmat, 1e12)
             cols = np.array([posmap[int(l)] for l in pdf["label"]])
             s_lab = s[np.arange(len(pdf)), cols]
@@ -631,7 +632,7 @@ def entropy_gate(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            lq = _quant(_vec_mat(pdf["vec"]))
+            lq = _quant(vec_mat(pdf["vec"]))
             s, mx, e, S = _softmax_den_num(lq, rmat, 1e12)
             w = e / S[:, None]
             tq = np.floor(w * s * Q_W + 0.5)
@@ -732,7 +733,7 @@ def _xe_grads_parts(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            lq = _quant(_vec_mat(pdf["vec"]))
+            lq = _quant(vec_mat(pdf["vec"]))
             _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
             w = e / S[:, None]
             delta = np.floor(w * Q_DELTA + 0.5)
@@ -866,7 +867,7 @@ def attention_xe_grads_gate_fused(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            lq = _quant(_vec_mat(pdf["vec"]))
+            lq = _quant(vec_mat(pdf["vec"]))
             _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
             w = e / S[:, None]
             # --- attention legs (reference attention.py:11-29) ---
@@ -959,7 +960,7 @@ def ml_grads_gate_fused(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            lq = _quant(_vec_mat(pdf["vec"]))
+            lq = _quant(vec_mat(pdf["vec"]))
             # --- shared softmax chain (attention + xentropy legs) ---
             _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
             w_sm = e / S[:, None]
@@ -1038,7 +1039,7 @@ def gram_gate(vec: DataFrame, *, relu: bool = False) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xq = _quant(_vec_mat(pdf["vec"]))
+            xq = _quant(vec_mat(pdf["vec"]))
             g = (xq.T @ xq).astype(np.int64)         # exact: <= N * 3.6e11
             acc = g if acc is None else acc + g
         if acc is not None:
@@ -1075,7 +1076,7 @@ def gram_gate_both(vec: DataFrame) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xq = _quant(_vec_mat(pdf["vec"]))
+            xq = _quant(vec_mat(pdf["vec"]))
             g = (xq.T @ xq).astype(np.int64)
             acc = g if acc is None else acc + g
         if acc is not None:
@@ -1138,8 +1139,8 @@ def attention_gate_plain_kv(
         .join(v_vec.select("i", F.col("vec").alias("vvec")), "i")
         .toPandas()
     )
-    rq = _quant(_vec_mat(pdf_kv["vec"]))
-    vq = _quant(_vec_mat(pdf_kv["vvec"]))
+    rq = _quant(vec_mat(pdf_kv["vec"]))
+    vq = _quant(vec_mat(pdf_kv["vvec"]))
     b = spark.sparkContext.broadcast((rq, vq))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1148,7 +1149,7 @@ def attention_gate_plain_kv(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            lq = _quant(_vec_mat(pdf["vec"]))
+            lq = _quant(vec_mat(pdf["vec"]))
             _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
             den = np.broadcast_to(S[:, None], (len(pdf), d))
             n = len(pdf)
@@ -1175,7 +1176,7 @@ def mlp_weights_int(vec: DataFrame) -> tuple[np.ndarray, int]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xq = _quant(_vec_mat(pdf["vec"]))
+            xq = _quant(vec_mat(pdf["vec"]))
             g = (xq.T @ xq).astype(np.int64)
             yield pd.DataFrame({
                 "j1": np.arange(g.shape[0], dtype=np.int64),
@@ -1229,7 +1230,7 @@ def mlp_gate(vec: DataFrame, *, cache_key: str | None = None) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xq = _quant(_vec_mat(pdf["vec"]))
+            xq = _quant(vec_mat(pdf["vec"]))
             h_int = np.maximum(xq @ w, 0.0)          # exact: <= 1.4e13
             hs = np.floor(h_int / 1e12 * Q_IN + 0.5)
             y_int = hs @ w                           # exact: <= ~3.2e14
@@ -1267,7 +1268,7 @@ def mlp_grads_gate(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xq = _quant(_vec_mat(pdf["vec"]))
+            xq = _quant(vec_mat(pdf["vec"]))
             h_int = np.maximum(xq @ w, 0.0)
             hs = np.floor(h_int / 1e12 * Q_IN + 0.5)
             gh = (h_int > 0) * qs[None, :].astype(np.float64)
@@ -1317,7 +1318,7 @@ def _chain_pred(vec: DataFrame, wq: np.ndarray) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xq = _quant(_vec_mat(pdf["vec"]))
+            xq = _quant(vec_mat(pdf["vec"]))
             h_int = np.maximum(xq @ w, 0.0)          # exact: <= 6.4e13
             hs = np.floor(h_int / 1e12 * Q_IN + 0.5)
             y_int = hs @ w                           # exact: <= ~4.1e15
@@ -1415,10 +1416,10 @@ def chain_grads_gate(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xq = _quant(_vec_mat(pdf["vec"]))
+            xq = _quant(vec_mat(pdf["vec"]))
             h_int = np.maximum(xq @ w, 0.0)
             hs = np.floor(h_int / 1e12 * Q_IN + 0.5).astype(np.int64)
-            nums = np.asarray(pdf["nums"].tolist(), dtype=np.float64)
+            nums = vec_mat(pdf["nums"])
             gs = np.floor(nums / 1e12 * Q_IN + 0.5).astype(np.int64)
             ga = gs @ wi.T                           # int64 exact
             gam = np.floor(ga.astype(np.float64) / 1e12 * Q_IN + 0.5
@@ -1492,7 +1493,7 @@ def _chain_grads_gate_fused(vec: DataFrame, wq: np.ndarray) -> DataFrame:
             if len(pdf) == 0:
                 continue
             # --- stage 1: MLP forward (mlp_gate chain) ---
-            xq = _quant(_vec_mat(pdf["vec"]))
+            xq = _quant(vec_mat(pdf["vec"]))
             h_int = np.maximum(xq @ w, 0.0)
             hs_f = np.floor(h_int / 1e12 * Q_IN + 0.5)
             y_int = hs_f @ w
@@ -1577,7 +1578,7 @@ def _chain_pred_scaled(vec: DataFrame, wq: np.ndarray) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xq = _quant(_vec_mat(pdf["vec"]))
+            xq = _quant(vec_mat(pdf["vec"]))
             h_int = np.maximum(xq @ w, 0.0)
             hs = np.floor(h_int / 1e12 * Q_IN + 0.5)
             y_int = hs @ w
@@ -1675,14 +1676,14 @@ def chain2_grads_gate(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xq = _quant(_vec_mat(pdf["vec"]))
+            xq = _quant(vec_mat(pdf["vec"]))
             h_int = np.maximum(xq @ w, 0.0)
             hs = np.floor(h_int / 1e12 * Q_IN + 0.5).astype(np.int64)
             if bg is not None:
                 g = bg.value
                 nums = np.stack([g[int(i)] for i in pdf["i"]])
             else:
-                nums = np.asarray(pdf["nums"].tolist(), dtype=np.float64)
+                nums = vec_mat(pdf["nums"])
             gs = np.floor(nums / 1e10 * Q_IN + 0.5).astype(np.int64)
             ga = gs @ wi.T                           # int64 exact
             gam = np.floor(ga.astype(np.float64) / 1e12 * Q_IN + 0.5

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gemmsql.ops._blocked import vec_mat
+
 
 def coo_matmul(
     a: DataFrame,
@@ -72,7 +74,7 @@ def gram(vec_df: DataFrame, vec_col: str = "vec") -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            x = vec_mat(pdf[vec_col])
             g = x.T @ x  # fused proj_fold over the whole Arrow batch
             d = g.shape[0]
             j1, j2 = np.meshgrid(np.arange(d), np.arange(d), indexing="ij")
@@ -108,7 +110,7 @@ def vector_matmul(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            x = vec_mat(pdf[vec_col])
             y = x @ wm
             if relu:
                 np.maximum(y, 0.0, out=y)

@@ -19,6 +19,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gemmsql.ops._blocked import vec_mat
 from gemmsql.ops.matmul import coo_matmul, vector_matmul
 
 
@@ -55,7 +56,7 @@ def mlp(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            xm = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            xm = vec_mat(pdf[vec_col])
             h = np.maximum(xm @ wp, 0.0)
             y = h @ wq
             out = {id_col: pdf[id_col].values, vec_col: list(y)}

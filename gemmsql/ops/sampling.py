@@ -9,7 +9,9 @@ Returns ``(prob of chosen, chosen global index)`` (sampling.py:59-61).
 Spark formulation: adding ONE Gumbel noise per (row, class) and taking
 the global argmax is *exactly* equivalent to the reference's
 hierarchical merge (Gumbel-max is associative under max), so the monoid
-merge is plain ``max_by``.
+merge is plain ``max_by``.  :func:`sample_categorical` runs through the
+fold executor (:func:`gemmsql.ops._blocked.fold`); that merge runs only
+on the tiled path.
 
 Noise (round 2): uniform draws come from a *seeded integer hash* of
 (seed, row, class) — two quadratic-mix rounds mod the Mersenne prime
@@ -41,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gemmsql.numerics import collected_lse
-from gemmsql.ops._blocked import blocked_partials
+from gemmsql.ops._blocked import broadcast_right_partials, fold
 
 MIX_P = 2_147_483_647  # 2^31 - 1; squares stay < 2^63 (exact in int64)
 
@@ -125,53 +127,47 @@ FROM w JOIN z ON z.qi = w.qi
 """
 
 
+def _sample_merge(parts: DataFrame) -> DataFrame:
+    # global winner = argmax over perturbed scores (associative max_by);
+    # total mass = logsumexp of tile masses (reference sampling.py:30);
+    # both fold in ONE aggregation — max_by merges map-side, and the
+    # collected tz list folds in-row (see numerics.collected_lse)
+    g = parts.groupBy("i").agg(
+        F.max_by(F.struct("z", "sc", "c"), "z").alias("w"),
+        F.collect_list(F.struct("tz")).alias("ps"),
+    )
+    return g.select(
+        "i", "w.z", "w.sc", "w.c", collected_lse(F.col("ps"), "tz").alias("tz")
+    )
+
+
 def sample_categorical(
     pred_vec: DataFrame,
     trg_vec: DataFrame,
     *,
     seed: int = 42,
     block: int = 4096,
-    broadcast_classes: bool | None = None,
+    broadcast_classes: bool | str = "auto",
 ) -> DataFrame:
     """Physical path picked like :func:`sampling_filtered` (r18): a
     bounded class table (parquet-footer row count — no Spark job)
     broadcasts and each pred batch scores every class in ONE narrow
-    map — no tile replication, no cogroup shuffle; past
+    map — no tile replication, no merge shuffle; past
     :data:`CLASS_BROADCAST_MAX_ROWS` the blocked tile union scales
-    out.  Both paths feed the same monoid merge, and the Gumbel noise
-    is counter-based per (i, c), so the winner is tiling-independent
-    (the documented ~1-ulp tz fold-order budget applies to both —
-    the blocked path's class order was already shuffle-dependent)."""
-    if broadcast_classes is None:
-        from gemmsql.stats import rows_for_choice
-
-        broadcast_classes = (
-            rows_for_choice(trg_vec) <= CLASS_BROADCAST_MAX_ROWS
-        )
-    schema = "i long, z double, sc double, c long, tz double"
-    if broadcast_classes:
-        from gemmsql.ops._blocked import broadcast_right_partials
-
-        partials = broadcast_right_partials(
-            pred_vec, trg_vec, _sample_kernel(seed), schema
-        )
-    else:
-        partials = blocked_partials(
-            pred_vec, trg_vec, _sample_kernel(seed), schema,
-            left_block=block, right_block=block,
-        )
-    # global winner = argmax over perturbed scores (associative max_by);
-    # total mass = logsumexp of tile masses (reference sampling.py:30);
-    # both fold in ONE aggregation — max_by merges map-side, and the
-    # collected tz list folds in-row (see numerics.collected_lse)
-    g = partials.groupBy("i").agg(
-        F.max_by(F.struct("sc", "c"), "z").alias("w"),
-        F.collect_list(F.struct("tz")).alias("ps"),
-    ).withColumn("tzt", collected_lse(F.col("ps"), "tz"))
-    return g.select(
-        "i",
-        F.exp(F.col("w.sc") - F.col("tzt")).alias("prob"),
-        F.col("w.c").alias("choice"),
+    out and merges.  The Gumbel noise is counter-based per (i, c), so
+    the winner is tiling-independent (the documented ~1-ulp tz
+    fold-order budget applies to both paths)."""
+    return fold(
+        pred_vec, trg_vec, _sample_kernel(seed),
+        "i long, z double, sc double, c long, tz double",
+        merge=_sample_merge,
+        finish=lambda r: r.select(
+            "i",
+            F.exp(F.col("sc") - F.col("tz")).alias("prob"),
+            F.col("c").alias("choice"),
+        ),
+        broadcast=broadcast_classes, block=block,
+        max_rows=CLASS_BROADCAST_MAX_ROWS,
     )
 
 
@@ -191,48 +187,43 @@ TOPP_P = 0.9
 
 
 def _filtered_kernel(seed: int, k: int, p: float):
-    def run(batches):
-        import pandas as pd
+    def kernel(lids, lmat, _extra, rids, rmat) -> pd.DataFrame:
+        s = lmat @ rmat.T
+        g = _gumbel_noise(seed, lids, rids)
+        pert = s + g
+        # rank classes per row by (score desc, class id asc)
+        order = np.lexsort((rids[None, :].repeat(len(lids), 0), -s), axis=1)
+        rows = np.arange(len(lids))[:, None]
+        s_ord = s[rows, order]
+        m = s.max(axis=1, keepdims=True)
+        e_ord = np.exp(s_ord - m)
+        z = e_ord.sum(axis=1, keepdims=True)
+        out = {"which": [], "i": [], "choice": [], "prob": []}
+        for which in ("topk", "topp"):
+            if which == "topk":
+                kept = order[:, :k]
+                ke = e_ord[:, :k]
+            else:
+                cum_before = np.cumsum(e_ord, axis=1) - e_ord
+                mask = cum_before < p * z
+                # ragged kept set; handle per row
+                kept = [order[r][mask[r]] for r in range(len(lids))]
+                ke = [e_ord[r][mask[r]] for r in range(len(lids))]
+            for r in range(len(lids)):
+                kr = np.asarray(kept[r])
+                er = np.asarray(ke[r])
+                w = np.argmax(pert[r, kr])
+                out["which"].append(which)
+                out["i"].append(lids[r])
+                # kr holds COLUMN POSITIONS into rmat (lexsort output);
+                # the emitted choice must be the class id rids[...],
+                # not the position — they only coincide when the class
+                # table happens to arrive as 0..C-1 in order.
+                out["choice"].append(int(rids[kr[w]]))
+                out["prob"].append(float(er[w] / er.sum()))
+        return pd.DataFrame(out)
 
-        for pdf, rids, rmat in batches:
-            lids = pdf["i"].to_numpy(dtype=np.int64)
-            lmat = np.asarray(pdf["vec"].tolist(), dtype=np.float64)
-            s = lmat @ rmat.T
-            g = _gumbel_noise(seed, lids, rids)
-            pert = s + g
-            # rank classes per row by (score desc, class id asc)
-            order = np.lexsort((rids[None, :].repeat(len(lids), 0), -s), axis=1)
-            rows = np.arange(len(lids))[:, None]
-            s_ord = s[rows, order]
-            m = s.max(axis=1, keepdims=True)
-            e_ord = np.exp(s_ord - m)
-            z = e_ord.sum(axis=1, keepdims=True)
-            out = {"which": [], "i": [], "choice": [], "prob": []}
-            for which in ("topk", "topp"):
-                if which == "topk":
-                    kept = order[:, :k]
-                    ke = e_ord[:, :k]
-                else:
-                    cum_before = np.cumsum(e_ord, axis=1) - e_ord
-                    mask = cum_before < p * z
-                    # ragged kept set; handle per row
-                    kept = [order[r][mask[r]] for r in range(len(lids))]
-                    ke = [e_ord[r][mask[r]] for r in range(len(lids))]
-                for r in range(len(lids)):
-                    kr = np.asarray(kept[r])
-                    er = np.asarray(ke[r])
-                    w = np.argmax(pert[r, kr])
-                    out["which"].append(which)
-                    out["i"].append(lids[r])
-                    # kr holds COLUMN POSITIONS into rmat (lexsort output);
-                    # the emitted choice must be the class id rids[...],
-                    # not the position — they only coincide when the class
-                    # table happens to arrive as 0..C-1 in order.
-                    out["choice"].append(int(rids[kr[w]]))
-                    out["prob"].append(float(er[w] / er.sum()))
-            yield pd.DataFrame(out)
-
-    return run
+    return kernel
 
 
 #: class tables at or under this row count ride the broadcast kernel;
@@ -355,8 +346,6 @@ def sampling_filtered(
     windows, fully distributed.  Both paths are output-equal on the
     gate grid (test-pinned); ``broadcast_classes`` forces a path for
     tests."""
-    import pandas as pd
-
     from gemmsql.stats import rows_for_choice
 
     if broadcast_classes is None:
@@ -366,23 +355,9 @@ def sampling_filtered(
     if not broadcast_classes:
         return _filtered_windowed(pred_vec, trg_vec, k=k, p=p, seed=seed)
 
-    spark = pred_vec.sparkSession
-    pdf_trg = trg_vec.select("i", "vec").toPandas()
-    rids = pdf_trg["i"].to_numpy(dtype=np.int64)
-    rmat = np.asarray(pdf_trg["vec"].tolist(), dtype=np.float64)
-    b = spark.sparkContext.broadcast((rids, rmat))
-    kernel = _filtered_kernel(seed, k, p)
-
-    def run(batches):
-        _rids, _rmat = b.value
-        yield from kernel(
-            (pdf, _rids, _rmat) for pdf in batches if len(pdf)
-        )
-
-    from gemmsql.ops.gate import _spread
-
-    out = _spread(pred_vec.select("i", "vec")).mapInPandas(
-        run, "which string, i long, choice long, prob double"
+    out = broadcast_right_partials(
+        pred_vec, trg_vec, _filtered_kernel(seed, k, p),
+        "which string, i long, choice long, prob double",
     )
     return out.select("which", "i", "choice", F.round("prob", 6).alias("prob"))
 

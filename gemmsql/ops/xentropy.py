@@ -7,8 +7,11 @@ Monoid (xentropy.py:39-44): accumulator ``(p, n)`` with
 ``p`` merged by logaddexp and ``n`` (the true-class score, picked when
 the true class falls inside a tile, xentropy.py:12) merged by plain sum.
 
-The blocked path emits per-tile partials ``(i, p_b, n_b)`` and merges
-them with the two built-in-style SQL aggregates; the relational path
+:func:`xentropy` declares that monoid as kernel / merge / finish and
+runs it through the fold executor (:func:`gemmsql.ops._blocked.fold`):
+the kernel emits per-tile partials ``(i, p_b, n_b)``, the merge runs
+only on the tiled path (on the broadcast path each row's partial is
+already final), and finish is ``loss = p - n``.  The relational path
 does the same with a score join.  Output: ``(i, loss)``.
 """
 
@@ -21,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gemmsql.numerics import collected_lse, group_logsumexp
-from gemmsql.ops._blocked import blocked_partials
+from gemmsql.ops._blocked import fold
 from gemmsql.ops.attention import attention_scores
 
 
@@ -56,6 +59,15 @@ def _xent_kernel(lids, lmat, extra, rids, rmat) -> pd.DataFrame:
     return pd.DataFrame({"i": lids, "p": p, "n": n})
 
 
+def _xent_merge(parts: DataFrame) -> DataFrame:
+    # logsumexp folds in-row; the true-class score is a plain sum
+    g = parts.groupBy("i").agg(
+        F.collect_list(F.struct("p", "n")).alias("ps"),
+        F.sum("n").alias("n"),
+    )
+    return g.select("i", collected_lse(F.col("ps"), "p").alias("p"), "n")
+
+
 def xentropy(
     pred_vec: DataFrame,
     trg_vec: DataFrame,
@@ -68,26 +80,9 @@ def xentropy(
     uses tixs = arange(N)).  Small class-embedding tables broadcast —
     the common real case (vocab embeddings fit in memory even when the
     prediction side is enormous)."""
-    from gemmsql.ops._blocked import broadcast_right_partials
-    from gemmsql.ops.attention import BROADCAST_KV_MAX_ROWS
-
-    schema = "i long, p double, n double"
-    if broadcast_trg == "auto":
-        from gemmsql.stats import rows_for_choice
-
-        broadcast_trg = rows_for_choice(trg_vec) <= BROADCAST_KV_MAX_ROWS
-    if broadcast_trg:
-        partials = broadcast_right_partials(
-            pred_vec, trg_vec, _xent_kernel, schema, left_extra=("label",)
-        )
-    else:
-        partials = blocked_partials(
-            pred_vec, trg_vec, _xent_kernel, schema,
-            left_block=block, right_block=block, left_extra=("label",),
-        )
-    # fused one-shuffle merge: logsumexp + true-class sum fold in-row
-    g = partials.groupBy("i").agg(
-        F.collect_list(F.struct("p", "n")).alias("ps"),
-        F.sum("n").alias("n"),
-    ).withColumn("z", collected_lse(F.col("ps"), "p"))
-    return g.select("i", (F.col("z") - F.col("n")).alias("loss"))
+    return fold(
+        pred_vec, trg_vec, _xent_kernel, "i long, p double, n double",
+        merge=_xent_merge,
+        finish=lambda r: r.select("i", (F.col("p") - F.col("n")).alias("loss")),
+        broadcast=broadcast_trg, block=block, left_extra=("label",),
+    )

@@ -559,6 +559,23 @@ def _parse_segments(payload: bytes):
     return qtables, hspecs, frame, scan, scan_start, dri
 
 
+def _scan_luts(hspecs, dc_t: int, ac_t: int):
+    """``(dc_sym, dc_len, ac_sym, ac_len)`` for one scan component.  A
+    table id that no DHT segment defined means a corrupt stream."""
+    try:
+        dc, ac = hspecs[(0, dc_t)], hspecs[(1, ac_t)]
+    except KeyError as e:
+        raise ValueError(f"scan uses undefined Huffman table {e.args[0]}") from None
+    return (*_huff_lut(*dc), *_huff_lut(*ac))
+
+
+def _qtable(qtables, tq: int) -> np.ndarray:
+    try:
+        return qtables[tq]
+    except KeyError:
+        raise ValueError(f"frame uses undefined quant table {tq}") from None
+
+
 def _read_block(words, p, dc_sym, dc_len, ac_sym, ac_len, pred, out):
     """Entropy-decode one block into ``out`` (a 64-long row); returns
     (new bit cursor, new DC predictor)."""
@@ -626,9 +643,8 @@ def decode_jpeg_gray(payload: bytes) -> np.ndarray:
         )
     _, _, _, tq = comps[0]
     _, dc_t, ac_t = scan[0]
-    dc_sym, dc_len = _huff_lut(*hspecs[(0, dc_t)])
-    ac_sym, ac_len = _huff_lut(*hspecs[(1, ac_t)])
-    q = qtables[tq]
+    dc_sym, dc_len, ac_sym, ac_len = _scan_luts(hspecs, dc_t, ac_t)
+    q = _qtable(qtables, tq)
     segs = (
         _split_restarts(payload[scan_start:]) if dri
         else [payload[scan_start:]]
@@ -671,13 +687,8 @@ def decode_jpeg_color(payload: bytes) -> np.ndarray:
     samps = [(hs, vs) for _, hs, vs, _ in comps]
     if samps != [(2, 2), (1, 1), (1, 1)]:
         raise ValueError(f"only 4:2:0 sampling supported, got {samps}")
-    luts = {}
-    for (cid, dc_t, ac_t) in scan:
-        luts[cid] = (
-            *_huff_lut(*hspecs[(0, dc_t)]),
-            *_huff_lut(*hspecs[(1, ac_t)]),
-        )
-    qs = {cid: qtables[tq] for cid, _, _, tq in comps}
+    luts = {cid: _scan_luts(hspecs, dc_t, ac_t) for cid, dc_t, ac_t in scan}
+    qs = {cid: _qtable(qtables, tq) for cid, _, _, tq in comps}
     ids = [cid for cid, _, _, _ in comps]
 
     segs = (

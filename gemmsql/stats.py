@@ -164,6 +164,55 @@ def frame_rows(df) -> int | None:
         return None
 
 
+def _file_partitions(spark, sizes: list[int]) -> int:
+    """Spark's read-partition count for files of ``sizes`` bytes: the
+    split size and bin packing of ``FilePartition.getFilePartitions``
+    (files split at ``maxSplitBytes``, chunks packed largest-first, each
+    charged ``openCostInBytes``)."""
+    conf = spark._jsparkSession.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    min_parts = conf.filesMinPartitionNum()
+    min_parts = (
+        min_parts.get() if min_parts.isDefined()
+        else spark._jsparkSession.leafNodeDefaultParallelism()
+    )
+    total = sum(s + open_cost for s in sizes)
+    split = min(conf.filesMaxPartitionBytes(), max(open_cost, total // min_parts))
+    chunks = sorted(
+        (min(split, s - off) for s in sizes for off in range(0, s, split)),
+        reverse=True,
+    )
+    parts, cur = 0, 0
+    for c in chunks:
+        if cur and cur + c > split:
+            parts, cur = parts + 1, 0
+        cur += c + open_cost
+    return parts + (cur > 0)
+
+
+def frame_partitions(df) -> int | None:
+    """Partition count ``df`` will be computed with, or None when only
+    a run would tell (e.g. a join whose partitions AQE sizes).  Known
+    for an exchange-topped plan (its static partitioning) and for a
+    narrow plan over ONE file scan (Spark's file split count).  Never
+    launches a Spark job — unlike ``df.rdd.getNumPartitions()``, which
+    under AQE runs the shuffle stages below an exchange."""
+    try:
+        if _scan_chain(df) is None:
+            plan = df._jdf.queryExecution().sparkPlan()
+            n = plan.outputPartitioning().numPartitions()
+            if n:
+                return n
+            leaves = plan.collectLeaves()
+            if (leaves.size() != 1 or leaves.head().getClass().getSimpleName()
+                    != "FileSourceScanExec"):
+                return None
+        sizes = [os.path.getsize(_local_path(f)) for f in df.inputFiles()]
+        return _file_partitions(df.sparkSession, sizes)
+    except Exception:
+        return None
+
+
 def rows_for_choice(df) -> int:
     """Row count for a physical-plan pick (broadcast-vs-blocked):
     footer metadata when the plan allows, else one ``count()`` job."""

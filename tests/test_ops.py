@@ -84,26 +84,35 @@ def test_attention_coo_and_scaled(spark, emb_matrix):
     assert np.allclose(out["val"].to_numpy().reshape(want.shape), want)
 
 
-def test_xentropy_matches_dense(spark, emb_matrix):
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_xentropy_matches_dense(spark, emb_matrix, broadcast):
     _, x, lab = emb_matrix
     vec = embeddings_vectors(spark, SF_SMOKE)
     out = (
-        xentropy(vec.select("i", "vec", "label"), vec.select("i", "vec"), block=128)
+        xentropy(
+            vec.select("i", "vec", "label"), vec.select("i", "vec"),
+            block=128, broadcast_trg=broadcast,
+        )
         .orderBy("i")
         .toPandas()
     )
     _, _, z = dense_softmax_scores(x)
     want = z - (x @ x.T)[np.arange(len(lab)), lab]
-    assert np.allclose(out["loss"].to_numpy(), want)
+    assert np.allclose(out["loss"].to_numpy(), want, rtol=1e-9, atol=1e-12)
 
 
-def test_entropy_matches_dense(spark, emb_matrix):
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_entropy_matches_dense(spark, emb_matrix, broadcast):
     _, x, _ = emb_matrix
     vec = embeddings_vectors(spark, SF_SMOKE).select("i", "vec")
-    out = row_entropy(vec, vec, block=128).orderBy("i").toPandas()
+    out = (
+        row_entropy(vec, vec, block=128, broadcast_trg=broadcast)
+        .orderBy("i")
+        .toPandas()
+    )
     s, p, z = dense_softmax_scores(x)
     want = z - (p * s).sum(1)
-    assert np.allclose(out["entropy"].to_numpy(), want)
+    assert np.allclose(out["entropy"].to_numpy(), want, rtol=1e-9, atol=1e-12)
     # entropy is also -sum p log p
     assert np.allclose(want, -(p * np.log(p)).sum(1))
 

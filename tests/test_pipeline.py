@@ -1363,6 +1363,37 @@ def test_jpeg_color_decoder_never_hangs_on_corruption(img, mode):
     assert out.dtype == np.uint8 and out.ndim == 3
 
 
+def test_jpeg_undefined_table_ids_raise_value_error():
+    """A scan header naming a Huffman table no DHT defined, or a frame
+    naming an undefined quant table, is a corrupt stream: ValueError,
+    never a bare KeyError (the corruption fuzzers' contract)."""
+    import pytest as _pytest
+
+    from gemmsql.pipeline.jpeg import (
+        decode_jpeg_color,
+        decode_jpeg_gray,
+        encode_jpeg_color,
+        encode_jpeg_gray,
+    )
+
+    rng = np.random.default_rng(3)
+    gray = encode_jpeg_gray(rng.integers(0, 256, (16, 16)).astype(np.uint8))
+    color = encode_jpeg_color(rng.integers(0, 256, (16, 16, 3)).astype(np.uint8))
+    for payload, decode in ((gray, decode_jpeg_gray), (color, decode_jpeg_color)):
+        sos = payload.index(b"\xff\xda")
+        # SOS body: length(2) ns(1) then (cid, dc<<4|ac) per component
+        bad_huff = bytearray(payload)
+        bad_huff[sos + 6] = 0x33
+        with _pytest.raises(ValueError, match="Huffman table"):
+            decode(bytes(bad_huff))
+        sof = payload.index(b"\xff\xc0")
+        # SOF0 body: length(2) prec(1) h(2) w(2) nc(1) then (cid, samp, tq)
+        bad_q = bytearray(payload)
+        bad_q[sof + 12] = 0x0E
+        with _pytest.raises(ValueError, match="quant table"):
+            decode(bytes(bad_q))
+
+
 def test_jpeg_restart_markers_are_transparent():
     """DRI/RSTn segmentation (what makes huge scans independently —
     and in a 100 TB pass, parallel — decodable) must not change one

@@ -154,25 +154,116 @@ def test_attention_blocked_single_merge_aggregate(spark):
     assert p.count("FlatMapGroupsInPandas") == 1
 
 
-def test_attention_auto_broadcast_kv_is_narrow(spark):
-    """Small KV -> the auto strategy must pick the broadcast path: a
-    mapInPandas kernel fed by exactly ONE byte-light round-robin
-    spread (gate._spread, r18 — without it the single-partition scan
-    serializes the kernel on one core) and nothing else — no hash
-    shuffle, no join below the kernel."""
+def test_broadcast_forward_folds_are_narrow(spark):
+    """Small right side -> "auto" picks the broadcast path, where every
+    row's partial is already final: a mapInPandas kernel fed by exactly
+    ONE byte-light round-robin spread (gate._spread, r18 — without it
+    the single-partition scan serializes the kernel on one core) and
+    NO merge — no hash shuffle and no aggregate anywhere in the plan."""
     from gemmsql.datamodel import embeddings_vectors
-    from gemmsql.ops import attention_blocked
-
-    vec = embeddings_vectors(spark, SF_SMOKE).select("i", "vec")
-    p = plan_of(attention_blocked(vec, vec, broadcast_kv="auto"))
-    assert "MapInPandas" in p
-    kernel_pos = p.index("MapInPandas")
-    below = p[kernel_pos:]
-    assert below.count("Exchange ") <= 1, (
-        "broadcast-KV partials allow only the one spread exchange"
+    from gemmsql.ops import (
+        attention_blocked,
+        row_entropy,
+        sample_categorical,
+        xentropy,
     )
-    assert "hashpartitioning" not in below.lower()
-    assert "roundrobin" in below.lower(), "the spread must be round-robin"
+
+    vec = embeddings_vectors(spark, SF_SMOKE)
+    v = vec.select("i", "vec")
+    folds = {
+        "xentropy": xentropy(vec, v),
+        "row_entropy": row_entropy(v, v),
+        "sample_categorical": sample_categorical(v, v),
+        "attention_blocked": attention_blocked(v, v),
+    }
+    for name, df in folds.items():
+        p = plan_of(df)
+        assert "MapInPandas" in p, name
+        assert p.count("Exchange ") == 1, f"{name}: only the spread exchange"
+        assert "roundrobin" in p.lower(), f"{name}: the spread must be round-robin"
+        assert "hashpartitioning" not in p.lower(), name
+        assert "Aggregate" not in p, f"{name}: the broadcast path never merges"
+
+
+def _merge_aggregates(p: str) -> list[str]:
+    """Function lists of the final aggregate nodes that compute
+    something (block-id ``distinct()`` nodes have ``functions=[]``)."""
+    funcs = re.findall(r"Aggregate\(keys=\[[^\]]*\], functions=\[([^\]]*)\]", p)
+    return [f for f in funcs if f and not f.startswith("partial_")]
+
+
+def test_tiled_fold_passes_merge_with_one_aggregate(spark):
+    """On the tiled path every fold pass merges its tile partials with
+    exactly ONE aggregate: the backwards' first pass included, whose
+    logsumexp folds in-row (no max aggregate joined back to the
+    partials for a second sum)."""
+    from gemmsql.datamodel import embeddings_vectors
+    from gemmsql.ops import (
+        attention_blocked,
+        row_entropy,
+        sample_categorical,
+        xentropy,
+    )
+    from gemmsql.ops.backward import attention_bwd, xentropy_bwd
+
+    vec = embeddings_vectors(spark, SF_SMOKE)
+    v = vec.select("i", "vec")
+    passes = {
+        "xentropy": (xentropy(vec, v, block=128, broadcast_trg=False), 1),
+        "row_entropy": (row_entropy(v, v, block=128, broadcast_trg=False), 1),
+        "sample_categorical": (
+            sample_categorical(v, v, block=128, broadcast_classes=False), 1
+        ),
+        "attention_blocked": (
+            attention_blocked(v, v, block=128, broadcast_kv=False), 1
+        ),
+        "xentropy_bwd": (
+            xentropy_bwd(vec, v, block=128, broadcast_trg=False)[0], 2
+        ),
+        "attention_bwd": (
+            attention_bwd(v, v, v, block=128, broadcast_kv=False)[0], 2
+        ),
+    }
+    for name, (df, n) in passes.items():
+        aggs = _merge_aggregates(plan_of(df))
+        assert len(aggs) == n, f"{name}: merge aggregates {aggs}"
+        assert not any("max(" in f for f in aggs), f"{name}: {aggs}"
+
+
+def test_spread_never_shrinks_a_wide_left_side(spark, tmp_path):
+    """gate._spread only fans OUT: a left side that already has 16
+    partitions runs the broadcast kernel on them — no extra round-robin
+    exchange — and its partition count comes from the plan and file
+    sizes without a Spark job."""
+    from gemmsql.datamodel import embeddings_vectors
+    from gemmsql.ops import xentropy
+    from gemmsql.stats import frame_partitions
+
+    vec = embeddings_vectors(spark, SF_SMOKE)
+    v = vec.select("i", "vec")
+    wide = vec.repartition(16)
+    out = xentropy(wide, v, broadcast_trg=True)
+    p = plan_of(out)
+    assert p.count("RoundRobinPartitioning") == 1, p
+    assert "RoundRobinPartitioning(16)" in p
+    assert out.rdd.getNumPartitions() == 16
+
+    path = str(tmp_path / "wide")
+    wide.write.parquet(path)
+    scan = spark.read.parquet(path)
+    sc = spark.sparkContext
+    sc.setJobGroup("frame_partitions", "frame_partitions")
+    try:
+        n = frame_partitions(scan)
+        assert not sc.statusTracker().getJobIdsForGroup("frame_partitions")
+    finally:
+        sc.setJobGroup("", "")
+    # Spark packs the 16 small files into a few read partitions; the
+    # job-free count must agree with Spark's own
+    assert n == scan.rdd.getNumPartitions() >= 2
+    assert "RoundRobinPartitioning" not in plan_of(xentropy(scan, v, broadcast_trg=True))
+    # the one-partition scan r18 added the spread for still fans out
+    assert frame_partitions(vec) == vec.rdd.getNumPartitions() == 1
 
 
 def test_bucketed_table_join_skips_exchange(spark, tmp_path):
