@@ -44,6 +44,12 @@ def vec_mat(series) -> np.ndarray:
     return np.asarray(series.tolist(), dtype=np.float64)
 
 
+def row_logsumexp(s: np.ndarray) -> np.ndarray:
+    """Max-shifted per-row logsumexp ``m + log(sum(exp(s - m)))``."""
+    m = s.max(axis=1)
+    return m + np.log(np.exp(s - m[:, None]).sum(axis=1))
+
+
 def use_broadcast(
     broadcast: bool | str, frame: DataFrame, max_rows: int = BROADCAST_RIGHT_MAX_ROWS
 ) -> bool:

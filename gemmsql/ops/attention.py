@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gemmsql.numerics import collected_lse, group_logsumexp
-from gemmsql.ops._blocked import fold, use_broadcast, vec_mat
+from gemmsql.ops._blocked import fold, row_logsumexp, use_broadcast, vec_mat
 
 
 def attention_scores(
@@ -97,7 +97,7 @@ def _attention_kernel(scale: bool, k_dim: int | None = None):
         if scale:
             s /= np.sqrt(lmat.shape[1])
         # online softmax partial (reference attention.py:5-9)
-        z = np.logaddexp.reduce(s, axis=1)
+        z = row_logsumexp(s)
         w = np.exp(s - z[:, None])
         v = w @ rv
         return pd.DataFrame({"i": lids, "z": z, "v": list(v)})
@@ -124,9 +124,8 @@ def _attention_merge(parts: DataFrame) -> DataFrame:
 
 
 def _attention_finish(rows: DataFrame) -> DataFrame:
-    return rows.select("i", F.posexplode("v").alias("d", "val")).select(
-        "i", F.col("d").cast("long").alias("d"), "val"
-    )
+    out = rows.select("i", F.posexplode("v").alias("d", "val"))
+    return out.select("i", F.col("d").cast("long").alias("d"), "val")
 
 
 def attention_blocked(
@@ -199,7 +198,7 @@ def attention_batched(
         s = q @ kv.T
         if scale:
             s /= np.sqrt(q.shape[1])
-        z = np.logaddexp.reduce(s, axis=1)
+        z = row_logsumexp(s)
         out = np.exp(s - z[:, None]) @ kv
         n, d = out.shape
         return pd.DataFrame(

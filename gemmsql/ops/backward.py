@@ -9,9 +9,9 @@ scatter-add is a ``groupBy(input id).agg(sum)`` — Spark's partial+final
 aggregation is the scatter-add monoid.
 
 Both sweeps share one broadcast-or-tiled pick: pass 1 (per-row forward
-statistics) is a :func:`gemmsql.ops._blocked.fold`, merged only on the
-tiled path; pass 2 scatter-adds into both sides, so it takes the
-executor's partials step and always merges (:func:`_merge_vec_partials`).
+statistics) is a ``_blocked.fold``, merged on the tiled path only; pass
+2 scatter-adds into both sides via ``_blocked.tile_partials`` and
+always merges (:func:`_merge_vec_partials`).
 
 Implemented (matching the reference's coverage):
 - matmul grads (the primitive under MLP, reference mlp.py:9-16)
@@ -31,7 +31,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gemmsql.ops._blocked import fold, lse_merge, tile_partials, use_broadcast, vec_mat
+from gemmsql.ops._blocked import (
+    fold, lse_merge, row_logsumexp, tile_partials, use_broadcast, vec_mat,
+)
 from gemmsql.ops.matmul import coo_matmul
 
 
@@ -150,7 +152,7 @@ def attention_bwd(
     def zr_kernel(lids, lmat, extra, rids, rmat):
         g = vec_mat(extra["gvec"])
         s = lmat @ rmat.T
-        z = np.logaddexp.reduce(s, axis=1)
+        z = row_logsumexp(s)
         w = np.exp(s - z[:, None])
         r = (w * (g @ rmat.T)).sum(axis=1)
         return pd.DataFrame({"i": lids, "z": z, "r": r})
@@ -206,7 +208,7 @@ def xentropy_bwd(
 
     def z_kernel(lids, lmat, _extra, rids, rmat):
         s = lmat @ rmat.T
-        return pd.DataFrame({"i": lids, "z": np.logaddexp.reduce(s, axis=1)})
+        return pd.DataFrame({"i": lids, "z": row_logsumexp(s)})
 
     z = fold(
         pred_vec.select("i", "vec"), trg_vec, z_kernel, "i long, z double",

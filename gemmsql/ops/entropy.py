@@ -7,11 +7,9 @@ Monoid (entropy.py:18-23): ``(p, n)`` with p merged by logaddexp and n —
 an *unnormalized softmax-weighted score sum* ``sum(exp(s - p_b) * s)`` —
 merged by the weighted-average rule ``n = n_a e^{p_a - p} + n_b e^{p_b - p}``.
 That merge is order-independent, so in SQL it collapses to one global
-two-pass aggregate.  :func:`row_entropy` runs through the fold executor
-(:func:`gemmsql.ops._blocked.fold`) with that merge as
-:func:`gemmsql.ops._blocked.lse_merge` (shared with attention_bwd's
-first pass); the merge runs only on the tiled path, and finish is
-``H = p - n``.  Backward is NOT implemented in the reference
+two-pass aggregate: the fold executor's ``lse_merge``, which
+:func:`row_entropy` runs on the tiled path only (``_blocked.fold``);
+finish is ``H = p - n``.  Backward is NOT implemented in the reference
 (entropy.py:14-16) and intentionally not here either.  Output ``(i, entropy)``.
 """
 
@@ -24,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gemmsql.numerics import group_logsumexp
-from gemmsql.ops._blocked import fold, lse_merge
+from gemmsql.ops._blocked import fold, lse_merge, row_logsumexp
 from gemmsql.ops.attention import attention_scores
 
 
@@ -45,7 +43,7 @@ def row_entropy_coo(pred_coo: DataFrame, trg_coo: DataFrame) -> DataFrame:
 
 def _entropy_kernel(lids, lmat, _extra, rids, rmat) -> pd.DataFrame:
     s = lmat @ rmat.T
-    p = np.logaddexp.reduce(s, axis=1)
+    p = row_logsumexp(s)
     n = (np.exp(s - p[:, None]) * s).sum(axis=1)  # reference entropy.py:11
     return pd.DataFrame({"i": lids, "p": p, "n": n})
 

@@ -9,9 +9,8 @@ Returns ``(prob of chosen, chosen global index)`` (sampling.py:59-61).
 Spark formulation: adding ONE Gumbel noise per (row, class) and taking
 the global argmax is *exactly* equivalent to the reference's
 hierarchical merge (Gumbel-max is associative under max), so the monoid
-merge is plain ``max_by``.  :func:`sample_categorical` runs through the
-fold executor (:func:`gemmsql.ops._blocked.fold`); that merge runs only
-on the tiled path.
+merge is plain ``max_by`` — run by the fold executor
+(``_blocked.fold``) on the tiled path only.
 
 Noise (round 2): uniform draws come from a *seeded integer hash* of
 (seed, row, class) — two quadratic-mix rounds mod the Mersenne prime
@@ -43,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gemmsql.numerics import collected_lse
-from gemmsql.ops._blocked import broadcast_right_partials, fold
+from gemmsql.ops._blocked import broadcast_right_partials, fold, row_logsumexp
 
 MIX_P = 2_147_483_647  # 2^31 - 1; squares stay < 2^63 (exact in int64)
 
@@ -85,7 +84,7 @@ def _sample_kernel(seed: int):
                 "z": pert[rows, amax],          # perturbed winner score
                 "sc": s[rows, amax],            # raw score of winner
                 "c": rids[amax],                # global class id of winner
-                "tz": np.logaddexp.reduce(s, axis=1),  # tile mass
+                "tz": row_logsumexp(s),         # tile mass
             }
         )
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gemmsql.numerics import collected_lse, group_logsumexp
-from gemmsql.ops._blocked import fold
+from gemmsql.ops._blocked import fold, row_logsumexp
 from gemmsql.ops.attention import attention_scores
 
 
@@ -51,7 +51,7 @@ def xentropy_coo(
 
 def _xent_kernel(lids, lmat, extra, rids, rmat) -> pd.DataFrame:
     s = lmat @ rmat.T
-    p = np.logaddexp.reduce(s, axis=1)  # per-tile logsumexp partial
+    p = row_logsumexp(s)  # per-tile logsumexp partial
     # one-hot pick: score of the true class if it lives in this tile
     # (reference xentropy.py:12: true[:,None] == tixs[None,:])
     match = extra["label"].to_numpy()[:, None] == rids[None, :]
