@@ -21,24 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gemmsql.numerics import group_logsumexp
 from gemmsql.ops._blocked import fold, lse_merge, row_logsumexp
-from gemmsql.ops.attention import attention_scores
-
-
-def row_entropy_coo(pred_coo: DataFrame, trg_coo: DataFrame) -> DataFrame:
-    s = attention_scores(pred_coo, trg_coo)
-    z = group_logsumexp(s, ["qi"], "s", "z")
-    return (
-        s.join(z, "qi")
-        .groupBy(F.col("qi").alias("i"))
-        .agg(
-            (
-                F.max("z")
-                - F.sum(F.exp(F.col("s") - F.col("z")) * F.col("s"))
-            ).alias("entropy")
-        )
-    )
 
 
 def _entropy_kernel(lids, lmat, _extra, rids, rmat) -> pd.DataFrame:

@@ -11,42 +11,18 @@ the true class falls inside a tile, xentropy.py:12) merged by plain sum.
 runs it through the fold executor (:func:`gemmsql.ops._blocked.fold`):
 the kernel emits per-tile partials ``(i, p_b, n_b)``, the merge runs
 only on the tiled path (on the broadcast path each row's partial is
-already final), and finish is ``loss = p - n``.  The relational path
-does the same with a score join.  Output: ``(i, loss)``.
+already final), and finish is ``loss = p - n``.  Output: ``(i, loss)``.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gemmsql.numerics import collected_lse, group_logsumexp
+from gemmsql.numerics import collected_lse
 from gemmsql.ops._blocked import fold, row_logsumexp
-from gemmsql.ops.attention import attention_scores
-
-
-def xentropy_coo(
-    pred_coo: DataFrame, trg_coo: DataFrame, labels: DataFrame
-) -> DataFrame:
-    """Relational path.  ``labels``: ``(i, label)`` with label = trg row id."""
-    s = attention_scores(pred_coo, trg_coo)  # (qi, ki, s)
-    z = group_logsumexp(s, ["qi"], "s", "z")
-    tru = (
-        s.join(
-            labels.select(F.col("i").alias("qi"), "label"),
-            ["qi"],
-        )
-        .where(F.col("ki") == F.col("label"))
-        .groupBy("qi")
-        .agg(F.sum("s").alias("n"))
-    )
-    return (
-        z.join(tru, "qi")
-        .select(F.col("qi").alias("i"), (F.col("z") - F.col("n")).alias("loss"))
-    )
 
 
 def _xent_kernel(lids, lmat, extra, rids, rmat) -> pd.DataFrame:
