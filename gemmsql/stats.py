@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 
 import pyarrow.parquet as pq
+from py4j.protocol import Py4JError
 
 _CACHE: dict[tuple[str, str], tuple[int, int]] = {}
 
@@ -209,7 +210,7 @@ def frame_partitions(df) -> int | None:
                 return None
         sizes = [os.path.getsize(_local_path(f)) for f in df.inputFiles()]
         return _file_partitions(df.sparkSession, sizes)
-    except Exception:
+    except (Py4JError, OSError):
         return None
 
 
