@@ -376,17 +376,17 @@ def snapshot_files(
     *,
     from_checkpoint: bool = False,
 ) -> DataFrame:
-    """Live file records at ``version`` (latest when None).  With
-    ``from_checkpoint`` the replay starts from the newest checkpoint
-    at or below ``version`` and applies only later commits.
+    """Live file records at ``version`` (latest when None) as a
+    DataFrame.  With ``from_checkpoint`` the replay starts from the
+    newest checkpoint at or below ``version`` and applies only later
+    commits.
 
-    Scale note (VERDICT r12 adjudication): callers that ``collect()``
-    this frame hold the live FILE LIST on the driver — O(live files),
-    the same driver-side planning every open table format does
-    (checkpoints bound replay cost, not list size).  At ~10^6 files
-    that is a few hundred MB of driver strings; fine for this tier's
-    fixtures, but a table with user-controlled file counts should
-    page the list or push the downstream join fully distributed."""
+    This is the DataFrame form of the snapshot, for
+    :func:`write_checkpoint` (which unions it with the metadata
+    actions) and for tests, which use it as the reference replay.
+    Planning never collects it: every planning pass reads the
+    driver-side snapshot :func:`_live_file_records`, the same replay
+    with no Spark job."""
     present = _present_versions(table_dir)
     ckpt_v = _latest_checkpoint_version(table_dir, version)
     truncated = bool(present) and present[0] > 0
@@ -672,12 +672,10 @@ def stats_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches=0 — is also pinned in tests."""
     table_dir = stage_versioned_table(spark, sf_dir)
     # skip decisions are pure LOG metadata — decide them driver-side
-    # from the same last-action-wins replay the planner runs (r17:
-    # the Spark-frame route re-read the log twice and joined a
-    # directory scan against a broadcast of it, three jobs for a
-    # handful of metadata rows); the TRUE counts still come from a
-    # full scan of every live file — reading only candidates would
-    # assume the very invariant this op audits
+    # from the same last-action-wins replay the planner runs; the
+    # TRUE counts still come from a full scan of every live file —
+    # reading only candidates would assume the very invariant this
+    # op audits
     adds = sorted(
         _live_adds_before(os.path.join(table_dir, LOG_SUBDIR), 1 << 62),
         key=lambda a: a["path"],
@@ -755,10 +753,8 @@ def version_diff_dir(
     (the gate wrapper stages the fixture; this is the library form —
     also the post-condition check :func:`optimize_table` is tested
     with, since an OPTIMIZE commit must diff empty)."""
-    la = {r["path"] for r in
-          snapshot_files(spark, table_dir, v_from).collect()}
-    lb = {r["path"] for r in
-          snapshot_files(spark, table_dir, v_to).collect()}
+    la = {r["path"] for r in _live_file_records(table_dir, v_from)}
+    lb = {r["path"] for r in _live_file_records(table_dir, v_to)}
 
     cols = ["o_orderkey", "o_orderpriority"]
 
@@ -841,8 +837,7 @@ def cdf_ivm_rollup(
     base (count and sum are the group-abelian aggregates this works
     for — min/max would need the full group rescan on retraction)."""
     table_dir = stage_versioned_table(spark, sf_dir)
-    base_paths = {r["path"] for r in
-                  snapshot_files(spark, table_dir, v_from).collect()}
+    base_paths = {r["path"] for r in _live_file_records(table_dir, v_from)}
     base = (
         spark.read.parquet(
             *[os.path.join(table_dir, DATA_SUBDIR, p)
@@ -1855,10 +1850,8 @@ def optimize_table(
     version sees exactly the files its replay names."""
     _refuse_live_deletes(table_dir, "OPTIMIZE")
     shutil.copytree(table_dir, dest_dir)
-    log = read_log(spark, dest_dir)
-    latest = log.agg(F.max("v")).collect()[0][0]
-    new_v = int(latest) + 1
-    live = snapshot_files(spark, dest_dir).collect()
+    new_v = _latest_version(dest_dir) + 1
+    live = _live_file_records(dest_dir)
     paths = sorted(r["path"] for r in live)
     # the shared reader: a single-footer read would silently drop
     # columns on a schema-divergent live set, and a widened one
@@ -2083,42 +2076,21 @@ def _txn_tag_of(commit_path: str) -> str | None:
     return tag
 
 
-#: per-commit-file delete-bearing action lines (immutable files —
-#: the _TXN_TAG_CACHE caching argument), so the live-delete gate in
-#: snapshot_read AND the MOR read's delete-file resolution cost
-#: cached dict lookups, not a Spark job per read
-_DELLINE_CACHE: dict[str, tuple[dict, ...]] = {}
-
-
-def _delete_lines_of(commit_path: str) -> tuple[dict, ...]:
-    if commit_path in _DELLINE_CACHE:
-        return _DELLINE_CACHE[commit_path]
-    out: list[dict] = []
-    with open(commit_path) as f:
-        for ln in f:
-            if not ln.strip():
-                continue
-            a = json.loads(ln)
-            if a.get("a") in ("keydel", "posdel", "remove"):
-                out.append(a)
-    res = tuple(out)
-    _DELLINE_CACHE[commit_path] = res
-    return res
-
-
 def _live_delete_actions(
     table_dir: str, version: int | None = None
 ) -> list[dict]:
-    """Driver-side live delete-file ACTIONS at ``version`` — the same
-    last-action replay as :func:`snapshot_delete_files`, from cached
-    per-file parses so the read path adds no Spark job.  The expired
-    prefix can carry no keydel/posdel actions (expiry refuses them
-    until retired), so no checkpoint seeding is needed."""
+    """Live delete-file ACTIONS (``keydel``/``posdel``) at ``version``
+    — the last-action replay :func:`snapshot_delete_files` defines,
+    from cached per-file parses, as :func:`_log_record` dicts.  The
+    expired prefix can carry no keydel/posdel actions (expiry refuses
+    them until retired), so no checkpoint seeding is needed."""
     last: dict[str, tuple[int, int, dict]] = {}
     for p in sorted(
         _glob.glob(os.path.join(table_dir, LOG_SUBDIR, "*.json"))
     ):
-        for a in _delete_lines_of(p):
+        for a in _action_lines_of(p):
+            if a.get("a") not in ("keydel", "posdel", "remove"):
+                continue
             v = int(a["v"])
             if version is not None and v > version:
                 continue
@@ -2126,36 +2098,78 @@ def _live_delete_actions(
             cur = last.get(a["path"])
             if cur is None or rank >= cur[:2]:
                 last[a["path"]] = (*rank, a)
-    return [a for (_, _, a) in last.values()
+    return [_log_record(a) for (_, _, a) in last.values()
             if a["a"] in ("keydel", "posdel")]
 
 
-#: per-commit-file FULL action-line parses (immutable once written —
-#: the _DELLINE_CACHE argument), shared by the r17 driver-side
+#: per-commit-file FULL action-line parses, shared by the driver-side
 #: metadata readers so column mapping / properties / constraints /
 #: live-set replays cost cached dict lookups, not a Spark job per
-#: planning pass
-_ACTLINE_CACHE: dict[str, tuple[dict, ...]] = {}
+#: planning pass.  A commit file is immutable once written, but a
+#: table directory can be deleted and recreated at the same path, so
+#: each entry is checked against the file's (inode, mtime, size)
+_ACTLINE_CACHE: dict[str, tuple[tuple, tuple[dict, ...]]] = {}
 
 
 def _action_lines_of(commit_path: str) -> tuple[dict, ...]:
-    if commit_path not in _ACTLINE_CACHE:
-        out = []
-        with open(commit_path) as f:
-            for ln in f:
-                if ln.strip():
-                    out.append(json.loads(ln))
-        if not out:
-            # partially visible (reader raced the committer between
-            # O_EXCL create and the content write) — do not cache, or
-            # every replay built on this cache stays desynced for the
-            # process lifetime (the _commit_ts_of/_txn_tag_of guard)
-            return ()
-        _ACTLINE_CACHE[commit_path] = tuple(out)
-    return _ACTLINE_CACHE[commit_path]
+    st = os.stat(commit_path)
+    sig = (st.st_ino, st.st_mtime_ns, st.st_size)
+    hit = _ACTLINE_CACHE.get(commit_path)
+    if hit is not None and hit[0] == sig:
+        return hit[1]
+    out = []
+    with open(commit_path) as f:
+        for ln in f:
+            if ln.strip():
+                out.append(json.loads(ln))
+    if not out:
+        # partially visible (reader raced the committer between
+        # O_EXCL create and the content write) — do not cache, or
+        # every replay built on this cache stays desynced for the
+        # process lifetime (the _commit_ts_of/_txn_tag_of guard)
+        return ()
+    _ACTLINE_CACHE[commit_path] = (sig, tuple(out))
+    return _ACTLINE_CACHE[commit_path][1]
 
 
 _META_KINDS = ("meta", "protocol", "constraint", "property")
+
+
+_LOG_FIELDS = tuple(f.name for f in LOG_SCHEMA.fields)
+_LOG_INTS = frozenset(
+    f.name for f in LOG_SCHEMA.fields if isinstance(f.dataType, T.LongType)
+)
+_LOG_LISTS = frozenset(
+    f.name for f in LOG_SCHEMA.fields
+    if isinstance(f.dataType, T.ArrayType)
+)
+
+
+def _log_record(a: dict) -> dict:
+    """One replayed action in the ``LOG_SCHEMA`` row shape, i.e. what
+    ``Row.asDict()`` gives for a :func:`snapshot_files` row: every
+    field present (None when absent), ints as ``int``, ``ts`` as a
+    float, array fields as lists and ``cstats`` as a dict of lists —
+    whether the action came from a JSON commit or a checkpoint
+    parquet, where a map arrives as (key, value) pairs and a missing
+    int may arrive as NaN.  A fresh dict: callers may edit it without
+    touching the per-commit parse caches."""
+    out = {}
+    for k in _LOG_FIELDS:
+        v = a.get(k)
+        if _is_unset(v):
+            v = None
+        elif k in _LOG_INTS:
+            v = int(v)
+        elif k == "ts":
+            v = float(v)
+        elif k == "cstats":
+            items = v.items() if isinstance(v, dict) else v
+            v = {c: list(b) for c, b in items}
+        elif k in _LOG_LISTS:
+            v = list(v)
+        out[k] = v
+    return out
 
 
 def _is_unset(v) -> bool:
@@ -2232,13 +2246,15 @@ def _check_replay_bound(n: int, where: str) -> None:
 def _live_file_records(
     table_dir: str, version: int | None = None
 ) -> list[dict]:
-    """Driver-side twin of ``snapshot_files(...).collect()`` — the
-    same checkpoint seeding, expiry validation, and last-action-wins
-    rule (remove beats add inside one version), as plain dicts with
-    no Spark job.  The read path's live-set replay runs here; the
-    DataFrame form stays for callers that keep computing on it.  A
-    MISSING log directory refuses like :func:`read_log` — a typo'd
-    table path must never read as an empty table."""
+    """The table's live file records at ``version`` (latest when
+    None) — the one snapshot every planning pass reads.  Checkpoint
+    seeding, expiry validation and the last-action-wins rule (remove
+    beats add inside one version) are those of
+    :func:`snapshot_files`, replayed on the driver from cached
+    per-commit parses, with no Spark job; records come back in the
+    :func:`_log_record` shape.  A MISSING log directory refuses like
+    :func:`read_log` — a typo'd table path must never read as an
+    empty table."""
     if not os.path.isdir(os.path.join(table_dir, LOG_SUBDIR)):
         raise ValueError(f"not a logged table (no {LOG_SUBDIR}/): "
                          f"{table_dir}")
@@ -2272,11 +2288,13 @@ def _live_file_records(
             last[a["path"]] = (rank, a)
 
     if use_ckpt:
-        import pandas as _pd
+        import pyarrow.parquet as _pq
 
-        for r in _pd.read_parquet(
+        # pyarrow rows, not pandas: a null-bearing int column would
+        # come back as float64 and round keys above 2**53
+        for r in _pq.read_table(
             _checkpoint_dir(table_dir, ckpt_v)
-        ).to_dict("records"):
+        ).to_pylist():
             fold(r)
         _check_replay_bound(len(last), "_live_file_records")
     for p in sorted(
@@ -2287,7 +2305,7 @@ def _live_file_records(
         for a in _action_lines_of(p):
             fold(a)
         _check_replay_bound(len(last), "_live_file_records")
-    return [a for (_, a) in last.values() if a["a"] == "add"]
+    return [_log_record(a) for (_, a) in last.values() if a["a"] == "add"]
 
 
 def _live_delete_paths(
@@ -2311,57 +2329,6 @@ def _refuse_live_deletes(table_dir: str, op: str) -> None:
             "run materialize_deletes first — rewriting data files "
             "would break positional references and delete sequencing"
         )
-
-
-def _live_paths_from_files(log_files: list[str]) -> set[str]:
-    """Driver-side replay of the live DATA-file set from raw commit
-    files — the conflict check runs inside the commit loop, where a
-    Spark job per retry would be absurd.  Metadata-sized: the same
-    last-action-wins rule as :func:`snapshot_files`.  On an expired
-    (truncated) log the checkpoint parquet seeds the base state —
-    read driver-side with pandas, still no Spark job."""
-    last: dict[str, tuple[int, int, str]] = {}
-    versions = [
-        int(os.path.basename(p).split(".")[0]) for p in log_files
-    ]
-    if versions and min(versions) > 0:
-        log_dir = os.path.dirname(log_files[0])
-        table_dir = os.path.dirname(log_dir)
-        ckpt_v = _latest_checkpoint_version(table_dir, None)
-        if ckpt_v is None or any(
-            v not in set(versions) for v in range(ckpt_v + 1,
-                                                  max(versions) + 1)
-        ):
-            raise ValueError(
-                "log expired with no covering checkpoint: cannot "
-                "replay the live set for the conflict check"
-            )
-        import pandas as _pd
-
-        base = _pd.read_parquet(_checkpoint_dir(table_dir, ckpt_v))
-        for r in base.to_dict("records"):
-            if r.get("a") == "add":
-                last[r["path"]] = (int(r["v"]), -1, "add")
-        log_files = [
-            p for p in log_files
-            if int(os.path.basename(p).split(".")[0]) > ckpt_v
-        ]
-    for p in log_files:
-        v = int(os.path.basename(p).split(".")[0])
-        with open(p) as f:
-            for i, ln in enumerate(f):
-                if not ln.strip():
-                    continue
-                a = json.loads(ln)
-                if a.get("a") not in ("add", "remove"):
-                    continue
-                # remove beats add within one version: rank removes
-                # higher at equal v
-                rank = (v, 0 if a["a"] == "remove" else -1)
-                cur = last.get(a["path"])
-                if cur is None or rank >= (cur[0], cur[1]):
-                    last[a["path"]] = (rank[0], rank[1], a["a"])
-    return {p for p, (_, _, act) in last.items() if act == "add"}
 
 
 def commit_actions(
@@ -2448,7 +2415,7 @@ def commit_actions(
                 if _txn_tag_of(p) == txn_tag:
                     return int(os.path.basename(p).split(".")[0])
         if expects_live:
-            live = _live_paths_from_files(found)
+            live = {r["path"] for r in _live_file_records(table_dir)}
             gone = sorted(set(expects_live) - live)
             if gone:
                 raise ConcurrentModificationError(
@@ -3634,6 +3601,7 @@ def streaming_tablelog_gate_dir(
                 by_path.setdefault(a["path"], []).append(
                     (int(a["v"]), int(a["n_rows"]))
                 )
+    _check_replay_bound(len(by_path), "streaming_tablelog_gate_dir")
     # Shipped as a LITERAL MAP expression rather than a local-relation
     # broadcast join (r18): the static side of a stream-static join
     # re-materializes (LocalTableScan + BroadcastExchange) every
@@ -3655,15 +3623,20 @@ def streaming_tablelog_gate_dir(
                 F.lit(n).cast("long").alias("add_rows"),
             ))
         map_items.extend([F.lit(path), F.array(*entries)])
-    add_index = F.create_map(*map_items)
-    add_rows_col = F.element_at(
-        F.filter(
-            add_index[F.col("path")],
-            lambda e: (F.col("v") >= e["add_v"])
-            & (F.col("v") < e["next_add_v"]),
-        ),
-        1,
-    )["add_rows"]
+    if by_path:
+        add_index = F.create_map(*map_items)
+        add_rows_col = F.element_at(
+            F.filter(
+                add_index[F.col("path")],
+                lambda e: (F.col("v") >= e["add_v"])
+                & (F.col("v") < e["next_add_v"]),
+            ),
+            1,
+        )["add_rows"]
+    else:
+        # an empty create_map() is map<null,null>: the lookup would
+        # fail analysis, and with no add every action's count is NULL
+        add_rows_col = F.lit(None).cast("long")
     agg = (
         src.withColumn("add_rows", add_rows_col)
         .groupBy(F.col("v").alias("version"))
@@ -3732,7 +3705,7 @@ def pruned_scan_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     a file loses rows and moves the hash; the pruning itself is
     plan-pinned via ``inputFiles`` in tests."""
     table_dir = stage_versioned_table(spark, sf_dir)
-    live = snapshot_files(spark, table_dir).collect()
+    live = _live_file_records(table_dir)
     gmax = max(r["max_key"] for r in live)
     lo, hi = gmax * 35 // 100, gmax * 55 // 100
     cand = sorted(
@@ -4106,52 +4079,15 @@ def _stage_partitioned_files(
         .partitionBy(*shadow)
         .parquet(scratch)
     )
-    # per-partition stats from the WRITTEN files' parquet FOOTERS
-    # (r17): the old second aggregation pass re-scanned and
-    # re-shuffled the source per append just to recover counts and
-    # min/max the writer's own footers already carry exactly (int64
-    # and date32 statistics are never truncated).  Partition values
-    # come from the scratch directory names, which equal str(value)
-    # by the _encode_part_value charset contract — values Spark
-    # would escape are refused below exactly as the encoder refused
-    # them (an escaped name contains '%', outside the charset).
-    import pyarrow.parquet as _pq
-
-    has_date = "o_orderdate" in df.columns
-    date_col = (
-        log2phys["o_orderdate"] if (log2phys and has_date)
-        else "o_orderdate"
-    )
-
-    def _footer_part_stats(fp: str) -> dict:
-        md = _pq.ParquetFile(fp).metadata
-        names = md.schema.names
-        ki = names.index(sort_key)
-        di = names.index(date_col) if has_date else -1
-        mnk = mxk = mnd = mxd = None
-        for rg in range(md.num_row_groups):
-            stk = md.row_group(rg).column(ki).statistics
-            if stk is None or not stk.has_min_max:
-                raise ValueError(
-                    f"{fp} row group {rg}: no {sort_key} stats"
-                )
-            mnk = stk.min if mnk is None else min(mnk, stk.min)
-            mxk = stk.max if mxk is None else max(mxk, stk.max)
-            if has_date:
-                std = md.row_group(rg).column(di).statistics
-                if std is None or not std.has_min_max:
-                    raise ValueError(
-                        f"{fp} row group {rg}: no {date_col} stats"
-                    )
-                lo, hi = std.min, std.max
-                lo = lo if isinstance(lo, str) else lo.strftime("%Y-%m-%d")
-                hi = hi if isinstance(hi, str) else hi.strftime("%Y-%m-%d")
-                mnd = lo if mnd is None else min(mnd, lo)
-                mxd = hi if mxd is None else max(mxd, hi)
-        out = {"n": md.num_rows, "mnk": int(mnk), "mxk": int(mxk)}
-        if has_date:
-            out["mnd"], out["mxd"] = mnd, mxd
-        return out
+    # per-partition stats from the WRITTEN files (_file_add_action).
+    # Partition values come from the scratch directory names, which
+    # equal str(value) by the _encode_part_value charset contract —
+    # values Spark would escape are refused below exactly as the
+    # encoder refused them (an escaped name contains '%', outside the
+    # charset).
+    date_col = None
+    if "o_orderdate" in df.columns:
+        date_col = (log2phys or {}).get("o_orderdate", "o_orderdate")
 
     by_dir: dict[tuple, list[str]] = {}
     for fp in sorted(_glob.glob(os.path.join(
@@ -4194,15 +4130,9 @@ def _stage_partitioned_files(
             # merged here only if Spark ever splits a value (it does
             # not under repartition-by-value; kept for safety)
             _write_one_file(spark.read.parquet(*files), dest)
-        st = _footer_part_stats(dest)
-        act = {
-            "a": "add", "path": name, "part": parts,
-            "n_rows": int(st["n"]), "n_bytes": os.path.getsize(dest),
-            "min_key": st["mnk"], "max_key": st["mxk"],
-        }
-        if has_date:
-            act["min_date"] = st["mnd"]
-            act["max_date"] = st["mxd"]
+        act = _file_add_action(
+            spark, dest, name, sort_key, date_col=date_col)
+        act["part"] = parts
         actions.append(act)
     shutil.rmtree(scratch, ignore_errors=True)
     return actions
@@ -4223,12 +4153,10 @@ def partition_candidate_files(
     degrades skip precision, not correctness.  Values recorded under
     a since-RENAMED source column's old name resolve through the
     field-id alias map, so a rename costs no pruning precision."""
-    # driver-side last-action replay (r17): the skip plan needs only
-    # log metadata, and the Spark-frame route (read_log + window +
-    # collect) cost a full job per planning pass.  _live_file_records
-    # (not _live_adds_before) for the VERSIONED replay: it selects the
-    # checkpoint at-or-below ``version`` and validates expiry exactly
-    # like snapshot_files — seeding from the latest checkpoint and
+    # _live_file_records (not _live_adds_before) for the VERSIONED
+    # replay: it selects the checkpoint at-or-below ``version`` and
+    # validates expiry exactly like snapshot_files — seeding from the
+    # latest checkpoint and
     # filtering by v would mis-resolve files removed/re-added in
     # (version, ckpt_v] on a truncated log, silently dropping rows
     # from a time-travel read through pruning (ADVICE r17).
@@ -4241,7 +4169,7 @@ def partition_candidate_files(
             for c, v in eq.items()}
     out = []
     for r in live:
-        vals = _canon_part_vals(_act_get(r, "part"), alias_map)
+        vals = _canon_part_vals(r["part"], alias_map)
         if all(c not in vals or vals[c] == w for c, w in want.items()):
             out.append(r)
     return out
@@ -4389,7 +4317,7 @@ def partition_pruned_read_where(
     ORIGINAL predicates apply as residual data filters.  A predicate
     on a column no spec entry derives from still narrows the data,
     it just can't prune files."""
-    live = snapshot_files(spark, table_dir, version).collect()
+    live = _live_file_records(table_dir, version)
     alias_map = _spec_alias_map(spark, table_dir, version)
     # convert for every derivable key: the CURRENT spec plus every
     # key any live file recorded (canonicalized through the rename
@@ -4482,7 +4410,7 @@ def replace_partitions(
         spark, table_dir, df, prefix, key=key, spec=spec
     )
     touched = {tuple(a["part"]) for a in adds}
-    live = snapshot_files(spark, table_dir, planned_v).collect()
+    live = _live_file_records(table_dir, planned_v)
     alias_map = _spec_alias_map(spark, table_dir)
     removes = []
     for r in live:
@@ -4532,7 +4460,7 @@ def compact_partition(
             f"{sorted(eq)}"
         )
     want = [_encode_part_value(c, eq[c]) for c in spec]
-    live = snapshot_files(spark, table_dir).collect()  # metadata
+    live = _live_file_records(table_dir)
     alias_map = _spec_alias_map(spark, table_dir)
     canon_want = sorted(
         f"{alias_map.get(k, k)}={v}"
@@ -4746,7 +4674,7 @@ def storage_partitioned_join(
 
     def _files_by_bucket(d: str) -> dict[str, list[str]]:
         out: dict[str, list[str]] = {}
-        for r in snapshot_files(spark, d).collect():  # metadata
+        for r in _live_file_records(d):
             vals = dict(p.split("=", 1) for p in (r["part"] or []))
             b = vals.get(entry)
             if b is None:
@@ -4839,7 +4767,7 @@ def drop_partitions(
         raise ValueError("drop_partitions needs at least one key")
     want = {c: _encode_part_value(c, v).split("=", 1)[1]
             for c, v in eq.items()}
-    live = snapshot_files(spark, table_dir).collect()  # metadata
+    live = _live_file_records(table_dir)
     alias_map = _spec_alias_map(spark, table_dir)
     blind = []
     victims = []
@@ -4883,7 +4811,7 @@ def compact_partitions(
     partition needs compaction — the idempotent nightly-maintenance
     shape: at 100 TB the planner groups a metadata list, never scans
     data it won't rewrite."""
-    live = snapshot_files(spark, table_dir).collect()  # metadata
+    live = _live_file_records(table_dir)
     groups: dict[tuple, list] = {}
     for r in live:
         if r["part"]:
@@ -4947,34 +4875,20 @@ def append_with_stats(
     per-column [type, min, max] bounds for EVERY ``stat_cols`` entry
     (the Iceberg column-stats map) on top of the usual key/date
     stats — so skip plans can prune on arbitrary predicates, not
-    just the key.  ONE aggregation pass computes every bound.
-    Numeric columns record canonical ``repr`` forms compared
-    numerically at prune time; everything else compares
-    lexicographically (safe for ISO dates/timestamps)."""
+    just the key.  Bounds come from the written file's footer, with
+    one aggregation over the file only for columns the footer cannot
+    bound exactly (:func:`_file_add_action`).  Numeric columns
+    record canonical ``repr`` forms compared numerically at prune
+    time; everything else compares lexicographically (safe for ISO
+    dates/timestamps)."""
     missing = [c for c in stat_cols if c not in df.columns]
     if missing:
         raise ValueError(f"stat columns not in frame: {missing}")
-    types = dict(df.dtypes)
-    add = _write_with_add_action(df, table_dir, name, key=key)
+    add = _write_with_add_action(
+        df, table_dir, name, key=key, stat_cols=stat_cols
+    )
     if add is None:
         raise ValueError("empty append")
-    aggs = []
-    for c in stat_cols:
-        aggs.append(F.min(c).alias(f"mn_{c}"))
-        aggs.append(F.max(c).alias(f"mx_{c}"))
-    # bound the BYTES ON DISK, not a re-evaluation of ``df`` — same
-    # desync rule as _write_with_add_action
-    written = spark.read.parquet(
-        os.path.join(table_dir, DATA_SUBDIR, name)
-    )
-    st = written.agg(*aggs).collect()[0]
-    cstats = {}
-    for c in stat_cols:
-        mn, mx = st[f"mn_{c}"], st[f"mx_{c}"]
-        if mn is None:
-            continue  # all-NULL column: no bound, never pruned
-        cstats[c] = [_cstat_type(types[c]), str(mn), str(mx)]
-    add["cstats"] = cstats
     return commit_actions(table_dir, [add])
 
 
@@ -5008,9 +4922,8 @@ def candidate_files_where(
     hi`` against the generalized column bounds.  Files with no
     recorded bound for ``col`` ALWAYS stay candidates — the same
     never-lose-rows rule as partition and key-stats pruning."""
-    live = snapshot_files(spark, table_dir, version).collect()
     out = []
-    for r in live:
+    for r in _live_file_records(table_dir, version):
         cs = r["cstats"] or {}
         entry = cs.get(col)
         if entry is None or _cstat_intersects(list(entry), lo, hi):
@@ -5157,16 +5070,9 @@ def vacuum_plan(
         .groupBy("path")
         .agg(F.max_by("n_bytes", "v").alias("n_bytes"))
     )
-    all_commits = sorted(
-        _glob.glob(os.path.join(table_dir, LOG_SUBDIR, "*.json"))
-    )
     protected: set[str] = set()
     for v in _present_versions(table_dir)[-(retain_versions + 1):]:
-        subset = [
-            p for p in all_commits
-            if int(os.path.basename(p).split(".")[0]) <= v
-        ]
-        protected |= _live_paths_from_files(subset)
+        protected |= {r["path"] for r in _live_file_records(table_dir, v)}
         protected |= _live_delete_paths(table_dir, v)
     live = spark.createDataFrame(
         [(p,) for p in sorted(protected)], "path string"
@@ -5274,15 +5180,11 @@ def restore_table(
             f"RESTORE target v{to_version} is not below the current "
             f"version v{latest}"
         )
-    want = {r["path"]: r for r in
-            snapshot_files(spark, table_dir, to_version).collect()}
-    have = {r["path"]: r for r in
-            snapshot_files(spark, table_dir).collect()}
-    want_del = {r["path"]: r for r in
-                snapshot_delete_files(spark, table_dir, to_version)
-                .collect()}
-    have_del = {r["path"]: r for r in
-                snapshot_delete_files(spark, table_dir).collect()}
+    want = {r["path"]: r for r in _live_file_records(table_dir, to_version)}
+    have = {r["path"]: r for r in _live_file_records(table_dir)}
+    want_del = {r["path"]: r
+                for r in _live_delete_actions(table_dir, to_version)}
+    have_del = {r["path"]: r for r in _live_delete_actions(table_dir)}
     re_adds = sorted(set(want) - set(have))
     removes = sorted(set(have) - set(want))
     del_re_adds = sorted(set(want_del) - set(have_del))
@@ -5348,8 +5250,8 @@ def clone_table(
     Returns ``dest_dir``."""
     if os.path.exists(dest_dir):
         raise ValueError(f"clone destination exists: {dest_dir}")
-    live = snapshot_files(spark, src_dir).collect()  # metadata
-    dels = snapshot_delete_files(spark, src_dir).collect()
+    live = _live_file_records(src_dir)
+    dels = _live_delete_actions(src_dir)
     feats = sorted(required_reader_features(src_dir))
     wfeats = sorted(required_writer_features(src_dir))
     mapping = column_mapping(spark, src_dir)
@@ -5447,8 +5349,8 @@ def table_detail(spark: SparkSession, table_dir: str) -> DataFrame:
     driver-side metadata — the same replay every read plans with; no
     data file opens, so it answers in commit-log time on a 100 TB
     table."""
-    live = snapshot_files(spark, table_dir).collect()  # metadata
-    dels = snapshot_delete_files(spark, table_dir).collect()
+    live = _live_file_records(table_dir)
+    dels = _live_delete_actions(table_dir)
     m = column_mapping(spark, table_dir)
     return spark.createDataFrame(
         [(
@@ -5526,75 +5428,177 @@ def _next_version_nonce(table_dir: str) -> int:
     return (max(versions) + 1) if versions else 0
 
 
-def _footer_file_stats(path: str, key: str) -> dict:
-    """n_rows / key range / optional ``o_orderdate`` range of ONE
-    written parquet file from its FOOTER row-group statistics —
-    exact for int64 and date32 (never truncated; 10-char ISO date
-    strings sit far below the string-stat truncation bound, and ISO
-    form makes string min/max == date min/max).  The r17 rule:
-    write-time stats read the footer the write just produced, never
-    a second scan job.  Returns ``{"n": 0}`` for an empty file;
-    raises if a row group lacks the statistic (loud, like the old
-    ``int(None)`` crash — a silent wrong bound would let a skip
-    plan lose rows)."""
+#: (physical, logical) parquet types whose row-group min/max is the
+#: exact Spark ``min``/``max``: ints, floats, dates and UTF-8 strings.
+#: Decimal, timestamp (INT96 has no statistics), boolean and binary
+#: columns take the aggregation instead
+_EXACT_FOOTER_TYPES = frozenset({
+    ("INT32", "NONE"), ("INT32", "INT"), ("INT32", "DATE"),
+    ("INT64", "NONE"), ("INT64", "INT"),
+    ("FLOAT", "NONE"), ("DOUBLE", "NONE"), ("BYTE_ARRAY", "STRING"),
+})
+
+#: types whose footer min/max gives a column's DAY bounds: dates, ISO
+#: date strings and INT64 timestamps (an INT96 timestamp has none)
+_DAY_FOOTER_TYPES = frozenset({
+    ("INT32", "DATE"), ("BYTE_ARRAY", "STRING"), ("INT64", "TIMESTAMP"),
+})
+
+
+def _nan_last(v):
+    """Sort key of Spark's float order: NaN above every number."""
+    return (v != v, v)
+
+
+def _footer_bounds(
+    md, cols, types=_EXACT_FOOTER_TYPES
+) -> tuple[dict, list[str]]:
+    """Exact (min, max) per column of one written parquet file from
+    its row-group statistics — the values Spark's ``min``/``max``
+    over the same file collect to, None for an all-NULL column — and
+    the columns the footer cannot answer exactly (or whose type is
+    outside ``types``).
+
+    Exact for int/long/double/float/date/string as Spark's parquet
+    writer records them: NULLs are skipped, NaN orders above every
+    number (a NaN max is Spark's NaN max), and UTF-8 strings compare
+    bytewise like Spark strings.  Left to the caller's aggregation:
+    the types outside ``types``, a row group with
+    values but no statistic (a binary value past the writer's
+    statistics size limit), a NaN minimum (Spark's min skips NaN
+    unless every value is one), and a zero bound (Spark keeps
+    whichever of -0.0/0.0 it meets first; the footer keeps a fixed
+    one)."""
+    names = md.schema.names
+    bounds: dict = {}
+    inexact: list[str] = []
+    for c in cols:
+        i = names.index(c)
+        sc = md.schema.column(i)
+        if (sc.physical_type, sc.logical_type.type) not in types:
+            inexact.append(c)
+            continue
+        los, his = [], []
+        for rg in range(md.num_row_groups):
+            meta = md.row_group(rg)
+            st = meta.column(i).statistics
+            if st is not None and st.has_min_max:
+                los.append(st.min)
+                his.append(st.max)
+            elif (st is None or not st.has_null_count
+                  or st.null_count != meta.num_rows):
+                los = None  # values without a statistic
+                break
+        if los is None:
+            inexact.append(c)
+        elif not los:
+            bounds[c] = None  # every value NULL
+        else:
+            lo, hi = min(los, key=_nan_last), max(his, key=_nan_last)
+            if isinstance(lo, float) and (
+                    lo != lo or lo == 0.0 or hi == 0.0):
+                inexact.append(c)
+            else:
+                bounds[c] = (lo, hi)
+    return bounds, inexact
+
+
+def _file_add_action(
+    spark: SparkSession,
+    path: str,
+    name: str,
+    key: str,
+    stat_types: dict[str, str] | None = None,
+    *,
+    date_col: str | None = "o_orderdate",
+) -> dict | None:
+    """The add action of ONE written data file, its stats read from
+    the file itself: row count, key range, ``date_col`` day range
+    (when the file has it) and, for each ``stat_types`` column
+    (column -> ``_cstat_type``), a ``cstats`` [type, min, max] bound
+    in the ``str()`` form of Spark's min/max.  None for an empty
+    file.
+
+    The footer answers whatever :func:`_footer_bounds` can answer
+    exactly; the rest — an INT96 TIMESTAMP ``date_col`` (day bounds: the
+    dates of its min and max), decimal/timestamp stat columns — comes
+    from ONE aggregation over the written file, run only when needed.
+    Never from a re-evaluation of the written frame: any
+    nondeterminism in it would desync the bounds from the bytes on
+    disk, and a too-narrow bound lets a skip plan LOSE rows.  A key
+    without footer stats refuses loudly for the same reason."""
     import pyarrow.parquet as _pq
 
     md = _pq.ParquetFile(path).metadata
     if not md.num_rows:
-        return {"n": 0}
-    names = md.schema.names
-    ki = names.index(key)
-    di = names.index("o_orderdate") if "o_orderdate" in names else -1
-    mnk = mxk = mnd = mxd = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(ki).statistics
-        if st is None or not st.has_min_max:
-            raise ValueError(f"{path} row group {rg}: no {key} stats")
-        mnk = st.min if mnk is None else min(mnk, st.min)
-        mxk = st.max if mxk is None else max(mxk, st.max)
-        if di >= 0:
-            sd = md.row_group(rg).column(di).statistics
-            if sd is None or not sd.has_min_max:
-                raise ValueError(
-                    f"{path} row group {rg}: no o_orderdate stats"
-                )
-            lo, hi = sd.min, sd.max
-            lo = lo if isinstance(lo, str) else lo.strftime("%Y-%m-%d")
-            hi = hi if isinstance(hi, str) else hi.strftime("%Y-%m-%d")
-            mnd = lo if mnd is None else min(mnd, lo)
-            mxd = hi if mxd is None else max(mxd, hi)
-    out = {"n": int(md.num_rows), "mnk": int(mnk), "mxk": int(mxk)}
-    if di >= 0:
-        out["mnd"], out["mxd"] = mnd, mxd
-    return out
+        return None
+    stat_types = stat_types or {}
+    bounds, inexact = _footer_bounds(
+        md, list(dict.fromkeys([key, *stat_types])))
+    if key in inexact or bounds[key] is None:
+        raise ValueError(f"{path}: no exact {key} stats in the footer")
+    date = date_col if date_col in md.schema.names else None
+    days, day_inexact = None, []
+    if date is not None:
+        b, day_inexact = _footer_bounds(md, [date], _DAY_FOOTER_TYPES)
+        if b.get(date) is not None:
+            days = tuple(
+                v if isinstance(v, str) else v.strftime("%Y-%m-%d")
+                for v in b[date]
+            )
+    aggs = []
+    if day_inexact:
+        aggs += [F.date_format(F.min(date), "yyyy-MM-dd").alias("mnd"),
+                 F.date_format(F.max(date), "yyyy-MM-dd").alias("mxd")]
+    redo = [c for c in stat_types if c in inexact]
+    for k, c in enumerate(redo):
+        aggs += [F.min(c).alias(f"mn{k}"), F.max(c).alias(f"mx{k}")]
+    if aggs:
+        st = spark.read.parquet(path).agg(*aggs).collect()[0]
+        if day_inexact and st["mnd"] is not None:
+            days = (st["mnd"], st["mxd"])
+        for k, c in enumerate(redo):
+            mn = st[f"mn{k}"]
+            bounds[c] = None if mn is None else (mn, st[f"mx{k}"])
+    if date is not None and days is None:
+        raise ValueError(f"{path}: no {date} values to bound")
+    add = {
+        "a": "add", "path": name,
+        "n_rows": int(md.num_rows), "n_bytes": os.path.getsize(path),
+        "min_key": int(bounds[key][0]), "max_key": int(bounds[key][1]),
+    }
+    if days is not None:
+        add["min_date"], add["max_date"] = days
+    if stat_types:
+        # an all-NULL column records no bound: never pruned
+        add["cstats"] = {
+            c: [t, str(bounds[c][0]), str(bounds[c][1])]
+            for c, t in stat_types.items() if bounds[c] is not None
+        }
+    return add
 
 
 def _write_with_add_action(
-    df: DataFrame, table_dir: str, name: str, *, key: str = "o_orderkey"
+    df: DataFrame,
+    table_dir: str,
+    name: str,
+    *,
+    key: str = "o_orderkey",
+    stat_cols=(),
 ) -> dict | None:
-    """Write ``df`` as one data file and return its add action with
-    write-time stats (None for an empty frame — no file, no action).
-
-    Stats are computed FROM THE WRITTEN FILE, not from ``df``: a
-    second evaluation of ``df`` could disagree with the bytes on
-    disk (any nondeterminism in the rewrite frame would desync the
-    skip bounds from the data they describe, and a skip plan with
-    too-narrow bounds LOSES rows) — and since r17 the "scan" of the
-    written file is its parquet footer, zero Spark jobs."""
+    """Write ``df`` as one data file and return its add action (None
+    for an empty frame — no file, no action), with ``cstats`` bounds
+    for every ``stat_cols`` column; stats per
+    :func:`_file_add_action`, from the written file."""
     dest = os.path.join(table_dir, DATA_SUBDIR, name)
     _write_one_file(df, dest, sort_key=key)
-    st = _footer_file_stats(dest, key)
-    if not st["n"]:
+    types = dict(df.dtypes)
+    add = _file_add_action(
+        df.sparkSession, dest, name, key,
+        {c: _cstat_type(types[c]) for c in stat_cols},
+    )
+    if add is None:
         os.remove(dest)
-        return None
-    add = {
-        "a": "add", "path": name,
-        "n_rows": st["n"], "n_bytes": os.path.getsize(dest),
-        "min_key": st["mnk"], "max_key": st["mxk"],
-    }
-    if "mnd" in st:
-        add["min_date"] = st["mnd"]
-        add["max_date"] = st["mxd"]
     return add
 
 
@@ -5648,21 +5652,11 @@ def _write_with_add_actions(
     # — the grouped _metadata scan was one more job per commit)
     for part in sorted(
             _glob.glob(os.path.join(scratch, "part-*.parquet"))):
-        st = _footer_file_stats(part, key)
-        if not st["n"]:
-            continue  # empty task file
         fname = f"{base}-{idx:05d}.parquet"
-        dest = os.path.join(table_dir, DATA_SUBDIR, fname)
-        os.replace(part, dest)
-        add = {
-            "a": "add", "path": fname,
-            "n_rows": st["n"],
-            "n_bytes": os.path.getsize(dest),
-            "min_key": st["mnk"], "max_key": st["mxk"],
-        }
-        if "mnd" in st:
-            add["min_date"] = st["mnd"]
-            add["max_date"] = st["mxd"]
+        add = _file_add_action(df.sparkSession, part, fname, key)
+        if add is None:
+            continue  # empty task file
+        os.replace(part, os.path.join(table_dir, DATA_SUBDIR, fname))
         adds.append(add)
         idx += 1
     shutil.rmtree(scratch, ignore_errors=True)
@@ -5829,7 +5823,7 @@ def merge_table(
             "first"
         )
     lo, hi = bounds["lo"], bounds["hi"]
-    live = snapshot_files(spark, table_dir).collect()  # metadata-bounded
+    live = _live_file_records(table_dir)
     cand = sorted(
         r["path"] for r in live
         if not (r["max_key"] < lo or r["min_key"] > hi)
@@ -5867,9 +5861,16 @@ def merge_table(
         )  # bounded by candidate count
 
     nonce = _next_version_nonce(table_dir)
+    # every rewrite bounds each column any live file bounds, from its
+    # own footer: matched rows take source values, so an origin's
+    # bound no longer holds, and without one pruning stops at a merge
+    bounded = {c for r in live for c in (r["cstats"] or {})}
 
     def _stats_and_add(df: DataFrame, name: str) -> dict | None:
-        return _write_with_add_action(df, table_dir, name, key=key)
+        return _write_with_add_action(
+            df, table_dir, name, key=key,
+            stat_cols=sorted(bounded & set(df.columns)),
+        )
 
     actions: list[dict] = []
     inserts = source
@@ -5892,8 +5893,9 @@ def merge_table(
         )
         part_of = {r["path"]: r for r in live}
         # MERGE assigns every non-key column on matched rows, so only
-        # key-derived partition values (bucket specs) and key bounds
-        # survive the carry — see _carry_part's loss rule
+        # key-derived partition values (bucket specs) survive the
+        # carry — see _carry_part's loss rule; column bounds come from
+        # each rewrite's own footer (_stats_and_add)
         assigned = set(upd_cols)
         if mapping is not None:
             phys2log = {e["physical"]: e["logical"] for e in mapping}
@@ -5969,11 +5971,9 @@ def bloom_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is what the hash pins, false-positive counts included (both
     engines compute identical md5 bits)."""
     table_dir = stage_versioned_table(spark, sf_dir)
-    # live set + global max from the DRIVER-side log replay (r17):
-    # the Spark-frame route (snapshot_files + a 1-row agg collect +
-    # a broadcast path join against a directory scan) cost two jobs
-    # and scanned dead files just to drop them again — the log replay
-    # already holds both answers as metadata
+    # live set + global max from the driver-side log replay: it
+    # already holds both answers as metadata, so no dead file is
+    # scanned just to be dropped again
     adds = sorted(
         _live_adds_before(os.path.join(table_dir, LOG_SUBDIR), 1 << 62),
         key=lambda a: a["path"],
@@ -6125,23 +6125,18 @@ def delete_keys_mor(
     name = f"KD{nonce}.parquet"
     dest = os.path.join(table_dir, DATA_SUBDIR, name)
     _write_one_file(keys.select(F.col(key).alias("o_orderkey")), dest)
-    # key-range stats from the written file's parquet footer (r17:
-    # int64 row-group statistics are exact — the separate pre-write
-    # aggregation job measured the same numbers twice)
+    # key-range stats from the written file's parquet footer, exact
+    # for int64 — materialize_deletes plans its candidates from them
     md = _pq.ParquetFile(dest).metadata
     if not md.num_rows:
         os.remove(dest)
         raise ValueError("empty delete key set")
-    ki = md.schema.names.index("o_orderkey")
-    sts = [md.row_group(r).column(ki).statistics
-           for r in range(md.num_row_groups)]
-    for r, st in enumerate(sts):
-        if st is None or not st.has_min_max:
-            # same loud contract as _footer_file_stats: a silent
-            # wrong bound would let a skip plan resurrect rows
-            raise ValueError(f"{dest} row group {r}: no o_orderkey stats")
-    mnk = min(st.min for st in sts)
-    mxk = max(st.max for st in sts)
+    bounds, inexact = _footer_bounds(md, ["o_orderkey"])
+    if inexact or bounds["o_orderkey"] is None:
+        # same loud contract as _file_add_action: a silent wrong bound
+        # would let a skip plan resurrect rows
+        raise ValueError(f"{dest}: no exact o_orderkey stats in the footer")
+    mnk, mxk = bounds["o_orderkey"]
     return commit_actions(table_dir, [{
         "a": "keydel", "path": name,
         "n_rows": int(md.num_rows), "n_bytes": os.path.getsize(dest),
@@ -6171,7 +6166,7 @@ def _live_logical_tagged(
             f"{sorted(feats - {'column_mapping'})}"
         )
     mapping = column_mapping(spark, table_dir)
-    live = snapshot_files(spark, table_dir).collect()  # metadata
+    live = _live_file_records(table_dir)
     paths = sorted(r["path"] for r in live)
     # mapped tables scan under the explicit declared-type schema so
     # type-widened live sets (heterogeneous footers) stay readable —
@@ -6265,6 +6260,8 @@ def _carry_part(
             c: list(b) for c, b in dict(cstats).items()
             if c not in assigned
         }
+        # a bound the rewrite read from its own footer is the tighter
+        kept_cs.update(add.get("cstats") or {})
         if kept_cs:
             add["cstats"] = kept_cs
 
@@ -6799,7 +6796,7 @@ def _posdel_pairs(
     legacy, dvs = [], []
     for a in sorted(pd_actions, key=lambda r: r["path"]):
         p = os.path.join(table_dir, DATA_SUBDIR, a["path"])
-        if _pd_encoding(spark, p, _act_get(a, "enc")) == "dv":
+        if _pd_encoding(spark, p, a["enc"]) == "dv":
             dvs.append(p)
         else:
             legacy.append(p)
@@ -6901,10 +6898,12 @@ def compact_delete_files(spark: SparkSession, table_dir: str) -> int:
 def snapshot_delete_files(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
-    """Live equality-delete files at ``version`` — the same
-    last-action replay as :func:`snapshot_files`, with ``keydel`` as
-    the liveness-bearing action (a ``remove`` of the path — what
-    materialization commits — retires it)."""
+    """Live delete files at ``version`` — the same last-action replay
+    as :func:`snapshot_files`, with ``keydel``/``posdel`` as the
+    liveness-bearing actions (a ``remove`` of the path — what
+    materialization commits — retires it).  The DataFrame form, kept
+    as the tests' reference; planning reads the driver-side
+    :func:`_live_delete_actions`."""
     log = read_log(spark, table_dir)
     if version is not None:
         log = log.filter(F.col("v") <= version)
@@ -6955,9 +6954,6 @@ def snapshot_read_mor(
     data, live = _snapshot_read_with_live(
         spark, table_dir, version, read_schema=read_schema
     )
-    # delete-file resolution from the cached driver-side replay —
-    # the Spark-job twin (snapshot_delete_files) doubled this read's
-    # planning cost, bench-caught
     dels = _live_delete_actions(table_dir, version)
     kd = sorted((r["path"], _seq_of(r))
                 for r in dels if r["a"] == "keydel")
@@ -7047,7 +7043,7 @@ def materialize_deletes(
     in ONE commit.  A plain :func:`snapshot_read` afterwards equals
     the :func:`snapshot_read_mor` view before (test-pinned).
     Returns the committed version."""
-    dels = snapshot_delete_files(spark, table_dir).collect()
+    dels = _live_delete_actions(table_dir)
     if not dels:
         raise ValueError("no live delete files to materialize")
     kd = sorted((r["path"], _seq_of(r))
@@ -7068,16 +7064,22 @@ def materialize_deletes(
             F.col("__path").alias("_path"),
             F.col("__pos").alias("_pos"),
         )
-    live = snapshot_files(spark, table_dir).collect()
+    live = _live_file_records(table_dir)
     cand: set[str] = set()
     if keys is not None:
-        b = keys.agg(
-            F.min(key).alias("lo"), F.max(key).alias("hi")
-        ).collect()[0]
-        cand |= {
-            r["path"] for r in live
-            if not (r["max_key"] < b["lo"] or r["min_key"] > b["hi"])
-        }
+        # the deleted keys' range from the keydel actions' recorded
+        # bounds (footer-exact, see delete_keys_mor); a keydel that
+        # recorded none leaves every live file a candidate
+        kda = [r for r in dels if r["a"] == "keydel"]
+        if any(r["min_key"] is None or r["max_key"] is None for r in kda):
+            cand |= {r["path"] for r in live}
+        else:
+            lo = min(r["min_key"] for r in kda)
+            hi = max(r["max_key"] for r in kda)
+            cand |= {
+                r["path"] for r in live
+                if not (r["max_key"] < lo or r["min_key"] > hi)
+            }
     if dv is not None:
         # a posdel names its files EXACTLY — better than stats pruning
         cand |= {r["_path"] for r in dv.select("_path").distinct()
@@ -7199,9 +7201,6 @@ def posdel_compaction_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     move the hash.  The twin recomputes the surviving rows from
     ``orders`` with the two predicates in pure SQL."""
     d = stage_posdel_compact_table(spark, sf_dir)
-    # delete-file count from the cached driver-side log replay — the
-    # Spark-job twin (snapshot_delete_files().count()) cost a full
-    # job (~0.2 s) for a metadata scalar the planner already holds
     n_del = len(_live_delete_actions(d, None))
     return (
         snapshot_read_mor(spark, d)
@@ -7380,9 +7379,9 @@ def partition_mor_dml_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     old partition, or a lost DV all move the hash; the twin
     recomputes the final state from ``orders`` in pure SQL."""
     d = stage_partition_dml_table(spark, sf_dir)
-    n_del = snapshot_delete_files(spark, d).count()  # metadata
+    n_del = len(_live_delete_actions(d))
     parts = sorted({
-        v for r in snapshot_files(spark, d).collect()
+        v for r in _live_file_records(d)
         for p in (r["part"] or [])
         for v in (p.split("=", 1)[1],)
     })  # metadata-sized: the touched partition values

@@ -4403,6 +4403,288 @@ def test_driver_replay_bound_refuses_past_threshold(spark, tmp_path, monkeypatch
         tl._live_file_records(d)
     with pytest.raises(ValueError, match="GEMMSQL_MAX_DRIVER_FILE_RECORDS"):
         tl._live_adds_before(os.path.join(d, tl.LOG_SUBDIR), 1 << 62)
+    with pytest.raises(ValueError, match="GEMMSQL_MAX_DRIVER_FILE_RECORDS"):
+        tl.streaming_tablelog_gate_dir(spark, d)
     # at the bound exactly: fine (the bound is inclusive)
     monkeypatch.setattr(tl, "_MAX_DRIVER_FILE_RECORDS", 1000)
     assert len(tl._live_file_records(d)) == 1000
+
+
+def test_streaming_gate_over_a_log_without_adds(spark, tmp_path):
+    """A log holding only metadata actions has an empty add index: the
+    gate must still analyze (no untyped empty map lookup) and count
+    each version's actions with NULL-free zero row totals."""
+    d = _mklog(tmp_path, {
+        0: [{"v": 0, "a": "meta", "schema_cols": ["o_orderkey"]}],
+        1: [{"v": 1, "a": "property", "path": "property:k",
+             "min_date": "x"}],
+    })
+    got = {r["version"]: r for r in
+           tl.streaming_tablelog_gate_dir(spark, d).collect()}
+    assert sorted(got) == [0, 1]
+    for r in got.values():
+        assert (r["n_add"], r["n_remove"]) == (0, 0)
+        assert (r["rows_added"], r["rows_removed"]) == (0, 0)
+
+
+def _by_path(rows):
+    return {r["path"]: r for r in rows}
+
+
+def test_driver_snapshot_records_match_spark_replay(spark, tmp_path):
+    """The driver-side snapshot every planner reads returns the
+    LOG_SCHEMA row shape: at every version, and again from a
+    checkpoint after expiry, _live_file_records equals
+    snapshot_files' rows and _live_delete_actions equals
+    snapshot_delete_files' rows — cstats, part, seq (RESTORE re-emits)
+    and keydel records included."""
+    from gemmsql.datamodel import load_table
+
+    d = str(tmp_path / "shape")
+    shutil.copytree(tl.stage_versioned_table(spark, SF_SMOKE), d)
+    orders = load_table(spark, SF_SMOKE, "orders").select(
+        "o_orderkey", "o_totalprice", "o_orderdate", "o_orderpriority")
+    tl.append_with_stats(                                       # v4
+        spark, d, orders.filter("o_orderkey % 3 = 0"), "S0.parquet",
+        ["o_totalprice", "o_orderpriority"])
+    tl.restore_table(spark, d, 1)             # v5: re-adds with seq
+    tl.set_partition_spec(d, ["o_orderpriority"])               # v6
+    tl.append_partitioned(                                      # v7
+        spark, d, orders.filter("o_orderkey % 3 = 1"), "P0")
+    tl.append_with_stats(                                       # v8
+        spark, d, orders.filter("o_orderkey % 3 = 2"), "S1.parquet",
+        ["o_orderdate"])
+    tl.delete_keys_mor(                                         # v9
+        spark, d,
+        orders.filter("o_orderkey % 7 = 0").select("o_orderkey"))
+
+    def check(v):
+        got = _by_path(tl._live_file_records(d, v))
+        want = _by_path(r.asDict()
+                        for r in tl.snapshot_files(spark, d, v).collect())
+        assert got == want, v
+        got_d = _by_path(tl._live_delete_actions(d, v))
+        want_d = _by_path(r.asDict() for r in
+                          tl.snapshot_delete_files(spark, d, v).collect())
+        assert got_d == want_d, v
+        return got
+
+    seen = [check(v) for v in range(10)]
+    latest = seen[-1]
+    assert any(r["seq"] is not None for r in latest.values())
+    assert any(r["part"] for r in latest.values())
+    assert any(r["cstats"] for r in latest.values())
+    assert check(None) == latest
+    assert tl._live_delete_actions(d)[0]["a"] == "keydel"
+    # from a checkpoint: the pyarrow-read rows normalize to the same
+    tl.expire_log(spark, d, 8)
+    for v in (8, 9, None):
+        assert check(v) == seen[8 if v == 8 else 9]
+
+
+def _write_spark_file(spark, df, dest):
+    tl._write_one_file(df, dest, sort_key=df.columns[0])
+    return dest
+
+
+def test_footer_bounds_equal_spark_min_max(spark, tmp_path):
+    """The write-time footer bounds are Spark's own min/max: on long,
+    double (with NaN and -0.0 inside the range), float, date, string
+    and all-NULL columns they equal the aggregation's str() forms.
+    Columns the footer cannot bound exactly — a zero-bounded double
+    (Spark keeps the first zero it meets), a timestamp — go to the
+    aggregation, and append_with_stats records the same strings
+    either way."""
+    import datetime as dt
+
+    import pyarrow.parquet as pq
+
+    rows = [
+        (3, 2.5, -0.0, 1.5, dt.date(1995, 3, 1), "b", None,
+         dt.datetime(1995, 3, 1, 12)),
+        (1, float("nan"), 0.0, -2.25, dt.date(1994, 1, 9), "zz", None,
+         dt.datetime(1994, 1, 9, 1)),
+        (2, -0.0, -0.0, None, None, "a", None, None),
+        (4, -7.0, 3.0, 0.5, dt.date(1996, 12, 31), None, None,
+         dt.datetime(1996, 12, 31, 23)),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "o_orderkey long, x double, z double, f float, d date, "
+        "s string, n double, t timestamp")
+    dest = _write_spark_file(spark, df, str(tmp_path / "f.parquet"))
+    cols = df.columns
+    st = spark.read.parquet(dest).agg(
+        *[tl.F.min(c).alias(f"mn_{c}") for c in cols],
+        *[tl.F.max(c).alias(f"mx_{c}") for c in cols],
+    ).collect()[0]
+    want = {c: None if st[f"mn_{c}"] is None
+            else (str(st[f"mn_{c}"]), str(st[f"mx_{c}"])) for c in cols}
+    assert want["x"] == ("-7.0", "nan")
+
+    bounds, inexact = tl._footer_bounds(
+        pq.ParquetFile(dest).metadata, cols)
+    assert sorted(inexact) == ["t", "z"]
+    for c, b in bounds.items():
+        got = None if b is None else (str(b[0]), str(b[1]))
+        assert got == want[c], c
+
+    d = str(tmp_path / "tbl")
+    os.makedirs(os.path.join(d, tl.LOG_SUBDIR))
+    os.makedirs(os.path.join(d, tl.DATA_SUBDIR))
+    tl.append_with_stats(spark, d, spark.read.parquet(dest),
+                         "S0.parquet", cols)
+    (rec,) = tl._live_file_records(d)
+    assert {c: tuple(b[1:]) for c, b in rec["cstats"].items()} == {
+        c: w for c, w in want.items() if w is not None}
+    assert rec["cstats"]["x"][0] == "num"
+    assert rec["cstats"]["d"][0] == "str"
+
+
+def _jobs_in(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job count probe")
+    try:
+        out = fn()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(f"{group}-done", "")
+    return out, jobs
+
+
+def test_append_and_pruning_plan_without_metadata_jobs(spark, tmp_path):
+    """Planning reads the driver snapshot and write-time bounds read
+    the written footer: candidate_files_where launches no Spark job,
+    and an append_with_stats on DATE/double stat columns launches
+    exactly the jobs of its one file write."""
+    import datetime as dt
+
+    rows = [(k, 10.0 + k, dt.date(1995, 1, 1) + dt.timedelta(days=k))
+            for k in range(200)]
+    src_path = str(tmp_path / "src.parquet")
+    spark.createDataFrame(
+        rows, "o_orderkey long, o_totalprice double, o_orderdate date"
+    ).coalesce(1).write.parquet(src_path)
+    src = spark.read.parquet(src_path)
+    d = str(tmp_path / "tbl")
+    os.makedirs(os.path.join(d, tl.LOG_SUBDIR))
+    os.makedirs(os.path.join(d, tl.DATA_SUBDIR))
+    stat_cols = ["o_orderdate", "o_totalprice"]
+
+    _, write_jobs = _jobs_in(spark, "write-only", lambda: (
+        tl._write_one_file(src, str(tmp_path / "probe.parquet"))))
+    assert write_jobs
+    v, append_jobs = _jobs_in(spark, "append", lambda: (
+        tl.append_with_stats(spark, d, src, "S0.parquet", stat_cols)))
+    assert v == 0
+    assert len(append_jobs) == len(write_jobs)
+    (rec,) = tl._live_file_records(d)
+    assert rec["cstats"] == {
+        "o_orderdate": ["str", "1995-01-01", "1995-07-19"],
+        "o_totalprice": ["num", "10.0", "209.0"],
+    }
+    assert (rec["min_date"], rec["max_date"]) == (
+        "1995-01-01", "1995-07-19")
+
+    cand, cand_jobs = _jobs_in(spark, "plan", lambda: (
+        tl.candidate_files_where(spark, d, "o_orderdate",
+                                 dt.date(1995, 2, 1), dt.date(1995, 2, 3))))
+    assert [r["path"] for r in cand] == ["S0.parquet"]
+    assert cand_jobs == []
+
+
+def test_merge_rewrites_keep_column_bounds(spark, tmp_path):
+    """Finding merge_drops_date_bounds: MERGE assigns every non-key
+    column, so an origin's bounds no longer hold for its rewrite —
+    each rewrite (and the inserts file) records bounds from its own
+    footer instead, so date-window pruning keeps leaving out a
+    rewritten file whose rows all lie outside the window, and the
+    pruned read still equals the filtered snapshot."""
+    from gemmsql.datamodel import load_table
+
+    orders = load_table(spark, SF_SMOKE, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate",
+        "o_orderpriority",
+    ).withColumn("o_orderdate", tl.F.to_date("o_orderdate"))
+    d = str(tmp_path / "mrg")
+    os.makedirs(os.path.join(d, tl.LOG_SUBDIR))
+    os.makedirs(os.path.join(d, tl.DATA_SUBDIR))
+    eras = [("S0", "o_orderdate < DATE'1997-01-01'"),
+            ("S1", "o_orderdate >= DATE'1997-01-01' "
+                   "AND o_orderdate < DATE'1999-01-01'"),
+            ("S2", "o_orderdate >= DATE'1999-01-01'")]
+    for name, flt in eras:
+        tl.append_with_stats(spark, d, orders.filter(flt),
+                             f"{name}.parquet",
+                             ["o_orderdate", "o_totalprice"])
+    old = orders.filter(eras[0][1])
+    kmax = orders.agg(tl.F.max("o_orderkey")).collect()[0][0]
+    upd = old.filter("o_orderkey % 4 = 0").withColumn(
+        "o_totalprice", tl.F.col("o_totalprice") + 1)
+    ins = old.limit(3).withColumn(
+        "o_orderkey", tl.F.col("o_orderkey") + kmax)
+    tl.merge_table(spark, d, upd.unionByName(ins))
+    live = tl._live_file_records(d)
+    mrg = [r for r in live if r["path"].startswith("MRG")]
+    assert len(mrg) == 2  # the S0 rewrite and the inserts file
+    for r in mrg:
+        assert r["cstats"]["o_orderdate"][2] < "1997-01-01", r
+
+    lo, hi = "1999-03-01", "1999-06-30"
+    cand = {r["path"] for r in tl.candidate_files_where(
+        spark, d, "o_orderdate", lo, hi)}
+    assert cand == {"S2.parquet"}
+    pruned = tl.stats_pruned_read_where(spark, d, "o_orderdate", lo, hi)
+    full = tl.snapshot_read_mor(spark, d).filter(
+        (tl.F.col("o_orderdate") >= lo) & (tl.F.col("o_orderdate") <= hi))
+    agg = [tl.F.count("*"), tl.F.sum("o_orderkey"),
+           tl.F.sum(tl.F.expr(tl._CENTS))]
+    assert pruned.agg(*agg).collect() == full.agg(*agg).collect()
+    assert full.count() > 0
+
+
+def test_timestamp_orderdate_appends_with_day_bounds(spark, tmp_path):
+    """Finding timestamp_orderdate: a Spark TIMESTAMP o_orderdate is
+    written as INT96, whose footer carries no statistics.  The append
+    bounds it from one aggregation over the written file — day
+    granular, the dates of its min and max — and a pruned date-window
+    read equals the filtered snapshot."""
+    from gemmsql.datamodel import load_table
+
+    import pyarrow.parquet as pq
+
+    orders = load_table(spark, SF_SMOKE, "orders").select(
+        "o_orderkey", "o_totalprice", "o_orderdate",
+    ).withColumn("o_orderdate",
+                 tl.F.col("o_orderdate").cast("timestamp"))
+    d = str(tmp_path / "ts")
+    os.makedirs(os.path.join(d, tl.LOG_SUBDIR))
+    os.makedirs(os.path.join(d, tl.DATA_SUBDIR))
+    for name, flt in (("S0", "o_orderdate < '1998-01-01'"),
+                      ("S1", "o_orderdate >= '1998-01-01'")):
+        tl.append_with_stats(spark, d, orders.filter(flt),
+                             f"{name}.parquet",
+                             ["o_orderdate", "o_totalprice"])
+    md = pq.ParquetFile(
+        os.path.join(d, tl.DATA_SUBDIR, "S0.parquet")).metadata
+    col = md.schema.column(md.schema.names.index("o_orderdate"))
+    assert col.physical_type == "INT96"
+    bounds = {r["path"]: r for r in tl._live_file_records(d)}
+    want = orders.groupBy(
+        (tl.F.col("o_orderdate") < "1998-01-01").alias("early")
+    ).agg(
+        tl.F.date_format(tl.F.min("o_orderdate"), "yyyy-MM-dd").alias("mn"),
+        tl.F.date_format(tl.F.max("o_orderdate"), "yyyy-MM-dd").alias("mx"),
+    )
+    for r in want.collect():
+        rec = bounds["S0.parquet" if r["early"] else "S1.parquet"]
+        assert (rec["min_date"], rec["max_date"]) == (r["mn"], r["mx"])
+    lo, hi = "1996-05-01", "1996-08-31"
+    assert [r["path"] for r in tl.candidate_files_where(
+        spark, d, "o_orderdate", lo, hi)] == ["S0.parquet"]
+    pruned = tl.stats_pruned_read_where(spark, d, "o_orderdate", lo, hi)
+    full = tl.snapshot_read_mor(spark, d).filter(
+        (tl.F.col("o_orderdate") >= lo) & (tl.F.col("o_orderdate") <= hi))
+    agg = [tl.F.count("*"), tl.F.sum("o_orderkey")]
+    assert pruned.agg(*agg).collect() == full.agg(*agg).collect()
+    assert full.count() > 0
