@@ -5463,12 +5463,11 @@ def _footer_bounds(
     writer records them: NULLs are skipped, NaN orders above every
     number (a NaN max is Spark's NaN max), and UTF-8 strings compare
     bytewise like Spark strings.  Left to the caller's aggregation:
-    the types outside ``types``, a row group with
-    values but no statistic (a binary value past the writer's
-    statistics size limit), a NaN minimum (Spark's min skips NaN
-    unless every value is one), and a zero bound (Spark keeps
-    whichever of -0.0/0.0 it meets first; the footer keeps a fixed
-    one)."""
+    the types outside ``types``, a row group with values but no
+    statistic (a binary value past the writer's statistics size
+    limit), a NaN minimum (Spark's min skips NaN unless every value
+    is one), and a zero bound (Spark keeps whichever of -0.0/0.0 it
+    meets first; the footer keeps a fixed one)."""
     names = md.schema.names
     bounds: dict = {}
     inexact: list[str] = []
@@ -5520,9 +5519,10 @@ def _file_add_action(
     file.
 
     The footer answers whatever :func:`_footer_bounds` can answer
-    exactly; the rest — an INT96 TIMESTAMP ``date_col`` (day bounds: the
-    dates of its min and max), decimal/timestamp stat columns — comes
-    from ONE aggregation over the written file, run only when needed.
+    exactly; the rest — an INT96 TIMESTAMP ``date_col`` (day bounds:
+    the dates of its min and max), decimal/timestamp stat columns —
+    comes from ONE aggregation over the written file, run only when
+    needed.
     Never from a re-evaluation of the written frame: any
     nondeterminism in it would desync the bounds from the bytes on
     disk, and a too-narrow bound lets a skip plan LOSE rows.  A key
