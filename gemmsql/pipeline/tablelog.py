@@ -334,26 +334,6 @@ def read_log(spark: SparkSession, table_dir: str) -> DataFrame:
     return spark.read.schema(LOG_SCHEMA).json(pat)
 
 
-def _log_with_checkpoint_base(
-    spark: SparkSession, table_dir: str
-) -> DataFrame:
-    """The commit log, prepending the newest checkpoint's rows when
-    the log has been EXPIRED (earliest commit > 0) — checkpoints
-    carry the live add actions AND the metadata actions
-    (meta/protocol/constraint) from the expired prefix, so metadata
-    readers keep answering across retention."""
-    log = read_log(spark, table_dir)
-    present = _present_versions(table_dir)
-    if present and present[0] > 0:
-        ckpt_v = _latest_checkpoint_version(table_dir, None)
-        if ckpt_v is not None:
-            base = spark.read.parquet(_checkpoint_dir(table_dir, ckpt_v))
-            log = base.unionByName(
-                log.filter(F.col("v") > ckpt_v), allowMissingColumns=True
-            )
-    return log
-
-
 def _last_action_live(actions: DataFrame, extra_keys: list[str]) -> DataFrame:
     """Delta replay rule over an action frame: last action per
     (``*extra_keys``, path) by version wins; remove beats add inside
@@ -446,12 +426,12 @@ def write_checkpoint(
     original versions stamped, so schema evolution, column mapping,
     reader-feature gating, and CHECK constraints all survive log
     expiry (chained: an existing checkpoint's metadata rows flow into
-    the next via the checkpoint-aware log view)."""
+    the next via :func:`_meta_actions`)."""
     dest = _checkpoint_dir(table_dir, version)
     live = snapshot_files(spark, table_dir, version)
-    metadata = _log_with_checkpoint_base(spark, table_dir).filter(
-        F.col("a").isin("meta", "protocol", "constraint", "property")
-        & (F.col("v") <= version)
+    metadata = spark.createDataFrame(
+        [a for a in _meta_actions(table_dir) if a["v"] <= version],
+        LOG_SCHEMA,
     )
     live.unionByName(metadata, allowMissingColumns=True).coalesce(
         1
@@ -480,9 +460,9 @@ def expire_log(
     constraint) from the expired prefix with their original versions,
     so column mapping, reader-feature gating, schema history, and
     CHECK constraints all survive expiry — the metadata readers
-    consult the checkpoint-aware log view.  Two action kinds still
+    run off :func:`_meta_actions`.  Two action kinds still
     refuse below the horizon: ``txn`` (the idempotency scan reads
-    raw commit files; expiring one re-opens the very-late-retry
+    commit files only; expiring one re-opens the very-late-retry
     double-apply — Delta's txn retention caveat) and ``keydel``
     (a live equality-delete is state the live-adds format doesn't
     carry; :func:`materialize_deletes` first).  Run
@@ -502,22 +482,18 @@ def expire_log(
         return []
     for v in doomed:
         path = os.path.join(table_dir, LOG_SUBDIR, f"{v:08d}.json")
-        with open(path) as f:
-            for ln in f:
-                if not ln.strip():
-                    continue
-                a = json.loads(ln).get("a")
-                if a in ("txn", "keydel", "posdel"):
-                    # txn idempotency scans raw commit files (a very
-                    # late retry would double-apply — Delta's txn
-                    # retention caveat), and a LIVE keydel is state
-                    # the checkpoint's live-adds format doesn't carry;
-                    # both stay until retired
-                    raise ValueError(
-                        f"cannot expire v{v}: it carries a {a!r} "
-                        "action; txn/keydel/posdel commits must stay "
-                        "until retired (materialize deletes first)"
-                    )
+        for a in _action_lines_of(path):
+            if a.get("a") in ("txn", "keydel", "posdel"):
+                # txn idempotency scans the commit files (a very late
+                # retry would double-apply — Delta's txn retention
+                # caveat), and a LIVE keydel is state the
+                # checkpoint's live-adds format doesn't carry; both
+                # stay until retired
+                raise ValueError(
+                    f"cannot expire v{v}: it carries a {a['a']!r} "
+                    "action; txn/keydel/posdel commits must stay "
+                    "until retired (materialize deletes first)"
+                )
     write_checkpoint(spark, table_dir, before_version - 1)
     deleted = []
     for v in doomed:
@@ -676,10 +652,7 @@ def stats_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TRUE counts still come from a full scan of every live file —
     # reading only candidates would assume the very invariant this
     # op audits
-    adds = sorted(
-        _live_adds_before(os.path.join(table_dir, LOG_SUBDIR), 1 << 62),
-        key=lambda a: a["path"],
-    )
+    adds = sorted(_live_file_records(table_dir), key=lambda a: a["path"])
     gmax = max(int(a["max_key"]) for a in adds)
     lo, hi = gmax * 35 // 100, gmax * 55 // 100
     decided = spark.createDataFrame(
@@ -991,8 +964,8 @@ def ivm_drain(
     - ``add`` / ``remove`` of a DATA file — the action's own
       (retained) file at +1 / -1; a vacuumed file behind a NOT-yet-
       checkpointed commit fails loudly.
-    - ``keydel`` — the deletion-vector CDF read: the key file plus a
-      metadata log replay (:func:`_live_adds_before`) stats-pruned
+    - ``keydel`` — the deletion-vector CDF read: the key file plus
+      the live set below it (:func:`_live_file_records`) stats-pruned
       by the keydel's key range, matching rows at -1 — SEQUENCE-
       FILTERED (only files sequenced strictly below the delete, the
       same rule the batch MOR read applies), and including same-
@@ -1013,7 +986,6 @@ def ivm_drain(
     from gemmsql.streaming.windows import _await_gate, state_partitions
 
     data_dir = os.path.join(table_dir, DATA_SUBDIR)
-    log_dir = os.path.join(table_dir, LOG_SUBDIR)
     present = _present_versions(table_dir)
     if present and present[0] > 0 and not os.path.isdir(ckpt):
         # a FRESH view build on an expired log would silently fold
@@ -1073,32 +1045,6 @@ def ivm_drain(
                     _read(kd_path, None)["o_orderkey"])
             return _keys_cache[kd_path]
 
-        def _live_deletes_below(v_limit):
-            """Live keydel/posdel ACTIONS strictly below commit
-            ``v_limit`` — last-action-wins replay over the raw log
-            (metadata-sized; the expired prefix can carry no delete
-            actions, expiry refuses them until retired)."""
-            last: dict[str, tuple] = {}
-            for p in sorted(
-                    _glob.glob(os.path.join(log_dir, "*.json"))):
-                v = int(os.path.basename(p).split(".")[0])
-                if v >= v_limit:
-                    continue
-                with open(p) as f:
-                    for ln in f:
-                        if not ln.strip():
-                            continue
-                        act = json.loads(ln)
-                        if act.get("a") not in (
-                                "keydel", "posdel", "remove"):
-                            continue
-                        rank = (v, 1 if act["a"] == "remove" else 0)
-                        cur = last.get(act["path"])
-                        if cur is None or rank >= cur[0]:
-                            last[act["path"]] = (rank, act)
-            return [a for (_, a) in last.values()
-                    if a["a"] in ("keydel", "posdel")]
-
         def _drop_already_dead(part, fname, file_seq, baseline):
             """Remove from ``part`` (indexed by row POSITION in
             ``fname``) every row the ``baseline`` delete state
@@ -1150,7 +1096,7 @@ def ivm_drain(
             if v_limit is None:
                 v_limit = int(kd_action["v"])
             lives = [
-                ad for ad in _live_adds_before(log_dir, v_limit)
+                ad for ad in _live_file_records(table_dir, v_limit - 1)
                 if ad["path"] not in batch_removed
             ] + batch_adds
             parts = []
@@ -1208,28 +1154,16 @@ def ivm_drain(
             new_dels = [r for r in recs
                         if r["a"] in ("keydel", "posdel")]
             v_now = min((int(r["v"]) for r in recs), default=0)
-            # delete-bearing history for this commit's removes: a
-            # removed path with a prior keydel/posdel action is a
-            # DELETE file retiring (materialize / rolling-back
-            # restore / delete-file compaction) and expands as the
-            # INVERSE retraction
-            del_history: dict[str, dict] = {}
-            if batch_removed:
-                for p in sorted(_glob.glob(
-                        os.path.join(log_dir, "*.json"))):
-                    if int(os.path.basename(p).split(".")[0]) >= v_now:
-                        continue
-                    with open(p) as f:
-                        for ln in f:
-                            if not ln.strip():
-                                continue
-                            act = json.loads(ln)
-                            if (act.get("a") in ("keydel", "posdel")
-                                    and act.get("path")
-                                    in batch_removed):
-                                cur = del_history.get(act["path"])
-                                if cur is None or act["v"] >= cur["v"]:
-                                    del_history[act["path"]] = act
+            # the delete files live before this commit; a removed
+            # path among them is a DELETE file retiring (materialize /
+            # rolling-back restore / delete-file compaction) and
+            # expands as the INVERSE retraction
+            pre_dels = (
+                _live_delete_actions(table_dir, v_now - 1)
+                if new_dels or batch_removed else []
+            )
+            del_history = {a["path"]: a for a in pre_dels
+                           if a["path"] in batch_removed}
             # OVERLAP BASELINES (r16): a row dies (or resurrects)
             # exactly ONCE no matter how many delete files name it —
             # new deletes retract only rows the PRE-commit state left
@@ -1239,12 +1173,10 @@ def ivm_drain(
             # zero, and two overlapping DELETEs never double-retract.
             # Both baselines grow as the commit's actions process, so
             # same-commit overlaps count once too.
-            retiring = [p for p in batch_removed if p in del_history]
             pre_base = ([], set())
             post_base = ([], set())
             lives_seq: dict[str, int] = {}
-            if new_dels or retiring:
-                pre_dels = _live_deletes_below(v_now)
+            if new_dels or del_history:
                 post_dels = [
                     a for a in pre_dels
                     if a["path"] not in batch_removed
@@ -1253,7 +1185,7 @@ def ivm_drain(
                 post_base = _baseline_of(post_dels)
                 lives_seq = {
                     ad["path"]: _seq_of(ad)
-                    for ad in _live_adds_before(log_dir, v_now)
+                    for ad in _live_file_records(table_dir, v_now - 1)
                 }
                 for ad in batch_adds:
                     lives_seq[ad["path"]] = _seq_of(ad)
@@ -1393,65 +1325,13 @@ def streaming_cdf_ivm_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the LIVE commit, landed while the stream is down: the fixture's
     # own v3 actions (delete+append), replayed through the real
     # optimistic-concurrency committer
-    with open(os.path.join(base, LOG_SUBDIR, held_back)) as f:
-        actions = [json.loads(ln) for ln in f if ln.strip()]
+    actions = _action_lines_of(os.path.join(base, LOG_SUBDIR, held_back))
     committed = commit_actions(table, [
         {k: v for k, v in a.items() if k != "v"} for a in actions
     ])
     assert committed == 3
     drain()
     return ivm_view(spark, emissions_dir)
-
-
-def _live_adds_before(log_dir: str, v_limit: int) -> list[dict]:
-    """Executor-side last-action-wins replay over raw commit files
-    for versions BELOW ``v_limit``: the live add actions (path + key
-    stats) a keydel commit's retraction must resolve against.
-    Metadata-sized — KBs of JSONL — and runs inside the expansion
-    task, so the stream needs no driver round-trip per commit.  On an
-    expired log the checkpoint parquet seeds the base state (it
-    carries full add actions, stats included)."""
-    if not os.path.isdir(log_dir):
-        # read_log parity: a typo'd table path must never replay as
-        # an empty live set
-        raise ValueError(
-            f"not a logged table (no {LOG_SUBDIR}/): "
-            f"{os.path.dirname(log_dir)}"
-        )
-    last: dict[str, tuple] = {}
-    files = sorted(_glob.glob(os.path.join(log_dir, "*.json")))
-    versions = [int(os.path.basename(p).split(".")[0]) for p in files]
-    if versions and min(versions) > 0:
-        table_dir = os.path.dirname(log_dir)
-        ckpt_v = _latest_checkpoint_version(table_dir, None)
-        if ckpt_v is None:
-            raise ValueError(
-                "log expired with no checkpoint: cannot resolve the "
-                "live set a keydel retraction applies to"
-            )
-        import pandas as _pd
-
-        base = _pd.read_parquet(_checkpoint_dir(table_dir, ckpt_v))
-        for r in base.to_dict("records"):
-            if r.get("a") == "add" and int(r["v"]) < v_limit:
-                last[r["path"]] = ((int(r["v"]), -1), dict(r))
-    for p in sorted(_glob.glob(os.path.join(log_dir, "*.json"))):
-        v = int(os.path.basename(p).split(".")[0])
-        if v >= v_limit:
-            continue
-        with open(p) as f:
-            for ln in f:
-                if not ln.strip():
-                    continue
-                a = json.loads(ln)
-                if a.get("a") not in ("add", "remove"):
-                    continue
-                rank = (v, 0 if a["a"] == "remove" else -1)
-                cur = last.get(a["path"])
-                if cur is None or rank >= cur[0]:
-                    last[a["path"]] = (rank, a)
-        _check_replay_bound(len(last), "_live_adds_before")
-    return [a for (_, a) in last.values() if a["a"] == "add"]
 
 
 def streaming_mor_ivm_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1963,16 +1843,15 @@ def table_properties(
     key wins; a null value (an UNSET) removes the key."""
     out: dict[str, str] = {}
     for a in _meta_actions(table_dir):  # driver-side, no Spark job
-        if a.get("a") != "property":
+        if a["a"] != "property":
             continue
-        if version is not None and int(a["v"]) > version:
+        if version is not None and a["v"] > version:
             continue
         k = a["path"].split(":", 1)[1]
-        val = _act_get(a, "min_date")
-        if _is_unset(val):
+        if a["min_date"] is None:
             out.pop(k, None)
         else:
-            out[k] = val
+            out[k] = a["min_date"]
     return out
 
 
@@ -1982,11 +1861,11 @@ def table_constraints(
     """Named CHECK predicates in force at ``version``."""
     out: dict[str, str] = {}
     for a in _meta_actions(table_dir):  # driver-side, no Spark job
-        if a.get("a") != "constraint":
+        if a["a"] != "constraint":
             continue
-        if version is not None and int(a["v"]) > version:
+        if version is not None and a["v"] > version:
             continue
-        out[a["path"].split(":", 1)[1]] = _act_get(a, "min_date")
+        out[a["path"].split(":", 1)[1]] = a["min_date"]
     return out
 
 
@@ -2031,49 +1910,12 @@ class ConcurrentModificationError(RuntimeError):
 ALL_WRITER_FEATURES = frozenset({"check_constraints", "column_mapping"})
 
 
-#: first-line txn tags per commit-file path.  Commit files are
-#: immutable once visible (link-with-content claims), so caching is
-#: sound; the cache turns the idempotent-txn re-check from O(total
-#: log bytes) per attempt into O(new commit files) (ADVICE r13 #4 —
-#: without it the streaming txn sink goes quadratic in commit count).
-_TXN_TAG_CACHE: dict[str, str | None] = {}
-
-
-#: per-commit-file in-commit timestamp (immutable files — the
-#: _TXN_TAG_CACHE caching argument); None = legacy commit, mtime rules
-_COMMIT_TS_CACHE: dict[str, float | None] = {}
-
-
 def _commit_ts_of(commit_path: str) -> float | None:
     """The in-commit timestamp stamped by :func:`commit_actions`
     (every line carries it — the first suffices), or None for a
     commit written before the feature."""
-    if commit_path in _COMMIT_TS_CACHE:
-        return _COMMIT_TS_CACHE[commit_path]
-    with open(commit_path) as f:
-        ln = f.readline()
-    if not ln.strip():
-        return None  # partially visible — do not cache
-    ts = json.loads(ln).get("ts")
-    out = float(ts) if ts is not None else None
-    _COMMIT_TS_CACHE[commit_path] = out
-    return out
-
-
-def _txn_tag_of(commit_path: str) -> str | None:
-    """The ``txn`` tag carried by a commit file, or None.  The txn
-    action is always PREPENDED as the commit's first line
-    (:func:`commit_actions`), so only the first line is read."""
-    if commit_path in _TXN_TAG_CACHE:
-        return _TXN_TAG_CACHE[commit_path]
-    with open(commit_path) as f:
-        ln = f.readline()
-    if not ln.strip():
-        return None  # partially visible — do not cache
-    a = json.loads(ln)
-    tag = a.get("path") if a.get("a") == "txn" else None
-    _TXN_TAG_CACHE[commit_path] = tag
-    return tag
+    ts = next(iter(_action_lines_of(commit_path)), {}).get("ts")
+    return None if ts is None else float(ts)
 
 
 def _live_delete_actions(
@@ -2102,12 +1944,13 @@ def _live_delete_actions(
             if a["a"] in ("keydel", "posdel")]
 
 
-#: per-commit-file FULL action-line parses, shared by the driver-side
-#: metadata readers so column mapping / properties / constraints /
-#: live-set replays cost cached dict lookups, not a Spark job per
-#: planning pass.  A commit file is immutable once written, but a
-#: table directory can be deleted and recreated at the same path, so
-#: each entry is checked against the file's (inode, mtime, size)
+#: per-commit-file FULL action-line parses — the one commit-file
+#: reader: every replay, the txn re-check and the in-commit timestamp
+#: read parse through it, so each costs cached dict lookups (O(new
+#: commit files) of parsing per call), not a Spark job.  A commit file
+#: is immutable once written, but a table directory can be deleted and
+#: recreated at the same path, so each entry is checked against the
+#: file's (inode, mtime, size)
 _ACTLINE_CACHE: dict[str, tuple[tuple, tuple[dict, ...]]] = {}
 
 
@@ -2126,7 +1969,7 @@ def _action_lines_of(commit_path: str) -> tuple[dict, ...]:
         # partially visible (reader raced the committer between
         # O_EXCL create and the content write) — do not cache, or
         # every replay built on this cache stays desynced for the
-        # process lifetime (the _commit_ts_of/_txn_tag_of guard)
+        # process lifetime
         return ()
     _ACTLINE_CACHE[commit_path] = (sig, tuple(out))
     return _ACTLINE_CACHE[commit_path][1]
@@ -2151,14 +1994,14 @@ def _log_record(a: dict) -> dict:
     field present (None when absent), ints as ``int``, ``ts`` as a
     float, array fields as lists and ``cstats`` as a dict of lists —
     whether the action came from a JSON commit or a checkpoint
-    parquet, where a map arrives as (key, value) pairs and a missing
-    int may arrive as NaN.  A fresh dict: callers may edit it without
-    touching the per-commit parse caches."""
+    parquet, where a map arrives as (key, value) pairs.  A fresh
+    dict: callers may edit it without touching the per-commit parse
+    caches."""
     out = {}
     for k in _LOG_FIELDS:
         v = a.get(k)
-        if _is_unset(v):
-            v = None
+        if v is None:
+            pass
         elif k in _LOG_INTS:
             v = int(v)
         elif k == "ts":
@@ -2172,20 +2015,29 @@ def _log_record(a: dict) -> dict:
     return out
 
 
-def _is_unset(v) -> bool:
-    """None, or pandas' NaN stand-in for a null (checkpoint rows)."""
-    return v is None or (isinstance(v, float) and v != v)
+def _checkpoint_actions(
+    table_dir: str, version: int, kinds: tuple[str, ...]
+) -> list[dict]:
+    """The actions of the given kinds in checkpoint ``version`` — the
+    one driver-side checkpoint read.  pyarrow rows, not pandas: a
+    null-bearing int column would come back as float64 and round keys
+    above 2**53.  Checkpoints are rewritable, so nothing is cached."""
+    import pyarrow.parquet as _pq
+
+    return _pq.read_table(
+        _checkpoint_dir(table_dir, version), filters=[("a", "in", kinds)]
+    ).to_pylist()
 
 
 def _meta_actions(table_dir: str) -> list[dict]:
     """Driver-side metadata actions (meta / protocol / constraint /
-    property) over the checkpoint-aware log view — the
-    :func:`_log_with_checkpoint_base` twin without a Spark job,
-    ordered by commit version (checkpoint rows keep their original
-    stamps).  Every metadata reader below runs off this, so a
-    DML verb or a read plans with zero metadata jobs.  A MISSING log
-    directory refuses like :func:`read_log` — a typo'd table path
-    must never answer the none-yet defaults."""
+    property) as :func:`_log_record` rows, ordered by commit version:
+    on an expired log the newest checkpoint's rows (original stamps
+    kept), then the retained commits above it.  Every metadata reader
+    below runs off this, so a DML verb or a read plans with zero
+    metadata jobs.  A MISSING log directory refuses like
+    :func:`read_log` — a typo'd table path must never answer the
+    none-yet defaults."""
     if not os.path.isdir(os.path.join(table_dir, LOG_SUBDIR)):
         raise ValueError(f"not a logged table (no {LOG_SUBDIR}/): "
                          f"{table_dir}")
@@ -2195,38 +2047,29 @@ def _meta_actions(table_dir: str) -> list[dict]:
     if present and present[0] > 0:
         ckpt_v = _latest_checkpoint_version(table_dir, None)
         if ckpt_v is not None:
-            import pandas as _pd
-
-            rows = [
-                r
-                for r in _pd.read_parquet(
-                    _checkpoint_dir(table_dir, ckpt_v)
-                ).to_dict("records")
-                if r.get("a") in _META_KINDS
-            ]
-            rows.sort(key=lambda r: int(r["v"]))
+            rows = _checkpoint_actions(table_dir, ckpt_v, _META_KINDS)
+            rows.sort(key=lambda r: r["v"])
             out.extend(rows)
             base_v = ckpt_v
-    for p in sorted(
-        _glob.glob(os.path.join(table_dir, LOG_SUBDIR, "*.json"))
-    ):
-        if int(os.path.basename(p).split(".")[0]) <= base_v:
-            continue
-        out.extend(
-            a for a in _action_lines_of(p) if a.get("a") in _META_KINDS
-        )
-    return out
+    for v in present:
+        if v > base_v:
+            out.extend(
+                a for a in _action_lines_of(
+                    os.path.join(table_dir, LOG_SUBDIR, f"{v:08d}.json"))
+                if a.get("a") in _META_KINDS
+            )
+    return [_log_record(a) for a in out]
 
 
 #: Bound on the driver-side metadata replay (r18, VERDICT r17 #5):
-#: _live_file_records/_live_adds_before materialize one dict per live
-#: file on the driver — the standard Delta-style metadata-on-driver
-#: trade, measured at ~500 B/record (tracemalloc, full add action
-#: with partition values).  The default bound (2M records ≈ ~1 GB on
-#: the 16 GB driver) covers ~2M-file tables; past it the replay
-#: REFUSES loudly instead of silently exhausting the driver —
-#: raise the env for bigger drivers, or checkpoint+expire the log so
-#: the live set shrinks.  SCALE.md documents the arithmetic.
+#: _live_file_records materializes one dict per live file (on the
+#: driver, or in the IVM's expansion task) — the standard Delta-style
+#: metadata-on-driver trade, measured at ~500 B/record (tracemalloc,
+#: full add action with partition values).  The default bound (2M
+#: records ≈ ~1 GB on the 16 GB driver) covers ~2M-file tables; past
+#: it the replay REFUSES loudly instead of silently exhausting the
+#: driver — raise the env for bigger drivers, or checkpoint+expire the
+#: log so the live set shrinks.  SCALE.md documents the arithmetic.
 _MAX_DRIVER_FILE_RECORDS = int(
     os.environ.get("GEMMSQL_MAX_DRIVER_FILE_RECORDS", "2000000")
 )
@@ -2288,13 +2131,7 @@ def _live_file_records(
             last[a["path"]] = (rank, a)
 
     if use_ckpt:
-        import pyarrow.parquet as _pq
-
-        # pyarrow rows, not pandas: a null-bearing int column would
-        # come back as float64 and round keys above 2**53
-        for r in _pq.read_table(
-            _checkpoint_dir(table_dir, ckpt_v)
-        ).to_pylist():
+        for r in _checkpoint_actions(table_dir, ckpt_v, ("add",)):
             fold(r)
         _check_replay_bound(len(last), "_live_file_records")
     for p in sorted(
@@ -2412,7 +2249,9 @@ def commit_actions(
             )
         if txn_tag is not None:
             for p in found:
-                if _txn_tag_of(p) == txn_tag:
+                # the txn action is always a commit's first line
+                first = next(iter(_action_lines_of(p)), {})
+                if first.get("a") == "txn" and first["path"] == txn_tag:
                     return int(os.path.basename(p).split(".")[0])
         if expects_live:
             live = {r["path"] for r in _live_file_records(table_dir)}
@@ -2478,64 +2317,16 @@ def commit_actions(
         return v
 
 
-#: per-commit-file protocol features (immutable files — same caching
-#: argument as _TXN_TAG_CACHE), so the reader-feature check costs a
-#: dict lookup per already-seen commit, not a Spark job per read
-_PROTOCOL_CACHE: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {}
-
-
-def _protocol_features_of(
-    commit_path: str,
-) -> tuple[tuple[str, ...], tuple[str, ...]]:
-    """(reader_features, writer_features) demanded by the protocol
-    actions in one immutable commit file, cached per path."""
-    if commit_path in _PROTOCOL_CACHE:
-        return _PROTOCOL_CACHE[commit_path]
-    readers: list[str] = []
-    writers: list[str] = []
-    with open(commit_path) as f:
-        for ln in f:
-            if not ln.strip():
-                continue
-            a = json.loads(ln)
-            if a.get("a") == "protocol":
-                readers.extend(a.get("reader_features") or [])
-                writers.extend(a.get("writer_features") or [])
-    out = (tuple(readers), tuple(writers))
-    _PROTOCOL_CACHE[commit_path] = out
-    return out
-
-
 def _required_features(
     table_dir: str, version: int | None, kind: str
 ) -> set[str]:
     """Shared replay for both protocol halves (``kind`` is
     ``reader_features`` or ``writer_features``)."""
-    idx = 0 if kind == "reader_features" else 1
-    feats: set[str] = set()
-    files = sorted(_glob.glob(os.path.join(table_dir, LOG_SUBDIR,
-                                           "*.json")))
-    versions = [int(os.path.basename(p).split(".")[0]) for p in files]
-    if versions and min(versions) > 0:
-        # expired log: the checkpoint carries the expired prefix's
-        # protocol actions (driver-side pandas read — checkpoints are
-        # overwritable, so no caching by path)
-        ckpt_v = _latest_checkpoint_version(table_dir, None)
-        if ckpt_v is not None:
-            import pandas as _pd
-
-            base = _pd.read_parquet(_checkpoint_dir(table_dir, ckpt_v))
-            for r in base.to_dict("records"):
-                if r.get("a") == "protocol" and (
-                    version is None or int(r["v"]) <= version
-                ):
-                    got = r.get(kind)
-                    feats.update([] if got is None else list(got))
-    for p, v in zip(files, versions):
-        if version is not None and v > version:
-            continue
-        feats.update(_protocol_features_of(p)[idx])
-    return feats
+    return {
+        f for a in _meta_actions(table_dir)
+        if a["a"] == "protocol" and (version is None or a["v"] <= version)
+        for f in a[kind] or ()
+    }
 
 
 def required_writer_features(
@@ -2559,8 +2350,7 @@ def required_reader_features(
     commit stay readable by old readers — time travel across a
     column-mapping migration keeps working for clients that predate
     it."""
-    feats = _required_features(table_dir, version, "reader_features")
-    return feats
+    return _required_features(table_dir, version, "reader_features")
 
 
 def snapshot_read(
@@ -2693,10 +2483,9 @@ def evolved_schema(
     which is exactly what :func:`snapshot_read` does anyway)."""
     rows = [
         a for a in _meta_actions(table_dir)  # driver-side
-        if a.get("a") == "meta"
-        and (version is None or int(a["v"]) <= version)
+        if a["a"] == "meta" and (version is None or a["v"] <= version)
     ]
-    return list(rows[-1]["schema_cols"]) if rows else None
+    return rows[-1]["schema_cols"] if rows else None
 
 
 def evolve_table(
@@ -2794,9 +2583,8 @@ def _schema_map_actions(
     :func:`column_mapping` and the alias-history resolvers."""
     return [
         a for a in _meta_actions(table_dir)
-        if a.get("a") == "meta"
-        and not _is_unset(_act_get(a, "schema_map"))
-        and (version is None or int(a["v"]) <= version)
+        if a["a"] == "meta" and a["schema_map"] is not None
+        and (version is None or a["v"] <= version)
     ]
 
 
@@ -2804,18 +2592,13 @@ def _max_fid_ever(spark: SparkSession, table_dir: str) -> int:
     """The largest field id in ANY historical meta action — dropped
     columns keep their ids retired forever, so a later add can never
     reuse a dropped column's physical name (whose data still lives
-    in old files)."""
-    mx = -1
-    for p in sorted(
-        _glob.glob(os.path.join(table_dir, LOG_SUBDIR, "*.json"))
-    ):  # raw retained log, like read_log — driver-side, no Spark job
-        for a in _action_lines_of(p):
-            sm = _act_get(a, "schema_map")
-            if _is_unset(sm):
-                continue
-            for s in sm:
-                mx = max(mx, int(str(s).split("|", 1)[0]))
-    return mx
+    in old files).  An expired log's checkpoint carries its meta
+    actions, so retention never frees an id."""
+    return max(
+        (int(s.split("|", 1)[0])
+         for a in _meta_actions(table_dir) for s in a["schema_map"] or ()),
+        default=-1,
+    )
 
 
 def _current_mapping_or_identity(
@@ -4153,13 +3936,12 @@ def partition_candidate_files(
     degrades skip precision, not correctness.  Values recorded under
     a since-RENAMED source column's old name resolve through the
     field-id alias map, so a rename costs no pruning precision."""
-    # _live_file_records (not _live_adds_before) for the VERSIONED
-    # replay: it selects the checkpoint at-or-below ``version`` and
-    # validates expiry exactly like snapshot_files — seeding from the
-    # latest checkpoint and
-    # filtering by v would mis-resolve files removed/re-added in
-    # (version, ckpt_v] on a truncated log, silently dropping rows
-    # from a time-travel read through pruning (ADVICE r17).
+    # the versioned replay selects the checkpoint at-or-below
+    # ``version`` and validates expiry exactly like snapshot_files —
+    # seeding from the latest checkpoint and filtering by v would
+    # mis-resolve files removed/re-added in (version, ckpt_v] on a
+    # truncated log, silently dropping rows from a time-travel read
+    # through pruning (ADVICE r17).
     live = sorted(
         _live_file_records(table_dir, version),
         key=lambda r: r["path"],
@@ -5257,12 +5039,8 @@ def clone_table(
     mapping = column_mapping(spark, src_dir)
     checks = table_constraints(spark, src_dir)
     props = table_properties(spark, src_dir)
-    meta_log = _log_with_checkpoint_base(spark, src_dir)
-    sc_rows = (
-        meta_log.filter(
-            (F.col("a") == "meta") & F.col("schema_cols").isNotNull()
-        ).orderBy(F.col("v").desc()).limit(1).collect()
-    )
+    sc_rows = [a for a in _meta_actions(src_dir)
+               if a["a"] == "meta" and a["schema_cols"] is not None]
     # Build into a temp sibling and rename into place so a mid-loop
     # os.link failure (cross-device dest, permissions) can't leave a
     # half-built dest_dir that blocks the retry with "destination
@@ -5293,7 +5071,7 @@ def clone_table(
     if mapping is not None:
         meta["schema_map"] = _mapping_encode(mapping)
     if sc_rows:
-        meta["schema_cols"] = list(sc_rows[0]["schema_cols"])
+        meta["schema_cols"] = sc_rows[-1]["schema_cols"]
     if meta:
         # ONE merged meta action: two meta rows in one version would
         # leave evolved_schema/column_mapping racing on intra-version
@@ -5974,10 +5752,7 @@ def bloom_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # live set + global max from the driver-side log replay: it
     # already holds both answers as metadata, so no dead file is
     # scanned just to be dropped again
-    adds = sorted(
-        _live_adds_before(os.path.join(table_dir, LOG_SUBDIR), 1 << 62),
-        key=lambda a: a["path"],
-    )
+    adds = sorted(_live_file_records(table_dir), key=lambda a: a["path"])
     gmax = max(int(a["max_key"]) for a in adds)
     data = (
         spark.read.parquet(
@@ -6767,16 +6542,6 @@ def _pd_encoding(spark: SparkSession, path: str, enc) -> str:
                else "rows")
         _PD_ENC_CACHE[path] = got
     return got
-
-
-def _act_get(a, k):
-    """Tolerant field read across the two action shapes in play —
-    driver-parsed JSON dicts and LOG_SCHEMA rows."""
-    try:
-        v = a[k]
-    except (KeyError, ValueError, IndexError):
-        return None
-    return v
 
 
 def _posdel_pairs(

@@ -4402,8 +4402,6 @@ def test_driver_replay_bound_refuses_past_threshold(spark, tmp_path, monkeypatch
     with pytest.raises(ValueError, match="GEMMSQL_MAX_DRIVER_FILE_RECORDS"):
         tl._live_file_records(d)
     with pytest.raises(ValueError, match="GEMMSQL_MAX_DRIVER_FILE_RECORDS"):
-        tl._live_adds_before(os.path.join(d, tl.LOG_SUBDIR), 1 << 62)
-    with pytest.raises(ValueError, match="GEMMSQL_MAX_DRIVER_FILE_RECORDS"):
         tl.streaming_tablelog_gate_dir(spark, d)
     # at the bound exactly: fine (the bound is inclusive)
     monkeypatch.setattr(tl, "_MAX_DRIVER_FILE_RECORDS", 1000)
@@ -4688,3 +4686,131 @@ def test_timestamp_orderdate_appends_with_day_bounds(spark, tmp_path):
     agg = [tl.F.count("*"), tl.F.sum("o_orderkey")]
     assert pruned.agg(*agg).collect() == full.agg(*agg).collect()
     assert full.count() > 0
+
+
+def _fresh_table(d):
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(os.path.join(d, tl.LOG_SUBDIR))
+    os.makedirs(os.path.join(d, tl.DATA_SUBDIR))
+
+
+def _bare_add(path):
+    return {k: v for k, v in _add(0, path).items() if k != "v"}
+
+
+def test_recreated_table_answers_txn_and_timestamps_from_its_own_log(
+        spark, tmp_path):
+    """A table deleted and recreated at the same path reads its OWN
+    commit files: the old table's txn tag must not swallow the new
+    table's first idempotent commit, and the old table's in-commit
+    timestamps must not answer TIMESTAMP AS OF on the new one."""
+    import pytest
+
+    d = str(tmp_path / "recreated")
+    log = os.path.join(d, tl.LOG_SUBDIR)
+    _fresh_table(d)
+    assert tl.commit_actions(
+        d, [_bare_add("a.parquet")], app_txn=("app", 1)) == 0
+    assert tl.commit_actions(
+        d, [_bare_add("a-retry.parquet")], app_txn=("app", 1)) == 0
+    old_ts = tl._commit_ts_of(os.path.join(log, "00000000.json"))
+    assert tl.version_at_timestamp(d, old_ts) == 0
+
+    _fresh_table(d)
+    assert tl.commit_actions(d, [_bare_add("b.parquet")]) == 0
+    assert tl.commit_actions(
+        d, [_bare_add("c.parquet")], app_txn=("app", 1)) == 1
+    assert sorted(os.listdir(log)) == ["00000000.json", "00000001.json"]
+    with pytest.raises(ValueError, match="predates"):
+        tl.version_at_timestamp(d, old_ts)
+
+
+def test_recreated_table_gates_on_its_own_protocol(spark, tmp_path):
+    """Protocol features come from the recreated table's own v0, not
+    from what the path's previous table answered."""
+    import pytest
+
+    d = str(tmp_path / "reproto")
+    _fresh_table(d)
+    tl.commit_actions(d, [_bare_add("a.parquet")])
+    assert tl.required_writer_features(d) == set()
+
+    _fresh_table(d)
+    tl.commit_actions(d, [
+        {"a": "protocol", "reader_features": ["column_mapping"],
+         "writer_features": ["check_constraints"]},
+        _bare_add("b.parquet"),
+    ])
+    assert tl.required_reader_features(d) == {"column_mapping"}
+    assert tl.required_writer_features(d) == {"check_constraints"}
+    with pytest.raises(ValueError, match="column_mapping"):
+        tl.snapshot_read(spark, d)
+
+
+def test_expired_log_never_reissues_a_dropped_field_id(spark, tmp_path):
+    """Dropped columns keep their field ids retired across log expiry:
+    the checkpoint carries the meta actions, so a column added after
+    expiry gets a fresh physical name and never reads the dropped
+    column's bytes from old files."""
+    from gemmsql.datamodel import load_table
+
+    src_tbl = tl.stage_versioned_table(spark, SF_SMOKE)
+    d = str(tmp_path / "fids")
+    shutil.copytree(src_tbl, d)
+    orders = load_table(spark, SF_SMOKE, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice",
+        "o_orderdate", "o_orderpriority",
+    )
+    mx = orders.agg(tl.F.max("o_orderkey")).collect()[0][0]
+    b7 = orders.filter(tl.F.expr(f"o_orderkey div {mx // 8 + 1}") == 7)
+
+    tl.add_column_mapped(spark, d, "xcol", "string")
+    (xfid,) = [e["fid"] for e in tl.column_mapping(spark, d)
+               if e["logical"] == "xcol"]
+    tl.append_mapped(spark, d, b7.withColumn("xcol", tl.F.lit("OLD-X")),
+                     "X.parquet")
+    tl.drop_column(spark, d, "xcol")
+    v = tl.append_mapped(spark, d, b7, "Y.parquet")
+    tl.expire_log(spark, d, v)
+
+    tl.add_column_mapped(spark, d, "ycol", "string")
+    (y,) = [e for e in tl.column_mapping(spark, d)
+            if e["logical"] == "ycol"]
+    assert y["fid"] > xfid and y["physical"] == f"fc{y['fid']}"
+    got = tl.snapshot_read_mapped(spark, d)
+    assert got.count() > 0
+    assert got.filter(tl.F.col("ycol").isNotNull()).count() == 0
+
+
+def test_log_reads_go_through_one_commit_and_one_checkpoint_reader():
+    """Commit JSON is parsed only in ``_action_lines_of`` (the parse
+    cache checked by inode, mtime and size), and checkpoint parquet is
+    read off Spark only in ``_checkpoint_actions``.  A second raw
+    reader is how a path-keyed cache or a drifting replay rule comes
+    back."""
+    import ast
+    import inspect
+
+    readers = {"read_parquet", "read_table", "ParquetFile",
+               "ParquetDataset", "dataset", "read_metadata"}
+    loads, ckpt_reads = [], []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            inner = child.name if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+            if isinstance(child, ast.Call) and isinstance(
+                    child.func, ast.Attribute):
+                f = child.func
+                if f.attr == "loads" and getattr(f.value, "id", "") == "json":
+                    loads.append(inner)
+                if f.attr in readers and any(
+                        isinstance(a, ast.Call)
+                        and getattr(a.func, "id", "") == "_checkpoint_dir"
+                        for a in child.args):
+                    ckpt_reads.append(inner)
+            visit(child, inner)
+
+    visit(ast.parse(inspect.getsource(tl)), None)
+    assert loads == ["_action_lines_of"]
+    assert ckpt_reads == ["_checkpoint_actions"]
