@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gemmsql.numerics import collected_lse, group_logsumexp
-from gemmsql.ops._blocked import fold, row_logsumexp, use_broadcast, vec_mat
+from gemmsql.ops._blocked import fold, plan_tiles, row_logsumexp, vec_mat
 
 
 def attention_scores(
@@ -161,11 +161,11 @@ def attention_blocked(
         right = kv_vec.join(vv, "i").select(
             "i", F.concat("vec", "_vv").alias("vec")
         )
-    # size kv_vec itself: the K|V join's row count would take a job
+    # size and tile kv_vec itself: the K|V join would take a job
     return fold(
         q_vec, right, kernel, "i long, z double, v array<double>",
         merge=_attention_merge, finish=_attention_finish,
-        broadcast=use_broadcast(broadcast_kv, kv_vec), block=block,
+        grid=plan_tiles(broadcast_kv, q_vec, kv_vec, block),
     )
 
 

@@ -8,10 +8,13 @@ backward is a second Spark job over the same tiled layout; the
 scatter-add is a ``groupBy(input id).agg(sum)`` — Spark's partial+final
 aggregation is the scatter-add monoid.
 
-Both sweeps share one broadcast-or-tiled pick: pass 1 (per-row forward
-statistics) is a ``_blocked.fold``, merged on the tiled path only; pass
-2 scatter-adds into both sides via ``_blocked.tile_partials`` and
-always merges (:func:`_merge_vec_partials`).
+Both sweeps share one layout, resolved once per call from the base
+inputs (``_blocked.plan_tiles``): the broadcast-or-tiled pick and, on
+the tiled path, the grid of block ids, so pass 2 reuses pass 1's grid
+instead of re-deriving it from pass 1's output.  Pass 1 (per-row
+forward statistics) is a ``_blocked.fold``, merged on the tiled path
+only; pass 2 scatter-adds into both sides via ``_blocked.tile_partials``
+and always merges (:func:`_merge_vec_partials`).
 
 Implemented (matching the reference's coverage):
 - matmul grads (the primitive under MLP, reference mlp.py:9-16)
@@ -32,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gemmsql.ops._blocked import (
-    fold, lse_merge, row_logsumexp, tile_partials, use_broadcast, vec_mat,
+    Grid, fold, lse_merge, plan_tiles, row_logsumexp, tile_partials, vec_mat,
 )
 from gemmsql.ops.matmul import coo_matmul
 
@@ -142,7 +145,7 @@ def attention_bwd(
     both reduce in one sweep; pass 2 emits per-tile gradient partials,
     scatter-added by the one-shuffle in-row fold.  Returns vector-row
     (gQ, gK, gV)."""
-    bcast = use_broadcast(broadcast_kv, kv_vec)
+    grid = plan_tiles(broadcast_kv, q_vec, kv_vec, block)
     q_g = q_vec.select("i", "vec").join(
         g_vec.select("i", F.col("vec").alias("gvec")), "i"
     )
@@ -159,8 +162,7 @@ def attention_bwd(
 
     zr = fold(
         q_g, kv_vec, zr_kernel, "i long, z double, r double",
-        merge=lse_merge("z", "r"), broadcast=bcast, block=block,
-        left_extra=("gvec",),
+        merge=lse_merge("z", "r"), grid=grid, left_extra=("gvec",),
     )
     q_aug = q_g.join(zr, "i")
 
@@ -184,7 +186,7 @@ def attention_bwd(
     parts = tile_partials(
         q_aug, kv_vec, grad_kernel,
         "which string, i long, vec array<double>",
-        broadcast=bcast, block=block, left_extra=("gvec", "z", "r"),
+        grid=grid, left_extra=("gvec", "z", "r"),
     )
     summed = _merge_vec_partials(parts, ["which", "i"])
     gq = summed.where(F.col("which") == "gq").select("i", "vec")
@@ -204,7 +206,16 @@ def xentropy_bwd(
     (cotangent = ones): gPred_m = sum_n (softmax_mn - onehot_mn) trg_n;
     gTrg_n = sum_m (softmax_mn - onehot_mn) pred_m
     (reference xentropy.py:15-37 with g_p = 1, g_n = -1)."""
-    bcast = use_broadcast(broadcast_trg, trg_vec)
+    return _xentropy_bwd(
+        pred_vec, trg_vec, plan_tiles(broadcast_trg, pred_vec, trg_vec, block)
+    )
+
+
+def _xentropy_bwd(
+    pred_vec: DataFrame, trg_vec: DataFrame, grid: Grid | None
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`xentropy_bwd` on a resolved layout, whose grid may come
+    from a frame with ``pred_vec``'s row ids."""
 
     def z_kernel(lids, lmat, _extra, rids, rmat):
         s = lmat @ rmat.T
@@ -212,7 +223,7 @@ def xentropy_bwd(
 
     z = fold(
         pred_vec.select("i", "vec"), trg_vec, z_kernel, "i long, z double",
-        merge=lse_merge("z"), broadcast=bcast, block=block,
+        merge=lse_merge("z"), grid=grid,
     )
     p_aug = pred_vec.select("i", "vec", "label").join(z, "i")
 
@@ -234,7 +245,7 @@ def xentropy_bwd(
     parts = tile_partials(
         p_aug, trg_vec, grad_kernel,
         "which string, i long, vec array<double>",
-        broadcast=bcast, block=block, left_extra=("label", "z"),
+        grid=grid, left_extra=("label", "z"),
     )
     summed = _merge_vec_partials(parts, ["which", "i"])
     gpred = summed.where(F.col("which") == "gpred").select("i", "vec")

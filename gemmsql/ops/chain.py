@@ -25,11 +25,12 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from gemmsql.caching import scoped_cache
+from gemmsql.ops._blocked import plan_tiles
 from gemmsql.ops.backward import (
     _merge_vec_partials,
+    _xentropy_bwd,
     attention_bwd,
     mlp_bwd,
-    xentropy_bwd,
 )
 from gemmsql.ops.mlp import mlp
 
@@ -63,8 +64,9 @@ def xentropy_mlp_grads(
     Returns ``(gx, gp, gq, gtrg)``: gx/gtrg vector-row, gp/gq COO.
     """
     pred = mlp(x_vec, p, q, keep={"label": "long"})
-    gpred, gtrg = xentropy_bwd(
-        pred, trg_vec, block=block, broadcast_trg=broadcast_trg
+    # pred keeps x's row ids, so x's footers give its block ids
+    gpred, gtrg = _xentropy_bwd(
+        pred, trg_vec, plan_tiles(broadcast_trg, x_vec, trg_vec, block)
     )
     gpred = scoped_cache(gpred)
     gx, gp, gq = mlp_bwd(x_vec.select("i", "vec"), gpred, p, q)

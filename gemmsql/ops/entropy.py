@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gemmsql.ops._blocked import fold, lse_merge, row_logsumexp
+from gemmsql.ops._blocked import fold, lse_merge, plan_tiles, row_logsumexp
 
 
 def _entropy_kernel(lids, lmat, _extra, rids, rmat) -> pd.DataFrame:
@@ -44,5 +44,5 @@ def row_entropy(
         pred_vec, trg_vec, _entropy_kernel, "i long, p double, n double",
         merge=lse_merge("p", "n"),
         finish=lambda r: r.select("i", (F.col("p") - F.col("n")).alias("entropy")),
-        broadcast=broadcast_trg, block=block,
+        grid=plan_tiles(broadcast_trg, pred_vec, trg_vec, block),
     )

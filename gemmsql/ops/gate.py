@@ -80,7 +80,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gemmsql.ops._blocked import blocked_partials, vec_mat
+from gemmsql.ops._blocked import Grid, block_grid, blocked_partials, vec_mat
 from gemmsql.stats import list_dim, rows_for_choice
 
 Q_IN = 1_000_000.0       # input quantization: v -> floor(v*1e6 + .5)
@@ -291,9 +291,12 @@ def attention_gate(
         s = (_quant(lmat) @ _quant(rk).T) / denom
         return pd.DataFrame({"i": lids, "mx": s.max(axis=1)})
 
+    # one grid for both sweeps, tiled from kv_vec: the K|V join would
+    # take a job
+    grid = block_grid(q_vec, kv_vec, block)
     mxp = blocked_partials(
         q_vec.select("i", "vec"), right, mx_kernel,
-        "i long, mx double", left_block=block, right_block=block,
+        "i long, mx double", grid=grid,
     )
     mx = mxp.groupBy("i").agg(F.max("mx").alias("mx"))
     q_aug = q_vec.select("i", "vec").join(mx, "i")
@@ -310,8 +313,7 @@ def attention_gate(
 
     parts = blocked_partials(
         q_aug, right, part_kernel,
-        "i long, nums array<long>",
-        left_block=block, right_block=block, left_extra=("mx",),
+        "i long, nums array<long>", grid=grid, left_extra=("mx",),
     )
     merged = _merge_long_arrays(parts, ["i"])
     out = merged.select(
@@ -344,7 +346,7 @@ def _grads_finalize(parts: DataFrame) -> DataFrame:
     )
 
 
-def _blocked_mx(vec_q: DataFrame, kv: DataFrame, denom: float, block: int) -> DataFrame:
+def _blocked_mx(vec_q: DataFrame, kv: DataFrame, denom: float, grid: Grid) -> DataFrame:
     """Tile sweep 1: exact per-row score max (max is order-independent)."""
 
     def mx_kernel(lids, lmat, _extra, rids, rmat):
@@ -353,7 +355,7 @@ def _blocked_mx(vec_q: DataFrame, kv: DataFrame, denom: float, block: int) -> Da
 
     mxp = blocked_partials(
         vec_q.select("i", "vec"), kv.select("i", "vec"), mx_kernel,
-        "i long, mx double", left_block=block, right_block=block,
+        "i long, mx double", grid=grid,
     )
     return mxp.groupBy("i").agg(F.max("mx").alias("mx"))
 
@@ -445,7 +447,8 @@ def _attention_grads_parts_blocked(vec: DataFrame, *, block: int) -> DataFrame:
     bit-identical to the broadcast path (exact integer merges at every
     stage)."""
     q = vec.select("i", "vec")
-    mx = _blocked_mx(q, q, 1e12, block)
+    grid = block_grid(q, q, block)
+    mx = _blocked_mx(q, q, 1e12, grid)
     q_mx = q.join(mx, "i")
 
     # sweep 2: exact (S, rnum) per row — long sums of tile partials
@@ -462,7 +465,7 @@ def _attention_grads_parts_blocked(vec: DataFrame, *, block: int) -> DataFrame:
 
     srp = blocked_partials(
         q_mx, q, sr_kernel, "i long, sp long, rp long",
-        left_block=block, right_block=block, left_extra=("mx",),
+        grid=grid, left_extra=("mx",),
     )
     sr = srp.groupBy("i").agg(
         F.sum("sp").alias("st"), F.sum("rp").alias("rn")
@@ -501,7 +504,7 @@ def _attention_grads_parts_blocked(vec: DataFrame, *, block: int) -> DataFrame:
 
     return blocked_partials(
         q_aug, q, leg_kernel, "which string, i long, nums array<long>",
-        left_block=block, right_block=block, left_extra=("mx", "st", "rn"),
+        grid=grid, left_extra=("mx", "st", "rn"),
     )
 
 
@@ -580,7 +583,8 @@ def _xentropy_gate_blocked(vec: DataFrame, *, block: int) -> DataFrame:
     """Large-class-table tile path of :func:`xentropy_gate`."""
     pred = vec.select("i", "vec", "label")
     trg = vec.select("i", "vec")
-    mx = _blocked_mx(pred, trg, 1e12, block)
+    grid = block_grid(pred, trg, block)
+    mx = _blocked_mx(pred, trg, 1e12, grid)
     p_mx = pred.join(mx, "i")
 
     def s_kernel(lids, lmat, extra, rids, rmat):
@@ -598,7 +602,7 @@ def _xentropy_gate_blocked(vec: DataFrame, *, block: int) -> DataFrame:
 
     parts = blocked_partials(
         p_mx, trg, s_kernel, "i long, sp long, slab double",
-        left_block=block, right_block=block, left_extra=("mx", "label"),
+        grid=grid, left_extra=("mx", "label"),
     )
     # sum(slab) is exact: exactly one tile contributes non-zero
     agg = parts.groupBy("i").agg(
@@ -649,7 +653,8 @@ def entropy_gate(
 def _entropy_gate_blocked(vec: DataFrame, *, block: int) -> DataFrame:
     """Large-class-table tile path of :func:`entropy_gate`."""
     q = vec.select("i", "vec")
-    mx = _blocked_mx(q, q, 1e12, block)
+    grid = block_grid(q, q, block)
+    mx = _blocked_mx(q, q, 1e12, grid)
     q_mx = q.join(mx, "i")
 
     def s_kernel(lids, lmat, extra, rids, rmat):
@@ -658,8 +663,7 @@ def _entropy_gate_blocked(vec: DataFrame, *, block: int) -> DataFrame:
         return pd.DataFrame({"i": lids, "sp": e.sum(axis=1).astype(np.int64)})
 
     sp = blocked_partials(
-        q_mx, q, s_kernel, "i long, sp long",
-        left_block=block, right_block=block, left_extra=("mx",),
+        q_mx, q, s_kernel, "i long, sp long", grid=grid, left_extra=("mx",),
     )
     sden = sp.groupBy("i").agg(F.sum("sp").alias("st"))
     q_aug = q_mx.join(sden, "i")
@@ -674,7 +678,7 @@ def _entropy_gate_blocked(vec: DataFrame, *, block: int) -> DataFrame:
 
     tp = blocked_partials(
         q_aug, q, t_kernel, "i long, tp long",
-        left_block=block, right_block=block, left_extra=("mx", "st"),
+        grid=grid, left_extra=("mx", "st"),
     )
     agg = (
         tp.groupBy("i").agg(F.sum("tp").alias("tsum"))
@@ -777,7 +781,8 @@ def _xe_grads_parts_blocked(
 ) -> DataFrame:
     """Tile-path twin of the broadcast branch of :func:`_xe_grads_parts`
     for a general (pred, trg) pair — un-finalized integer partials."""
-    mx = _blocked_mx(pred, trg, 1e12, block)
+    grid = block_grid(pred, trg, block)
+    mx = _blocked_mx(pred, trg, 1e12, grid)
     p_mx = pred.join(mx, "i")
 
     def s_kernel(lids, lmat, extra, rids, rmat):
@@ -786,8 +791,7 @@ def _xe_grads_parts_blocked(
         return pd.DataFrame({"i": lids, "sp": e.sum(axis=1).astype(np.int64)})
 
     sp = blocked_partials(
-        p_mx, trg, s_kernel, "i long, sp long",
-        left_block=block, right_block=block, left_extra=("mx",),
+        p_mx, trg, s_kernel, "i long, sp long", grid=grid, left_extra=("mx",),
     )
     sden = sp.groupBy("i").agg(F.sum("sp").alias("st"))
     p_aug = p_mx.join(sden, "i")
@@ -818,7 +822,7 @@ def _xe_grads_parts_blocked(
 
     return blocked_partials(
         p_aug, trg, leg_kernel, "which string, i long, nums array<long>",
-        left_block=block, right_block=block, left_extra=("mx", "st", "label"),
+        grid=grid, left_extra=("mx", "st", "label"),
     )
 
 

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gemmsql.numerics import collected_lse
-from gemmsql.ops._blocked import fold, row_logsumexp, vec_mat
+from gemmsql.ops._blocked import fold, plan_tiles, row_logsumexp, vec_mat
 
 MIX_P = 2_147_483_647  # 2^31 - 1; squares stay < 2^63 (exact in int64)
 
@@ -165,8 +165,10 @@ def sample_categorical(
             F.exp(F.col("sc") - F.col("tz")).alias("prob"),
             F.col("c").alias("choice"),
         ),
-        broadcast=broadcast_classes, block=block,
-        max_rows=CLASS_BROADCAST_MAX_ROWS,
+        grid=plan_tiles(
+            broadcast_classes, pred_vec, trg_vec, block,
+            max_rows=CLASS_BROADCAST_MAX_ROWS,
+        ),
     )
 
 

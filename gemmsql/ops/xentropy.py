@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gemmsql.numerics import collected_lse
-from gemmsql.ops._blocked import fold, row_logsumexp
+from gemmsql.ops._blocked import fold, plan_tiles, row_logsumexp
 
 
 def _xent_kernel(lids, lmat, extra, rids, rmat) -> pd.DataFrame:
@@ -60,5 +60,6 @@ def xentropy(
         pred_vec, trg_vec, _xent_kernel, "i long, p double, n double",
         merge=_xent_merge,
         finish=lambda r: r.select("i", (F.col("p") - F.col("n")).alias("loss")),
-        broadcast=broadcast_trg, block=block, left_extra=("label",),
+        grid=plan_tiles(broadcast_trg, pred_vec, trg_vec, block),
+        left_extra=("label",),
     )

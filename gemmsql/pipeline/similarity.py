@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from gemmsql.caching import scoped_cache
 from gemmsql.datamodel import embeddings_vectors
 from gemmsql.stats import embeddings_stats
-from gemmsql.ops._blocked import blocked_partials
+from gemmsql.ops._blocked import block_grid, blocked_partials
 
 
 def _topk_kernel(k: int):
@@ -60,7 +60,7 @@ def cosine_topk(
     vec = embeddings_vectors(spark, sf_dir).select("i", "vec")
     partials = blocked_partials(
         vec, vec, _topk_kernel(k), "i long, j long, cos double",
-        left_block=block, right_block=block,
+        grid=block_grid(vec, vec, block),
     )
     w = W.partitionBy("i").orderBy(F.col("cos").desc(), F.col("j"))
     return (
@@ -130,7 +130,7 @@ def embedding_dups(
     pairs = blocked_partials(
         vec, vec, _dup_kernel(threshold),
         "doc_a long, doc_b long, cos double",
-        left_block=block, right_block=block,
+        grid=block_grid(vec, vec, block),
     )
     return pairs.select("doc_a", "doc_b", F.round("cos", 6).alias("cos"))
 

@@ -16,8 +16,11 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from py4j.protocol import Py4JError
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 _CACHE: dict[tuple[str, str], tuple[int, int]] = {}
 
@@ -149,6 +152,12 @@ def _scan_chain(df):
         return None
 
 
+def _parquet_files(df) -> list[str]:
+    """Local paths of the parquet files ``df`` scans, sorted."""
+    files = (_local_path(f) for f in df.inputFiles())
+    return sorted(f for f in files if f.endswith(".parquet"))
+
+
 def frame_rows(df) -> int | None:
     """Exact row count of ``df`` from parquet footers when its plan is a
     pure projection over one parquet relation; None otherwise.  Never
@@ -156,8 +165,7 @@ def frame_rows(df) -> int | None:
     if _scan_chain(df) is None:
         return None
     try:
-        files = [_local_path(f) for f in df.inputFiles()]
-        files = [f for f in files if f.endswith(".parquet")]
+        files = _parquet_files(df)
         if not files:
             return None
         return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
@@ -261,9 +269,7 @@ def frame_list_dim(df, col: str) -> int | None:
     if src is None:
         return None
     try:
-        files = [_local_path(f) for f in df.inputFiles()]
-        files = [f for f in files if f.endswith(".parquet")]
-        for f in files:
+        for f in _parquet_files(df):
             pf = pq.ParquetFile(f)
             if pf.metadata.num_rows == 0:
                 continue
@@ -283,3 +289,74 @@ def list_dim(df, col: str = "vec") -> int:
     if d is None:
         d = len(df.select(col).first()[0])
     return d
+
+
+def frame_bytes(df, col: str = "vec") -> int:
+    """Bytes of ``df``'s float64 array column ``col`` collected to the
+    driver: rows x array length x 8, both from footers when the plan
+    allows, else from one aggregate job."""
+    n, d = frame_rows(df), frame_list_dim(df, col)
+    if n is None or d is None:
+        n, d = df.agg(F.count(F.lit(1)), F.max(F.size(col))).first()
+    return n * (d or 0) * 8
+
+
+def frame_col_bounds(df, col: str) -> tuple[int, int] | None:
+    """Exact (min, max) of the bigint column ``col`` from parquet
+    row-group statistics when ``col`` traces through pure projections
+    (alias/cast only) to a scanned integer column with no nulls; None
+    otherwise (a filter, join or in-memory frame, a missing statistic,
+    no rows).  Never launches a Spark job."""
+    chain = _scan_chain(df)
+    if chain is None or df.schema[col].dataType != LongType():
+        return None
+    src = _source_column(chain, col)
+    if src is None:
+        return None
+    lo = hi = None
+    try:
+        for f in _parquet_files(df):
+            md = pq.ParquetFile(f).metadata
+            for rg in range(md.num_row_groups):
+                g = md.row_group(rg)
+                if g.num_rows == 0:
+                    continue
+                c = next((g.column(k) for k in range(g.num_columns)
+                          if g.column(k).path_in_schema == src), None)
+                st = None if c is None else c.statistics
+                if (st is None or c.physical_type not in ("INT32", "INT64")
+                        or not st.has_min_max or not st.has_null_count
+                        or st.null_count):
+                    return None
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+    except (OSError, ValueError, TypeError, Py4JError):
+        return None
+    return None if lo is None else (int(lo), int(hi))
+
+
+def frame_table(df, schema: pa.Schema) -> pa.Table | None:
+    """The columns of ``df`` that ``schema`` names, read straight from
+    ``df``'s parquet files with pyarrow, when each traces through pure
+    projections to a scanned column of the schema's type; None
+    otherwise.  A cast in the projection is not applied, so the caller
+    checks ``df``'s own types.  Files are read in path order, so a
+    one-file frame comes back in Spark's scan order.  Never launches a
+    Spark job."""
+    chain = _scan_chain(df)
+    if chain is None:
+        return None
+    srcs = [_source_column(chain, c) for c in schema.names]
+    if None in srcs:
+        return None
+    try:
+        files = [pq.ParquetFile(f) for f in _parquet_files(df)]
+        if not files or any(
+            pf.schema_arrow.field(s).type != t
+            for pf in files for s, t in zip(srcs, schema.types)
+        ):
+            return None
+        t = pa.concat_tables(pf.read(columns=srcs) for pf in files)
+    except (OSError, ValueError, KeyError, pa.ArrowException, Py4JError):
+        return None
+    return t.select(srcs).rename_columns(schema.names)

@@ -187,7 +187,7 @@ def test_broadcast_forward_folds_are_narrow(spark):
 
 def _merge_aggregates(p: str) -> list[str]:
     """Function lists of the final aggregate nodes that compute
-    something (block-id ``distinct()`` nodes have ``functions=[]``)."""
+    something."""
     funcs = re.findall(r"Aggregate\(keys=\[[^\]]*\], functions=\[([^\]]*)\]", p)
     return [f for f in funcs if f and not f.startswith("partial_")]
 
@@ -228,6 +228,47 @@ def test_tiled_fold_passes_merge_with_one_aggregate(spark):
         aggs = _merge_aggregates(plan_of(df))
         assert len(aggs) == n, f"{name}: merge aggregates {aggs}"
         assert not any("max(" in f for f in aggs), f"{name}: {aggs}"
+
+
+def test_tiled_folds_take_block_ids_from_footers(spark):
+    """On parquet-scan inputs the tiled grid comes from footer min/max of
+    ``i``: no plan carries a block-id aggregate (a ``distinct()`` of
+    ``_lb``/``_rb``, ``functions=[]``) or a BroadcastNestedLoopJoin, and
+    each backward holds exactly its two kernels, because pass 2 reuses
+    pass 1's grid instead of re-planning pass 1 to find its block ids."""
+    from gemmsql.datamodel import embeddings_vectors
+    from gemmsql.ops import (
+        attention_blocked,
+        row_entropy,
+        sample_categorical,
+        xentropy,
+    )
+    from gemmsql.ops.backward import attention_bwd, xentropy_bwd
+
+    vec = embeddings_vectors(spark, SF_SMOKE)
+    v = vec.select("i", "vec")
+    backwards = {
+        "xentropy_bwd": xentropy_bwd(vec, v, block=128, broadcast_trg=False),
+        "attention_bwd": attention_bwd(v, v, v, block=128, broadcast_kv=False),
+    }
+    plans = {
+        "xentropy": xentropy(vec, v, block=128, broadcast_trg=False),
+        "row_entropy": row_entropy(v, v, block=128, broadcast_trg=False),
+        "sample_categorical": sample_categorical(
+            v, v, block=128, broadcast_classes=False
+        ),
+        "attention_blocked": attention_blocked(
+            v, v, block=128, broadcast_kv=False
+        ),
+        **{f"{k}[{n}]": out for k, outs in backwards.items()
+           for n, out in enumerate(outs)},
+    }
+    for name, df in plans.items():
+        p = plan_of(df)
+        assert not re.search(r"Aggregate\(keys=\[_[lr]b#\d+\], functions=\[\]", p), name
+        assert "BroadcastNestedLoopJoin" not in p, name
+        if "_bwd" in name:
+            assert p.count("FlatMapGroupsInPandas") == 2, name
 
 
 def test_spread_never_shrinks_a_wide_left_side(spark, tmp_path):
@@ -296,8 +337,9 @@ def test_bucketed_table_join_skips_exchange(spark, tmp_path):
 
 
 def test_blocked_ops_never_cartesian(spark):
-    """The tile cross-product must be realized as broadcast joins of
-    block-id tables, never a CartesianProduct of the row tables."""
+    """The tile cross-product must be realized as a narrow explode of
+    the other side's block ids, never a CartesianProduct of the row
+    tables."""
     from gemmsql.datamodel import embeddings_vectors
     from gemmsql.ops import attention_blocked, row_entropy, xentropy
     from gemmsql.ops.gate import attention_gate
