@@ -23,8 +23,8 @@ in bytes from its footers) and :func:`fold` runs it:
   partials per row before ``finish``.  Left rows replicate once per
   right block and vice versa, O(|L| * nrb + |R| * nlb) shuffle.
 
-Passes that scatter-add into both sides (the backwards' second sweep)
-take :func:`tile_partials` and merge on both paths.  A call with
+Passes that scatter-add into both sides (the backwards' gradient
+sweep) take :func:`tile_partials` and merge on both paths.  A call with
 several sweeps resolves its grid once and hands it to each.
 """
 

@@ -8,13 +8,19 @@ backward is a second Spark job over the same tiled layout; the
 scatter-add is a ``groupBy(input id).agg(sum)`` — Spark's partial+final
 aggregation is the scatter-add monoid.
 
-Both sweeps share one layout, resolved once per call from the base
-inputs (``_blocked.plan_tiles``): the broadcast-or-tiled pick and, on
-the tiled path, the grid of block ids, so pass 2 reuses pass 1's grid
-instead of re-deriving it from pass 1's output.  Pass 1 (per-row
-forward statistics) is a ``_blocked.fold``, merged on the tiled path
-only; pass 2 scatter-adds into both sides via ``_blocked.tile_partials``
-and always merges (:func:`_merge_vec_partials`).
+Each call resolves its layout once from the base inputs
+(``_blocked.plan_tiles``): the broadcast-or-tiled pick and, on the tiled
+path, the grid of block ids.  The gradient sweep scatter-adds into both
+sides via ``_blocked.tile_partials`` and always merges
+(:func:`_merge_vec_partials`).  Its kernel needs each left row's forward
+statistics (logsumexp z, and attention's row term r).  When every
+kernel call sees every right row (the broadcast path, or one right
+block), the kernel computes them itself: ONE sweep.  Otherwise a first
+sweep folds them (a ``_blocked.fold`` on the same grid) and joins them
+onto the left rows, because a right-row gradient needs the global z.
+
+All output legs come out of one merge and split after it
+(:func:`_legs`), so one action over every leg runs each sweep once.
 
 Implemented (matching the reference's coverage):
 - matmul grads (the primitive under MLP, reference mlp.py:9-16)
@@ -95,36 +101,75 @@ def mlp_bwd(
             gh = (g @ wq.T) * (h > 0)
             gp_p = x.T @ gh                   # (M, K)
             rows = []
-            for name, m in (("gp", gp_p), ("gq", gq_p)):
+            for leg, m in enumerate((gp_p, gq_p)):
                 r, c = np.meshgrid(
                     np.arange(m.shape[0]), np.arange(m.shape[1]), indexing="ij"
                 )
                 rows.append(
                     pd.DataFrame(
-                        {"w": name, "i": r.ravel(), "j": c.ravel(), "pv": m.ravel()}
+                        {"which": leg, "i": r.ravel(), "j": c.ravel(), "pv": m.ravel()}
                     )
                 )
             yield pd.concat(rows, ignore_index=True)
 
-    wp_df = joined.mapInPandas(w_partials, "w string, i long, j long, pv double")
-    sums = wp_df.groupBy("w", "i", "j").agg(F.sum("pv").alias("v"))
-    gp = sums.where(F.col("w") == "gp").select("i", "j", "v")
-    gq = sums.where(F.col("w") == "gq").select("i", "j", "v")
+    # legs numbered 0 (gP) and 1 (gQ): a string ``first`` would turn
+    # the sum into a sort aggregate
+    wp_df = joined.mapInPandas(w_partials, "which int, i long, j long, pv double")
+    sums = wp_df.groupBy("which", "i", "j").agg(
+        F.sum("pv").alias("v"), F.first("which").alias("leg")
+    )
+    gp, gq = _legs(sums, 0, 1)
     return gx, gp, gq
 
 
-def _merge_vec_partials(parts: DataFrame, keys: list[str]) -> DataFrame:
+def _merge_vec_partials(parts: DataFrame, keys: list[str], *aggs) -> DataFrame:
     """Scatter-add of per-tile vector partials (reference core.py:56-57)
     in ONE shuffle: collect the few partials per key and fold them
     element-wise in-row with higher-order functions — no posexplode
-    re-shuffle of every (row, dim) pair."""
-    g = parts.groupBy(*keys).agg(F.collect_list("vec").alias("ps"))
+    re-shuffle of every (row, dim) pair.  ``aggs`` are further
+    aggregate columns, kept beside ``keys``."""
+    g = parts.groupBy(*keys).agg(F.collect_list("vec").alias("ps"), *aggs)
     zero = F.transform(F.element_at(F.col("ps"), 1), lambda _: F.lit(0.0))
     vec = F.aggregate(
         F.col("ps"), zero,
         lambda acc, p: F.zip_with(acc, p, lambda a, b: a + b),
     )
-    return g.select(*keys, vec.alias("vec"))
+    return g.withColumn("vec", vec).drop("ps")
+
+
+def _merge_legs(parts: DataFrame) -> DataFrame:
+    """Partials ``(which, i, vec)`` merged per ``(which, i)``, plus
+    ``leg``: the merge's own copy of ``which``, for :func:`_legs`."""
+    return _merge_vec_partials(parts, ["which", "i"], F.first("which").alias("leg"))
+
+
+def _legs(merged: DataFrame, *names: str | int) -> tuple[DataFrame, ...]:
+    """One output per leg of ``merged``.  Each splits on ``leg``, an
+    aggregate output, not on the grouping key ``which``: Spark pushes a
+    filter on a grouping key below the aggregate, so each leg would
+    re-run the merge and every sweep under it.  Split above it, all
+    legs read one merge exchange and the kernels run once per call."""
+    return tuple(
+        merged.where(F.col("leg") == n).drop("which", "leg") for n in names
+    )
+
+
+def _one_sweep(grid: Grid | None) -> bool:
+    """Every kernel call holds every right row: the broadcast path, or a
+    grid with one right block.  The kernel can then compute the
+    per-row forward statistics itself."""
+    return grid is None or len(grid.right) == 1
+
+
+def _softmax_rows(s: np.ndarray, gw: np.ndarray):
+    """Per-row ``z = logsumexp(s)``, weights ``w = e^{s - z}`` and the
+    softmax-Jacobian row term ``r = sum_n w_n gw_n``."""
+    z = row_logsumexp(s)
+    w = np.exp(s - z[:, None])
+    return z, w, (w * gw).sum(axis=1)
+
+
+_PARTS = "which string, i long, vec array<double>"
 
 
 def attention_bwd(
@@ -137,42 +182,49 @@ def attention_bwd(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Gradients of unscaled self-attention ``softmax(Q K^T) V`` (K=V)
     wrt (Q, K, V), given per-row cotangent G aligned with Q rows.
-
-    Recompute strategy (reference attention.py:11-29) in TWO tile
-    sweeps: pass 1 fuses the forward z (per-row logsumexp) with the
-    softmax-Jacobian row term r_i = sum_n w_in (g_i . v_n) — a product
-    monoid of the A3 logaddexp merge and the E3 weighted-mean merge, so
-    both reduce in one sweep; pass 2 emits per-tile gradient partials,
-    scatter-added by the one-shuffle in-row fold.  Returns vector-row
-    (gQ, gK, gV)."""
+    Returns vector-row (gQ, gK, gV)."""
     grid = plan_tiles(broadcast_kv, q_vec, kv_vec, block)
+    return _legs(_merge_legs(_attention_parts(q_vec, kv_vec, g_vec, grid)),
+                 "gq", "gk", "gv")
+
+
+def _attention_parts(
+    q_vec: DataFrame, kv_vec: DataFrame, g_vec: DataFrame, grid: Grid | None
+) -> DataFrame:
+    """:func:`attention_bwd`'s gradient partials ``(which, i, vec)``.
+
+    Recompute strategy (reference attention.py:11-29).  The kernel needs
+    each row's forward z (logsumexp) and softmax-Jacobian row term
+    r_i = sum_n w_in (g_i . v_n).  When it sees every kv row
+    (:func:`_one_sweep`) it computes them itself; otherwise a first
+    sweep folds them as a product monoid of the A3 logaddexp merge and
+    the E3 weighted-mean merge, and joins them onto the Q rows."""
     q_g = q_vec.select("i", "vec").join(
         g_vec.select("i", F.col("vec").alias("gvec")), "i"
     )
+    cols = ("gvec",)
+    if not _one_sweep(grid):
+        def zr_kernel(lids, lmat, extra, rids, rmat):
+            g = vec_mat(extra["gvec"])
+            z, _, r = _softmax_rows(lmat @ rmat.T, g @ rmat.T)
+            return pd.DataFrame({"i": lids, "z": z, "r": r})
 
-    # pass 1 (fused z + r): per-tile logsumexp z_t and in-tile
-    # softmax-weighted row term r_t, merged per row in log space
-    def zr_kernel(lids, lmat, extra, rids, rmat):
+        zr = fold(
+            q_g, kv_vec, zr_kernel, "i long, z double, r double",
+            merge=lse_merge("z", "r"), grid=grid, left_extra=cols,
+        )
+        q_g, cols = q_g.join(zr, "i"), ("gvec", "z", "r")
+
+    def grad_kernel(lids, lmat, extra, rids, rmat):
         g = vec_mat(extra["gvec"])
         s = lmat @ rmat.T
-        z = row_logsumexp(s)
-        w = np.exp(s - z[:, None])
-        r = (w * (g @ rmat.T)).sum(axis=1)
-        return pd.DataFrame({"i": lids, "z": z, "r": r})
-
-    zr = fold(
-        q_g, kv_vec, zr_kernel, "i long, z double, r double",
-        merge=lse_merge("z", "r"), grid=grid, left_extra=("gvec",),
-    )
-    q_aug = q_g.join(zr, "i")
-
-    # pass 2: per-tile gradient partials
-    def grad_kernel(lids, lmat, extra, rids, rmat):
-        g = vec_mat(extra["gvec"]); zz = extra["z"].to_numpy()
-        rr = extra["r"].to_numpy()
-        s = lmat @ rmat.T
-        w = np.exp(s - zz[:, None])
-        gs = w * (g @ rmat.T - rr[:, None])  # softmax jacobian
+        gw = g @ rmat.T
+        if "z" in extra:
+            w = np.exp(s - extra["z"].to_numpy()[:, None])
+            r = extra["r"].to_numpy()
+        else:
+            _, w, r = _softmax_rows(s, gw)
+        gs = w * (gw - r[:, None])            # softmax jacobian
         gq = gs @ rmat                        # (m, F)
         gk = gs.T @ lmat                      # (n, F)
         gv = w.T @ g                          # (n, D)
@@ -183,16 +235,9 @@ def attention_bwd(
         ]
         return pd.concat(out, ignore_index=True)
 
-    parts = tile_partials(
-        q_aug, kv_vec, grad_kernel,
-        "which string, i long, vec array<double>",
-        grid=grid, left_extra=("gvec", "z", "r"),
+    return tile_partials(
+        q_g, kv_vec, grad_kernel, _PARTS, grid=grid, left_extra=cols
     )
-    summed = _merge_vec_partials(parts, ["which", "i"])
-    gq = summed.where(F.col("which") == "gq").select("i", "vec")
-    gk = summed.where(F.col("which") == "gk").select("i", "vec")
-    gv = summed.where(F.col("which") == "gv").select("i", "vec")
-    return gq, gk, gv
 
 
 def xentropy_bwd(
@@ -206,32 +251,35 @@ def xentropy_bwd(
     (cotangent = ones): gPred_m = sum_n (softmax_mn - onehot_mn) trg_n;
     gTrg_n = sum_m (softmax_mn - onehot_mn) pred_m
     (reference xentropy.py:15-37 with g_p = 1, g_n = -1)."""
-    return _xentropy_bwd(
-        pred_vec, trg_vec, plan_tiles(broadcast_trg, pred_vec, trg_vec, block)
-    )
+    grid = plan_tiles(broadcast_trg, pred_vec, trg_vec, block)
+    return _legs(_merge_legs(_xentropy_parts(pred_vec, trg_vec, grid)),
+                 "gpred", "gtrg")
 
 
-def _xentropy_bwd(
+def _xentropy_parts(
     pred_vec: DataFrame, trg_vec: DataFrame, grid: Grid | None
-) -> tuple[DataFrame, DataFrame]:
-    """:func:`xentropy_bwd` on a resolved layout, whose grid may come
-    from a frame with ``pred_vec``'s row ids."""
+) -> DataFrame:
+    """:func:`xentropy_bwd`'s gradient partials ``(which, i, vec)`` on a
+    resolved layout, whose grid may come from a frame with
+    ``pred_vec``'s row ids.  The kernel computes each row's forward z
+    itself when it sees every trg row (:func:`_one_sweep`); otherwise a
+    first sweep folds z and joins it onto the pred rows."""
+    left, cols = pred_vec.select("i", "vec", "label"), ("label",)
+    if not _one_sweep(grid):
+        def z_kernel(lids, lmat, _extra, rids, rmat):
+            return pd.DataFrame({"i": lids, "z": row_logsumexp(lmat @ rmat.T)})
 
-    def z_kernel(lids, lmat, _extra, rids, rmat):
-        s = lmat @ rmat.T
-        return pd.DataFrame({"i": lids, "z": row_logsumexp(s)})
-
-    z = fold(
-        pred_vec.select("i", "vec"), trg_vec, z_kernel, "i long, z double",
-        merge=lse_merge("z"), grid=grid,
-    )
-    p_aug = pred_vec.select("i", "vec", "label").join(z, "i")
+        z = fold(
+            pred_vec.select("i", "vec"), trg_vec, z_kernel, "i long, z double",
+            merge=lse_merge("z"), grid=grid,
+        )
+        left, cols = left.join(z, "i"), ("label", "z")
 
     def grad_kernel(lids, lmat, extra, rids, rmat):
-        zz = extra["z"].to_numpy()
-        lab = extra["label"].to_numpy()
         s = lmat @ rmat.T
-        w = np.exp(s - zz[:, None]) - (lab[:, None] == rids[None, :])
+        z = extra["z"].to_numpy() if "z" in extra else row_logsumexp(s)
+        lab = extra["label"].to_numpy()
+        w = np.exp(s - z[:, None]) - (lab[:, None] == rids[None, :])
         gp = w @ rmat
         gt = w.T @ lmat
         return pd.concat(
@@ -242,12 +290,6 @@ def _xentropy_bwd(
             ignore_index=True,
         )
 
-    parts = tile_partials(
-        p_aug, trg_vec, grad_kernel,
-        "which string, i long, vec array<double>",
-        grid=grid, left_extra=("label", "z"),
+    return tile_partials(
+        left, trg_vec, grad_kernel, _PARTS, grid=grid, left_extra=cols
     )
-    summed = _merge_vec_partials(parts, ["which", "i"])
-    gpred = summed.where(F.col("which") == "gpred").select("i", "vec")
-    gtrg = summed.where(F.col("which") == "gtrg").select("i", "vec")
-    return gpred, gtrg

@@ -12,10 +12,11 @@ recompute-strategy job from :mod:`gemmsql.ops.backward`.
 
 Scale shape: the intermediate activations (``pred`` rows) and the
 intermediate cotangent (``gpred`` rows) are vector-row tables — one row
-per example, never materialized densely on the driver.  ``gpred`` is
-scoped-cached because the upstream backward consumes it in several
-output legs (gX narrow map + gP/gQ weight partials); without the cache
-the whole downstream backward sub-DAG would re-run per leg.
+per example, never materialized densely on the driver.  The downstream
+backward's merged output is scoped-cached because the upstream backward
+consumes it in several output legs (gX narrow map + gP/gQ weight
+partials), and the chain returns its other legs too (``gtrg``); without
+the cache the whole downstream backward sub-DAG would re-run per leg.
 """
 
 from __future__ import annotations
@@ -27,9 +28,11 @@ from pyspark.sql import DataFrame
 from gemmsql.caching import scoped_cache
 from gemmsql.ops._blocked import plan_tiles
 from gemmsql.ops.backward import (
+    _attention_parts,
+    _legs,
+    _merge_legs,
     _merge_vec_partials,
-    _xentropy_bwd,
-    attention_bwd,
+    _xentropy_parts,
     mlp_bwd,
 )
 from gemmsql.ops.mlp import mlp
@@ -65,10 +68,9 @@ def xentropy_mlp_grads(
     """
     pred = mlp(x_vec, p, q, keep={"label": "long"})
     # pred keeps x's row ids, so x's footers give its block ids
-    gpred, gtrg = _xentropy_bwd(
-        pred, trg_vec, plan_tiles(broadcast_trg, x_vec, trg_vec, block)
-    )
-    gpred = scoped_cache(gpred)
+    grid = plan_tiles(broadcast_trg, x_vec, trg_vec, block)
+    merged = scoped_cache(_merge_legs(_xentropy_parts(pred, trg_vec, grid)))
+    gpred, gtrg = _legs(merged, "gpred", "gtrg")
     gx, gp, gq = mlp_bwd(x_vec.select("i", "vec"), gpred, p, q)
     return gx, gp, gq, gtrg
 
@@ -91,18 +93,13 @@ def attention_mlp_grads(
     Self-attention reuses the intermediate ``pred`` as Q, K and V, so
     the intermediate cotangent is the SUM of the three attention vjp
     legs (the multivariable chain rule for a shared input):
-    ``g_pred = gQ + gK + gV``; that one merged vector-row table then
-    drives the MLP backward.  Returns ``(gx, gp, gq)``.
+    ``g_pred = gQ + gK + gV``, so every attention gradient partial
+    merges straight into that one vector-row table, which then drives
+    the MLP backward.  Returns ``(gx, gp, gq)``.
     """
     pred = scoped_cache(mlp(x_vec, p, q), fresh_scope=True)
-    gq_leg, gk_leg, gv_leg = attention_bwd(
-        pred, pred, g_vec, block=block, broadcast_kv=broadcast_kv
-    )
-    legs = (
-        gq_leg.select("i", "vec")
-        .unionByName(gk_leg.select("i", "vec"))
-        .unionByName(gv_leg.select("i", "vec"))
-    )
-    g_pred = scoped_cache(_merge_vec_partials(legs, ["i"]))
+    grid = plan_tiles(broadcast_kv, pred, pred, block)
+    parts = _attention_parts(pred, pred, g_vec, grid)
+    g_pred = scoped_cache(_merge_vec_partials(parts.select("i", "vec"), ["i"]))
     gx, gp, gq = mlp_bwd(x_vec.select("i", "vec"), g_pred, p, q)
     return gx, gp, gq

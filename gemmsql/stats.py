@@ -19,6 +19,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
@@ -201,7 +202,8 @@ def _file_partitions(spark, sizes: list[int]) -> int:
 
 def frame_partitions(df) -> int | None:
     """Partition count ``df`` will be computed with, or None when only
-    a run would tell (e.g. a join whose partitions AQE sizes).  Known
+    a run would tell (e.g. a join whose partitions AQE sizes, or whose
+    sides' partitionings disagree before exchanges are planned).  Known
     for an exchange-topped plan (its static partitioning) and for a
     narrow plan over ONE file scan (Spark's file split count).  Never
     launches a Spark job — unlike ``df.rdd.getNumPartitions()``, which
@@ -218,7 +220,7 @@ def frame_partitions(df) -> int | None:
                 return None
         sizes = [os.path.getsize(_local_path(f)) for f in df.inputFiles()]
         return _file_partitions(df.sparkSession, sizes)
-    except (Py4JError, OSError):
+    except (Py4JError, OSError, PySparkException):
         return None
 
 

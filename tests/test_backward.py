@@ -6,10 +6,30 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from gemmsql.datamodel import embeddings_coo, embeddings_vectors
 from gemmsql.ops.backward import attention_bwd, matmul_grads, mlp_bwd, xentropy_bwd
 from tests.conftest import SF_SMOKE
+
+#: the three layouts of a backward over n = 96 rows: two right blocks
+#: (two sweeps), one right block, and the broadcast path (one sweep each)
+LAYOUTS = {
+    "two_sweeps": {"block": 48, "broadcast": False},
+    "one_right_block": {"block": 96, "broadcast": False},
+    "broadcast": {"broadcast": True},
+}
+layouts = pytest.mark.parametrize("layout", list(LAYOUTS))
+
+
+def _opts(layout: str, arg: str) -> dict:
+    opts = dict(LAYOUTS[layout])
+    opts[arg] = opts.pop("broadcast")
+    return opts
+
+
+def _close(got, want):
+    np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-12)
 
 
 def _subset_vec(spark, n=96):
@@ -20,6 +40,10 @@ def _subset_vec(spark, n=96):
 def _dense(df, col="vec"):
     pdf = df.orderBy("i").toPandas()
     return np.asarray(pdf[col].tolist(), dtype=np.float64)
+
+
+def _coo(df, shape):
+    return df.orderBy("i", "j").toPandas()["v"].to_numpy().reshape(shape)
 
 
 def test_matmul_grads(spark, emb_matrix):
@@ -60,7 +84,8 @@ def test_mlp_bwd(spark, emb_matrix):
     assert np.allclose(got_gq, np.maximum(h, 0).T @ g)
 
 
-def test_attention_bwd(spark, emb_matrix):
+@layouts
+def test_attention_bwd(spark, emb_matrix, layout):
     _, xfull, _ = emb_matrix
     n = 96
     x = xfull[:n]
@@ -70,9 +95,7 @@ def test_attention_bwd(spark, emb_matrix):
     gdf = spark.createDataFrame(
         pd.DataFrame({"i": np.arange(n), "vec": list(g)}), "i long, vec array<double>"
     )
-    # blocked path pinned (broadcast_kv=False): the driver gate at sf0.01
-    # exercises the auto-broadcast path; this exercises tile merges
-    gq, gk, gv = attention_bwd(vec, vec, gdf, block=48, broadcast_kv=False)
+    gq, gk, gv = attention_bwd(vec, vec, gdf, **_opts(layout, "broadcast_kv"))
     s = x @ x.T
     w = np.exp(s - s.max(1, keepdims=True))
     w /= w.sum(1, keepdims=True)
@@ -81,9 +104,9 @@ def test_attention_bwd(spark, emb_matrix):
     gs = w * (gw - (w * gw).sum(1, keepdims=True))
     gq_want = gs @ x
     gk_want = gs.T @ x
-    assert np.allclose(_dense(gv), gv_want)
-    assert np.allclose(_dense(gq), gq_want)
-    assert np.allclose(_dense(gk), gk_want)
+    _close(_dense(gv), gv_want)
+    _close(_dense(gq), gq_want)
+    _close(_dense(gk), gk_want)
     # numerical spot-check of d(out.g)/dQ[0,0]
     eps = 1e-6
 
@@ -100,7 +123,8 @@ def test_attention_bwd(spark, emb_matrix):
     assert abs(num - gq_want[0, 0]) < 1e-4
 
 
-def test_xentropy_mlp_grads_chain(spark, emb_matrix):
+@layouts
+def test_xentropy_mlp_grads_chain(spark, emb_matrix, layout):
     """Composed gradient of loss = xentropy(mlp(x)) — the reference's
     chained training step (autograd composition, reference core.py:37-58)
     as explicit chain rule; checked against the analytic NumPy chain AND
@@ -118,7 +142,7 @@ def test_xentropy_mlp_grads_chain(spark, emb_matrix):
     vec = _subset_vec(spark, n)
     gx, gp, gq, gtrg = xentropy_mlp_grads(
         vec.select("i", "vec", "label"), vec.select("i", "vec"), p, q,
-        block=48, broadcast_trg=False,
+        **_opts(layout, "broadcast_trg"),
     )
 
     # analytic NumPy chain
@@ -137,12 +161,10 @@ def test_xentropy_mlp_grads_chain(spark, emb_matrix):
     gp_want = x.T @ gh
     gq_want = a.T @ gpred
 
-    assert np.allclose(_dense(gx), gx_want)
-    assert np.allclose(_dense(gtrg), gtrg_want)
-    got_gp = gp.orderBy("i", "j").toPandas()["v"].to_numpy().reshape(p.shape)
-    assert np.allclose(got_gp, gp_want)
-    got_gq = gq.orderBy("i", "j").toPandas()["v"].to_numpy().reshape(q.shape)
-    assert np.allclose(got_gq, gq_want)
+    _close(_dense(gx), gx_want)
+    _close(_dense(gtrg), gtrg_want)
+    _close(_coo(gp, p.shape), gp_want)
+    _close(_coo(gq, q.shape), gq_want)
 
     # finite difference through the composition wrt P[0,0] and X[0,0]
     def loss(x_in, p_in):
@@ -162,7 +184,8 @@ def test_xentropy_mlp_grads_chain(spark, emb_matrix):
     assert abs((loss(x1, p) - loss(x2, p)) / (2 * eps) - gx_want[0, 0]) < 1e-4
 
 
-def test_attention_mlp_grads_chain(spark, emb_matrix):
+@layouts
+def test_attention_mlp_grads_chain(spark, emb_matrix, layout):
     """Second composed pair — selfattention(mlp(x)) — pinning that the
     chain framework is generic and that a SHARED intermediate (pred is
     Q, K and V at once) sums its three vjp legs before chaining."""
@@ -182,7 +205,7 @@ def test_attention_mlp_grads_chain(spark, emb_matrix):
         "i long, vec array<double>",
     )
     gx, gp, gq = attention_mlp_grads(
-        vec.select("i", "vec"), gdf, p, q, block=48, broadcast_kv=False
+        vec.select("i", "vec"), gdf, p, q, **_opts(layout, "broadcast_kv")
     )
 
     # analytic chain: pred = relu(xP)Q; out = softmax(pred pred^T) pred
@@ -202,11 +225,9 @@ def test_attention_mlp_grads_chain(spark, emb_matrix):
     gp_want = x.T @ gh
     gq_want = a.T @ gpred
 
-    assert np.allclose(_dense(gx), gx_want)
-    got_gp = gp.orderBy("i", "j").toPandas()["v"].to_numpy().reshape(p.shape)
-    assert np.allclose(got_gp, gp_want)
-    got_gq = gq.orderBy("i", "j").toPandas()["v"].to_numpy().reshape(q.shape)
-    assert np.allclose(got_gq, gq_want)
+    _close(_dense(gx), gx_want)
+    _close(_coo(gp, p.shape), gp_want)
+    _close(_coo(gq, q.shape), gq_want)
 
     # finite difference through the WHOLE composition wrt X[0,0]
     def loss(x_in):
@@ -222,7 +243,8 @@ def test_attention_mlp_grads_chain(spark, emb_matrix):
     assert abs((loss(x1) - loss(x2)) / (2 * eps) - gx_want[0, 0]) < 1e-4
 
 
-def test_xentropy_bwd(spark, emb_matrix):
+@layouts
+def test_xentropy_bwd(spark, emb_matrix, layout):
     _, xfull, labfull = emb_matrix
     n = 96
     x = xfull[:n]
@@ -230,12 +252,12 @@ def test_xentropy_bwd(spark, emb_matrix):
     vec = _subset_vec(spark, n)
     gpred, gtrg = xentropy_bwd(
         vec.select("i", "vec", "label"), vec.select("i", "vec"),
-        block=48, broadcast_trg=False,
+        **_opts(layout, "broadcast_trg"),
     )
     s = x @ x.T
     w = np.exp(s - s.max(1, keepdims=True))
     w /= w.sum(1, keepdims=True)
     onehot = (lab[:, None] == np.arange(n)[None, :]).astype(float)
     d = w - onehot
-    assert np.allclose(_dense(gpred), d @ x)
-    assert np.allclose(_dense(gtrg), d.T @ x)
+    _close(_dense(gpred), d @ x)
+    _close(_dense(gtrg), d.T @ x)

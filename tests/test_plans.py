@@ -271,6 +271,56 @@ def test_tiled_folds_take_block_ids_from_footers(spark):
             assert p.count("FlatMapGroupsInPandas") == 2, name
 
 
+def _final_plan(df) -> str:
+    """The AQE final plan of ``df`` after one action over it: a reused
+    exchange prints once, so each kernel node counts one run."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
+
+
+def _union(outs):
+    u = outs[0]
+    for o in outs[1:]:
+        u = u.unionByName(o)
+    return u
+
+
+def test_backward_kernels_run_once_per_call(spark):
+    """One action over all of a backward's legs runs each kernel sweep
+    once: the legs split above the one merge, so they share its
+    exchange.  A kernel that sees every right row (one right block, or
+    the broadcast path) computes z/r itself: one sweep; several right
+    blocks take two.  ``mlp_bwd``'s weight legs share one partials map."""
+    import numpy as np
+
+    from gemmsql.datamodel import embeddings_vectors
+    from gemmsql.ops.backward import attention_bwd, mlp_bwd, xentropy_bwd
+    from gemmsql.stats import embeddings_stats
+
+    vec = embeddings_vectors(spark, SF_SMOKE)
+    vec = vec.where(vec["i"] < 96)
+    v = vec.select("i", "vec")
+    layouts = {  # (block, broadcast) -> FlatMapGroupsInPandas, MapInPandas
+        (48, False): (2, 0),
+        (96, False): (1, 0),
+        (96, True): (0, 1),
+    }
+    for (block, bcast), (groups, maps) in layouts.items():
+        calls = {
+            "xentropy_bwd": xentropy_bwd(vec, v, block=block, broadcast_trg=bcast),
+            "attention_bwd": attention_bwd(v, v, v, block=block, broadcast_kv=bcast),
+        }
+        for name, outs in calls.items():
+            p = _final_plan(_union(outs))
+            got = (p.count("FlatMapGroupsInPandas"),
+                   len(re.findall(r"(?<!FlatMapGroups)MapInPandas", p)))
+            assert got == (groups, maps), (name, block, bcast, got)
+    d = embeddings_stats(SF_SMOKE)[1]
+    _, gp, gq = mlp_bwd(v, v, np.ones((d, 8)), np.ones((8, d)))
+    p = _final_plan(gp.unionByName(gq))
+    assert len(re.findall(r"(?<!FlatMapGroups)MapInPandas", p)) == 1, p
+
+
 def test_spread_never_shrinks_a_wide_left_side(spark, tmp_path):
     """gate._spread only fans OUT: a left side that already has 16
     partitions runs the broadcast kernel on them — no extra round-robin

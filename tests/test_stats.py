@@ -97,3 +97,15 @@ def test_gate_auto_broadcast_choice_launches_no_job(spark):
         sc.setJobGroup("gate-choice-done", "")
     assert choice is True or choice is False
     assert list(jobs) == []
+
+
+def test_frame_partitions_of_join_over_join_is_none(spark):
+    """A join over a join whose sides' partitionings disagree before
+    exchanges are planned has no partition count to read: None, not
+    the planner's ``PartitioningCollection`` error (the broadcast
+    attention backward's left side had this shape)."""
+    from gemmsql.datamodel import embeddings_vectors
+
+    v = embeddings_vectors(spark, SF_SMOKE).select("i", "vec")
+    qg = v.join(v.select("i", v["vec"].alias("gvec")), "i")
+    assert stats.frame_partitions(qg.join(qg.repartition(4).select("i"), "i")) is None
