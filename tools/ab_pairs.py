@@ -9,7 +9,7 @@ Exports each revision's committed files with ``git archive`` into its
 own temporary directory, then for every seed runs
 ``python3 perfbench/run.py --workload W --seed S --seconds N --trace T``
 once per side in fresh processes, alternating which side goes first
-(even seeds base first, odd seeds head first).  Each run is one JSON
+(base on the first seed, head on the second, and so on).  Each run is one JSON
 line ``{"side", "workload", "seed", "result"}``, where ``result`` is the
 last line ``perfbench/run.py`` prints; ``--out`` keeps them.
 
@@ -67,8 +67,7 @@ def run_once(tree: str, workload: str, seed: int, seconds: float, trace: int) ->
     """One benchmark run in ``tree``; its final JSON object."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    out = subprocess.run(cmd, cwd=tree, env=env, capture_output=True, text=True)
+    out = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
     if out.returncode or not lines:
         raise RuntimeError(f"{' '.join(cmd)} in {tree} failed:\n{out.stderr[-2000:]}")
