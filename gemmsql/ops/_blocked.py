@@ -52,8 +52,9 @@ from gemmsql.stats import (
 Kernel = Callable[[np.ndarray, np.ndarray, pd.DataFrame, np.ndarray, np.ndarray], pd.DataFrame]
 Step = Callable[[DataFrame], DataFrame]
 
-#: driver bytes a broadcast right side may take: 262,144 rows at 64
-#: float64 dims (128 MiB)
+#: driver bytes a broadcast right side may take at most: 262,144 rows
+#: at 64 float64 dims (128 MiB); a driver heap under 1 GiB lowers it
+#: (:func:`broadcast_max_bytes`)
 BROADCAST_RIGHT_MAX_BYTES = 262_144 * 64 * 8
 
 #: parquet columns a broadcast right side is read from without Spark
@@ -76,13 +77,31 @@ def use_broadcast(
 ) -> bool:
     """``"auto"`` -> ``frame`` fits the broadcast bound: at most
     ``max_rows`` rows when given, else its ``vec`` column at most
-    :data:`BROADCAST_RIGHT_MAX_BYTES` (footer metadata when the plan
-    allows, else one aggregate job)."""
+    :func:`broadcast_max_bytes` of the driver heap (footer metadata when
+    the plan allows, else one aggregate job)."""
     if broadcast != "auto":
         return bool(broadcast)
     if max_rows is not None:
         return rows_for_choice(frame) <= max_rows
-    return frame_bytes(frame) <= BROADCAST_RIGHT_MAX_BYTES
+    heap_mb = driver_heap_mb(frame.sparkSession)
+    return frame_bytes(frame) <= broadcast_max_bytes(heap_mb)
+
+
+def broadcast_max_bytes(heap_mb: int) -> int:
+    """The broadcast byte bound under a driver heap of ``heap_mb`` MiB:
+    an eighth of the heap, which the collected side crosses more than
+    once (collect, then the broadcast's blocks), capped at
+    :data:`BROADCAST_RIGHT_MAX_BYTES`.  512 MiB -> 64 MiB; 1 GiB and up
+    -> 128 MiB."""
+    return min(BROADCAST_RIGHT_MAX_BYTES, (heap_mb << 20) // 8)
+
+
+def driver_heap_mb(spark) -> int:
+    """The session's ``spark.driver.memory`` in MiB, parsed by the JVM's
+    byte-string parser (a bare number is MiB; unset is Spark's 1g)."""
+    text = spark.conf.get("spark.driver.memory", "1g")
+    jvm = spark.sparkContext._jvm
+    return int(jvm.org.apache.spark.network.util.JavaUtils.byteStringAsMb(text))
 
 
 @dataclass(frozen=True)

@@ -121,8 +121,10 @@ def _spread(df: DataFrame) -> DataFrame:
 
     Task sizing: ~SPREAD_ROWS_PER_TASK rows per task (footer row
     count, never a job), capped at defaultParallelism — a fixed
-    32-way fan measured as pure scheduling overhead for the cheap
-    softmax kernels while still leaving the heavy ones (gumbel noise,
+    32-way fan cost more than it saved for the cheap softmax kernels,
+    most of it each Python task's fixed cost (before
+    :mod:`gemmsql._pydaemon`, a re-read of every zip archive on the
+    worker's path), while still leaving the heavy ones (gumbel noise,
     fused grads) under-parallelized at small N on few-core boxes.
     It only fans OUT: a side with at least that many partitions
     (``stats.frame_partitions``, job-free) is returned as is."""

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 
+import numpy as np
 import pytest
 
 from tools import ab_pairs
@@ -70,3 +71,38 @@ def test_seed_list_and_benchmark_directions():
     assert ab_pairs.seed_list("301-303,7") == [301, 302, 303, 7]
     way = ab_pairs.directions()
     assert way["cells_per_s"] == "higher" and way["op_p90_s"] == "lower"
+
+
+def test_paired_ratio_and_its_bootstrap_interval(tmp_path, capsys):
+    runs, base, head = _canned()
+    s = ab_pairs.summarize(runs, {"cells_per_s": "higher"})["fold"]
+
+    ratios = [h / b for b, h in zip(base, head)]
+    cells = s["cells_per_s"]
+    assert cells["ratio"] == pytest.approx(np.median(ratios))
+    assert min(ratios) <= cells["ratio_lo"] <= cells["ratio"] <= cells["ratio_hi"] <= max(ratios)
+    assert cells["ratio_lo"] > 1.0  # the head wins 9/10 by ~25 %
+
+    # a fixed-seed bootstrap: the same runs give the same interval
+    again = ab_pairs.summarize(runs, {"cells_per_s": "higher"})["fold"]["cells_per_s"]
+    assert (again["ratio_lo"], again["ratio_hi"]) == (cells["ratio_lo"], cells["ratio_hi"])
+
+    # equal pairs: ratio 1 with a zero-width interval
+    assert ab_pairs.ratio_interval([1.0] * 10) == (1.0, 1.0, 1.0)
+    # the interval is the 2.5th-97.5th percentile of 2,000 resampled medians
+    rng = np.random.default_rng(0)
+    r = np.asarray(ratios)
+    meds = np.median(r[rng.integers(0, 10, size=(2000, 10))], axis=1)
+    assert ab_pairs.ratio_interval(ratios)[1:] == pytest.approx(
+        tuple(np.percentile(meds, [2.5, 97.5])))
+
+    # pairs whose base reads 0 have no ratio; a metric with none shows none
+    for r in runs:
+        r["result"]["metrics"]["spark.failed_tasks"] = {"value": 0.0, "unit": "count"}
+    row = ab_pairs.summarize(runs, {})["fold"]["spark.failed_tasks"]
+    assert "ratio" not in row
+
+    path = tmp_path / "runs.jsonl"
+    path.write_text("".join(json.dumps(r) + "\n" for r in runs))
+    assert ab_pairs.main(["--summarize", str(path)]) == 0
+    assert f"head/base {cells['ratio']:.4g} [" in capsys.readouterr().out

@@ -177,3 +177,27 @@ def test_broadcast_bound_counts_bytes_not_rows(spark, tmp_path, monkeypatch):
     got = _rows(out, "loss")
     assert np.allclose(got, _dense_xent(pred, wide, lab)[0], rtol=RTOL, atol=ATOL)
     assert "FlatMapGroupsInPandas" not in plan(sample_categorical(pdf, wdf))
+
+
+def test_broadcast_bound_follows_the_driver_heap(spark, tmp_path, monkeypatch):
+    """``"auto"`` bounds the right side by an eighth of the session's
+    ``spark.driver.memory``, capped at 128 MiB: the benchmark's 1g and
+    the engine's default 16g keep 128 MiB, a 512m driver gets 64 MiB."""
+    import os
+
+    from gemmsql.ops import _blocked
+
+    parse = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsMb
+    mib = 1 << 20
+    bounds = {t: _blocked.broadcast_max_bytes(parse(t)) for t in ("512m", "512", "1g", "16g")}
+    assert bounds == {"512m": 64 * mib, "512": 64 * mib, "1g": 128 * mib, "16g": 128 * mib}
+    assert _blocked.driver_heap_mb(spark) == parse(os.environ.get("GEMMSQL_DRIVER_MEM", "16g"))
+
+    # a 1 MiB heap bounds the right side at 128 KiB: 200 x 64 x 8 bytes
+    # broadcast, 400 x 64 x 8 do not
+    monkeypatch.setattr(_blocked, "driver_heap_mb", lambda spark: 1)
+    rng = np.random.default_rng(22)
+    small = spark.read.parquet(_write(tmp_path / "s.parquet", np.arange(200), rng.normal(size=(200, 64))))
+    big = spark.read.parquet(_write(tmp_path / "b.parquet", np.arange(400), rng.normal(size=(400, 64))))
+    assert _blocked.use_broadcast("auto", small)
+    assert not _blocked.use_broadcast("auto", big)

@@ -14,10 +14,13 @@ line ``{"side", "workload", "seed", "result"}``, where ``result`` is the
 last line ``perfbench/run.py`` prints; ``--out`` keeps them.
 
 The summary gives, per workload and metric, each side's median and
-quartiles, the pairs the head side wins (by the metric's ``better`` in
-``BENCHMARK.json``), and whether the claim rule holds: the head wins at
-least 9 of every 10 pairs and its median beats the base median by more
-than the base side's interquartile range.
+quartiles, the median head/base ratio over the paired seeds with a 95 %
+bootstrap interval of that median (2,000 resamples of the pairs, fixed
+RNG seed, so a summary repeats exactly), the pairs the head side wins
+(by the metric's ``better`` in ``BENCHMARK.json``), and whether the
+claim rule holds: the head wins at least 9 of every 10 pairs and its
+median beats the base median by more than the base side's
+interquartile range.
 """
 
 from __future__ import annotations
@@ -35,6 +38,7 @@ import numpy as np
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SIDES = ("base", "head")
+BOOTSTRAP = 2000
 
 
 def directions(path: str = os.path.join(ROOT, "BENCHMARK.json")) -> dict[str, str]:
@@ -83,9 +87,21 @@ def pairs(trees: dict[str, str], workload: str, seeds: list[int],
             yield {"side": side, "workload": workload, "seed": seed, "result": res}
 
 
+def ratio_interval(ratios: list[float], resamples: int = BOOTSTRAP) -> tuple[float, float, float]:
+    """The median of paired head/base ratios and the 2.5th and 97.5th
+    percentiles of that median over ``resamples`` bootstrap resamples
+    of the pairs (fixed RNG seed)."""
+    r = np.asarray(ratios, dtype=np.float64)
+    idx = np.random.default_rng(0).integers(0, len(r), size=(resamples, len(r)))
+    lo, hi = np.percentile(np.median(r[idx], axis=1), [2.5, 97.5])
+    return float(np.median(r)), float(lo), float(hi)
+
+
 def summarize(runs: list[dict], better: dict[str, str]) -> dict:
     """Per workload and metric: each side's median and quartiles, the
-    head's wins over the pairs both sides ran, and the claim rule."""
+    head's wins over the pairs both sides ran, the claim rule, and the
+    median head/base ratio over those pairs with its bootstrap
+    interval."""
     out: dict[str, dict] = {}
     for wl in dict.fromkeys(r["workload"] for r in runs):
         vals: dict[str, dict[str, dict[int, float]]] = {}
@@ -111,6 +127,11 @@ def summarize(runs: list[dict], better: dict[str, str]) -> dict:
                 iqr = row["base"]["q3"] - row["base"]["q1"]
                 row.update(better=way, pairs=len(seeds), wins=wins,
                            claim=wins >= math.ceil(0.9 * len(seeds)) and gap > iqr)
+            # a pair whose base reads 0 (a count of failures, say) has no ratio
+            ratios = [by_side["head"][s] / by_side["base"][s]
+                      for s in seeds if by_side["base"][s]]
+            if ratios:
+                row["ratio"], row["ratio_lo"], row["ratio_hi"] = ratio_interval(ratios)
             per[name] = row
         out[wl] = per
     return out
@@ -123,10 +144,12 @@ def print_summary(summary: dict) -> None:
             sides = "  ".join(
                 f"{s} {row[s]['median']:.6g} [{row[s]['q1']:.6g}-{row[s]['q3']:.6g}]"
                 for s in SIDES if s in row)
+            ratio = (f"  head/base {row['ratio']:.4g} [{row['ratio_lo']:.4g}-{row['ratio_hi']:.4g}]"
+                     if "ratio" in row else "")
             verdict = (f"  wins {row['wins']}/{row['pairs']} ({row['better']} is better)"
                        f"  claim {'holds' if row['claim'] else 'fails'}"
                        if "wins" in row else "")
-            print(f"  {name}: {sides}{verdict}")
+            print(f"  {name}: {sides}{ratio}{verdict}")
 
 
 def main(argv=None) -> int:
