@@ -49,7 +49,8 @@ def invalidate_caches(self) -> None:
 def main() -> None:
     """Install the guard, prime the importers, serve workers."""
     zipimport.zipimporter.invalidate_caches = invalidate_caches
-    # pyspark.daemon picks the worker module from sys.argv[1] on import
+    # imported before priming, so the importers its imports add are
+    # primed too; it picks the worker module from sys.argv[1]
     from pyspark import daemon
 
     importlib.invalidate_caches()

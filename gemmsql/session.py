@@ -37,7 +37,7 @@ def get_spark(
     - Python workers under :mod:`gemmsql._pydaemon`
       (``spark.python.daemon.module``), whose zip importers skip the
       per-task directory re-read while an archive is unchanged.  Workers
-      must import ``gemmsql``, as they already must: module-level
+      must import ``gemmsql``, which they already had to: module-level
       kernels such as ``xentropy._xent_kernel`` are pickled by
       reference.  ``extra_conf`` can override the key, as it can every
       default here.

@@ -87,12 +87,12 @@ def pairs(trees: dict[str, str], workload: str, seeds: list[int],
             yield {"side": side, "workload": workload, "seed": seed, "result": res}
 
 
-def ratio_interval(ratios: list[float], resamples: int = BOOTSTRAP) -> tuple[float, float, float]:
+def ratio_interval(ratios: list[float]) -> tuple[float, float, float]:
     """The median of paired head/base ratios and the 2.5th and 97.5th
-    percentiles of that median over ``resamples`` bootstrap resamples
-    of the pairs (fixed RNG seed)."""
+    percentiles of that median over :data:`BOOTSTRAP` resamples of the
+    pairs (fixed RNG seed)."""
     r = np.asarray(ratios, dtype=np.float64)
-    idx = np.random.default_rng(0).integers(0, len(r), size=(resamples, len(r)))
+    idx = np.random.default_rng(0).integers(0, len(r), size=(BOOTSTRAP, len(r)))
     lo, hi = np.percentile(np.median(r[idx], axis=1), [2.5, 97.5])
     return float(np.median(r)), float(lo), float(hi)
 
