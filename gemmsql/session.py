@@ -18,6 +18,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the directory ``gemmsql`` is imported from, which workers must see
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "gemmsql",
@@ -37,10 +40,13 @@ def get_spark(
     - Python workers under :mod:`gemmsql._pydaemon`
       (``spark.python.daemon.module``), whose zip importers skip the
       per-task directory re-read while an archive is unchanged.  Workers
-      must import ``gemmsql``, which they already had to: module-level
-      kernels such as ``xentropy._xent_kernel`` are pickled by
-      reference.  ``extra_conf`` can override the key, as it can every
-      default here.
+      must import ``gemmsql`` (module-level kernels such as
+      ``xentropy._xent_kernel`` are pickled by reference, and the daemon
+      is ``python -m gemmsql._pydaemon``), so the package's root goes on
+      their path (``spark.executorEnv.PYTHONPATH``; Spark appends the
+      executor's own ``PYTHONPATH`` to it): a driver that has the repo
+      only on ``sys.path`` still runs Python tasks.  ``extra_conf`` can
+      override either key, as it can every default here.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or os.environ.get("GEMMSQL_MASTER", f"local[{cpus}]")
@@ -61,6 +67,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("GEMMSQL_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "gemmsql._pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -88,3 +88,34 @@ def test_workers_run_under_the_daemon(spark):
     rows = df.collect()
     assert len(rows) == 4
     assert {r["mod"] for r in rows} == {"gemmsql._pydaemon"}
+
+
+
+def test_workers_import_gemmsql_when_the_driver_only_has_it_on_sys_path(tmp_path):
+    """A driver that puts the repo on ``sys.path`` only, run from another
+    directory with no ``PYTHONPATH``, still runs Python tasks: the
+    session puts the package's root on the workers' path."""
+    import os
+    import subprocess
+    import textwrap
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "driver.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {root!r})
+        from gemmsql import get_spark
+
+        spark = get_spark("sys-path-driver", master="local[1]")
+        df = spark.range(0, 8, numPartitions=2).mapInPandas(
+            lambda batches: batches, "id long")
+        print("ROWS", df.count())
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["GEMMSQL_DRIVER_MEM"] = "512m"
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0 and "ROWS 8" in out.stdout, out.stderr[-3000:]
