@@ -24,8 +24,14 @@ in bytes from its footers) and :func:`fold` runs it:
   right block and vice versa, O(|L| * nrb + |R| * nlb) shuffle.
 
 Passes that scatter-add into both sides (the backwards' gradient
-sweep) take :func:`tile_partials` and merge on both paths.  A call with
-several sweeps resolves its grid once and hands it to each.
+sweep) take :func:`tile_partials` and merge on both paths.  A gradient
+kernel that needs per-left-row statistics over every right block (a
+backward's forward ``z``) on a grid with several right blocks takes
+:func:`two_sweep_partials`: both sweeps group one :func:`tile_frame`,
+whose exchange runs once.  Pass 1 emits the statistics per left row and
+source right block; they are exploded to every right block of their
+left block and cogrouped with the same tiles, and each pass-2 group
+folds them in NumPy before the gradient kernel runs.
 """
 
 from __future__ import annotations
@@ -151,6 +157,56 @@ def plan_tiles(
     return block_grid(left, right, block)
 
 
+def _others(ids: tuple[int, ...]):
+    """One row per id of ``ids``: the narrow replication of one side
+    over the other side's block ids."""
+    return F.explode(F.array(*map(F.lit, ids)).cast("array<long>"))
+
+
+def tile_frame(
+    left: DataFrame,
+    right: DataFrame,
+    *,
+    grid: Grid,
+    left_extra: tuple[str, ...] = (),
+) -> DataFrame:
+    """The replicated tile frame of ``grid``, keyed ``(_lb, _rb)``: the
+    left rows exploded over ``grid.right`` and the right rows over
+    ``grid.left``, tagged ``_side`` 0 / 1.  Every sweep of a call groups
+    this one frame, so its exchange is planned once and reused."""
+    bid = block_id("i", grid.block)
+    extra = list(left_extra)
+    l_rep = left.select(
+        bid.alias("_lb"), _others(grid.right).alias("_rb"),
+        F.lit(0).alias("_side"), "i", "vec", *extra,
+    )
+    r_rep = right.select(
+        _others(grid.left).alias("_lb"), bid.alias("_rb"),
+        F.lit(1).alias("_side"), "i", "vec",
+        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in extra],
+    )
+    return l_rep.unionByName(r_rep)
+
+
+def _tile_args(pdf: pd.DataFrame, extra: list[str]):
+    """A tile group's kernel arguments ``(left_ids, left_mat,
+    left_extra, right_ids, right_mat)``, or None for an empty tile (the
+    monoid identity: it emits no rows)."""
+    lp = pdf[pdf["_side"] == 0]
+    rp = pdf[pdf["_side"] == 1]
+    if len(lp) == 0 or len(rp) == 0:
+        return None
+    return (
+        lp["i"].to_numpy(), vec_mat(lp["vec"]),
+        lp[extra].reset_index(drop=True),
+        rp["i"].to_numpy(), vec_mat(rp["vec"]),
+    )
+
+
+def _empty(schema: str) -> pd.DataFrame:
+    return pd.DataFrame(columns=[f.split()[0] for f in schema.split(",")])
+
+
 def blocked_partials(
     left: DataFrame,
     right: DataFrame,
@@ -168,40 +224,105 @@ def blocked_partials(
     partial accumulator rows (one or more rows per left row id per
     right block), ready for a monoid merge.
     """
-
-    def others(ids: tuple[int, ...]):
-        return F.explode(F.array(*map(F.lit, ids)).cast("array<long>"))
-
-    bid = block_id("i", grid.block)
     extra = list(left_extra)
-    l_rep = left.select(
-        bid.alias("_lb"), others(grid.right).alias("_rb"),
-        F.lit(0).alias("_side"), "i", "vec", *extra,
-    )
-    r_rep = right.select(
-        others(grid.left).alias("_lb"), bid.alias("_rb"),
-        F.lit(1).alias("_side"), "i", "vec",
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in extra],
-    )
-    both = l_rep.unionByName(r_rep)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        lp = pdf[pdf["_side"] == 0]
-        rp = pdf[pdf["_side"] == 1]
-        if len(lp) == 0 or len(rp) == 0:
-            # empty tile: monoid identity contribution -> no rows
-            return pd.DataFrame(columns=[f.split()[0] for f in partial_schema.split(",")])
-        return kernel(
-            lp["i"].to_numpy(),
-            vec_mat(lp["vec"]),
-            lp[extra].reset_index(drop=True),
-            rp["i"].to_numpy(),
-            vec_mat(rp["vec"]),
-        )
+        args = _tile_args(pdf, extra)
+        return _empty(partial_schema) if args is None else kernel(*args)
 
-    return both.groupBy("_lb", "_rb").applyInPandas(
+    tiles = tile_frame(left, right, grid=grid, left_extra=left_extra)
+    return tiles.groupBy("_lb", "_rb").applyInPandas(
         lambda _key, pdf: run(pdf), partial_schema
     )
+
+
+def fold_lse_stats(
+    ids: np.ndarray, src: np.ndarray, stats: dict[str, np.ndarray],
+    z: str, weighted: tuple[str, ...] = (),
+) -> tuple[np.ndarray, dict[str, np.ndarray]]:
+    """Per-right-block log-space partials folded per row in NumPy, the
+    in-group twin of :func:`lse_merge`: rows sorted by ``(ids, src)``,
+    ``z = logsumexp_b z_b`` and each ``weighted = sum_b e^{z_b - z}
+    weighted_b``, summed in source-block order.  Returns the distinct
+    ids and the folded columns aligned with them."""
+    order = np.lexsort((src, ids))
+    ids = ids[order]
+    starts = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+    counts = np.diff(np.r_[starts, len(ids)])
+    zb = stats[z][order]
+    m = np.maximum.reduceat(zb, starts)
+    zt = m + np.log(np.add.reduceat(np.exp(zb - np.repeat(m, counts)), starts))
+    scale = np.exp(zb - np.repeat(zt, counts))
+    out = {z: zt}
+    for w in weighted:
+        out[w] = np.add.reduceat(scale * stats[w][order], starts)
+    return ids[starts], out
+
+
+def two_sweep_partials(
+    left: DataFrame,
+    right: DataFrame,
+    stats_kernel: Kernel,
+    stats: tuple[str, ...],
+    kernel: Kernel,
+    partial_schema: str,
+    *,
+    grid: Grid,
+    left_extra: tuple[str, ...] = (),
+) -> DataFrame:
+    """Two sweeps of one :func:`tile_frame`, for a ``kernel`` that needs
+    per-left-row statistics over ALL right blocks (a backward's forward
+    ``z``, and attention's ``r``).
+
+    Pass 1 runs ``stats_kernel`` (``(i, *stats)``, one row per left row:
+    ``stats[0]`` a logsumexp, the rest weighted by it, as
+    :func:`lse_merge`) on every tile and tags each row with its source
+    right block.  Those few doubles per row per right block are exploded
+    to every right block of their left block and cogrouped with the same
+    tile frame, so the tile exchange runs once and pass 2 reads it again
+    (``ReusedExchange``); no merge, join or second replication.  Each
+    pass-2 group folds its rows' partials (:func:`fold_lse_stats`),
+    hands them to ``kernel`` as extra left columns, and returns its
+    partial rows."""
+    z, *weighted = stats
+    extra = list(left_extra)
+    tiles = tile_frame(left, right, grid=grid, left_extra=left_extra)
+    # the stats side's own column names: a cogroup of two plans over
+    # one frame must not share attributes (see attention_batched)
+    stats_schema = "_slb long, _src long, _si long, " + ", ".join(
+        f"{c} double" for c in stats
+    )
+
+    def pass1(key, pdf):
+        args = _tile_args(pdf, extra)
+        if args is None:
+            return _empty(stats_schema)
+        out = stats_kernel(*args)
+        return pd.DataFrame({
+            "_slb": key[0], "_src": key[1], "_si": out["i"].to_numpy(),
+            **{c: out[c].to_numpy() for c in stats},
+        })
+
+    parts = tiles.groupBy("_lb", "_rb").applyInPandas(pass1, stats_schema)
+    spread = parts.select("*", _others(grid.right).alias("_srb"))
+
+    def pass2(tile, st):
+        args = _tile_args(tile, extra)
+        if args is None:
+            return _empty(partial_schema)
+        lids, lmat, lextra, rids, rmat = args
+        ids, folded = fold_lse_stats(
+            st["_si"].to_numpy(), st["_src"].to_numpy(),
+            {c: st[c].to_numpy() for c in stats}, z, tuple(weighted),
+        )
+        at = np.searchsorted(ids, lids)
+        for c, col in folded.items():
+            lextra[c] = col[at]
+        return kernel(lids, lmat, lextra, rids, rmat)
+
+    return tiles.groupBy("_lb", "_rb").cogroup(
+        spread.groupBy("_slb", "_srb")
+    ).applyInPandas(pass2, partial_schema)
 
 
 def _right_arrays(right: DataFrame) -> tuple[np.ndarray, np.ndarray]:

@@ -15,9 +15,13 @@ sides via ``_blocked.tile_partials`` and always merges
 (:func:`_merge_vec_partials`).  Its kernel needs each left row's forward
 statistics (logsumexp z, and attention's row term r).  When every
 kernel call sees every right row (the broadcast path, or one right
-block), the kernel computes them itself: ONE sweep.  Otherwise a first
-sweep folds them (a ``_blocked.fold`` on the same grid) and joins them
-onto the left rows, because a right-row gradient needs the global z.
+block), the kernel computes them itself: ONE sweep.  Otherwise a
+right-row gradient needs the global z, so two sweeps run over one tile
+frame (``_blocked.two_sweep_partials``): the first emits each left
+row's z/r per right block, those partials are cogrouped with the same
+tiles (one tile exchange, read twice), and the gradient kernel's group
+folds them before it runs.  No merge, join or second replication sits
+between the sweeps.
 
 All output legs come out of one merge and split after it
 (:func:`_legs`), so one action over every leg runs each sweep once.
@@ -41,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gemmsql.ops._blocked import (
-    Grid, fold, lse_merge, plan_tiles, row_logsumexp, tile_partials, vec_mat,
+    Grid, plan_tiles, row_logsumexp, tile_partials, two_sweep_partials, vec_mat,
 )
 from gemmsql.ops.matmul import coo_matmul
 
@@ -197,23 +201,18 @@ def _attention_parts(
     each row's forward z (logsumexp) and softmax-Jacobian row term
     r_i = sum_n w_in (g_i . v_n).  When it sees every kv row
     (:func:`_one_sweep`) it computes them itself; otherwise a first
-    sweep folds them as a product monoid of the A3 logaddexp merge and
-    the E3 weighted-mean merge, and joins them onto the Q rows."""
+    sweep of the same tiles folds them per kv block, as a product monoid
+    of the A3 logaddexp merge and the E3 weighted-mean merge, and the
+    gradient sweep folds those partials in-group
+    (``_blocked.two_sweep_partials``)."""
     q_g = q_vec.select("i", "vec").join(
         g_vec.select("i", F.col("vec").alias("gvec")), "i"
     )
-    cols = ("gvec",)
-    if not _one_sweep(grid):
-        def zr_kernel(lids, lmat, extra, rids, rmat):
-            g = vec_mat(extra["gvec"])
-            z, _, r = _softmax_rows(lmat @ rmat.T, g @ rmat.T)
-            return pd.DataFrame({"i": lids, "z": z, "r": r})
 
-        zr = fold(
-            q_g, kv_vec, zr_kernel, "i long, z double, r double",
-            merge=lse_merge("z", "r"), grid=grid, left_extra=cols,
-        )
-        q_g, cols = q_g.join(zr, "i"), ("gvec", "z", "r")
+    def zr_kernel(lids, lmat, extra, rids, rmat):
+        g = vec_mat(extra["gvec"])
+        z, _, r = _softmax_rows(lmat @ rmat.T, g @ rmat.T)
+        return pd.DataFrame({"i": lids, "z": z, "r": r})
 
     def grad_kernel(lids, lmat, extra, rids, rmat):
         g = vec_mat(extra["gvec"])
@@ -235,8 +234,13 @@ def _attention_parts(
         ]
         return pd.concat(out, ignore_index=True)
 
-    return tile_partials(
-        q_g, kv_vec, grad_kernel, _PARTS, grid=grid, left_extra=cols
+    if _one_sweep(grid):
+        return tile_partials(
+            q_g, kv_vec, grad_kernel, _PARTS, grid=grid, left_extra=("gvec",)
+        )
+    return two_sweep_partials(
+        q_g, kv_vec, zr_kernel, ("z", "r"), grad_kernel, _PARTS,
+        grid=grid, left_extra=("gvec",),
     )
 
 
@@ -263,17 +267,13 @@ def _xentropy_parts(
     resolved layout, whose grid may come from a frame with
     ``pred_vec``'s row ids.  The kernel computes each row's forward z
     itself when it sees every trg row (:func:`_one_sweep`); otherwise a
-    first sweep folds z and joins it onto the pred rows."""
-    left, cols = pred_vec.select("i", "vec", "label"), ("label",)
-    if not _one_sweep(grid):
-        def z_kernel(lids, lmat, _extra, rids, rmat):
-            return pd.DataFrame({"i": lids, "z": row_logsumexp(lmat @ rmat.T)})
+    first sweep of the same tiles folds z per trg block and the
+    gradient sweep folds those partials in-group
+    (``_blocked.two_sweep_partials``)."""
+    left = pred_vec.select("i", "vec", "label")
 
-        z = fold(
-            pred_vec.select("i", "vec"), trg_vec, z_kernel, "i long, z double",
-            merge=lse_merge("z"), grid=grid,
-        )
-        left, cols = left.join(z, "i"), ("label", "z")
+    def z_kernel(lids, lmat, _extra, rids, rmat):
+        return pd.DataFrame({"i": lids, "z": row_logsumexp(lmat @ rmat.T)})
 
     def grad_kernel(lids, lmat, extra, rids, rmat):
         s = lmat @ rmat.T
@@ -290,6 +290,11 @@ def _xentropy_parts(
             ignore_index=True,
         )
 
-    return tile_partials(
-        left, trg_vec, grad_kernel, _PARTS, grid=grid, left_extra=cols
+    if _one_sweep(grid):
+        return tile_partials(
+            left, trg_vec, grad_kernel, _PARTS, grid=grid, left_extra=("label",)
+        )
+    return two_sweep_partials(
+        left, trg_vec, z_kernel, ("z",), grad_kernel, _PARTS,
+        grid=grid, left_extra=("label",),
     )

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from gemmsql.datamodel import embeddings_vectors
 from gemmsql.ops import attention_blocked, sample_categorical, xentropy
-from gemmsql.ops.backward import xentropy_bwd
+from gemmsql.ops.backward import attention_bwd, xentropy_bwd
 from tests.conftest import SF_SMOKE
 
 RTOL, ATOL = 1e-9, 1e-12
@@ -201,3 +201,52 @@ def test_broadcast_bound_follows_the_driver_heap(spark, tmp_path, monkeypatch):
     big = spark.read.parquet(_write(tmp_path / "b.parquet", np.arange(400), rng.normal(size=(400, 64))))
     assert _blocked.use_broadcast("auto", small)
     assert not _blocked.use_broadcast("auto", big)
+
+
+def _dense_attention_grads(q, kv, g):
+    s = q @ kv.T
+    w = np.exp(s - s.max(1, keepdims=True))
+    w /= w.sum(1, keepdims=True)
+    gw = g @ kv.T
+    gs = w * (gw - (w * gw).sum(1, keepdims=True))
+    return gs @ kv, gs.T @ q, w.T @ g
+
+
+#: (left ids, right ids) at block 16, each spanning several right blocks
+#: so both backwards take two sweeps
+TWO_SWEEP_IDS = {
+    # footer range 0..47 is right blocks 0, 1, 2; block 1 holds no row
+    "empty_right_block": (np.arange(60), np.r_[np.arange(8), np.arange(32, 48)]),
+    # 50 left rows: the last left block holds 2
+    "short_last_left_block": (np.arange(50), np.arange(40)),
+}
+
+
+@pytest.mark.parametrize("case", list(TWO_SWEEP_IDS))
+def test_two_sweep_backwards_match_dense(spark, tmp_path, case):
+    """On grids with several right blocks (two sweeps of one tile
+    frame) both backwards equal the dense float64 reference: with a
+    footer range that holds an empty right block, whose tiles emit no
+    statistics, and with a short last left block."""
+    from gemmsql.ops._blocked import plan_tiles
+
+    pids, cids = TWO_SWEEP_IDS[case]
+    rng = np.random.default_rng(11)
+    x, t, g = (rng.normal(size=(len(ids), 8)) for ids in (pids, cids, pids))
+    lab = rng.integers(0, len(cids), size=len(pids))
+    pred = spark.read.parquet(
+        _write(tmp_path / "pred.parquet", pids, x, label=cids[lab]))
+    trg = spark.read.parquet(_write(tmp_path / "trg.parquet", cids, t))
+    gdf = spark.read.parquet(_write(tmp_path / "g.parquet", pids, g))
+    grid = plan_tiles(False, pred, trg, 16)
+    assert grid.right == tuple(range(int(cids.max()) // 16 + 1)), grid
+
+    _, gp, gt = _dense_xent(x, t, lab)
+    gpred, gtrg = xentropy_bwd(pred, trg, block=16, broadcast_trg=False)
+    np.testing.assert_allclose(_rows(gpred, "vec"), gp, rtol=RTOL, atol=ATOL)
+    np.testing.assert_allclose(_rows(gtrg, "vec"), gt, rtol=RTOL, atol=ATOL)
+
+    q = pred.select("i", "vec")
+    outs = attention_bwd(q, trg, gdf, block=16, broadcast_kv=False)
+    for got, want in zip(outs, _dense_attention_grads(x, t, g)):
+        np.testing.assert_allclose(_rows(got, "vec"), want, rtol=RTOL, atol=ATOL)

@@ -194,9 +194,10 @@ def _merge_aggregates(p: str) -> list[str]:
 
 def test_tiled_fold_passes_merge_with_one_aggregate(spark):
     """On the tiled path every fold pass merges its tile partials with
-    exactly ONE aggregate: the backwards' first pass included, whose
-    logsumexp folds in-row (no max aggregate joined back to the
-    partials for a second sum)."""
+    exactly ONE aggregate, and no merge is a max aggregate joined back
+    to the partials for a second sum.  The backwards' statistics pass
+    has no aggregate: its partials fold inside the gradient sweep's
+    groups."""
     from gemmsql.datamodel import embeddings_vectors
     from gemmsql.ops import (
         attention_blocked,
@@ -218,10 +219,10 @@ def test_tiled_fold_passes_merge_with_one_aggregate(spark):
             attention_blocked(v, v, block=128, broadcast_kv=False), 1
         ),
         "xentropy_bwd": (
-            xentropy_bwd(vec, v, block=128, broadcast_trg=False)[0], 2
+            xentropy_bwd(vec, v, block=128, broadcast_trg=False)[0], 1
         ),
         "attention_bwd": (
-            attention_bwd(v, v, v, block=128, broadcast_kv=False)[0], 2
+            attention_bwd(v, v, v, block=128, broadcast_kv=False)[0], 1
         ),
     }
     for name, (df, n) in passes.items():
@@ -234,8 +235,9 @@ def test_tiled_folds_take_block_ids_from_footers(spark):
     """On parquet-scan inputs the tiled grid comes from footer min/max of
     ``i``: no plan carries a block-id aggregate (a ``distinct()`` of
     ``_lb``/``_rb``, ``functions=[]``) or a BroadcastNestedLoopJoin, and
-    each backward holds exactly its two kernels, because pass 2 reuses
-    pass 1's grid instead of re-planning pass 1 to find its block ids."""
+    each backward holds exactly its two kernels (grouped or cogrouped),
+    because pass 2 reuses pass 1's grid instead of re-planning pass 1 to
+    find its block ids."""
     from gemmsql.datamodel import embeddings_vectors
     from gemmsql.ops import (
         attention_blocked,
@@ -268,7 +270,12 @@ def test_tiled_folds_take_block_ids_from_footers(spark):
         assert not re.search(r"Aggregate\(keys=\[_[lr]b#\d+\], functions=\[\]", p), name
         assert "BroadcastNestedLoopJoin" not in p, name
         if "_bwd" in name:
-            assert p.count("FlatMapGroupsInPandas") == 2, name
+            assert _tile_kernels(p) == 2, name
+
+
+def _tile_kernels(p: str) -> int:
+    """Tile-kernel nodes in plan ``p``: grouped and cogrouped."""
+    return p.count("FlatMapGroupsInPandas") + p.count("FlatMapCoGroupsInPandas")
 
 
 def _final_plan(df) -> str:
@@ -290,7 +297,8 @@ def test_backward_kernels_run_once_per_call(spark):
     once: the legs split above the one merge, so they share its
     exchange.  A kernel that sees every right row (one right block, or
     the broadcast path) computes z/r itself: one sweep; several right
-    blocks take two.  ``mlp_bwd``'s weight legs share one partials map."""
+    blocks take two (a grouped statistics sweep, then the cogrouped
+    gradient sweep).  ``mlp_bwd``'s weight legs share one partials map."""
     import numpy as np
 
     from gemmsql.datamodel import embeddings_vectors
@@ -300,7 +308,7 @@ def test_backward_kernels_run_once_per_call(spark):
     vec = embeddings_vectors(spark, SF_SMOKE)
     vec = vec.where(vec["i"] < 96)
     v = vec.select("i", "vec")
-    layouts = {  # (block, broadcast) -> FlatMapGroupsInPandas, MapInPandas
+    layouts = {  # (block, broadcast) -> tile kernels, MapInPandas
         (48, False): (2, 0),
         (96, False): (1, 0),
         (96, True): (0, 1),
@@ -312,13 +320,40 @@ def test_backward_kernels_run_once_per_call(spark):
         }
         for name, outs in calls.items():
             p = _final_plan(_union(outs))
-            got = (p.count("FlatMapGroupsInPandas"),
+            got = (_tile_kernels(p),
                    len(re.findall(r"(?<!FlatMapGroups)MapInPandas", p)))
             assert got == (groups, maps), (name, block, bcast, got)
     d = embeddings_stats(SF_SMOKE)[1]
     _, gp, gq = mlp_bwd(v, v, np.ones((d, 8)), np.ones((8, d)))
     p = _final_plan(gp.unionByName(gq))
     assert len(re.findall(r"(?<!FlatMapGroups)MapInPandas", p)) == 1, p
+
+
+def test_two_sweep_backwards_share_one_tile_exchange(spark):
+    """On a grid with two right blocks both sweeps of a backward group
+    one tile frame: the AQE final plan shuffles it once and the second
+    sweep reads that shuffle again (``ReusedExchange``).  The statistics
+    sweep is one grouped kernel, the gradient sweep one cogrouped
+    kernel, and no join brings z/r back to the left rows (attention's
+    one join is Q with its cotangent G)."""
+    from gemmsql.datamodel import embeddings_vectors
+    from gemmsql.ops.backward import attention_bwd, xentropy_bwd
+
+    vec = embeddings_vectors(spark, SF_SMOKE)
+    vec = vec.where(vec["i"] < 96)
+    v = vec.select("i", "vec")
+    calls = {
+        "xentropy_bwd": (xentropy_bwd(vec, v, block=48, broadcast_trg=False), 0),
+        "attention_bwd": (attention_bwd(v, v, v, block=48, broadcast_kv=False), 1),
+    }
+    joins = r"(?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"
+    for name, (outs, n_joins) in calls.items():
+        p = _final_plan(_union(outs))
+        assert len(re.findall(r"\+- Exchange hashpartitioning\(_lb#", p)) == 1, (name, p)
+        assert len(re.findall(r"ReusedExchange \[_lb#", p)) == 1, (name, p)
+        assert p.count("FlatMapGroupsInPandas") == 1, (name, p)
+        assert p.count("FlatMapCoGroupsInPandas") == 1, (name, p)
+        assert len(re.findall(joins, p)) == n_joins, (name, p)
 
 
 def test_spread_never_shrinks_a_wide_left_side(spark, tmp_path):
