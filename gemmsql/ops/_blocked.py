@@ -23,6 +23,10 @@ in bytes from its footers) and :func:`fold` runs it:
   partials per row before ``finish``.  Left rows replicate once per
   right block and vice versa, O(|L| * nrb + |R| * nlb) shuffle.
 
+A fold kernel emits one partial per left row, so :func:`fold` calls it
+on slices of each batch whose score matrix fits a core's L2 cache
+(:data:`FOLD_SLICE_BYTES`); the output is the whole-batch output.
+
 Passes that scatter-add into both sides (the backwards' gradient
 sweep) take :func:`tile_partials` and merge on both paths.  A gradient
 kernel that needs per-left-row statistics over every right block (a
@@ -62,6 +66,10 @@ Step = Callable[[DataFrame], DataFrame]
 #: at 64 float64 dims (128 MiB); a driver heap under 1 GiB lowers it
 #: (:func:`broadcast_max_bytes`)
 BROADCAST_RIGHT_MAX_BYTES = 262_144 * 64 * 8
+
+#: bytes of the score slice a :func:`fold` kernel call may build: its
+#: left rows x right rows x 8 B stay within a core's L2 cache
+FOLD_SLICE_BYTES = 1 << 20
 
 #: parquet columns a broadcast right side is read from without Spark
 _VECTORS = pa.schema([("i", pa.int64()), ("vec", pa.list_(pa.float64()))])
@@ -415,13 +423,35 @@ def fold(
     """Run one tile fold on the layout :func:`plan_tiles` resolved:
     partials, ``merge`` on the tiled path only, then ``finish``
     (identity when None).  The kernel emits ONE partial per left row
-    per call."""
+    per call, and runs on cache-sized slices of its left rows
+    (:func:`_sliced`)."""
     parts = tile_partials(
-        left, right, kernel, partial_schema, grid=grid, left_extra=left_extra
+        left, right, _sliced(kernel), partial_schema,
+        grid=grid, left_extra=left_extra,
     )
     if grid is not None:
         parts = merge(parts)
     return parts if finish is None else finish(parts)
+
+
+def _sliced(kernel: Kernel) -> Kernel:
+    """``kernel`` run on slices of its left rows whose score slice fits
+    :data:`FOLD_SLICE_BYTES`, concatenated.  Only for a kernel whose rows
+    each depend on one left row (a :func:`fold` kernel): the output is
+    the whole-batch output, row for row."""
+
+    def run(lids, lmat, extra, rids, rmat) -> pd.DataFrame:
+        step = max(1, FOLD_SLICE_BYTES // (8 * max(1, len(rids))))
+        if len(lids) <= step:
+            return kernel(lids, lmat, extra, rids, rmat)
+        return pd.concat(
+            [kernel(lids[a:a + step], lmat[a:a + step],
+                    extra.iloc[a:a + step].reset_index(drop=True), rids, rmat)
+             for a in range(0, len(lids), step)],
+            ignore_index=True,
+        )
+
+    return run
 
 
 def lse_merge(z: str, weighted: str | None = None) -> Step:

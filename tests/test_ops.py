@@ -283,3 +283,54 @@ def test_sampling_broadcast_and_blocked_paths_agree(spark, emb_matrix):
     assert np.allclose(
         a["prob"].to_numpy(), b["prob"].to_numpy(), atol=5e-7
     )
+
+
+
+def test_fold_kernels_on_slices_are_bit_identical(spark):
+    """``_blocked.fold`` runs each forward kernel on cache-sized slices
+    of its left rows: in a worker, where the kernels run, the
+    concatenated output equals the whole-batch output bit for bit for
+    all four forward kernels, at 64-, 128- and 256-row slices (500 rows,
+    so each has a short last slice)."""
+    import pandas as pd
+
+    def equal_at(rows: int) -> dict[str, bool]:
+        from gemmsql.ops import _blocked
+        from gemmsql.ops.attention import _attention_kernel
+        from gemmsql.ops.entropy import _entropy_kernel
+        from gemmsql.ops.sampling import _sample_kernel
+        from gemmsql.ops.xentropy import _xent_kernel
+
+        rng = np.random.default_rng(rows)
+        m, n, d = 500, 1024, 64
+        lids, rids = np.arange(m) * 3, np.arange(n) + 7
+        lmat, rmat = rng.normal(size=(m, d)), rng.normal(size=(n, d))
+        extra = pd.DataFrame({"label": rng.choice(rids, size=m)})
+        kernels = {
+            "xentropy": _xent_kernel,
+            "row_entropy": _entropy_kernel,
+            "sample_categorical": _sample_kernel(42),
+            "attention_blocked": _attention_kernel(False),
+        }
+        saved = _blocked.FOLD_SLICE_BYTES
+        _blocked.FOLD_SLICE_BYTES = rows * n * 8
+        try:
+            return {
+                name: _blocked._sliced(k)(lids, lmat, extra, rids, rmat).equals(
+                    k(lids, lmat, extra, rids, rmat))
+                for name, k in kernels.items()
+            }
+        finally:
+            _blocked.FOLD_SLICE_BYTES = saved
+
+    def run(batches):
+        for pdf in batches:
+            for rows in pdf["id"]:
+                got = equal_at(int(rows))
+                yield pd.DataFrame({"rows": int(rows), "kernel": list(got),
+                                    "equal": list(got.values())})
+
+    sizes = spark.createDataFrame([(64,), (128,), (256,)], "id long").coalesce(1)
+    out = sizes.mapInPandas(run, "rows long, kernel string, equal boolean").collect()
+    assert len(out) == 12
+    assert all(r["equal"] for r in out), [tuple(r) for r in out if not r["equal"]]
