@@ -90,6 +90,71 @@ def test_workers_run_under_the_daemon(spark):
     assert {r["mod"] for r in rows} == {"gemmsql._pydaemon"}
 
 
+SKYLAKEX = {"avx512f", "avx512cd", "avx512bw", "avx512dq", "avx512vl", "avx2", "fma"}
+
+
+@pytest.mark.parametrize(
+    "flags, picked, environ, want",
+    [
+        (SKYLAKEX, "Prescott", {}, "SkylakeX"),
+        ({"avx2", "fma", "avx512f"}, "Prescott", {}, "Haswell"),
+        ({"avx2", "fma"}, "Core2", {}, "Haswell"),
+        ({"avx2"}, "Prescott", {}, None),                 # no fma
+        ({"sse3", "ssse3"}, "Prescott", {}, None),        # a real pre-AVX host
+        (SKYLAKEX, "Haswell", {}, None),                  # OpenBLAS picked an AVX core
+        (SKYLAKEX, "SkylakeX", {}, None),
+        (SKYLAKEX, "Prescott", {"OPENBLAS_CORETYPE": "Prescott"}, None),  # the user's wins
+        (SKYLAKEX, None, {}, None),                       # no bundled OpenBLAS
+    ],
+)
+def test_blas_coretype_decision(flags, picked, environ, want):
+    assert _pydaemon.blas_coretype(flags, picked, environ) == want
+
+
+def test_cpu_flags_reads_the_first_flags_line(tmp_path):
+    info = tmp_path / "cpuinfo"
+    info.write_text("processor\t: 0\nflags\t\t: fpu sse3 avx2 fma\n\n"
+                    "processor\t: 1\nflags\t\t: fpu\n")
+    assert _pydaemon.cpu_flags(str(info)) == {"fpu", "sse3", "avx2", "fma"}
+    assert _pydaemon.cpu_flags(str(tmp_path / "missing")) == frozenset()
+
+
+@pytest.mark.skipif("avx2" not in _pydaemon.cpu_flags(), reason="host without AVX2")
+def test_workers_run_the_hosts_blas_kernels(spark):
+    """Workers see the ``OPENBLAS_CORETYPE`` the daemon chose for this
+    host (or the one the environment already set), and their loaded
+    OpenBLAS reports that core."""
+    import os
+
+    want = _pydaemon.blas_coretype(
+        _pydaemon.cpu_flags(), _pydaemon.openblas_core(), os.environ
+    )
+    env = os.environ.get("OPENBLAS_CORETYPE", want)
+
+    def probe(batches):
+        import ctypes
+        import glob
+        import os
+
+        import numpy as np
+
+        lib = glob.glob(os.path.join(os.path.dirname(np.__path__[0]),
+                                     "numpy.libs", "libopenblas*.so*"))
+        core = None
+        if lib:
+            name = ctypes.CDLL(lib[0]).openblas_get_corename64_
+            name.restype = ctypes.c_char_p
+            core = name().decode()
+        for _ in batches:
+            yield pd.DataFrame({"env": [os.environ.get("OPENBLAS_CORETYPE")],
+                                "core": [core]})
+
+    rows = spark.range(0, 40, numPartitions=2).mapInPandas(
+        probe, "env string, core string").collect()
+    assert {r["env"] for r in rows} == {env}
+    if want is not None:
+        assert {r["core"].lower() for r in rows} == {want.lower()}
+
 
 def test_workers_import_gemmsql_when_the_driver_only_has_it_on_sys_path(tmp_path):
     """A driver that puts the repo on ``sys.path`` only, run from another
