@@ -120,7 +120,8 @@ def openblas_core() -> str | None:
     """The core the OpenBLAS bundled with NumPy picks on this host, or
     None (no bundled OpenBLAS, or the probe failed).  A forked child
     loads the library and reports its pick, so this process loads no
-    BLAS and can still set ``OPENBLAS_CORETYPE`` before NumPy does."""
+    BLAS and can still set ``OPENBLAS_CORETYPE`` before NumPy does.
+    Call it before this process starts a thread: it forks."""
     spec = importlib.util.find_spec("numpy")
     if spec is None or not spec.submodule_search_locations:
         return None
@@ -130,14 +131,19 @@ def openblas_core() -> str | None:
     if not blas:
         return None
     r, w = os.pipe()
-    pid = os.fork()
+    try:
+        pid = os.fork()
+    except OSError:  # no process to spare: keep OpenBLAS's own pick
+        os.close(r)
+        os.close(w)
+        return None
     if pid == 0:  # child: report the pick, never return
         try:
             os.close(r)
             _load_deps([p for p in libs if p not in blas])
             lib = ctypes.CDLL(blas[0])
             name = getattr(lib, "openblas_get_corename64_", None) or lib.openblas_get_corename
-            name.restype = ctypes.c_char_p
+            name.argtypes, name.restype = [], ctypes.c_char_p
             os.write(w, name() or b"")
         finally:
             os._exit(0)

@@ -244,7 +244,7 @@ def blocked_partials(
     )
 
 
-def fold_lse_stats(
+def _fold_lse_stats(
     ids: np.ndarray, src: np.ndarray, stats: dict[str, np.ndarray],
     z: str, weighted: tuple[str, ...] = (),
 ) -> tuple[np.ndarray, dict[str, np.ndarray]]:
@@ -289,7 +289,7 @@ def two_sweep_partials(
     to every right block of their left block and cogrouped with the same
     tile frame, so the tile exchange runs once and pass 2 reads it again
     (``ReusedExchange``); no merge, join or second replication.  Each
-    pass-2 group folds its rows' partials (:func:`fold_lse_stats`),
+    pass-2 group folds its rows' partials (:func:`_fold_lse_stats`),
     hands them to ``kernel`` as extra left columns, and returns its
     partial rows."""
     z, *weighted = stats
@@ -319,7 +319,7 @@ def two_sweep_partials(
         if args is None:
             return _empty(partial_schema)
         lids, lmat, lextra, rids, rmat = args
-        ids, folded = fold_lse_stats(
+        ids, folded = _fold_lse_stats(
             st["_si"].to_numpy(), st["_src"].to_numpy(),
             {c: st[c].to_numpy() for c in stats}, z, tuple(weighted),
         )
@@ -438,7 +438,9 @@ def _sliced(kernel: Kernel) -> Kernel:
     """``kernel`` run on slices of its left rows whose score slice fits
     :data:`FOLD_SLICE_BYTES`, concatenated.  Only for a kernel whose rows
     each depend on one left row (a :func:`fold` kernel): the output is
-    the whole-batch output, row for row."""
+    the whole-batch output bit for bit wherever a GEMM's row does not
+    depend on the rows it shares the call with, as on a Spark worker's
+    one BLAS thread."""
 
     def run(lids, lmat, extra, rids, rmat) -> pd.DataFrame:
         step = max(1, FOLD_SLICE_BYTES // (8 * max(1, len(rids))))

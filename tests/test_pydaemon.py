@@ -143,7 +143,7 @@ def test_workers_run_the_hosts_blas_kernels(spark):
         core = None
         if lib:
             name = ctypes.CDLL(lib[0]).openblas_get_corename64_
-            name.restype = ctypes.c_char_p
+            name.argtypes, name.restype = [], ctypes.c_char_p
             core = name().decode()
         for _ in batches:
             yield pd.DataFrame({"env": [os.environ.get("OPENBLAS_CORETYPE")],
