@@ -79,7 +79,7 @@ _MICRO_RATIO = (
 
 def _gate_chain(denom_sql: str) -> str:
     """Exact integer score -> row max -> quantized softmax chain, the
-    DuckDB twin of gate._softmax_den_num."""
+    DuckDB twin of gate._chain."""
     return (
         "qs AS (SELECT a.i AS qi, b.i AS ki,"
         " CAST(SUM(a.vq * b.vq) AS BIGINT) AS s_int"

@@ -46,34 +46,6 @@ def group_logsumexp(
     )
 
 
-def weighted_by_softmax(
-    df: DataFrame,
-    keys: Sequence[str],
-    score: str,
-    weight_cols: dict[str, Column],
-    lse_out: str = "lse",
-) -> DataFrame:
-    """Per-group logsumexp plus softmax-weighted sums in one plan.
-
-    For each ``name -> expr`` in ``weight_cols`` computes
-    ``sum(exp(score - lse) * expr)`` — the generic form of the
-    reference's attention value-average (attention.py:5-9) and entropy's
-    score-mean (entropy.py:5-12).
-    """
-    keys = list(keys)
-    mx = df.groupBy(*keys).agg(F.max(score).alias("_mx"))
-    j = df.join(mx, keys)
-    w = F.exp(F.col(score) - F.col("_mx"))
-    aggs = [
-        (F.max("_mx") + F.log(F.sum(w))).alias(lse_out),
-        *[
-            (F.sum(w * expr) / F.sum(w)).alias(name)
-            for name, expr in weight_cols.items()
-        ],
-    ]
-    return j.groupBy(*keys).agg(*aggs)
-
-
 def logaddexp(a: Column, b: Column) -> Column:
     """Stable pairwise logaddexp as a Column expression
     (reference attention.py:34 ``torch.logaddexp``)."""

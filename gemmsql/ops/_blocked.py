@@ -27,6 +27,16 @@ A fold kernel emits one partial per left row, so :func:`fold` calls it
 on slices of each batch whose score matrix fits a core's L2 cache
 (:data:`FOLD_SLICE_BYTES`); the output is the whole-batch output.
 
+Users: the float forwards (``attention_blocked``, ``xentropy``,
+``row_entropy``, ``sample_categorical``) and the quantized gate
+forwards (``gate.attention_gate``, ``attention_gate_plain_kv``,
+``xentropy_gate``, ``entropy_gate``) run through :func:`fold`; the
+float backwards (:mod:`gemmsql.ops.backward`), the gate gradient
+sweeps and ``sampling_filtered``'s broadcast branch through
+:func:`tile_partials`.  The broadcast path's left-side spread
+(:func:`_spread`) also feeds the PQ encode in
+``pipeline.similarity``.
+
 Passes that scatter-add into both sides (the backwards' gradient
 sweep) take :func:`tile_partials` and merge on both paths.  A gradient
 kernel that needs per-left-row statistics over every right block (a
@@ -55,7 +65,8 @@ from pyspark.sql import functions as F
 from gemmsql.datamodel import block_id
 from gemmsql.numerics import collected_lse
 from gemmsql.stats import (
-    frame_bytes, frame_col_bounds, frame_rows, frame_table, rows_for_choice,
+    frame_bytes, frame_col_bounds, frame_partitions, frame_rows, frame_table,
+    rows_for_choice,
 )
 
 # kernel(left_ids, left_mat, left_extra, right_ids, right_mat) -> pdf
@@ -70,6 +81,11 @@ BROADCAST_RIGHT_MAX_BYTES = 262_144 * 64 * 8
 #: bytes of the score slice a :func:`fold` kernel call may build: its
 #: left rows x right rows x 8 B stay within a core's L2 cache
 FOLD_SLICE_BYTES = 1 << 20
+
+#: target rows per task for the broadcast-path spread (:func:`_spread`)
+#: — small enough that a 2000-row table still fans ~8 ways, large
+#: enough that each Arrow batch amortizes the Python worker round
+SPREAD_ROWS_PER_TASK = 256
 
 #: parquet columns a broadcast right side is read from without Spark
 _VECTORS = pa.schema([("i", pa.int64()), ("vec", pa.list_(pa.float64()))])
@@ -333,6 +349,37 @@ def two_sweep_partials(
     ).applyInPandas(pass2, partial_schema)
 
 
+def _spread(df: DataFrame) -> DataFrame:
+    """Byte-light/compute-heavy spread before a broadcast-path kernel
+    (guide §2; the media_split r17 precedent).  A left side under the
+    broadcast bound is often a KB-scale parquet scan, ONE input
+    partition, so the NumPy kernel would serialize on one core
+    (measured r18: the whole ML tier showed 8-core ≈ 32-core scaling
+    for exactly this reason).  One round-robin exchange of the narrow
+    rows fans the kernel across the cluster.  Every kernel fed by this
+    is batch-slicing-independent (per-row outputs, or per-batch
+    partials merged by a monoid), so the spread cannot move a result.
+
+    Task sizing: ~SPREAD_ROWS_PER_TASK rows per task (footer row
+    count, never a job), capped at defaultParallelism — a fixed
+    32-way fan cost more than it saved for the cheap softmax kernels,
+    most of it each Python task's fixed cost (before
+    :mod:`gemmsql._pydaemon`, a re-read of every zip archive on the
+    worker's path), while still leaving the heavy ones (gumbel noise,
+    fused grads) under-parallelized at small N on few-core boxes.
+    It only fans OUT: a side with at least that many partitions
+    (``stats.frame_partitions``, job-free) is returned as is."""
+    n = frame_rows(df)
+    cap = df.sparkSession.sparkContext.defaultParallelism
+    parts = cap if n is None else max(
+        2, min(cap, -(-n // SPREAD_ROWS_PER_TASK))
+    )
+    have = frame_partitions(df)
+    if have is not None and have >= parts:
+        return df
+    return df.repartition(parts)
+
+
 def _right_arrays(right: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """``(ids, (n, dim) float64 matrix)`` of a broadcast right side.  A
     pure projection of a parquet scan whose ``i`` is int64 and ``vec``
@@ -379,10 +426,6 @@ def broadcast_right_partials(
                 pdf[extra].reset_index(drop=True), rids, rmat,
             )
 
-    from gemmsql.ops.gate import _spread
-
-    # byte-light/compute-heavy spread (r18): a bounded left scan is
-    # often ONE partition, which would serialize the kernel on one core
     return _spread(left.select("i", "vec", *extra)).mapInPandas(
         run, partial_schema
     )

@@ -58,21 +58,45 @@ Reference semantics mirrored here (file:line cites for the judge):
 - MLP fwd/bwd        reference mlp.py:6-16, 59-60
 - gram / relu-gram   reference cpp_src/relu_matmul.cpp:9-21
 
+Physical paths.  Every op with a right side (attention, xentropy,
+entropy and their gradients) writes its quantized math once, as a
+kernel of the fold executor (:mod:`gemmsql.ops._blocked`), and
+resolves its layout once with ``plan_tiles(...,
+max_rows=BROADCAST_MAX_ROWS)``:
+
+- **broadcast path** — the right side is read on the driver and each
+  spread left batch scores all of it, so the kernel computes its row
+  statistics (the score max ``mx``, the softmax denominator ``S``,
+  attention's ``rnum``) itself: one sweep.
+- **tiled path** — ``floor(exp(s - mx)*1e6 + .5)`` needs the global
+  row max, so exact pre-sweeps of the same tiles add ``mx`` (a max),
+  then the long-summed ``S``/``rnum``, to the left rows; the kernel
+  reads them from its left extras (:func:`_with_row_stats`).
+
+Either way the kernel quantizes the right matrix itself and emits
+int64 partials that merge by ``sum(long)`` (exact, so both paths give
+the same bits) before one Spark finish rounds them in integer
+arithmetic.  Forwards run through ``_blocked.fold`` (no merge on the
+broadcast path); gradient sweeps through ``tile_partials`` and
+:func:`_finalize`.  The fused gradient ops compose the per-op legs over
+one shared score chain.  Ops with no right side (gram, the MLP and the
+chain stages that apply the weights) are narrow maps.
+
 Integer-overflow budget (64-dim, |v| <= ~1 inputs): vq <= ~1e6, score
 dot <= 64 * 1e12 = 6.4e13 (exact in float64); e_int <= 1e6 so softmax
 denominators stay <= N * 1e6 and the worst float64 reductions (e @ vq,
 delta @ vq: 1e12/term) stay exact while N <= ~9e3 per reduction —
-hence ``BROADCAST_MAX_ROWS = 8192``: the one-pass broadcast kernels
-only run when every reduction is provably inside both the 2^53 float
-budget and the 2^63 int64 budget.  The blocked path reduces per
-<=4096-row tile and merges tile partials with ``sum(long)`` / DuckDB
-``SUM(BIGINT)`` (exact at any N), so only the per-tile bound must
-hold — the 100 TB-safe shape.
+hence ``BROADCAST_MAX_ROWS = 8192``: a broadcast kernel reduces over
+every right row in one call, so it only runs while every reduction is
+provably inside both the 2^53 float budget and the 2^63 int64 budget.
+The tiled path reduces per <=4096-row tile and merges tile partials
+with ``sum(long)`` / DuckDB ``SUM(BIGINT)`` (exact at any N), so only
+the per-tile bound must hold — the 100 TB-safe shape.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Mapping
 
 import numpy as np
 import pandas as pd
@@ -80,8 +104,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gemmsql.ops._blocked import Grid, block_grid, blocked_partials, vec_mat
-from gemmsql.stats import list_dim, rows_for_choice
+from gemmsql.ops._blocked import (
+    Grid, Kernel, blocked_partials, fold, plan_tiles, tile_partials, vec_mat,
+)
+from gemmsql.stats import list_dim
 
 Q_IN = 1_000_000.0       # input quantization: v -> floor(v*1e6 + .5)
 Q_EXP = 1_000_000.0      # exp(score - max) quantization
@@ -100,46 +126,8 @@ Q_DELTA = 1_000_000.0    # xentropy (softmax - onehot) quantization
 # bound must hold at any N.
 BROADCAST_MAX_ROWS = 8_192
 
-#: target rows per task for the broadcast-kernel spread — small enough
-#: that a 2000-row table still fans ~8 ways, large enough that each
-#: Arrow batch amortizes the Python worker round
-SPREAD_ROWS_PER_TASK = 256
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Byte-light/compute-heavy spread before a broadcast-path kernel
-    (guide §2; the media_split r17 precedent).  These kernels only run
-    for tables under BROADCAST_MAX_ROWS, whose KB-scale parquet scan
-    is ONE input partition — so the NumPy kernel serialized on one
-    core (measured r18: the whole ML tier showed 8-core ≈ 32-core
-    scaling for exactly this reason).  One round-robin exchange of at
-    most ~8192 narrow rows fans the kernel across the cluster; tables
-    past the broadcast bound take the blocked/tile paths, which
-    partition via their own shuffle.  Every kernel fed by this is
-    batch-slicing-independent (per-row outputs or per-task monoid
-    partials merged by sum), so the spread cannot move a result.
-
-    Task sizing: ~SPREAD_ROWS_PER_TASK rows per task (footer row
-    count, never a job), capped at defaultParallelism — a fixed
-    32-way fan cost more than it saved for the cheap softmax kernels,
-    most of it each Python task's fixed cost (before
-    :mod:`gemmsql._pydaemon`, a re-read of every zip archive on the
-    worker's path), while still leaving the heavy ones (gumbel noise,
-    fused grads) under-parallelized at small N on few-core boxes.
-    It only fans OUT: a side with at least that many partitions
-    (``stats.frame_partitions``, job-free) is returned as is."""
-    sc = df.sparkSession.sparkContext
-    from gemmsql.stats import frame_partitions, frame_rows
-
-    n = frame_rows(df)
-    cap = sc.defaultParallelism
-    parts = cap if n is None else max(
-        2, min(cap, -(-n // SPREAD_ROWS_PER_TASK))
-    )
-    have = frame_partitions(df)
-    if have is not None and have >= parts:
-        return df
-    return df.repartition(parts)
+#: integer-numerator partials of every gradient kernel and narrow map
+_PARTS = "which string, i long, nums array<long>"
 
 
 def _quant(mat: np.ndarray) -> np.ndarray:
@@ -147,52 +135,93 @@ def _quant(mat: np.ndarray) -> np.ndarray:
     return np.floor(mat * Q_IN + 0.5)
 
 
-def _collect_kv(kv_vec: DataFrame):
-    """Collect + quantize the broadcast side: (ids, int-valued float64)."""
-    pdf = kv_vec.select("i", "vec").toPandas()
-    rids = pdf["i"].to_numpy(dtype=np.int64)
-    rq = _quant(vec_mat(pdf["vec"]))
-    return rids, rq
+def _scores(lq: np.ndarray, rq: np.ndarray, scale: bool = False) -> np.ndarray:
+    """Exact scores ``(lq @ rq.T) / 1e12`` (times ``sqrt(dim)`` in the
+    denominator when ``scale``): identical doubles on every engine."""
+    denom = 1e12 * np.sqrt(lq.shape[1]) if scale else 1e12
+    return (lq @ rq.T) / denom
 
 
-def _softmax_den_num(lq: np.ndarray, rq: np.ndarray, denom: float):
-    """Shared forward chain: exact scores -> row max -> quantized exp.
-
-    Returns (s, mx, e, S) where ``s = (lq @ rq.T) / denom`` (identical
-    doubles on every engine), ``e = floor(exp(s - mx)*1e6 + .5)``
-    (integer-valued float64), ``S = rowsum(e)`` (exact).
-    """
-    s = (lq @ rq.T) / denom
-    mx = s.max(axis=1)
+def _chain(lq: np.ndarray, rq: np.ndarray, extra, scale: bool = False):
+    """The shared forward chain of one kernel call -> ``(s, mx, e)``:
+    the scores (:func:`_scores`), the row max ``mx`` and ``e =
+    floor(exp(s - mx)*1e6 + .5)`` (integer-valued float64).  ``mx`` is
+    ``extra``'s on the tiled path (its pre-sweep's max over every right
+    block); a call that sees every right row computes it."""
+    s = _scores(lq, rq, scale)
+    mx = extra["mx"].to_numpy() if "mx" in extra else s.max(axis=1)
     e = np.floor(np.exp(s - mx[:, None]) * Q_EXP + 0.5)
-    S = e.sum(axis=1)
-    return s, mx, e, S
+    return s, mx, e
 
 
-def _micro_np(num: np.ndarray, step: int) -> np.ndarray:
-    """Half-away-from-zero integer rounding: round(num/step) in exact
-    int64 arithmetic.  ``val = micro / 1e6`` is then the final output."""
-    num = num.astype(np.int64)
-    half = step // 2
-    mag = (np.abs(num) + half) // step
-    return np.sign(num) * mag
+def _row_sum(e: np.ndarray, extra) -> np.ndarray:
+    """The softmax denominator ``S = rowsum(e)`` (exact): the tiled
+    pre-sweep's long sum ``st`` from ``extra``, else this call's."""
+    if "st" in extra:
+        return extra["st"].to_numpy().astype(np.float64)
+    return e.sum(axis=1)
 
 
-def _micro_col(num, step: int):
-    """Spark twin of :func:`_micro_np` (exact long arithmetic)."""
-    half = step // 2
-    mag = F.expr(f"(abs({num}) + {half}L) div {step}L")
-    return F.when(F.col(num) < 0, -mag).otherwise(mag)
+def _onehot(extra, rids: np.ndarray) -> np.ndarray:
+    """Each left row's label against this call's right ids (reference
+    xentropy.py:12): a label with no row here — in another tile, or in
+    no class row at all — matches nothing."""
+    return extra["label"].to_numpy()[:, None] == rids[None, :]
 
 
-def _micro_ratio_np(num: np.ndarray, den: np.ndarray) -> np.ndarray:
-    """round(num/den) half away from zero in exact int64 arithmetic:
-    ``(2*|num| + den) div (2*den)``, sign restored.  Used when the
-    denominator is itself a per-row integer (softmax S)."""
-    num = num.astype(np.int64)
-    den = den.astype(np.int64)
-    mag = (2 * np.abs(num) + den) // (2 * den)
-    return np.sign(num) * mag
+def _with_row_stats(
+    left: DataFrame,
+    right: DataFrame,
+    grid: Grid | None,
+    sums: tuple[str, ...] = (),
+    scale: bool = False,
+) -> tuple[DataFrame, tuple[str, ...]]:
+    """``(left, added columns)``: on the tiled path ``left`` gains its
+    exact row statistics against ``right``'s keys — the row max ``mx``
+    over every right block (max is order-independent), then, given
+    ``mx``, the long-summed ``sums``: ``st = rowsum(e)`` and ``rn = e @
+    rowsum(rq)``.  On the broadcast path (``grid`` None) ``left`` is
+    returned as is: its kernels see every right row and compute them."""
+    if grid is None:
+        return left, ()
+
+    def mx_kernel(lids, lmat, _extra, rids, rmat):
+        s = _scores(_quant(lmat), _quant(rmat), scale)
+        return pd.DataFrame({"i": lids, "mx": s.max(axis=1)})
+
+    mx = blocked_partials(
+        left.select("i", "vec"), right, mx_kernel, "i long, mx double", grid=grid,
+    ).groupBy("i").agg(F.max("mx").alias("mx"))
+    left = left.join(mx, "i")
+    if not sums:
+        return left, ("mx",)
+
+    def sum_kernel(lids, lmat, extra, rids, rmat):
+        rq = _quant(rmat)
+        _s, _mx, e = _chain(_quant(lmat), rq, extra, scale)
+        ei = e.astype(np.int64)
+        out = pd.DataFrame({"i": lids, "st": ei.sum(axis=1)})
+        if "rn" in sums:
+            out["rn"] = ei @ rq.sum(axis=1).astype(np.int64)
+        return out
+
+    sp = blocked_partials(
+        left.select("i", "vec", "mx"), right, sum_kernel,
+        "i long, " + ", ".join(f"{c} long" for c in sums),
+        grid=grid, left_extra=("mx",),
+    ).groupBy("i").agg(*[F.sum(c).alias(c) for c in sums])
+    return left.join(sp, "i"), ("mx", *sums)
+
+
+def _parts(*legs: tuple[str, np.ndarray, np.ndarray]) -> pd.DataFrame:
+    """Partial rows ``(which, i, nums)``, one block per leg ``(which,
+    ids, numerator matrix)``, numerators as int64."""
+    return pd.concat(
+        [pd.DataFrame({"which": which, "i": ids,
+                       "nums": list(np.asarray(m).astype(np.int64))})
+         for which, ids, m in legs],
+        ignore_index=True,
+    )
 
 
 def _merge_long_arrays(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -206,7 +235,114 @@ def _merge_long_arrays(df: DataFrame, keys: list[str]) -> DataFrame:
     return g.select(*keys, merged.alias("nums"))
 
 
+def _micro_np(num: np.ndarray, step: int) -> np.ndarray:
+    """Half-away-from-zero integer rounding: round(num/step) in exact
+    int64 arithmetic.  ``val = micro / 1e6`` is then the final output."""
+    num = num.astype(np.int64)
+    half = step // 2
+    mag = (np.abs(num) + half) // step
+    return np.sign(num) * mag
+
+
+def _micro_col(num: str, step: int | str):
+    """Spark twin of :func:`_micro_np` (exact long arithmetic); ``step``
+    a literal or a long column."""
+    mag = F.expr(f"(abs({num}) + {step} div 2) div {step}")
+    return F.when(F.col(num) < 0, -mag).otherwise(mag)
+
+
+def _finalize(parts: DataFrame, steps: Mapping[str, int]) -> DataFrame:
+    """Partials ``(which, i, nums)`` merged per ``(which, i)`` (the exact
+    scatter-add, reference core.py:56-57) -> ``(which, i, d, val)``:
+    each numerator rounded half away from zero at its leg's
+    ``steps[which]`` (:func:`_micro_col`), over 1e6."""
+    merged = _merge_long_arrays(parts, ["which", "i"])
+    step = F.create_map(*[F.lit(x) for kv in steps.items() for x in kv])
+    out = merged.select(
+        "which", "i", F.posexplode("nums").alias("d", "num"),
+        step[F.col("which")].cast("long").alias("step"),
+    )
+    return out.select(
+        "which", "i", F.col("d").cast("long").alias("d"),
+        (_micro_col("num", "step").cast("double") / F.lit(Q_IN)).alias("val"),
+    )
+
+
+# gq/gk numerators sit on the 1e10 grid (Q_GS * Q_IN), gv on 1e9 (Q_W);
+# xentropy's and the MLP's on 1e12, except the MLP's bare 1e6 gq sums
+_ATT_STEPS = {"gq": 10_000, "gk": 10_000, "gv": 1_000}
+_XE_STEPS = {"gpred": 1_000_000, "gtrg": 1_000_000}
+_MLP_STEPS = {"gx": 1_000_000, "gp": 1_000_000, "gq": 1}
+
+
 # ------------------------------------------------------------- attention
+
+def _attention_kernel(scale: bool, k_dim: int | None, legs) -> Kernel:
+    """Quantized attention partials ``(which, i, nums = [S, e @ V])``
+    for each ``(which, V)`` of ``legs``: V ``"k"`` is the keys (K == V),
+    ``"v"`` the independent values packed after them
+    (``rmat[:, k_dim:]``).  ``S`` and ``e @ V`` are exact integer sums
+    over this call's right rows."""
+
+    def kernel(lids, lmat, extra, rids, rmat):
+        rq = _quant(rmat)
+        rk = rq[:, :k_dim]
+        _s, _mx, e = _chain(_quant(lmat), rk, extra, scale)
+        S = e.sum(axis=1)[:, None]
+        return _parts(*(
+            (which, lids, np.hstack([S, e @ (rk if v == "k" else rq[:, k_dim:])]))
+            for which, v in legs
+        ))
+
+    return kernel
+
+
+def _attention_finish(rows: DataFrame) -> DataFrame:
+    """``val[i, d] = num / (S * 1e6)`` rounded 6 == ``round(num / S) /
+    1e6``, half away from zero in exact long arithmetic; every column
+    but ``nums`` passes through."""
+    keys = [c for c in rows.columns if c != "nums"]
+    out = rows.select(
+        *keys,
+        F.posexplode(F.slice("nums", 2, 2_000_000_000)).alias("d", "num"),
+        F.element_at("nums", 1).alias("sden"),
+    )
+    mag = F.expr("(2 * abs(num) + sden) div (2 * sden)")
+    micro = F.when(F.col("num") < 0, -mag).otherwise(mag)
+    return out.select(
+        *keys, F.col("d").cast("long").alias("d"),
+        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
+    )
+
+
+def _attention_fold(
+    q_vec: DataFrame,
+    kv_vec: DataFrame,
+    v_vec: DataFrame | None,
+    legs,
+    *,
+    scale: bool,
+    block: int,
+    broadcast_kv: bool | str,
+) -> DataFrame:
+    """Quantized attention ``legs`` (:func:`_attention_kernel`) ->
+    ``(which, i, d, val)``.  A distinct ``v_vec`` is packed beside the
+    keys per key row (one narrow join on ``i``); the layout is sized and
+    tiled from ``kv_vec`` itself, since the K|V join would take a job."""
+    keys = kv_vec.select("i", "vec")
+    grid = plan_tiles(broadcast_kv, q_vec, keys, block, max_rows=BROADCAST_MAX_ROWS)
+    k_dim, right = None, keys
+    if v_vec is not None:
+        k_dim = list_dim(kv_vec, "vec")
+        vv = v_vec.select("i", F.col("vec").alias("_vv"))
+        right = keys.join(vv, "i").select("i", F.concat("vec", "_vv").alias("vec"))
+    left, stats = _with_row_stats(q_vec.select("i", "vec"), keys, grid, scale=scale)
+    return fold(
+        left, right, _attention_kernel(scale, k_dim, legs), _PARTS,
+        merge=lambda p: _merge_long_arrays(p, ["which", "i"]),
+        finish=_attention_finish, grid=grid, left_extra=stats,
+    )
+
 
 def attention_gate(
     q_vec: DataFrame,
@@ -227,892 +363,15 @@ def attention_gate(
 
     ``val[i,d] = num[i,d] / (S[i] * 1e6)`` with ``num = e @ vq`` and
     ``S = rowsum(e)`` — all integer sums.  Broadcast path: one narrow
-    map, zero shuffle.  Blocked path: tile sweep for the row max (max
-    is order-independent), then a tile sweep emitting int64 partials
-    ``[S_tile, num_tile...]`` merged by ``sum(long)``.
+    map, zero shuffle.  Tiled path: the row-max pre-sweep, then a tile
+    sweep emitting int64 partials ``[S_tile, num_tile...]`` merged by
+    ``sum(long)``.
     """
-    if broadcast_kv == "auto":
-        broadcast_kv = rows_for_choice(kv_vec) <= BROADCAST_MAX_ROWS
-
-    if broadcast_kv:
-        if v_vec is None:
-            rids, rq = _collect_kv(kv_vec)
-            vq = rq
-        else:
-            pdf_kv = (
-                kv_vec.select("i", "vec")
-                .join(v_vec.select("i", F.col("vec").alias("vvec")), "i")
-                .toPandas()
-            )
-            rids = pdf_kv["i"].to_numpy(dtype=np.int64)
-            rq = _quant(vec_mat(pdf_kv["vec"]))
-            vq = _quant(vec_mat(pdf_kv["vvec"]))
-        denom = 1e12 * np.sqrt(rq.shape[1]) if scale else 1e12
-        spark = q_vec.sparkSession
-        b = spark.sparkContext.broadcast((rids, rq, vq))
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            _rids, rmat, vmat = b.value
-            d = vmat.shape[1]
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                lq = _quant(vec_mat(pdf["vec"]))
-                _s, _mx, e, S = _softmax_den_num(lq, rmat, denom)
-                num = e @ vmat                      # exact: ints < 2^53
-                # val = num / (S * 1e6) rounded 6 == round(num/S) / 1e6
-                micro = _micro_ratio_np(num, np.broadcast_to(S[:, None], num.shape))
-                n = len(pdf)
-                yield pd.DataFrame({
-                    "i": np.repeat(pdf["i"].to_numpy(), d),
-                    "d": np.tile(np.arange(d, dtype=np.int64), n),
-                    "val": (micro / Q_IN).ravel(),
-                })
-
-        out = _spread(q_vec.select("i", "vec")).mapInPandas(
-            run, "i long, d long, val double"
-        )
-        return out
-
-    # ---- blocked path: two exact tile sweeps -------------------------
-    dim = list_dim(q_vec, "vec")
-    denom = 1e12 * np.sqrt(dim) if scale else 1e12
-    if v_vec is None:
-        k_dim = None
-        right = kv_vec.select("i", "vec")
-    else:
-        k_dim = list_dim(kv_vec, "vec")
-        right = (
-            kv_vec.select("i", "vec")
-            .join(v_vec.select("i", F.col("vec").alias("_vv")), "i")
-            .select("i", F.concat("vec", "_vv").alias("vec"))
-        )
-
-    def mx_kernel(lids, lmat, _extra, rids, rmat):
-        rk = rmat if k_dim is None else rmat[:, :k_dim]
-        s = (_quant(lmat) @ _quant(rk).T) / denom
-        return pd.DataFrame({"i": lids, "mx": s.max(axis=1)})
-
-    # one grid for both sweeps, tiled from kv_vec: the K|V join would
-    # take a job
-    grid = block_grid(q_vec, kv_vec, block)
-    mxp = blocked_partials(
-        q_vec.select("i", "vec"), right, mx_kernel,
-        "i long, mx double", grid=grid,
-    )
-    mx = mxp.groupBy("i").agg(F.max("mx").alias("mx"))
-    q_aug = q_vec.select("i", "vec").join(mx, "i")
-
-    def part_kernel(lids, lmat, extra, rids, rmat):
-        rk = _quant(rmat if k_dim is None else rmat[:, :k_dim])
-        rv = rk if k_dim is None else _quant(rmat[:, k_dim:])
-        s = (_quant(lmat) @ rk.T) / denom
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        S = e.sum(axis=1)
-        num = e @ rv                                # exact per tile
-        nums = np.concatenate([S[:, None], num], axis=1).astype(np.int64)
-        return pd.DataFrame({"i": lids, "nums": list(nums)})
-
-    parts = blocked_partials(
-        q_aug, right, part_kernel,
-        "i long, nums array<long>", grid=grid, left_extra=("mx",),
-    )
-    merged = _merge_long_arrays(parts, ["i"])
-    out = merged.select(
-        "i",
-        F.posexplode(F.slice("nums", 2, 2_000_000_000)).alias("d", "num"),
-        F.element_at("nums", 1).alias("sden"),
-    )
-    # round(num/S) half away from zero, exact long arithmetic
-    mag = F.expr("(2 * abs(num) + sden) div (2 * sden)")
-    micro = F.when(F.col("num") < 0, -mag).otherwise(mag)
-    return out.select(
-        "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
-
-
-def _grads_finalize(parts: DataFrame) -> DataFrame:
-    """Shared merge + integer-rounding finalizer for the gradient legs
-    (gq/gk at 1e10 scale, gv at 1e9)."""
-    merged = _merge_long_arrays(parts, ["which", "i"])
-    out = merged.select(
-        "which", "i", F.posexplode("nums").alias("d", "num")
-    )
-    micro = F.when(
-        F.col("which") == "gv", _micro_col("num", 1_000)
-    ).otherwise(_micro_col("num", 10_000))
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
-
-
-def _blocked_mx(vec_q: DataFrame, kv: DataFrame, denom: float, grid: Grid) -> DataFrame:
-    """Tile sweep 1: exact per-row score max (max is order-independent)."""
-
-    def mx_kernel(lids, lmat, _extra, rids, rmat):
-        s = (_quant(lmat) @ _quant(rmat).T) / denom
-        return pd.DataFrame({"i": lids, "mx": s.max(axis=1)})
-
-    mxp = blocked_partials(
-        vec_q.select("i", "vec"), kv.select("i", "vec"), mx_kernel,
-        "i long, mx double", grid=grid,
-    )
-    return mxp.groupBy("i").agg(F.max("mx").alias("mx"))
-
-
-def attention_grads_gate(
-    vec: DataFrame, *, block: int = 4096, broadcast_kv: bool | str = "auto"
-) -> DataFrame:
-    """Quantized gradients of unscaled self-attention (K == V), cotangent
-    ones -> ``(which, i, d, val)`` with which in {gq, gk, gv}.
-
-    Recompute strategy (reference attention.py:11-29): recompute exact
-    scores, then the softmax-jacobian term ``gs = w * (vsum - r)`` with
-    ``w = e/S`` and ``r = (e @ vsq) / (S * 1e6)`` — every reduction
-    exact-integer, so both physical paths and the oracle agree bit-wise:
-
-    - broadcast path (KV fits executors): one narrow kernel pass; gq is
-      a per-row dgemm, gk/gv are per-partition int64 partials
-      scatter-added by ``sum(long)`` (the reference ``g.add_`` monoid,
-      core.py:56-57).
-    - blocked path (large KV): three tile sweeps — row max, then exact
-      long-summed (S, rnum) stats, then per-tile gradient partials into
-      the same scatter-add.  Tile order cannot change a single bit.
-    """
-    return _grads_finalize(
-        _attention_grads_parts(vec, block=block, broadcast_kv=broadcast_kv)
-    )
-
-
-def _attention_grads_parts(
-    vec: DataFrame, *, block: int = 4096, broadcast_kv: bool | str = "auto",
-    spread: bool = True,
-) -> DataFrame:
-    """Unmerged integer-numerator partials of the self-attention vjp ->
-    ``(which, i, nums)`` with gq/gk numerators on the 1e10 grid
-    (``Q_GS * Q_IN``) and gv on the 1e9 grid (``Q_W``).  Shared by
-    :func:`attention_grads_gate` (which merges + rounds) and
-    :func:`chain2_grads_gate` (which feeds the merged numerators into
-    the MLP backward — the composition must see pre-rounding ints)."""
-    if broadcast_kv == "auto":
-        broadcast_kv = rows_for_choice(vec) <= BROADCAST_MAX_ROWS
-    if not broadcast_kv:
-        return _attention_grads_parts_blocked(vec, block=block)
-    rids, rq = _collect_kv(vec)
-    vsq = rq.sum(axis=1)                            # int-valued, exact
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast((rids, rq, vsq))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _rids, rmat, vs = b.value
-        n, d = rmat.shape
-        gk_acc = np.zeros((n, d), dtype=np.int64)
-        gv_acc = np.zeros(n, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lq = _quant(vec_mat(pdf["vec"]))
-            _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
-            rnum = e.astype(np.int64) @ vs.astype(np.int64)  # exact int64
-            w = e / S[:, None]
-            t = vs[None, :] / Q_IN - (rnum / (S * Q_IN))[:, None]
-            gs = np.floor(w * t * Q_GS + 0.5)        # int-valued float64
-            wq = np.floor(w * Q_W + 0.5)
-            gq_num = gs @ rmat                       # exact: <= ~9e14
-            gk_acc += (gs.T @ lq).astype(np.int64)   # exact per batch
-            gv_acc += wq.sum(axis=0).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "gq",
-                "i": pdf["i"].to_numpy(),
-                "nums": list(gq_num.astype(np.int64)),
-            })
-        yield pd.DataFrame({
-            "which": "gk", "i": _rids, "nums": list(gk_acc),
-        })
-        yield pd.DataFrame({
-            "which": "gv", "i": _rids,
-            "nums": list(np.repeat(gv_acc[:, None], d, axis=1)),
-        })
-
-    src = vec.select("i", "vec")
-    if spread:  # callers passing an already-spread derived frame skip it
-        src = _spread(src)
-    return src.mapInPandas(
-        run, "which string, i long, nums array<long>"
-    )
-
-
-def _attention_grads_parts_blocked(vec: DataFrame, *, block: int) -> DataFrame:
-    """Large-KV tile path of :func:`_attention_grads_parts` —
-    bit-identical to the broadcast path (exact integer merges at every
-    stage)."""
-    q = vec.select("i", "vec")
-    grid = block_grid(q, q, block)
-    mx = _blocked_mx(q, q, 1e12, grid)
-    q_mx = q.join(mx, "i")
-
-    # sweep 2: exact (S, rnum) per row — long sums of tile partials
-    def sr_kernel(lids, lmat, extra, rids, rmat):
-        rq = _quant(rmat)
-        s = (_quant(lmat) @ rq.T) / 1e12
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        vsq = rq.sum(axis=1)
-        return pd.DataFrame({
-            "i": lids,
-            "sp": e.sum(axis=1).astype(np.int64),
-            "rp": e.astype(np.int64) @ vsq.astype(np.int64),
-        })
-
-    srp = blocked_partials(
-        q_mx, q, sr_kernel, "i long, sp long, rp long",
-        grid=grid, left_extra=("mx",),
-    )
-    sr = srp.groupBy("i").agg(
-        F.sum("sp").alias("st"), F.sum("rp").alias("rn")
-    )
-    q_aug = q_mx.join(sr, "i")
-
-    # sweep 3: per-tile gradient partials into the exact scatter-add
-    def leg_kernel(lids, lmat, extra, rids, rmat):
-        lq = _quant(lmat)
-        rq = _quant(rmat)
-        s = (lq @ rq.T) / 1e12
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        S = extra["st"].to_numpy().astype(np.float64)
-        rnum = extra["rn"].to_numpy(dtype=np.int64)
-        vsq = rq.sum(axis=1)
-        w = e / S[:, None]
-        t = vsq[None, :] / Q_IN - (rnum / (S * Q_IN))[:, None]
-        gs = np.floor(w * t * Q_GS + 0.5)
-        wq = np.floor(w * Q_W + 0.5)
-        gq_p = gs @ rq                   # exact per tile: <= ~1.9e15
-        gk_p = gs.T @ lq
-        gv_p = wq.sum(axis=0)
-        d = rq.shape[1]
-        return pd.concat(
-            [
-                pd.DataFrame({"which": "gq", "i": lids,
-                              "nums": list(gq_p.astype(np.int64))}),
-                pd.DataFrame({"which": "gk", "i": rids,
-                              "nums": list(gk_p.astype(np.int64))}),
-                pd.DataFrame({"which": "gv", "i": rids,
-                              "nums": list(np.repeat(
-                                  gv_p.astype(np.int64)[:, None], d, axis=1))}),
-            ],
-            ignore_index=True,
-        )
-
-    return blocked_partials(
-        q_aug, q, leg_kernel, "which string, i long, nums array<long>",
-        grid=grid, left_extra=("mx", "st", "rn"),
-    )
-
-
-def attention_batched_gate(bvec: DataFrame, *, scale: bool = True) -> DataFrame:
-    """Quantized batched self-attention (reference custom_attention.cpp:
-    7-38): attention within each batch id, one cogroup on ``b``."""
-
-    def per_batch(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({"b": [], "i": [], "d": [], "val": []}).astype(
-                {"b": "int64", "i": "int64", "d": "int64", "val": "float64"}
-            )
-        lq = _quant(vec_mat(left["vec"]))
-        rq = _quant(vec_mat(right["kv_vec"]))
-        denom = 1e12 * np.sqrt(lq.shape[1]) if scale else 1e12
-        _s, _mx, e, S = _softmax_den_num(lq, rq, denom)
-        num = e @ rq
-        micro = _micro_ratio_np(num, np.broadcast_to(S[:, None], num.shape))
-        val = micro / Q_IN
-        n, d = val.shape
-        return pd.DataFrame({
-            "b": np.repeat(left["b"].to_numpy(), d),
-            "i": np.repeat(left["i"].to_numpy(), d),
-            "d": np.tile(np.arange(d, dtype=np.int64), n),
-            "val": val.ravel(),
-        })
-
-    kv = bvec.select("b", F.col("i").alias("kv_i"), F.col("vec").alias("kv_vec"))
-    return (
-        bvec.groupBy("b")
-        .cogroup(kv.groupBy("b"))
-        .applyInPandas(per_batch, "b long, i long, d long, val double")
-    )
-
-
-# ---------------------------------------------------- xentropy / entropy
-
-def xentropy_gate(
-    vec: DataFrame, *, block: int = 4096, broadcast_trg: bool | str = "auto"
-) -> DataFrame:
-    """Quantized factored cross-entropy (reference xentropy.py:5-13) ->
-    ``(i, loss)``: ``loss = (mx - s_label) + ln(S / 1e6)``, with the
-    exact integer score/softmax chain.  The single ``ln`` is the only
-    unquantized transcendental: a 1-ulp libm wiggle flips ROUND(,6)
-    with probability ~1e-9 per row.  Large class tables take the
-    blocked tile path (the true-class score merges by sum — exactly one
-    tile contributes a non-zero, so the double sum is exact)."""
-    if broadcast_trg == "auto":
-        broadcast_trg = rows_for_choice(vec) <= BROADCAST_MAX_ROWS
-    if not broadcast_trg:
-        return _xentropy_gate_blocked(vec, block=block)
-    rids, rq = _collect_kv(vec)
-    pos = {int(r): k for k, r in enumerate(rids)}
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast((rq, pos))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rmat, posmap = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lq = _quant(vec_mat(pdf["vec"]))
-            s, mx, _e, S = _softmax_den_num(lq, rmat, 1e12)
-            cols = np.array([posmap[int(l)] for l in pdf["label"]])
-            s_lab = s[np.arange(len(pdf)), cols]
-            loss = mx - s_lab + np.log(S / Q_EXP)
-            yield pd.DataFrame({"i": pdf["i"].to_numpy(), "loss": loss})
-
-    out = _spread(vec.select("i", "vec", "label")).mapInPandas(
-        run, "i long, loss double"
-    )
-    return out.select("i", F.round("loss", 6).alias("loss"))
-
-
-def _xentropy_gate_blocked(vec: DataFrame, *, block: int) -> DataFrame:
-    """Large-class-table tile path of :func:`xentropy_gate`."""
-    pred = vec.select("i", "vec", "label")
-    trg = vec.select("i", "vec")
-    grid = block_grid(pred, trg, block)
-    mx = _blocked_mx(pred, trg, 1e12, grid)
-    p_mx = pred.join(mx, "i")
-
-    def s_kernel(lids, lmat, extra, rids, rmat):
-        lq = _quant(lmat)
-        rq = _quant(rmat)
-        s = (lq @ rq.T) / 1e12
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        lab = extra["label"].to_numpy()
-        slab = (s * (lab[:, None] == rids[None, :])).sum(axis=1)
-        return pd.DataFrame({
-            "i": lids,
-            "sp": e.sum(axis=1).astype(np.int64),
-            "slab": slab,  # 0.0 unless the true class is in this tile
-        })
-
-    parts = blocked_partials(
-        p_mx, trg, s_kernel, "i long, sp long, slab double",
-        grid=grid, left_extra=("mx", "label"),
-    )
-    # sum(slab) is exact: exactly one tile contributes non-zero
-    agg = parts.groupBy("i").agg(
-        F.sum("sp").alias("st"), F.sum("slab").alias("slab")
-    ).join(mx, "i")
-    loss = (
-        F.col("mx") - F.col("slab")
-        + F.log(F.col("st").cast("double") / F.lit(Q_EXP))
-    )
-    return agg.select("i", F.round(loss, 6).alias("loss"))
-
-
-def entropy_gate(
-    vec: DataFrame, *, block: int = 4096, broadcast_trg: bool | str = "auto"
-) -> DataFrame:
-    """Quantized softmax-row entropy (reference entropy.py:5-12) ->
-    ``(i, entropy)``: ``H = (mx + ln(S/1e6)) - tsum/1e9`` with
-    ``tsum = sum_k floor(w * s * 1e9 + .5)`` an exact integer sum.
-    Large class tables take the blocked tile path (mx sweep, exact S
-    merge, exact tsum merge)."""
-    if broadcast_trg == "auto":
-        broadcast_trg = rows_for_choice(vec) <= BROADCAST_MAX_ROWS
-    if not broadcast_trg:
-        return _entropy_gate_blocked(vec, block=block)
-    _rids, rq = _collect_kv(vec)
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast(rq)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rmat = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lq = _quant(vec_mat(pdf["vec"]))
-            s, mx, e, S = _softmax_den_num(lq, rmat, 1e12)
-            w = e / S[:, None]
-            tq = np.floor(w * s * Q_W + 0.5)
-            tsum = tq.sum(axis=1)                    # exact: ints < 2^53
-            h = mx + np.log(S / Q_EXP) - tsum / Q_W
-            yield pd.DataFrame({"i": pdf["i"].to_numpy(), "entropy": h})
-
-    out = _spread(vec.select("i", "vec")).mapInPandas(
-        run, "i long, entropy double"
-    )
-    return out.select("i", F.round("entropy", 6).alias("entropy"))
-
-
-def _entropy_gate_blocked(vec: DataFrame, *, block: int) -> DataFrame:
-    """Large-class-table tile path of :func:`entropy_gate`."""
-    q = vec.select("i", "vec")
-    grid = block_grid(q, q, block)
-    mx = _blocked_mx(q, q, 1e12, grid)
-    q_mx = q.join(mx, "i")
-
-    def s_kernel(lids, lmat, extra, rids, rmat):
-        s = (_quant(lmat) @ _quant(rmat).T) / 1e12
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        return pd.DataFrame({"i": lids, "sp": e.sum(axis=1).astype(np.int64)})
-
-    sp = blocked_partials(
-        q_mx, q, s_kernel, "i long, sp long", grid=grid, left_extra=("mx",),
-    )
-    sden = sp.groupBy("i").agg(F.sum("sp").alias("st"))
-    q_aug = q_mx.join(sden, "i")
-
-    def t_kernel(lids, lmat, extra, rids, rmat):
-        s = (_quant(lmat) @ _quant(rmat).T) / 1e12
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        S = extra["st"].to_numpy().astype(np.float64)
-        w = e / S[:, None]
-        tq = np.floor(w * s * Q_W + 0.5)
-        return pd.DataFrame({"i": lids, "tp": tq.sum(axis=1).astype(np.int64)})
-
-    tp = blocked_partials(
-        q_aug, q, t_kernel, "i long, tp long",
-        grid=grid, left_extra=("mx", "st"),
-    )
-    agg = (
-        tp.groupBy("i").agg(F.sum("tp").alias("tsum"))
-        .join(sden, "i").join(mx, "i")
-    )
-    h = (
-        F.col("mx")
-        + F.log(F.col("st").cast("double") / F.lit(Q_EXP))
-        - F.col("tsum").cast("double") / F.lit(Q_W)
-    )
-    return agg.select("i", F.round(h, 6).alias("entropy"))
-
-
-def xentropy_grads_gate(
-    vec: DataFrame, *, block: int = 4096, broadcast_trg: bool | str = "auto"
-) -> DataFrame:
-    """Quantized cross-entropy gradients (reference xentropy.py:15-37,
-    cotangent ones) -> ``(which, i, d, val)``, which in {gpred, gtrg}:
-    ``delta = floor(w*1e6 + .5) - 1e6*onehot``; both gradient legs are
-    exact integer matmuls scatter-added by ``sum(long)``.  Large class
-    tables take the blocked tile path (row-max sweep, exact long-summed
-    S, per-tile delta partials) — bit-identical to the broadcast path."""
-    pred = vec.select("i", "vec", "label")
-    trg = vec.select("i", "vec")
-    parts = _xe_grads_parts(
-        pred, trg, block=block, broadcast_trg=broadcast_trg
-    )
-    return _xent_grads_finalize(parts)
-
-
-def _xe_grads_parts(
-    pred: DataFrame,
-    trg: DataFrame,
-    *,
-    block: int,
-    broadcast_trg: bool | str = "auto",
-) -> DataFrame:
-    """Un-finalized xentropy-gradient partials for a *general*
-    (pred, trg) pair -> ``(which, i, nums array<long>)`` rows with
-    which in {gpred, gtrg} and 1e12-scaled integer numerators (NOT yet
-    merged or micro-rounded) — the form a chained upstream backward
-    consumes.  ``pred`` carries ``(i, vec, label)``."""
-    if broadcast_trg == "auto":
-        broadcast_trg = rows_for_choice(trg) <= BROADCAST_MAX_ROWS
-    if not broadcast_trg:
-        return _xe_grads_parts_blocked(pred, trg, block=block)
-    rids, rq = _collect_kv(trg)
-    pos = {int(r): k for k, r in enumerate(rids)}
-    spark = pred.sparkSession
-    b = spark.sparkContext.broadcast((rids, rq, pos))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _rids, rmat, posmap = b.value
-        n, d = rmat.shape
-        gtrg_acc = np.zeros((n, d), dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lq = _quant(vec_mat(pdf["vec"]))
-            _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
-            w = e / S[:, None]
-            delta = np.floor(w * Q_DELTA + 0.5)
-            cols = np.array([posmap[int(l)] for l in pdf["label"]])
-            delta[np.arange(len(pdf)), cols] -= Q_DELTA
-            gpred = delta @ rmat                     # exact: <= ~1.2e15
-            gtrg_acc += (delta.T @ lq).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "gpred",
-                "i": pdf["i"].to_numpy(),
-                "nums": list(gpred.astype(np.int64)),
-            })
-        yield pd.DataFrame({"which": "gtrg", "i": _rids, "nums": list(gtrg_acc)})
-
-    return _spread(pred.select("i", "vec", "label")).mapInPandas(
-        run, "which string, i long, nums array<long>"
-    )
-
-
-def _xent_grads_finalize(parts: DataFrame) -> DataFrame:
-    merged = _merge_long_arrays(parts, ["which", "i"])
-    out = merged.select("which", "i", F.posexplode("nums").alias("d", "num"))
-    micro = _micro_col("num", 1_000_000)             # 1e12-scaled numerators
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
-
-
-def _xentropy_grads_gate_blocked(vec: DataFrame, *, block: int) -> DataFrame:
-    """Large-class-table tile path of :func:`xentropy_grads_gate` —
-    bit-identical to the broadcast path (exact integer merges)."""
-    pred = vec.select("i", "vec", "label")
-    trg = vec.select("i", "vec")
-    parts = _xe_grads_parts_blocked(pred, trg, block=block)
-    return _xent_grads_finalize(parts)
-
-
-def _xe_grads_parts_blocked(
-    pred: DataFrame, trg: DataFrame, *, block: int
-) -> DataFrame:
-    """Tile-path twin of the broadcast branch of :func:`_xe_grads_parts`
-    for a general (pred, trg) pair — un-finalized integer partials."""
-    grid = block_grid(pred, trg, block)
-    mx = _blocked_mx(pred, trg, 1e12, grid)
-    p_mx = pred.join(mx, "i")
-
-    def s_kernel(lids, lmat, extra, rids, rmat):
-        s = (_quant(lmat) @ _quant(rmat).T) / 1e12
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        return pd.DataFrame({"i": lids, "sp": e.sum(axis=1).astype(np.int64)})
-
-    sp = blocked_partials(
-        p_mx, trg, s_kernel, "i long, sp long", grid=grid, left_extra=("mx",),
-    )
-    sden = sp.groupBy("i").agg(F.sum("sp").alias("st"))
-    p_aug = p_mx.join(sden, "i")
-
-    def leg_kernel(lids, lmat, extra, rids, rmat):
-        lq = _quant(lmat)
-        rq = _quant(rmat)
-        s = (lq @ rq.T) / 1e12
-        e = np.floor(np.exp(s - extra["mx"].to_numpy()[:, None]) * Q_EXP + 0.5)
-        S = extra["st"].to_numpy().astype(np.float64)
-        w = e / S[:, None]
-        delta = np.floor(w * Q_DELTA + 0.5)
-        # one-hot only when the true class id lives in this tile
-        # (reference xentropy.py:12 tile-local one-hot)
-        lab = extra["label"].to_numpy()
-        delta -= Q_DELTA * (lab[:, None] == rids[None, :])
-        gpred_p = delta @ rq                 # exact per tile: <= ~2.5e15
-        gtrg_p = delta.T @ lq
-        return pd.concat(
-            [
-                pd.DataFrame({"which": "gpred", "i": lids,
-                              "nums": list(gpred_p.astype(np.int64))}),
-                pd.DataFrame({"which": "gtrg", "i": rids,
-                              "nums": list(gtrg_p.astype(np.int64))}),
-            ],
-            ignore_index=True,
-        )
-
-    return blocked_partials(
-        p_aug, trg, leg_kernel, "which string, i long, nums array<long>",
-        grid=grid, left_extra=("mx", "st", "label"),
-    )
-
-
-def attention_xe_grads_gate_fused(
-    vec: DataFrame, *, broadcast_kv: bool | str = "auto"
-) -> DataFrame:
-    """Attention grads + xentropy grads from ONE broadcast pass ->
-    ``(which, i, d, val)``, ``which`` in {att_gq, att_gk, att_gv,
-    xe_gpred, xe_gtrg}: both operators recompute the SAME unscaled
-    score/softmax chain (s, mx, e, S) and differ only in the jacobian
-    they push through it — the fused kernel derives all five legs from
-    one chain, saving a full chain recomputation vs separate calls.
-    Values are bit-identical to :func:`attention_grads_gate` /
-    :func:`xentropy_grads_gate` (same math, same integer grids — pinned
-    by test); large inputs fall back to the per-op blocked tile paths.
-    """
-    if broadcast_kv == "auto":
-        broadcast_kv = rows_for_choice(vec) <= BROADCAST_MAX_ROWS
-
-    def tag(df: DataFrame, prefix: str) -> DataFrame:
-        return df.select(
-            F.concat(F.lit(prefix), F.col("which")).alias("which"),
-            "i", "d", "val",
-        )
-
-    if not broadcast_kv:
-        a = tag(
-            _grads_finalize(_attention_grads_parts_blocked(vec, block=4096)),
-            "att_",
-        )
-        x = tag(_xentropy_grads_gate_blocked(vec, block=4096), "xe_")
-        return a.unionByName(x)
-
-    rids, rq = _collect_kv(vec)
-    vsq = rq.sum(axis=1)
-    pos = {int(r): k for k, r in enumerate(rids)}
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast((rids, rq, vsq, pos))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _rids, rmat, vs, posmap = b.value
-        n, d = rmat.shape
-        gk_acc = np.zeros((n, d), dtype=np.int64)
-        gv_acc = np.zeros(n, dtype=np.int64)
-        gtrg_acc = np.zeros((n, d), dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lq = _quant(vec_mat(pdf["vec"]))
-            _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
-            w = e / S[:, None]
-            # --- attention legs (reference attention.py:11-29) ---
-            rnum = e.astype(np.int64) @ vs.astype(np.int64)
-            t = vs[None, :] / Q_IN - (rnum / (S * Q_IN))[:, None]
-            gs = np.floor(w * t * Q_GS + 0.5)
-            wq = np.floor(w * Q_W + 0.5)
-            gk_acc += (gs.T @ lq).astype(np.int64)
-            gv_acc += wq.sum(axis=0).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "att_gq",
-                "i": pdf["i"].to_numpy(),
-                "nums": list((gs @ rmat).astype(np.int64)),
-            })
-            # --- xentropy legs (reference xentropy.py:15-37) ---
-            delta = np.floor(w * Q_DELTA + 0.5)
-            cols = np.array([posmap[int(l)] for l in pdf["label"]])
-            delta[np.arange(len(pdf)), cols] -= Q_DELTA
-            gtrg_acc += (delta.T @ lq).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "xe_gpred",
-                "i": pdf["i"].to_numpy(),
-                "nums": list((delta @ rmat).astype(np.int64)),
-            })
-        yield pd.DataFrame({"which": "att_gk", "i": _rids, "nums": list(gk_acc)})
-        yield pd.DataFrame({
-            "which": "att_gv", "i": _rids,
-            "nums": list(np.repeat(gv_acc[:, None], d, axis=1)),
-        })
-        yield pd.DataFrame({"which": "xe_gtrg", "i": _rids, "nums": list(gtrg_acc)})
-
-    parts = _spread(vec.select("i", "vec", "label")).mapInPandas(
-        run, "which string, i long, nums array<long>"
-    )
-    merged = _merge_long_arrays(parts, ["which", "i"])
-    out = merged.select("which", "i", F.posexplode("nums").alias("d", "num"))
-    micro = (
-        F.when(F.col("which") == "att_gv", _micro_col("num", 1_000))
-        .when(F.col("which").isin("att_gq", "att_gk"), _micro_col("num", 10_000))
-        .otherwise(_micro_col("num", 1_000_000))  # xe legs: 1e12-scaled
-    )
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
-
-
-def ml_grads_gate_fused(
-    vec: DataFrame,
-    *,
-    broadcast_kv: bool | str = "auto",
-    cache_key: str | None = None,
-) -> DataFrame:
-    """ALL EIGHT backward legs from ONE broadcast pass -> ``(which, i,
-    d, val)``, which in {att_gq, att_gk, att_gv, xe_gpred, xe_gtrg,
-    mlp_gx, mlp_gp, mlp_gq} — the r6 extension of
-    :func:`attention_xe_grads_gate_fused` that folds the MLP backward
-    into the same kernel: the attention/xentropy legs share the softmax
-    chain, the MLP legs share the already-loaded ``xq`` batch, and all
-    partials ride ONE merge exchange instead of two union branches each
-    scanning the corpus.  Values are bit-identical to the separate
-    kernels (exact int64 accumulators are partition-order-free).
-    Large inputs fall back to the existing blocked unions."""
-    if broadcast_kv == "auto":
-        broadcast_kv = rows_for_choice(vec) <= BROADCAST_MAX_ROWS
-    if not broadcast_kv:
-        ax = attention_xe_grads_gate_fused(vec, broadcast_kv=False)
-        m = mlp_grads_gate(vec, cache_key=cache_key).select(
-            F.concat(F.lit("mlp_"), F.col("which")).alias("which"),
-            "i", "d", "val",
-        )
-        return ax.unionByName(m)
-
-    wq = _mlp_wq(vec, cache_key=cache_key)
-    qs_int = wq.sum(axis=1).astype(np.int64)
-    rids, rq = _collect_kv(vec)
-    vsq = rq.sum(axis=1)
-    pos = {int(r): k for k, r in enumerate(rids)}
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast((rids, rq, vsq, pos, wq, qs_int))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _rids, rmat, vs, posmap, w, qs = b.value
-        n, d = rmat.shape
-        gk_acc = np.zeros((n, d), dtype=np.int64)
-        gv_acc = np.zeros(n, dtype=np.int64)
-        gtrg_acc = np.zeros((n, d), dtype=np.int64)
-        gp_acc = np.zeros((d, w.shape[1]), dtype=np.int64)
-        gq_acc = np.zeros(d, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lq = _quant(vec_mat(pdf["vec"]))
-            # --- shared softmax chain (attention + xentropy legs) ---
-            _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
-            w_sm = e / S[:, None]
-            rnum = e.astype(np.int64) @ vs.astype(np.int64)
-            t = vs[None, :] / Q_IN - (rnum / (S * Q_IN))[:, None]
-            gs = np.floor(w_sm * t * Q_GS + 0.5)
-            wqn = np.floor(w_sm * Q_W + 0.5)
-            gk_acc += (gs.T @ lq).astype(np.int64)
-            gv_acc += wqn.sum(axis=0).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "att_gq",
-                "i": pdf["i"].to_numpy(),
-                "nums": list((gs @ rmat).astype(np.int64)),
-            })
-            delta = np.floor(w_sm * Q_DELTA + 0.5)
-            cols = np.array([posmap[int(l)] for l in pdf["label"]])
-            delta[np.arange(len(pdf)), cols] -= Q_DELTA
-            gtrg_acc += (delta.T @ lq).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "xe_gpred",
-                "i": pdf["i"].to_numpy(),
-                "nums": list((delta @ rmat).astype(np.int64)),
-            })
-            # --- MLP legs from the same xq batch (mlp_grads_gate) ---
-            h_int = np.maximum(lq @ w, 0.0)
-            hs = np.floor(h_int / 1e12 * Q_IN + 0.5)
-            gh = (h_int > 0) * qs[None, :].astype(np.float64)
-            gp_acc += lq.astype(np.int64).T @ gh.astype(np.int64)
-            gq_acc += hs.sum(axis=0).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "mlp_gx",
-                "i": pdf["i"].to_numpy(),
-                "nums": list((gh @ w.T).astype(np.int64)),
-            })
-        yield pd.DataFrame({"which": "att_gk", "i": _rids, "nums": list(gk_acc)})
-        yield pd.DataFrame({
-            "which": "att_gv", "i": _rids,
-            "nums": list(np.repeat(gv_acc[:, None], d, axis=1)),
-        })
-        yield pd.DataFrame({"which": "xe_gtrg", "i": _rids, "nums": list(gtrg_acc)})
-        yield pd.DataFrame({
-            "which": "mlp_gp", "i": np.arange(d, dtype=np.int64),
-            "nums": list(gp_acc),
-        })
-        yield pd.DataFrame({
-            "which": "mlp_gq", "i": np.arange(d, dtype=np.int64),
-            "nums": list(np.repeat(gq_acc[:, None], w.shape[1], axis=1)),
-        })
-
-    parts = _spread(vec.select("i", "vec", "label")).mapInPandas(
-        run, "which string, i long, nums array<long>"
-    )
-    merged = _merge_long_arrays(parts, ["which", "i"])
-    out = merged.select("which", "i", F.posexplode("nums").alias("d", "num"))
-    micro = (
-        F.when(F.col("which") == "att_gv", _micro_col("num", 1_000))
-        .when(F.col("which").isin("att_gq", "att_gk"), _micro_col("num", 10_000))
-        .when(F.col("which") == "mlp_gq", F.col("num"))
-        .otherwise(_micro_col("num", 1_000_000))  # xe + mlp_gx/gp: 1e12
-    )
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
-
-
-# ------------------------------------------------------------ gram / mlp
-
-def gram_gate(vec: DataFrame, *, relu: bool = False) -> DataFrame:
-    """Quantized ``X^T X`` -> ``(j1, j2, val)``; ``relu`` clamps the
-    aggregate at 0 (reference relu_matmul.cpp:9-21).  Map-side exact
-    int64 D x D partials, ``sum(long)`` merge — O(D^2) shuffle."""
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(vec_mat(pdf["vec"]))
-            g = (xq.T @ xq).astype(np.int64)         # exact: <= N * 3.6e11
-            acc = g if acc is None else acc + g
-        if acc is not None:
-            yield pd.DataFrame({
-                "j1": np.arange(acc.shape[0], dtype=np.int64),
-                "nums": list(acc),
-            })
-
-    # no _spread: the per-batch gram fold is one D x D matmul (~ms);
-    # the exchange costs more than the kernel (measured r18)
-    parts = vec.select("vec").mapInPandas(
-        partial, "j1 long, nums array<long>"
-    )
-    merged = _merge_long_arrays(parts, ["j1"])
-    out = merged.select("j1", F.posexplode("nums").alias("j2", "num"))
-    if relu:
-        out = out.withColumn("num", F.greatest("num", F.lit(0).cast("long")))
-    micro = _micro_col("num", 1_000_000)             # 1e12-scaled numerators
-    return out.select(
-        "j1", F.col("j2").cast("long").alias("j2"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
-
-
-def gram_gate_both(vec: DataFrame) -> DataFrame:
-    """Both gram legs from ONE pass -> ``(which, j1, j2, val)``,
-    ``which`` in {gram, relu}: the exact int64 D x D partials are
-    computed and merged once (the legs differ only in the final
-    GREATEST clamp), halving scan + reduction work vs two
-    :func:`gram_gate` calls."""
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(vec_mat(pdf["vec"]))
-            g = (xq.T @ xq).astype(np.int64)
-            acc = g if acc is None else acc + g
-        if acc is not None:
-            yield pd.DataFrame({
-                "j1": np.arange(acc.shape[0], dtype=np.int64),
-                "nums": list(acc),
-            })
-
-    from gemmsql.caching import scoped_cache
-
-    # no _spread: the per-batch gram fold is one D x D matmul (~ms);
-    # the exchange costs more than the kernel (measured r18)
-    parts = vec.select("vec").mapInPandas(
-        partial, "j1 long, nums array<long>"
-    )
-    # D rows of D-long arrays — tiny; query-scoped so it ages out
-    merged = scoped_cache(_merge_long_arrays(parts, ["j1"]), fresh_scope=True)
-    out = merged.select("j1", F.posexplode("nums").alias("j2", "num"))
-    plain = out.select(
-        F.lit("gram").alias("which"), "j1",
-        F.col("j2").cast("long").alias("j2"),
-        (_micro_col("num", 1_000_000).cast("double") / F.lit(Q_IN)).alias("val"),
-    )
-    relu_out = out.withColumn("num", F.greatest("num", F.lit(0).cast("long")))
-    relu = relu_out.select(
-        F.lit("relu").alias("which"), "j1",
-        F.col("j2").cast("long").alias("j2"),
-        (_micro_col("num", 1_000_000).cast("double") / F.lit(Q_IN)).alias("val"),
-    )
-    return plain.unionByName(relu)
+    leg = ("", "k" if v_vec is None else "v")
+    return _attention_fold(
+        q_vec, kv_vec, v_vec, (leg,),
+        scale=scale, block=block, broadcast_kv=broadcast_kv,
+    ).drop("which")
 
 
 def attention_gate_plain_kv(
@@ -1122,77 +381,406 @@ def attention_gate_plain_kv(
     *,
     broadcast_kv: bool | str = "auto",
 ) -> DataFrame:
-    """Plain (K == V) and independent-V attention from ONE broadcast
-    pass -> ``(which, i, d, val)``, ``which`` in {plain, kv}: the two
-    legs share the exact score/softmax chain (e, S) and differ only in
-    the value matrix of the final integer matmul.  Falls back to two
-    :func:`attention_gate` calls when KV exceeds the broadcast budget
-    (the blocked path re-derives the chain per tile anyway)."""
-    spark = q_vec.sparkSession
-    if broadcast_kv == "auto":
-        broadcast_kv = rows_for_choice(kv_vec) <= BROADCAST_MAX_ROWS
-    if not broadcast_kv:
-        plain = attention_gate(q_vec, kv_vec, broadcast_kv=False).select(
-            F.lit("plain").alias("which"), "i", "d", "val"
+    """Plain (K == V) and independent-V attention from ONE pass ->
+    ``(which, i, d, val)``, ``which`` in {plain, kv}: the two legs
+    share the exact score/softmax chain (e, S) and differ only in the
+    value matrix of the final integer matmul."""
+    return _attention_fold(
+        q_vec, kv_vec, v_vec, (("plain", "k"), ("kv", "v")),
+        scale=False, block=4096, broadcast_kv=broadcast_kv,
+    )
+
+
+def attention_batched_gate(bvec: DataFrame, *, scale: bool = True) -> DataFrame:
+    """Quantized batched self-attention (reference custom_attention.cpp:
+    7-38): attention within each batch id, one cogroup on ``b``; each
+    group runs :func:`attention_gate`'s kernel over every row of its
+    batch."""
+    kernel = _attention_kernel(scale, None, (("", "k"),))
+    schema = "b long, " + _PARTS
+
+    def per_batch(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if len(left) == 0 or len(right) == 0:
+            return pd.DataFrame(columns=["b", "which", "i", "nums"])
+        parts = kernel(
+            left["i"].to_numpy(), vec_mat(left["vec"]), {},
+            right["kv_i"].to_numpy(), vec_mat(right["kv_vec"]),
         )
-        kv = attention_gate(
-            q_vec, kv_vec, v_vec=v_vec, broadcast_kv=False
-        ).select(F.lit("kv").alias("which"), "i", "d", "val")
-        return plain.unionByName(kv)
+        return parts.assign(b=left["b"].iloc[0])[["b", "which", "i", "nums"]]
 
-    pdf_kv = (
-        kv_vec.select("i", "vec")
-        .join(v_vec.select("i", F.col("vec").alias("vvec")), "i")
-        .toPandas()
+    kv = bvec.select("b", F.col("i").alias("kv_i"), F.col("vec").alias("kv_vec"))
+    rows = bvec.groupBy("b").cogroup(kv.groupBy("b")).applyInPandas(per_batch, schema)
+    return _attention_finish(rows).drop("which")
+
+
+# ---------------------------------------------------- xentropy / entropy
+
+def _xentropy_kernel(lids, lmat, extra, rids, rmat) -> pd.DataFrame:
+    """Per-call ``(mx, st = rowsum(e), slab)``: ``slab`` is the label's
+    score, 0.0 unless the label's row is among this call's."""
+    s, mx, e = _chain(_quant(lmat), _quant(rmat), extra)
+    return pd.DataFrame({
+        "i": lids, "mx": mx, "st": e.sum(axis=1).astype(np.int64),
+        "slab": (s * _onehot(extra, rids)).sum(axis=1),
+    })
+
+
+def xentropy_gate(
+    vec: DataFrame, *, block: int = 4096, broadcast_trg: bool | str = "auto"
+) -> DataFrame:
+    """Quantized factored cross-entropy (reference xentropy.py:5-13) ->
+    ``(i, loss)``: ``loss = (mx - s_label) + ln(S / 1e6)``, with the
+    exact integer score/softmax chain.  The single ``ln`` is the only
+    unquantized transcendental: a 1-ulp libm wiggle flips ROUND(,6)
+    with probability ~1e-9 per row.  On the tiled path the true-class
+    score merges by sum — at most one tile contributes a non-zero, so
+    the double sum is exact."""
+    pred = vec.select("i", "vec", "label")
+    trg = vec.select("i", "vec")
+    grid = plan_tiles(broadcast_trg, pred, trg, block, max_rows=BROADCAST_MAX_ROWS)
+    left, stats = _with_row_stats(pred, trg, grid)
+    loss = (
+        F.col("mx") - F.col("slab")
+        + F.log(F.col("st").cast("double") / F.lit(Q_EXP))
     )
-    rq = _quant(vec_mat(pdf_kv["vec"]))
-    vq = _quant(vec_mat(pdf_kv["vvec"]))
-    b = spark.sparkContext.broadcast((rq, vq))
+    return fold(
+        left, trg, _xentropy_kernel, "i long, mx double, st long, slab double",
+        merge=lambda p: p.groupBy("i").agg(
+            F.max("mx").alias("mx"), F.sum("st").alias("st"),
+            F.sum("slab").alias("slab"),
+        ),
+        finish=lambda r: r.select("i", F.round(loss, 6).alias("loss")),
+        grid=grid, left_extra=("label", *stats),
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rmat, vmat = b.value
-        d = rmat.shape[1]
+
+def _entropy_kernel(lids, lmat, extra, rids, rmat) -> pd.DataFrame:
+    """Per-call ``(mx, st, tp)``: ``tp`` the exact integer sum of
+    ``floor(w * s * 1e9 + .5)`` over this call's right rows."""
+    s, mx, e = _chain(_quant(lmat), _quant(rmat), extra)
+    S = _row_sum(e, extra)
+    w = e / S[:, None]
+    tq = np.floor(w * s * Q_W + 0.5)
+    return pd.DataFrame({
+        "i": lids, "mx": mx, "st": S.astype(np.int64),
+        "tp": tq.sum(axis=1).astype(np.int64),
+    })
+
+
+def entropy_gate(
+    vec: DataFrame, *, block: int = 4096, broadcast_trg: bool | str = "auto"
+) -> DataFrame:
+    """Quantized softmax-row entropy (reference entropy.py:5-12) ->
+    ``(i, entropy)``: ``H = (mx + ln(S/1e6)) - tsum/1e9`` with
+    ``tsum = sum_k floor(w * s * 1e9 + .5)`` an exact integer sum.  The
+    tiled path pre-sweeps mx and the exact S, then merges tsum."""
+    q = vec.select("i", "vec")
+    grid = plan_tiles(broadcast_trg, q, q, block, max_rows=BROADCAST_MAX_ROWS)
+    left, stats = _with_row_stats(q, q, grid, sums=("st",))
+    h = (
+        F.col("mx")
+        + F.log(F.col("st").cast("double") / F.lit(Q_EXP))
+        - F.col("tp").cast("double") / F.lit(Q_W)
+    )
+    return fold(
+        left, q, _entropy_kernel, "i long, mx double, st long, tp long",
+        merge=lambda p: p.groupBy("i").agg(
+            F.max("mx").alias("mx"), F.max("st").alias("st"),
+            F.sum("tp").alias("tp"),
+        ),
+        finish=lambda r: r.select("i", F.round(h, 6).alias("entropy")),
+        grid=grid, left_extra=stats,
+    )
+
+
+# --------------------------------------------------------- gradient legs
+
+def _att_legs(lq, rq, e, S, extra):
+    """Self-attention vjp numerators, cotangent ones (reference
+    attention.py:11-29): the softmax-jacobian term ``gs = w * (vsum -
+    r)`` with ``w = e/S`` and ``r = (e @ vsq) / (S * 1e6)`` on the 1e4
+    grid -> ``gq`` per left row and ``gk`` per right row (1e10 grid),
+    ``gv`` per right row (1e9 grid).  ``rnum = e @ vsq`` is the tiled
+    pre-sweep's ``rn`` when ``extra`` has it."""
+    vsq = rq.sum(axis=1)                            # int-valued, exact
+    if "rn" in extra:
+        rnum = extra["rn"].to_numpy(dtype=np.int64)
+    else:
+        rnum = e.astype(np.int64) @ vsq.astype(np.int64)
+    w = e / S[:, None]
+    t = vsq[None, :] / Q_IN - (rnum / (S * Q_IN))[:, None]
+    gs = np.floor(w * t * Q_GS + 0.5)              # int-valued float64
+    wq = np.floor(w * Q_W + 0.5)
+    gv = np.repeat(wq.sum(axis=0)[:, None], rq.shape[1], axis=1)
+    return gs @ rq, gs.T @ lq, gv                   # exact: <= ~1.9e15
+
+
+def _xe_legs(lq, rq, e, S, extra, rids):
+    """Cross-entropy vjp numerators, cotangent ones (reference
+    xentropy.py:15-37): ``delta = floor(w*1e6 + .5) - 1e6*onehot`` ->
+    ``gpred`` per left row, ``gtrg`` per right row (1e12 grid)."""
+    delta = np.floor(e / S[:, None] * Q_DELTA + 0.5)
+    delta -= Q_DELTA * _onehot(extra, rids)
+    return delta @ rq, delta.T @ lq                 # exact: <= ~2.5e15
+
+
+def _mlp_hidden(xq: np.ndarray, w: np.ndarray):
+    """``h_int = relu(xq @ Wq)`` (exact: <= 6.4e13) and its 1e6
+    re-quantization ``hs = floor(h/1e12 * 1e6 + .5)``."""
+    h_int = np.maximum(xq @ w, 0.0)
+    return h_int, np.floor(h_int / 1e12 * Q_IN + 0.5)
+
+
+def _mlp_pred(xq: np.ndarray, w: np.ndarray) -> np.ndarray:
+    """The quantized MLP forward ``relu(X W) W`` as integer numerators
+    on the 1e6 grid: ``floor(hs @ Wq / 1e12 * 1e6 + .5)``."""
+    _h, hs = _mlp_hidden(xq, w)
+    return np.floor(hs @ w / 1e12 * Q_IN + 0.5)   # hs @ w exact: <= ~4.1e15
+
+
+def _mlp_legs(xq: np.ndarray, w: np.ndarray):
+    """MLP vjp numerators, cotangent ones, P = Q = W (reference
+    mlp.py:9-16): ``gh = 1[h>0] * rowsum(Wq)`` exact ints; ``gx`` per
+    row and ``gp`` (1e12 grid), ``gq`` bare 1e6-scaled sums, both D x
+    K."""
+    h_int, hs = _mlp_hidden(xq, w)
+    gh = (h_int > 0) * w.sum(axis=1)[None, :]
+    gq = np.repeat(hs.sum(axis=0)[:, None], w.shape[1], axis=1)
+    return gh @ w.T, xq.astype(np.int64).T @ gh.astype(np.int64), gq
+
+
+def _hidden_grad(h_int, gs, wi, grid: float = Q_IN) -> np.ndarray:
+    """The relu-masked hidden cotangent of an int64 cotangent ``gs``:
+    ``ga = gs W^T`` (int64 exact) re-quantized to ``grid``,
+    ``floor(ga / (1e6 grid) * grid + .5)``, zero where ``h <= 0``."""
+    ga = gs @ wi.T
+    gam = np.floor(ga.astype(np.float64) / (Q_IN * grid) * grid + 0.5)
+    return np.where(h_int > 0, gam.astype(np.int64), np.int64(0))
+
+
+def _mlp_vjp(xq, w, gs):
+    """The MLP backward of an int64 cotangent ``gs`` on the 1e6 grid ->
+    ``(h_int, ghq, gp = X^T ghq, gq = hs^T gs)``, every matmul int64
+    (exact below 9.2e18)."""
+    h_int, hs = _mlp_hidden(xq, w)
+    ghq = _hidden_grad(h_int, gs, w.astype(np.int64))
+    return h_int, ghq, xq.astype(np.int64).T @ ghq, hs.astype(np.int64).T @ gs
+
+
+def _grad_legs(ops, lids, lq, extra, rids, rq, wq=None) -> list:
+    """The legs of each op in ``ops`` ("att", "xe", "mlp") over ONE
+    shared score chain of quantized left rows ``lq`` against ``rq``, as
+    :func:`_parts` legs; the MLP's come from the same ``lq`` and the
+    weights ``wq``.  Legs are named ``gq``... for one op, ``att_gq``...
+    for several."""
+
+    def tag(op: str, name: str) -> str:
+        return name if len(ops) == 1 else f"{op}_{name}"
+
+    _s, _mx, e = _chain(lq, rq, extra)
+    S = _row_sum(e, extra)
+    legs = []
+    if "att" in ops:
+        gq, gk, gv = _att_legs(lq, rq, e, S, extra)
+        legs += [(tag("att", "gq"), lids, gq), (tag("att", "gk"), rids, gk),
+                 (tag("att", "gv"), rids, gv)]
+    if "xe" in ops:
+        gpred, gtrg = _xe_legs(lq, rq, e, S, extra, rids)
+        legs += [(tag("xe", "gpred"), lids, gpred), (tag("xe", "gtrg"), rids, gtrg)]
+    if "mlp" in ops:
+        gx, gp, gq = _mlp_legs(lq, wq)
+        legs += _weight_legs(lids, len(wq), tag("mlp", ""), gx, gp, gq)
+    return legs
+
+
+def _weight_legs(lids, d: int, prefix: str, gx, gp, gq) -> list:
+    """``gx`` per left row, ``gp``/``gq`` per weight row, as legs."""
+    ids = np.arange(d, dtype=np.int64)
+    return [(prefix + "gx", lids, gx), (prefix + "gp", ids, gp), (prefix + "gq", ids, gq)]
+
+
+def _grads_kernel(ops: tuple[str, ...], wq: np.ndarray | None = None) -> Kernel:
+    """:func:`_grad_legs` as a fold-executor kernel."""
+
+    def kernel(lids, lmat, extra, rids, rmat):
+        return _parts(*_grad_legs(ops, lids, _quant(lmat), extra, rids, _quant(rmat), wq))
+
+    return kernel
+
+
+def _grads_parts(
+    left: DataFrame,
+    right: DataFrame,
+    grid: Grid | None,
+    ops: tuple[str, ...],
+    wq: np.ndarray | None = None,
+) -> DataFrame:
+    """Unmerged gradient partials ``(which, i, nums)`` of
+    :func:`_grads_kernel` on a resolved layout: one sweep on the
+    broadcast path, the row-statistics pre-sweeps then the leg sweep on
+    the tiled one.  ``left`` carries ``label`` when ``ops`` has "xe"."""
+    sums = ("st", "rn") if "att" in ops else ("st",)
+    left, stats = _with_row_stats(left, right, grid, sums)
+    label = ("label",) if "xe" in ops else ()
+    return tile_partials(
+        left, right, _grads_kernel(ops, wq), _PARTS,
+        grid=grid, left_extra=(*label, *stats),
+    )
+
+
+def _narrow_map(
+    frame: DataFrame, payload, fn: Callable[[pd.DataFrame, object], pd.DataFrame],
+    schema,
+) -> DataFrame:
+    """``fn(batch, payload)`` over ``frame``'s non-empty Arrow batches in
+    one narrow map, ``payload`` (the weights) broadcast once: the ops
+    with no right side."""
+    b = frame.sparkSession.sparkContext.broadcast(payload)
+
+    def run(batches):
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lq = _quant(vec_mat(pdf["vec"]))
-            _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
-            den = np.broadcast_to(S[:, None], (len(pdf), d))
-            n = len(pdf)
-            ii = np.repeat(pdf["i"].to_numpy(), d)
-            dd = np.tile(np.arange(d, dtype=np.int64), n)
-            for which, vm in (("plain", rmat), ("kv", vmat)):
-                micro = _micro_ratio_np(e @ vm, den)
-                yield pd.DataFrame({
-                    "which": which, "i": ii, "d": dd,
-                    "val": (micro / Q_IN).ravel(),
-                })
+            if len(pdf):
+                yield fn(pdf, b.value)
 
-    return _spread(q_vec.select("i", "vec")).mapInPandas(
-        run, "which string, i long, d long, val double"
+    return frame.mapInPandas(run, schema)
+
+
+def attention_grads_gate(
+    vec: DataFrame, *, block: int = 4096, broadcast_kv: bool | str = "auto"
+) -> DataFrame:
+    """Quantized gradients of unscaled self-attention (K == V), cotangent
+    ones -> ``(which, i, d, val)`` with which in {gq, gk, gv}
+    (:func:`_att_legs`).  Every reduction is exact-integer, so both
+    physical paths and the oracle agree bit-wise: the broadcast path is
+    one narrow kernel pass, the tiled path three tile sweeps (row max,
+    the exact long-summed (S, rnum), the legs); both scatter-add by
+    ``sum(long)`` (the reference ``g.add_`` monoid, core.py:56-57)."""
+    q = vec.select("i", "vec")
+    grid = plan_tiles(broadcast_kv, q, q, block, max_rows=BROADCAST_MAX_ROWS)
+    return _finalize(_grads_parts(q, q, grid, ("att",)), _ATT_STEPS)
+
+
+def xentropy_grads_gate(
+    vec: DataFrame, *, block: int = 4096, broadcast_trg: bool | str = "auto"
+) -> DataFrame:
+    """Quantized cross-entropy gradients (reference xentropy.py:15-37,
+    cotangent ones) -> ``(which, i, d, val)``, which in {gpred, gtrg}
+    (:func:`_xe_legs`): both legs are exact integer matmuls
+    scatter-added by ``sum(long)``; the tiled path pre-sweeps the row
+    max and the exact long-summed S."""
+    pred = vec.select("i", "vec", "label")
+    trg = vec.select("i", "vec")
+    grid = plan_tiles(broadcast_trg, pred, trg, block, max_rows=BROADCAST_MAX_ROWS)
+    return _finalize(_grads_parts(pred, trg, grid, ("xe",)), _XE_STEPS)
+
+
+def _prefixed(prefix: str, steps: Mapping[str, int]) -> dict[str, int]:
+    return {prefix + k: v for k, v in steps.items()}
+
+
+def attention_xe_grads_gate_fused(
+    vec: DataFrame, *, broadcast_kv: bool | str = "auto"
+) -> DataFrame:
+    """Attention grads + xentropy grads from ONE pass -> ``(which, i,
+    d, val)``, ``which`` in {att_gq, att_gk, att_gv, xe_gpred,
+    xe_gtrg}: both operators recompute the SAME unscaled score/softmax
+    chain (s, mx, e, S) and differ only in the jacobian they push
+    through it, so one kernel derives all five legs from one chain.
+    Values are bit-identical to :func:`attention_grads_gate` /
+    :func:`xentropy_grads_gate` (the same legs on the same grids —
+    pinned by test)."""
+    pred = vec.select("i", "vec", "label")
+    trg = vec.select("i", "vec")
+    grid = plan_tiles(broadcast_kv, pred, trg, 4096, max_rows=BROADCAST_MAX_ROWS)
+    return _finalize(
+        _grads_parts(pred, trg, grid, ("att", "xe")),
+        _prefixed("att_", _ATT_STEPS) | _prefixed("xe_", _XE_STEPS),
     )
+
+
+def ml_grads_gate_fused(
+    vec: DataFrame,
+    *,
+    broadcast_kv: bool | str = "auto",
+    cache_key: str | None = None,
+) -> DataFrame:
+    """ALL EIGHT backward legs -> ``(which, i, d, val)``, which in
+    {att_gq, att_gk, att_gv, xe_gpred, xe_gtrg, mlp_gx, mlp_gp,
+    mlp_gq}: :func:`attention_xe_grads_gate_fused` plus
+    :func:`mlp_grads_gate`'s legs, all partials riding ONE merge.  On
+    the broadcast path the MLP legs run in the same kernel from the
+    already-quantized batch; on the tiled path a kernel call sees one
+    right block, so they run as :func:`mlp_grads_gate`'s narrow map.
+    Values are bit-identical to the separate kernels (exact int64
+    partials are partition-order-free)."""
+    wq = _mlp_wq(vec, cache_key=cache_key)
+    pred = vec.select("i", "vec", "label")
+    trg = vec.select("i", "vec")
+    grid = plan_tiles(broadcast_kv, pred, trg, 4096, max_rows=BROADCAST_MAX_ROWS)
+    if grid is None:
+        parts = _grads_parts(pred, trg, grid, ("att", "xe", "mlp"), wq)
+    else:
+        parts = _grads_parts(pred, trg, grid, ("att", "xe")).unionByName(
+            _mlp_grads_parts(vec, wq, "mlp_")
+        )
+    return _finalize(
+        parts,
+        _prefixed("att_", _ATT_STEPS) | _prefixed("xe_", _XE_STEPS)
+        | _prefixed("mlp_", _MLP_STEPS),
+    )
+
+
+# ------------------------------------------------------------ gram / mlp
+
+def _gram_parts(vec: DataFrame) -> DataFrame:
+    """Exact int64 ``D x D`` gram partials ``xq^T xq``, one per Arrow
+    batch -> ``(j1, nums, n)`` with ``n`` the batch's rows.  No spread:
+    the per-batch fold is one D x D matmul (~ms), and the exchange cost
+    more than the kernel (measured r18)."""
+
+    def partial(pdf: pd.DataFrame, _payload) -> pd.DataFrame:
+        xq = _quant(vec_mat(pdf["vec"]))
+        g = (xq.T @ xq).astype(np.int64)         # exact: <= N * 3.6e11
+        return pd.DataFrame({
+            "j1": np.arange(g.shape[0], dtype=np.int64),
+            "nums": list(g),
+            "n": len(pdf),
+        })
+
+    return _narrow_map(
+        vec.select("vec"), None, partial, "j1 long, nums array<long>, n long"
+    )
+
+
+def gram_gate_both(vec: DataFrame) -> DataFrame:
+    """Quantized ``X^T X`` and its relu clamp (reference
+    relu_matmul.cpp:9-21) from ONE pass -> ``(which, j1, j2, val)``,
+    ``which`` in {gram, relu}: the exact int64 D x D partials are
+    computed and merged once by ``sum(long)`` — O(D^2) shuffle — and
+    the legs differ only in the final GREATEST clamp."""
+    from gemmsql.caching import scoped_cache
+
+    # D rows of D-long arrays — tiny; query-scoped so it ages out
+    merged = scoped_cache(_merge_long_arrays(_gram_parts(vec), ["j1"]), fresh_scope=True)
+    out = merged.select("j1", F.posexplode("nums").alias("j2", "num"))
+    legs = []
+    for which, rows in (
+        ("gram", out),
+        ("relu", out.withColumn("num", F.greatest("num", F.lit(0).cast("long")))),
+    ):
+        legs.append(rows.select(
+            F.lit(which).alias("which"), "j1",
+            F.col("j2").cast("long").alias("j2"),
+            (_micro_col("num", 1_000_000).cast("double") / F.lit(Q_IN)).alias("val"),
+        ))
+    return legs[0].unionByName(legs[1])
 
 
 def mlp_weights_int(vec: DataFrame) -> tuple[np.ndarray, int]:
     """Exact integer gram ``G_int = sum_i vq vq^T`` and row count, the
     deterministic weight seed ``W = G / (1e12 * N)`` (driver tables
     carry no weights; reference mlp.py:84-86 uses random ones)."""
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(vec_mat(pdf["vec"]))
-            g = (xq.T @ xq).astype(np.int64)
-            yield pd.DataFrame({
-                "j1": np.arange(g.shape[0], dtype=np.int64),
-                "nums": list(g),
-                "n": len(pdf),
-            })
-
-    parts = vec.select("vec").mapInPandas(
-        partial, "j1 long, nums array<long>, n long"
-    ).toPandas()
+    parts = _gram_parts(vec).toPandas()
     n = int(parts.groupby("j1")["n"].sum().iloc[0])
     d = int(parts["j1"].max()) + 1
     g = np.zeros((d, d), dtype=np.int64)
@@ -1225,32 +813,33 @@ def mlp_gate(vec: DataFrame, *, cache_key: str | None = None) -> DataFrame:
     P = Q = W = X^T X / N) -> ``(i, k, val)``.  Chain: exact
     ``h_int = relu(xq @ Wq)``; re-quantized ``hs = floor(h/1e12 * 1e6
     + .5)``; exact ``y_int = hs @ Wq``; ``val = y_int / 1e12``.  One
-    narrow map — zero shuffle (the 100 TB shape for applying weights)."""
-    wq = _mlp_wq(vec, cache_key=cache_key)
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast(wq)
+    narrow map — zero shuffle (the 100 TB shape for applying weights;
+    no spread: the forward is two D x D matmuls per batch, ~ms)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = b.value
-        k = w.shape[1]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(vec_mat(pdf["vec"]))
-            h_int = np.maximum(xq @ w, 0.0)          # exact: <= 1.4e13
-            hs = np.floor(h_int / 1e12 * Q_IN + 0.5)
-            y_int = hs @ w                           # exact: <= ~3.2e14
-            micro = _micro_np(y_int, 1_000_000)      # 1e12-scaled
-            n = len(pdf)
-            yield pd.DataFrame({
-                "i": np.repeat(pdf["i"].to_numpy(), k),
-                "k": np.tile(np.arange(k, dtype=np.int64), n),
-                "val": (micro / Q_IN).ravel(),
-            })
+    def run(pdf: pd.DataFrame, w: np.ndarray) -> pd.DataFrame:
+        _h, hs = _mlp_hidden(_quant(vec_mat(pdf["vec"])), w)
+        micro = _micro_np(hs @ w, 1_000_000)         # exact: <= ~3.2e14
+        n, k = micro.shape
+        return pd.DataFrame({
+            "i": np.repeat(pdf["i"].to_numpy(), k),
+            "k": np.tile(np.arange(k, dtype=np.int64), n),
+            "val": (micro / Q_IN).ravel(),
+        })
 
-    # no _spread: the forward is two D x D matmuls per batch (~ms)
-    return vec.select("i", "vec").mapInPandas(
-        run, "i long, k long, val double"
+    return _narrow_map(
+        vec.select("i", "vec"), _mlp_wq(vec, cache_key=cache_key), run,
+        "i long, k long, val double",
+    )
+
+
+def _mlp_grads_parts(vec: DataFrame, wq: np.ndarray, prefix: str = "") -> DataFrame:
+    """:func:`_mlp_legs` partials as one narrow map over ``vec``."""
+    return _narrow_map(
+        vec.select("i", "vec"), wq,
+        lambda pdf, w: _parts(*_weight_legs(
+            pdf["i"].to_numpy(), len(w), prefix, *_mlp_legs(_quant(vec_mat(pdf["vec"])), w)
+        )),
+        _PARTS,
     )
 
 
@@ -1258,86 +847,62 @@ def mlp_grads_gate(
     vec: DataFrame, *, cache_key: str | None = None
 ) -> DataFrame:
     """Quantized MLP gradients (reference mlp.py:9-16, cotangent ones,
-    P = Q = W) -> ``(which, i, d, val)``, which in {gx, gp, gq}:
-    ``gh = 1[h>0] * rowsum(Wq)`` exact ints; gx a per-row exact dgemm;
-    gp/gq per-partition int64 partials merged by ``sum(long)``."""
-    wq = _mlp_wq(vec, cache_key=cache_key)
-    qs_int = wq.sum(axis=1).astype(np.int64)         # 1e6-scaled row sums
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast((wq, qs_int))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w, qs = b.value
-        d, k = w.shape
-        gp_acc = np.zeros((d, k), dtype=np.int64)
-        gq_acc = np.zeros(d, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(vec_mat(pdf["vec"]))
-            h_int = np.maximum(xq @ w, 0.0)
-            hs = np.floor(h_int / 1e12 * Q_IN + 0.5)
-            gh = (h_int > 0) * qs[None, :].astype(np.float64)
-            gx_num = gh @ w.T                        # exact: <= ~5.3e14
-            gp_acc += xq.astype(np.int64).T @ gh.astype(np.int64)
-            gq_acc += hs.sum(axis=0).astype(np.int64)
-            yield pd.DataFrame({
-                "which": "gx",
-                "i": pdf["i"].to_numpy(),
-                "nums": list(gx_num.astype(np.int64)),
-            })
-        yield pd.DataFrame({
-            "which": "gp", "i": np.arange(d, dtype=np.int64), "nums": list(gp_acc),
-        })
-        yield pd.DataFrame({
-            "which": "gq", "i": np.arange(d, dtype=np.int64),
-            "nums": list(np.repeat(gq_acc[:, None], k, axis=1)),
-        })
-
-    parts = _spread(vec.select("i", "vec")).mapInPandas(
-        run, "which string, i long, nums array<long>"
-    )
-    merged = _merge_long_arrays(parts, ["which", "i"])
-    out = merged.select("which", "i", F.posexplode("nums").alias("d", "num"))
-    # gx/gp numerators 1e12-scaled; gq is a bare 1e6-scaled integer sum
-    micro = F.when(F.col("which") == "gq", F.col("num")).otherwise(
-        _micro_col("num", 1_000_000)
-    )
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
+    P = Q = W) -> ``(which, i, d, val)``, which in {gx, gp, gq}
+    (:func:`_mlp_legs`): one narrow map of per-batch int64 partials
+    merged by ``sum(long)``."""
+    return _finalize(
+        _mlp_grads_parts(vec, _mlp_wq(vec, cache_key=cache_key)), _MLP_STEPS
     )
 
 
 # ------------------------------------------------------- chained grads
 
-def _chain_pred(vec: DataFrame, wq: np.ndarray) -> DataFrame:
-    """Quantized MLP forward as a narrow map -> ``(i, vec, label)``
-    pred rows on the 1e6 grid (``vec = ps/1e6`` is integer-valued/1e6,
-    so the downstream gate's ``floor(v*1e6+.5)`` recovers ``ps``
-    exactly).  Same h/hs/y chain as :func:`mlp_gate`."""
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast(wq)
+def _chain_pred(vec: DataFrame, wq: np.ndarray, scale: int = 1) -> DataFrame:
+    """Quantized MLP forward as a narrow map over ``vec``'s scan (no
+    spread) -> the same rows with ``vec = scale * ps / 1e6``
+    (:func:`_mlp_pred`): integer-valued/1e6, so a downstream ``_quant``
+    recovers ``scale * ps`` exactly.  Other columns pass through."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(vec_mat(pdf["vec"]))
-            h_int = np.maximum(xq @ w, 0.0)          # exact: <= 6.4e13
-            hs = np.floor(h_int / 1e12 * Q_IN + 0.5)
-            y_int = hs @ w                           # exact: <= ~4.1e15
-            ps = np.floor(y_int / 1e12 * Q_IN + 0.5)
-            yield pd.DataFrame({
-                "i": pdf["i"].to_numpy(),
-                "vec": list(ps / Q_IN),
-                "label": pdf["label"].to_numpy(),
-            })
+    def run(pdf: pd.DataFrame, w: np.ndarray) -> pd.DataFrame:
+        ps = _mlp_pred(_quant(vec_mat(pdf["vec"])), w) * scale
+        return pdf.assign(vec=list(ps / Q_IN))
 
-    return _spread(vec.select("i", "vec", "label")).mapInPandas(
-        run, "i long, vec array<double>, label long"
-    )
+    return _narrow_map(vec, wq, run, vec.schema)
+
+
+def _chain_stage3(xq: np.ndarray, w: np.ndarray, nums: np.ndarray):
+    """Stage 3 of :func:`chain_grads_gate`: the MLP backward of merged
+    1e12-scaled ``gpred`` numerators -> ``(gx, gp, gq)``.  ``gp``/``gq``
+    run on the 1e6 grid (:func:`_mlp_vjp`); ``gx`` (per row, no
+    cross-row accumulation) on the finer 1e9 grid, 1e15-scaled."""
+    gs = np.floor(nums / 1e12 * Q_IN + 0.5).astype(np.int64)
+    h_int, _ghq, gp, gq = _mlp_vjp(xq, w, gs)
+    gs9 = np.floor(nums / 1e12 * 1e9 + 0.5).astype(np.int64)
+    wi = w.astype(np.int64)
+    return _hidden_grad(h_int, gs9, wi, 1e9) @ wi.T, gp, gq
+
+
+def _stage3_parts(pdf: pd.DataFrame, w: np.ndarray, nums, stage3) -> pd.DataFrame:
+    """``stage3``'s legs for one batch of X rows and their merged
+    cotangent numerators ``nums``."""
+    xq = _quant(vec_mat(pdf["vec"]))
+    return _parts(*_weight_legs(pdf["i"].to_numpy(), len(w), "", *stage3(xq, w, nums)))
+
+
+def _chain_kernel(wq: np.ndarray) -> Kernel:
+    """:func:`chain_grads_gate`'s three stages in one kernel call that
+    sees every target row: :func:`_chain_pred`'s forward, the xentropy
+    legs against the targets (each row's ``gpred`` complete), and
+    :func:`_chain_stage3` on the in-hand ``gpred``."""
+
+    def kernel(lids, lmat, extra, rids, rmat):
+        xq = _quant(lmat)
+        # _mlp_pred's integers are _quant(pred) of the tiled path's rows
+        gpred, gtrg = _grad_legs(("xe",), lids, _mlp_pred(xq, wq), extra, rids, _quant(rmat))
+        legs = _weight_legs(lids, len(wq), "", *_chain_stage3(xq, wq, gpred[2]))
+        return _parts(*legs, gtrg)
+
+    return kernel
 
 
 def chain_grads_gate(
@@ -1356,18 +921,24 @@ def chain_grads_gate(
 
     Three stages, each scale-shaped:
 
-    1. forward recompute ``pred = relu(X W) W`` — narrow map
-       (:func:`_chain_pred`), W the deterministic gram seed;
+    1. forward recompute ``pred = relu(X W) W`` (:func:`_chain_pred`),
+       W the deterministic gram seed;
     2. downstream vjp ``(gpred, gtrg) = dxentropy(pred, trg)`` — the
-       generalized (pred, trg) gate partials (:func:`_xe_grads_parts`),
-       broadcast or blocked-tile path, integer-merged;
-    3. upstream vjp: join the merged 1e12-scaled ``gpred`` numerators
-       back to the X rows (one co-partitioned shuffle), re-quantize to
-       the 1e6 grid (``gs``), and push through the MLP backward in one
-       narrow map: ``ga = gs W^T``; requantized ``gam``; relu mask
-       ``ghq = 1[h>0] * gam``; then ``gx = ghq W^T`` per row and
-       map-side int64 accumulators for ``gp = X^T ghq`` and
-       ``gq = hs^T gs`` merged by ``sum(long)``.
+       xentropy legs (:func:`_xe_legs`) against the targets;
+    3. upstream vjp (:func:`_chain_stage3`): the 1e12-scaled ``gpred``
+       numerators re-quantized to the 1e6 grid (``gs``) and pushed
+       through the MLP backward: ``ga = gs W^T``; requantized ``gam``;
+       relu mask ``ghq = 1[h>0] * gam``; then ``gx = ghq W^T`` per row
+       and ``gp = X^T ghq``, ``gq = hs^T gs`` merged by ``sum(long)``.
+
+    On the broadcast path every row's gpred is complete within its
+    kernel call (the whole target table is in hand), so one kernel runs
+    all three stages (:func:`_chain_kernel`) and the only exchange left
+    is the final merge; bit-identical, since the merged gpred of the
+    tiled path is a sum over exactly one partial per row.  On the tiled
+    path stage 1 is a narrow map, stage 2 the tiled xentropy legs,
+    merged once, and stage 3 a narrow map over the X rows joined to
+    the merged ``gpred`` (one co-partitioned shuffle).
 
     Integer budget (|v|<=~1, D=64): softmax row mass bounds
     ``|gpred| <= 2e12`` -> ``gs <= 2e6``; ``ga <= D*2e6*1e6 = 1.3e14``
@@ -1386,173 +957,33 @@ def chain_grads_gate(
     float chain in :mod:`gemmsql.ops.chain` is the precision API.
     """
     wq = _mlp_wq(vec, cache_key=cache_key)
-    if broadcast_trg == "auto":
-        broadcast_trg = rows_for_choice(vec) <= BROADCAST_MAX_ROWS
-    if broadcast_trg:
-        # r6 fusion: in the broadcast path every row's gpred is COMPLETE
-        # within its batch (the full target table is broadcast), so the
-        # merge shuffle + row-id join that feed stage 3 exist only for
-        # the blocked path.  One narrow map computes forward, xe vjp
-        # and MLP backward together; the only exchange left is the
-        # final accumulator merge.  Bit-identical: the merged gpred of
-        # the unfused path is a sum over exactly one partial per row.
-        return _chain_grads_gate_fused(vec, wq)
-    pred = _chain_pred(vec, wq)
+    steps = {"gx": 1_000_000_000, "gp": 1_000_000, "gq": 1_000_000,
+             "gtrg": 1_000_000}
+    x = vec.select("i", "vec", "label")
     trg = vec.select("i", "vec")
-    parts_xe = _xe_grads_parts(
-        pred, trg, block=block, broadcast_trg=False
-    )
+    # pred has x's row ids, so x's grid tiles it
+    grid = plan_tiles(broadcast_trg, x, trg, block, max_rows=BROADCAST_MAX_ROWS)
+    if grid is None:
+        return _finalize(
+            tile_partials(x, trg, _chain_kernel(wq), _PARTS, grid=None,
+                          left_extra=("label",)),
+            steps,
+        )
     from gemmsql.caching import scoped_cache
 
+    parts_xe = _grads_parts(_chain_pred(x, wq), trg, grid, ("xe",))
     # merged once: gpred feeds stage 3, gtrg is a final leg
     merged_xe = scoped_cache(
         _merge_long_arrays(parts_xe, ["which", "i"]), fresh_scope=True
     )
     gs_rows = merged_xe.where(F.col("which") == "gpred").select("i", "nums")
-    joined = vec.select("i", "vec").join(gs_rows, "i")
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast(wq)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = b.value
-        wi = w.astype(np.int64)
-        d = w.shape[0]
-        gp_acc = np.zeros((d, d), dtype=np.int64)
-        gq_acc = np.zeros((d, d), dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(vec_mat(pdf["vec"]))
-            h_int = np.maximum(xq @ w, 0.0)
-            hs = np.floor(h_int / 1e12 * Q_IN + 0.5).astype(np.int64)
-            nums = vec_mat(pdf["nums"])
-            gs = np.floor(nums / 1e12 * Q_IN + 0.5).astype(np.int64)
-            ga = gs @ wi.T                           # int64 exact
-            gam = np.floor(ga.astype(np.float64) / 1e12 * Q_IN + 0.5
-                           ).astype(np.int64)
-            ghq = np.where(h_int > 0, gam, np.int64(0))
-            gp_acc += xq.astype(np.int64).T @ ghq
-            gq_acc += hs.T @ gs
-            # gx on the fine 1e9 grid (per-row — no cross-row
-            # accumulation, so the bigger numerators fit int64)
-            gs9 = np.floor(nums / 1e12 * 1e9 + 0.5).astype(np.int64)
-            ga9 = gs9 @ wi.T                         # int64 exact
-            gam9 = np.floor(ga9.astype(np.float64) / 1e15 * 1e9 + 0.5
-                            ).astype(np.int64)
-            ghq9 = np.where(h_int > 0, gam9, np.int64(0))
-            gx_num = ghq9 @ wi.T                     # 1e15-scaled
-            yield pd.DataFrame({
-                "which": "gx",
-                "i": pdf["i"].to_numpy(),
-                "nums": list(gx_num),
-            })
-        yield pd.DataFrame({
-            "which": "gp", "i": np.arange(d, dtype=np.int64),
-            "nums": list(gp_acc),
-        })
-        yield pd.DataFrame({
-            "which": "gq", "i": np.arange(d, dtype=np.int64),
-            "nums": list(gq_acc),
-        })
-
-    parts_c = joined.mapInPandas(run, "which string, i long, nums array<long>")
-    gtrg_parts = merged_xe.where(F.col("which") == "gtrg")
-    merged = _merge_long_arrays(
-        parts_c.unionByName(gtrg_parts), ["which", "i"]
+    parts_c = _narrow_map(
+        trg.join(gs_rows, "i"), wq,
+        lambda pdf, w: _stage3_parts(pdf, w, vec_mat(pdf["nums"]), _chain_stage3),
+        _PARTS,
     )
-    out = merged.select("which", "i", F.posexplode("nums").alias("d", "num"))
-    # gx runs on the 1e9 grid (1e15-scaled numerators); the rest 1e12
-    micro = F.when(
-        F.col("which") == "gx", _micro_col("num", 1_000_000_000)
-    ).otherwise(_micro_col("num", 1_000_000))
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
-    )
-
-
-def _chain_grads_gate_fused(vec: DataFrame, wq: np.ndarray) -> DataFrame:
-    """Broadcast-path fusion of :func:`chain_grads_gate`'s three
-    stages into ONE narrow map over the X rows: MLP forward (h, hs,
-    pred), xentropy vjp against the broadcast target table (delta,
-    gpred per row — complete in-batch — plus the cross-row gtrg
-    accumulator), and the MLP backward pushed immediately through the
-    in-hand h/hs/xq (gx per row on the fine 1e9 grid; gp/gq int64
-    accumulators).  Values are bit-identical to the unfused path — the
-    same integer grids in the same order, minus a no-op
-    sum-of-one-partial round trip through Spark longs (exact: all
-    numerators < 2^53).  Removes two exchanges and a second corpus
-    scan; the one shuffle left is the accumulator merge."""
-    rids, rq = _collect_kv(vec.select("i", "vec"))
-    pos = {int(r): k for k, r in enumerate(rids)}
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast((rids, rq, pos, wq))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _rids, rmat, posmap, w = b.value
-        wi = w.astype(np.int64)
-        n, d = rmat.shape
-        gtrg_acc = np.zeros((n, d), dtype=np.int64)
-        gp_acc = np.zeros((d, d), dtype=np.int64)
-        gq_acc = np.zeros((d, d), dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # --- stage 1: MLP forward (mlp_gate chain) ---
-            xq = _quant(vec_mat(pdf["vec"]))
-            h_int = np.maximum(xq @ w, 0.0)
-            hs_f = np.floor(h_int / 1e12 * Q_IN + 0.5)
-            y_int = hs_f @ w
-            lq = np.floor(y_int / 1e12 * Q_IN + 0.5)  # == _quant(pred)
-            # --- stage 2: xentropy vjp vs the broadcast targets ---
-            _s, _mx, e, S = _softmax_den_num(lq, rmat, 1e12)
-            w_sm = e / S[:, None]
-            delta = np.floor(w_sm * Q_DELTA + 0.5)
-            cols = np.array([posmap[int(l)] for l in pdf["label"]])
-            delta[np.arange(len(pdf)), cols] -= Q_DELTA
-            nums = delta @ rmat                      # gpred, <= ~1.2e15
-            gtrg_acc += (delta.T @ lq).astype(np.int64)
-            # --- stage 3: MLP backward (chain_grads_gate chain) ---
-            hs = hs_f.astype(np.int64)
-            gs = np.floor(nums / 1e12 * Q_IN + 0.5).astype(np.int64)
-            ga = gs @ wi.T
-            gam = np.floor(ga.astype(np.float64) / 1e12 * Q_IN + 0.5
-                           ).astype(np.int64)
-            ghq = np.where(h_int > 0, gam, np.int64(0))
-            gp_acc += xq.astype(np.int64).T @ ghq
-            gq_acc += hs.T @ gs
-            gs9 = np.floor(nums / 1e12 * 1e9 + 0.5).astype(np.int64)
-            ga9 = gs9 @ wi.T
-            gam9 = np.floor(ga9.astype(np.float64) / 1e15 * 1e9 + 0.5
-                            ).astype(np.int64)
-            ghq9 = np.where(h_int > 0, gam9, np.int64(0))
-            gx_num = ghq9 @ wi.T                     # 1e15-scaled
-            yield pd.DataFrame({
-                "which": "gx",
-                "i": pdf["i"].to_numpy(),
-                "nums": list(gx_num),
-            })
-        yield pd.DataFrame({
-            "which": "gp", "i": np.arange(d, dtype=np.int64),
-            "nums": list(gp_acc),
-        })
-        yield pd.DataFrame({
-            "which": "gq", "i": np.arange(d, dtype=np.int64),
-            "nums": list(gq_acc),
-        })
-        yield pd.DataFrame({"which": "gtrg", "i": _rids, "nums": list(gtrg_acc)})
-
-    parts = _spread(vec.select("i", "vec", "label")).mapInPandas(
-        run, "which string, i long, nums array<long>"
-    )
-    merged = _merge_long_arrays(parts, ["which", "i"])
-    out = merged.select("which", "i", F.posexplode("nums").alias("d", "num"))
-    micro = F.when(
-        F.col("which") == "gx", _micro_col("num", 1_000_000_000)
-    ).otherwise(_micro_col("num", 1_000_000))
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (micro.cast("double") / F.lit(Q_IN)).alias("val"),
+    return _finalize(
+        parts_c.unionByName(merged_xe.where(F.col("which") == "gtrg")), steps
     )
 
 
@@ -1571,32 +1002,13 @@ def _chain_grads_gate_fused(vec: DataFrame, wq: np.ndarray) -> DataFrame:
 CHAIN2_SCALE = 10_000
 
 
-def _chain_pred_scaled(vec: DataFrame, wq: np.ndarray) -> DataFrame:
-    """Quantized MLP forward, intermediate scaled by CHAIN2_SCALE on
-    the integer grid -> ``(i, vec)`` with ``vec = ps*SCALE/1e6`` (still
-    integer-valued/1e6, so downstream ``_quant`` recovers ``ps*SCALE``
-    exactly)."""
-    spark = vec.sparkSession
-    b = spark.sparkContext.broadcast(wq)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(vec_mat(pdf["vec"]))
-            h_int = np.maximum(xq @ w, 0.0)
-            hs = np.floor(h_int / 1e12 * Q_IN + 0.5)
-            y_int = hs @ w
-            ps = np.floor(y_int / 1e12 * Q_IN + 0.5) * CHAIN2_SCALE
-            yield pd.DataFrame({
-                "i": pdf["i"].to_numpy(),
-                "vec": list(ps / Q_IN),
-            })
-
-    return _spread(vec.select("i", "vec")).mapInPandas(
-        run, "i long, vec array<double>"
-    )
+def _chain2_stage3(xq: np.ndarray, w: np.ndarray, nums: np.ndarray):
+    """Stage 3 of :func:`chain2_grads_gate`: the MLP backward of merged
+    1e10-scaled cotangent numerators, every leg on the 1e6 grid
+    (1e12-scaled)."""
+    gs = np.floor(nums / 1e10 * Q_IN + 0.5).astype(np.int64)
+    _h, ghq, gp, gq = _mlp_vjp(xq, w, gs)
+    return ghq @ w.astype(np.int64).T, gp, gq
 
 
 def chain2_grads_gate(
@@ -1618,19 +1030,23 @@ def chain2_grads_gate(
 
     Chain-rule stages, each scale-shaped:
 
-    1. forward recompute ``pred_s = SCALE * relu(X W) W`` — narrow map;
-    2. downstream vjp: the self-attention gradient partials over
-       ``pred_s`` (:func:`_attention_grads_parts`, broadcast or
-       blocked-tile path).  ``pred_s`` is Q, K AND V, so the
-       intermediate cotangent is the SUM of the three legs
-       (multivariable chain rule): numerators combined exactly on the
-       common 1e10 grid as ``gq + gk + 10*gv``;
-    3. upstream vjp: join the merged numerators to the X rows (one
-       co-partitioned shuffle) and push through the MLP backward in one
-       narrow map — ``gs = floor(nums/1e10 * 1e6 + .5)``;
-       ``ga = gs W^T`` (int64); requantized ``gam``; relu mask;
-       ``gx = ghq W^T`` per row; map-side int64 accumulators for
-       ``gp = X^T ghq`` and ``gq = hs^T gs`` merged by ``sum(long)``.
+    1. forward recompute ``pred_s = SCALE * relu(X W) W`` — a narrow
+       map of the unspread scan, so the executor's one spread sits
+       under the attention kernel;
+    2. downstream vjp: the self-attention legs over ``pred_s``
+       (:func:`_att_legs`, broadcast or tiled path).  ``pred_s`` is Q,
+       K AND V, so the intermediate cotangent is the SUM of the three
+       legs (multivariable chain rule): numerators combined exactly on
+       the common 1e10 grid as ``gq + gk + 10*gv``;
+    3. upstream vjp (:func:`_chain2_stage3`): the merged numerators
+       pushed through the MLP backward in one narrow map over the X
+       rows — ``gs = floor(nums/1e10 * 1e6 + .5)``; ``ga = gs W^T``
+       (int64); requantized ``gam``; relu mask; ``gx = ghq W^T`` per
+       row and ``gp = X^T ghq``, ``gq = hs^T gs`` merged by
+       ``sum(long)``.  On the broadcast path the merged cotangent (N x
+       D int64, N <= BROADCAST_MAX_ROWS) is collected and broadcast
+       with the weights, so stage 3 needs no join; on the tiled path
+       it joins the X rows on ``i``.
 
     Integer budget (measured |pred_s| <= ~2, W grid <= ~2e4, N <= 8192):
     scores <= 64*(2e6)^2/1e12 ~ 2.6e2; gq row mass ``sum_k w = 1``
@@ -1641,89 +1057,36 @@ def chain2_grads_gate(
     composed gradients here are O(1..100), not O(1e-4), so the coarse
     grid already carries ~8 significant digits."""
     wq = _mlp_wq(vec, cache_key=cache_key)
-    if broadcast_kv == "auto":
-        broadcast_kv = rows_for_choice(vec) <= BROADCAST_MAX_ROWS
-    pred_s = _chain_pred_scaled(vec, wq)
-    parts = _attention_grads_parts(
-        pred_s, block=block, broadcast_kv=broadcast_kv, spread=False
-    )
+    x = vec.select("i", "vec")
+    # pred_s has x's row ids, so x's grid tiles it
+    grid = plan_tiles(broadcast_kv, x, x, block, max_rows=BROADCAST_MAX_ROWS)
+    pred_s = _chain_pred(x, wq, CHAIN2_SCALE)
+    parts = _grads_parts(pred_s, pred_s, grid, ("att",))
     # combine the three vjp legs on the common 1e10 grid (gv is 1e9)
     combined = parts.select(
         "i",
         F.when(
             F.col("which") == "gv",
-            F.transform("nums", lambda x: x * F.lit(10).cast("long")),
+            F.transform("nums", lambda v: v * F.lit(10).cast("long")),
         ).otherwise(F.col("nums")).alias("nums"),
     )
     gs_rows = _merge_long_arrays(combined, ["i"])
-    spark = vec.sparkSession
 
-    if broadcast_kv:
-        # the merged cotangent is N x D int64 with N <= BROADCAST_MAX_
-        # ROWS (same bound as the attention broadcast side, ~4 MB):
-        # collect + broadcast it and run stage 3 as a NARROW map over
-        # the X rows — no join, no second wide shuffle
+    def stage3(pdf: pd.DataFrame, payload) -> pd.DataFrame:
+        w, g = payload
+        nums = vec_mat(pdf["nums"]) if g is None else np.stack(
+            [g[int(i)] for i in pdf["i"]]
+        )
+        return _stage3_parts(pdf, w, nums, _chain2_stage3)
+
+    if grid is None:
         gpdf = gs_rows.toPandas()
-        gmap = {
-            int(i): np.asarray(nums, dtype=np.float64)
-            for i, nums in zip(gpdf["i"], gpdf["nums"])
-        }
-        bg = spark.sparkContext.broadcast(gmap)
-    else:
-        bg = None
-    b = spark.sparkContext.broadcast(wq)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = b.value
-        wi = w.astype(np.int64)
-        d = w.shape[0]
-        gp_acc = np.zeros((d, d), dtype=np.int64)
-        gq_acc = np.zeros((d, d), dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            xq = _quant(vec_mat(pdf["vec"]))
-            h_int = np.maximum(xq @ w, 0.0)
-            hs = np.floor(h_int / 1e12 * Q_IN + 0.5).astype(np.int64)
-            if bg is not None:
-                g = bg.value
-                nums = np.stack([g[int(i)] for i in pdf["i"]])
-            else:
-                nums = vec_mat(pdf["nums"])
-            gs = np.floor(nums / 1e10 * Q_IN + 0.5).astype(np.int64)
-            ga = gs @ wi.T                           # int64 exact
-            gam = np.floor(ga.astype(np.float64) / 1e12 * Q_IN + 0.5
-                           ).astype(np.int64)
-            ghq = np.where(h_int > 0, gam, np.int64(0))
-            gp_acc += xq.astype(np.int64).T @ ghq
-            gq_acc += hs.T @ gs
-            gx_num = ghq @ wi.T                      # 1e12-scaled
-            yield pd.DataFrame({
-                "which": "gx",
-                "i": pdf["i"].to_numpy(),
-                "nums": list(gx_num),
-            })
-        yield pd.DataFrame({
-            "which": "gp", "i": np.arange(d, dtype=np.int64),
-            "nums": list(gp_acc),
-        })
-        yield pd.DataFrame({
-            "which": "gq", "i": np.arange(d, dtype=np.int64),
-            "nums": list(gq_acc),
-        })
-
-    if bg is not None:
-        src = _spread(vec.select("i", "vec"))
+        g = {int(i): np.asarray(n, dtype=np.float64)
+             for i, n in zip(gpdf["i"], gpdf["nums"])}
+        parts_c = _narrow_map(x, (wq, g), stage3, _PARTS)
     else:
         from gemmsql.caching import scoped_cache
 
-        src = vec.select("i", "vec").join(
-            scoped_cache(gs_rows, fresh_scope=True), "i"
-        )
-    parts_c = src.mapInPandas(run, "which string, i long, nums array<long>")
-    merged = _merge_long_arrays(parts_c, ["which", "i"])
-    out = merged.select("which", "i", F.posexplode("nums").alias("d", "num"))
-    return out.select(
-        "which", "i", F.col("d").cast("long").alias("d"),
-        (_micro_col("num", 1_000_000).cast("double") / F.lit(Q_IN)).alias("val"),
-    )
+        src = x.join(scoped_cache(gs_rows, fresh_scope=True), "i")
+        parts_c = _narrow_map(src, (wq, None), stage3, _PARTS)
+    return _finalize(parts_c, {"gx": 1_000_000, "gp": 1_000_000, "gq": 1_000_000})

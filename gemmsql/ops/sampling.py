@@ -42,7 +42,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gemmsql.numerics import collected_lse
-from gemmsql.ops._blocked import fold, plan_tiles, row_logsumexp, vec_mat
+from gemmsql.ops._blocked import (
+    fold, plan_tiles, row_logsumexp, tile_partials, use_broadcast,
+)
 
 MIX_P = 2_147_483_647  # 2^31 - 1; squares stay < 2^63 (exact in int64)
 
@@ -188,48 +190,43 @@ TOPP_P = 0.9
 
 
 def _filtered_kernel(seed: int, k: int, p: float):
-    def run(batches):
-        import pandas as pd
+    def kernel(lids, lmat, _extra, rids, rmat) -> pd.DataFrame:
+        s = lmat @ rmat.T
+        g = _gumbel_noise(seed, lids, rids)
+        pert = s + g
+        # rank classes per row by (score desc, class id asc)
+        order = np.lexsort((rids[None, :].repeat(len(lids), 0), -s), axis=1)
+        rows = np.arange(len(lids))[:, None]
+        s_ord = s[rows, order]
+        m = s.max(axis=1, keepdims=True)
+        e_ord = np.exp(s_ord - m)
+        z = e_ord.sum(axis=1, keepdims=True)
+        out = {"which": [], "i": [], "choice": [], "prob": []}
+        for which in ("topk", "topp"):
+            if which == "topk":
+                kept = order[:, :k]
+                ke = e_ord[:, :k]
+            else:
+                cum_before = np.cumsum(e_ord, axis=1) - e_ord
+                mask = cum_before < p * z
+                # ragged kept set; handle per row
+                kept = [order[r][mask[r]] for r in range(len(lids))]
+                ke = [e_ord[r][mask[r]] for r in range(len(lids))]
+            for r in range(len(lids)):
+                kr = np.asarray(kept[r])
+                er = np.asarray(ke[r])
+                w = np.argmax(pert[r, kr])
+                out["which"].append(which)
+                out["i"].append(lids[r])
+                # kr holds COLUMN POSITIONS into rmat (lexsort output);
+                # the emitted choice must be the class id rids[...],
+                # not the position — they only coincide when the class
+                # table happens to arrive as 0..C-1 in order.
+                out["choice"].append(int(rids[kr[w]]))
+                out["prob"].append(float(er[w] / er.sum()))
+        return pd.DataFrame(out)
 
-        for pdf, rids, rmat in batches:
-            lids = pdf["i"].to_numpy(dtype=np.int64)
-            lmat = vec_mat(pdf["vec"])
-            s = lmat @ rmat.T
-            g = _gumbel_noise(seed, lids, rids)
-            pert = s + g
-            # rank classes per row by (score desc, class id asc)
-            order = np.lexsort((rids[None, :].repeat(len(lids), 0), -s), axis=1)
-            rows = np.arange(len(lids))[:, None]
-            s_ord = s[rows, order]
-            m = s.max(axis=1, keepdims=True)
-            e_ord = np.exp(s_ord - m)
-            z = e_ord.sum(axis=1, keepdims=True)
-            out = {"which": [], "i": [], "choice": [], "prob": []}
-            for which in ("topk", "topp"):
-                if which == "topk":
-                    kept = order[:, :k]
-                    ke = e_ord[:, :k]
-                else:
-                    cum_before = np.cumsum(e_ord, axis=1) - e_ord
-                    mask = cum_before < p * z
-                    # ragged kept set; handle per row
-                    kept = [order[r][mask[r]] for r in range(len(lids))]
-                    ke = [e_ord[r][mask[r]] for r in range(len(lids))]
-                for r in range(len(lids)):
-                    kr = np.asarray(kept[r])
-                    er = np.asarray(ke[r])
-                    w = np.argmax(pert[r, kr])
-                    out["which"].append(which)
-                    out["i"].append(lids[r])
-                    # kr holds COLUMN POSITIONS into rmat (lexsort output);
-                    # the emitted choice must be the class id rids[...],
-                    # not the position — they only coincide when the class
-                    # table happens to arrive as 0..C-1 in order.
-                    out["choice"].append(int(rids[kr[w]]))
-                    out["prob"].append(float(er[w] / er.sum()))
-            yield pd.DataFrame(out)
-
-    return run
+    return kernel
 
 
 #: class tables at or under this row count ride the broadcast kernel;
@@ -337,49 +334,28 @@ def sampling_filtered(
     k: int = TOPK_K,
     p: float = TOPP_P,
     seed: int = 42,
-    broadcast_classes: bool | None = None,
+    broadcast_classes: bool | str = "auto",
 ) -> DataFrame:
     """Tagged union ``(which, i, choice, prob)`` of top-k and nucleus
     sampling (prob renormalized over the kept set, rounded 6).
 
-    Physical shape: with a bounded class table (the default here,
-    decided from the parquet footer via ``stats.rows_for_choice`` —
-    no Spark job) the class side broadcasts and each pred batch
-    resolves its restriction IN ROW — one narrow map, zero shuffle.
-    Past :data:`CLASS_BROADCAST_MAX_ROWS` the driver-side collect
-    would become the ceiling, so the pick flips to
-    :func:`_filtered_windowed` — materialized score table + per-row
-    windows, fully distributed.  Both paths are output-equal on the
-    gate grid (test-pinned); ``broadcast_classes`` forces a path for
-    tests."""
-    import pandas as pd
-
-    from gemmsql.stats import rows_for_choice
-
-    if broadcast_classes is None:
-        broadcast_classes = (
-            rows_for_choice(trg_vec) <= CLASS_BROADCAST_MAX_ROWS
-        )
-    if not broadcast_classes:
+    Physical shape: with a bounded class table (``"auto"``: at most
+    :data:`CLASS_BROADCAST_MAX_ROWS` rows by the parquet footer — no
+    Spark job) the class side broadcasts and each pred batch resolves
+    its restriction IN ROW — the fold executor's broadcast partials
+    (``_blocked.tile_partials``), one narrow map, zero shuffle.  Past
+    the bound the driver-side read would become the ceiling, so the
+    pick flips to :func:`_filtered_windowed` — materialized score table
+    + per-row windows, fully distributed.  Both paths are output-equal
+    on the gate grid (test-pinned); ``broadcast_classes`` forces a path
+    for tests."""
+    if not use_broadcast(
+        broadcast_classes, trg_vec, max_rows=CLASS_BROADCAST_MAX_ROWS
+    ):
         return _filtered_windowed(pred_vec, trg_vec, k=k, p=p, seed=seed)
-
-    spark = pred_vec.sparkSession
-    pdf_trg = trg_vec.select("i", "vec").toPandas()
-    rids = pdf_trg["i"].to_numpy(dtype=np.int64)
-    rmat = vec_mat(pdf_trg["vec"])
-    b = spark.sparkContext.broadcast((rids, rmat))
-    kernel = _filtered_kernel(seed, k, p)
-
-    def run(batches):
-        _rids, _rmat = b.value
-        yield from kernel(
-            (pdf, _rids, _rmat) for pdf in batches if len(pdf)
-        )
-
-    from gemmsql.ops.gate import _spread
-
-    out = _spread(pred_vec.select("i", "vec")).mapInPandas(
-        run, "which string, i long, choice long, prob double"
+    out = tile_partials(
+        pred_vec.select("i", "vec"), trg_vec, _filtered_kernel(seed, k, p),
+        "which string, i long, choice long, prob double", grid=None,
     )
     return out.select("which", "i", "choice", F.round("prob", 6).alias("prob"))
 

@@ -167,7 +167,7 @@ def pca_project(
     come from ONE distributed pass — each Arrow batch emits D rows
     ``(j, g = row j of X^T X, s = column-j sum, n = batch rows)``,
     merged by a D-group in-row ``zip_with`` sum (the same
-    O(D^2)-shuffle monoid as ``gate.gram_gate``); the
+    O(D^2)-shuffle monoid as ``gate.gram_gate_both``); the
     eigendecomposition is driver-side on the tiny D x D matrix
     (O(D^3) ~ microseconds at D=64, the standard big-data PCA split);
     the projection is a broadcast narrow map.  Driver memory is O(D^2)
@@ -331,7 +331,7 @@ def pca_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(D^3) driver step SQL can't express).
 
     Spark shape: the same one-pass map-side D x D int64 partial +
-    ``sum(long)`` merge as ``gate.gram_gate`` — O(D^2) shuffle,
+    ``sum(long)`` merge as ``gate.gram_gate_both`` — O(D^2) shuffle,
     corpus-size independent."""
     vec = embeddings_vectors(spark, sf_dir).select("vec")
 

@@ -1377,10 +1377,10 @@ def ivfpq_topk(
                 "codes": list(codes),
             })
 
-    # byte-light/compute-heavy spread (r18, gate._spread): the KB-scale
-    # vector scan is one partition, which serialized the whole corpus
-    # encode (coarse assign + per-subspace argmin) on a single core
-    from gemmsql.ops.gate import _spread
+    # byte-light/compute-heavy spread (r18, _blocked._spread): the
+    # KB-scale vector scan is one partition, which serialized the whole
+    # corpus encode (coarse assign + per-subspace argmin) on a single core
+    from gemmsql.ops._blocked import _spread
 
     encoded = _spread(vec).mapInPandas(
         encode, schema="i long, cell long, codes array<long>"

@@ -179,9 +179,38 @@ def test_all_gate_blocked_paths_match_broadcast(spark):
         lambda b: gate.xentropy_grads_gate(vec, block=96, broadcast_trg=b),
         lambda b: gate.xentropy_gate(vec, block=96, broadcast_trg=b),
         lambda b: gate.entropy_gate(vec, block=96, broadcast_trg=b),
+        lambda b: gate.chain2_grads_gate(vec, block=96, broadcast_kv=b),
     ]
     for fn in cases:
         assert _hash(fn(True).toPandas()) == _hash(fn(False).toPandas())
+
+
+def test_label_without_class_row_paths_agree(spark):
+    """A label with no class row gets no one-hot on either path (the
+    tile-local mask of reference xentropy.py:12): the broadcast path
+    must not fail looking it up, and both paths give the same table
+    for every op that reads labels."""
+    from pyspark.sql import functions as F
+
+    from gemmsql.ops import gate
+
+    vec = _vec(spark)
+    first = vec.agg(F.min("i")).first()[0]
+    vec = vec.withColumn(
+        "label",
+        F.when(F.col("i") == first, F.lit(-7).cast("long")).otherwise(F.col("label")),
+    )
+    cases = {
+        "xentropy_gate": lambda b: gate.xentropy_gate(vec, block=96, broadcast_trg=b),
+        "xentropy_grads_gate": lambda b: gate.xentropy_grads_gate(
+            vec, block=96, broadcast_trg=b
+        ),
+        "chain_grads_gate": lambda b: gate.chain_grads_gate(
+            vec, block=96, broadcast_trg=b
+        ),
+    }
+    for name, fn in cases.items():
+        assert _hash(fn(True).toPandas()) == _hash(fn(False).toPandas()), name
 
 
 def test_fused_plain_kv_matches_separate_paths(spark):

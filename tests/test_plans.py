@@ -157,12 +157,16 @@ def test_attention_blocked_single_merge_aggregate(spark):
 def test_broadcast_forward_folds_are_narrow(spark):
     """Small right side -> "auto" picks the broadcast path, where every
     row's partial is already final: a mapInPandas kernel fed by exactly
-    ONE byte-light round-robin spread (gate._spread, r18 — without it
-    the single-partition scan serializes the kernel on one core) and
-    NO merge — no hash shuffle and no aggregate anywhere in the plan."""
+    ONE byte-light round-robin spread (_blocked._spread, r18 — without
+    it the single-partition scan serializes the kernel on one core) and
+    NO merge — no hash shuffle and no aggregate anywhere in the plan.
+    The quantized gate forwards run on the same executor."""
+    from pyspark.sql import functions as F
+
     from gemmsql.datamodel import embeddings_vectors
     from gemmsql.ops import (
         attention_blocked,
+        gate,
         row_entropy,
         sample_categorical,
         xentropy,
@@ -170,11 +174,16 @@ def test_broadcast_forward_folds_are_narrow(spark):
 
     vec = embeddings_vectors(spark, SF_SMOKE)
     v = vec.select("i", "vec")
+    v_rev = v.select("i", F.reverse("vec").alias("vec"))
     folds = {
         "xentropy": xentropy(vec, v),
         "row_entropy": row_entropy(v, v),
         "sample_categorical": sample_categorical(v, v),
         "attention_blocked": attention_blocked(v, v),
+        "attention_gate": gate.attention_gate(v, v, scale=True),
+        "attention_gate_plain_kv": gate.attention_gate_plain_kv(v, v, v_rev),
+        "xentropy_gate": gate.xentropy_gate(vec),
+        "entropy_gate": gate.entropy_gate(vec),
     }
     for name, df in folds.items():
         p = plan_of(df)
@@ -357,7 +366,7 @@ def test_two_sweep_backwards_share_one_tile_exchange(spark):
 
 
 def test_spread_never_shrinks_a_wide_left_side(spark, tmp_path):
-    """gate._spread only fans OUT: a left side that already has 16
+    """_blocked._spread only fans OUT: a left side that already has 16
     partitions runs the broadcast kernel on them — no extra round-robin
     exchange — and its partition count comes from the plan and file
     sizes without a Spark job."""
@@ -841,7 +850,7 @@ def test_corpus_diff_single_copartitioned_join(spark):
 def test_sampling_filtered_single_narrow_pass(spark):
     """Restriction + Gumbel pick resolve in-row against the broadcast
     class table: one mapInPandas fed by the one round-robin spread
-    (gate._spread, r18 — the single-partition scan otherwise
+    (_blocked._spread, r18 — the single-partition scan otherwise
     serializes the kernel on one core), no hash shuffle, no window
     exec."""
     from gemmsql.datamodel import embeddings_vectors
@@ -1243,7 +1252,7 @@ def test_ml_gate_exchange_budgets(spark):
     import __spark_entry__ as entrymod
 
     # r18 re-pin: every broadcast-path kernel now rides ONE byte-light
-    # round-robin spread exchange before the NumPy map (gate._spread) —
+    # round-robin spread exchange before the NumPy map (_blocked._spread) —
     # the KB-scale vector scan is a single partition, so the kernels
     # were serializing on one core (the measured reason the whole ML
     # tier showed 8-core == 32-core scaling in PERF_r17).  +1 per
