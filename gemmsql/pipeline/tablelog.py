@@ -50,6 +50,7 @@ brief's lakehouse story.)
 
 from __future__ import annotations
 
+import dataclasses
 import glob as _glob
 import json
 import os
@@ -365,8 +366,8 @@ def snapshot_files(
     :func:`write_checkpoint` (which unions it with the metadata
     actions) and for tests, which use it as the reference replay.
     Planning never collects it: every planning pass reads the
-    driver-side snapshot :func:`_live_file_records`, the same replay
-    with no Spark job."""
+    driver-side :class:`Snapshot` (:func:`_snapshot`), the same
+    replay with no Spark job."""
     present = _present_versions(table_dir)
     ckpt_v = _latest_checkpoint_version(table_dir, version)
     truncated = bool(present) and present[0] > 0
@@ -426,12 +427,11 @@ def write_checkpoint(
     original versions stamped, so schema evolution, column mapping,
     reader-feature gating, and CHECK constraints all survive log
     expiry (chained: an existing checkpoint's metadata rows flow into
-    the next via :func:`_meta_actions`)."""
+    the next through :func:`_snapshot`)."""
     dest = _checkpoint_dir(table_dir, version)
     live = snapshot_files(spark, table_dir, version)
     metadata = spark.createDataFrame(
-        [a for a in _meta_actions(table_dir) if a["v"] <= version],
-        LOG_SCHEMA,
+        list(_snapshot(table_dir, version).meta), LOG_SCHEMA
     )
     live.unionByName(metadata, allowMissingColumns=True).coalesce(
         1
@@ -460,7 +460,7 @@ def expire_log(
     constraint) from the expired prefix with their original versions,
     so column mapping, reader-feature gating, schema history, and
     CHECK constraints all survive expiry — the metadata readers
-    run off :func:`_meta_actions`.  Two action kinds still
+    run off :func:`_snapshot`.  Two action kinds still
     refuse below the horizon: ``txn`` (the idempotency scan reads
     commit files only; expiring one re-opens the very-late-retry
     double-apply — Delta's txn retention caveat) and ``keydel``
@@ -652,7 +652,7 @@ def stats_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TRUE counts still come from a full scan of every live file —
     # reading only candidates would assume the very invariant this
     # op audits
-    adds = sorted(_live_file_records(table_dir), key=lambda a: a["path"])
+    adds = sorted(_snapshot(table_dir).files, key=lambda a: a["path"])
     gmax = max(int(a["max_key"]) for a in adds)
     lo, hi = gmax * 35 // 100, gmax * 55 // 100
     decided = spark.createDataFrame(
@@ -726,8 +726,8 @@ def version_diff_dir(
     (the gate wrapper stages the fixture; this is the library form —
     also the post-condition check :func:`optimize_table` is tested
     with, since an OPTIMIZE commit must diff empty)."""
-    la = {r["path"] for r in _live_file_records(table_dir, v_from)}
-    lb = {r["path"] for r in _live_file_records(table_dir, v_to)}
+    la = {r["path"] for r in _snapshot(table_dir, v_from).files}
+    lb = {r["path"] for r in _snapshot(table_dir, v_to).files}
 
     cols = ["o_orderkey", "o_orderpriority"]
 
@@ -810,7 +810,7 @@ def cdf_ivm_rollup(
     base (count and sum are the group-abelian aggregates this works
     for — min/max would need the full group rescan on retraction)."""
     table_dir = stage_versioned_table(spark, sf_dir)
-    base_paths = {r["path"] for r in _live_file_records(table_dir, v_from)}
+    base_paths = {r["path"] for r in _snapshot(table_dir, v_from).files}
     base = (
         spark.read.parquet(
             *[os.path.join(table_dir, DATA_SUBDIR, p)
@@ -927,7 +927,7 @@ def streaming_ivm_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     base_paths = {r["path"] for r in
-                  _live_file_records(table_dir, 1)}  # driver replay
+                  _snapshot(table_dir, 1).files}  # driver replay
     base = (
         spark.read.parquet(
             *[os.path.join(table_dir, DATA_SUBDIR, p)
@@ -965,7 +965,7 @@ def ivm_drain(
       (retained) file at +1 / -1; a vacuumed file behind a NOT-yet-
       checkpointed commit fails loudly.
     - ``keydel`` — the deletion-vector CDF read: the key file plus
-      the live set below it (:func:`_live_file_records`) stats-pruned
+      the live set below it (:func:`_snapshot`) stats-pruned
       by the keydel's key range, matching rows at -1 — SEQUENCE-
       FILTERED (only files sequenced strictly below the delete, the
       same rule the batch MOR read applies), and including same-
@@ -1096,7 +1096,7 @@ def ivm_drain(
             if v_limit is None:
                 v_limit = int(kd_action["v"])
             lives = [
-                ad for ad in _live_file_records(table_dir, v_limit - 1)
+                ad for ad in _snapshot(table_dir, v_limit - 1).files
                 if ad["path"] not in batch_removed
             ] + batch_adds
             parts = []
@@ -1154,14 +1154,15 @@ def ivm_drain(
             new_dels = [r for r in recs
                         if r["a"] in ("keydel", "posdel")]
             v_now = min((int(r["v"]) for r in recs), default=0)
-            # the delete files live before this commit; a removed
-            # path among them is a DELETE file retiring (materialize /
+            # the table before this commit; a removed path among its
+            # delete files is a DELETE file retiring (materialize /
             # rolling-back restore / delete-file compaction) and
             # expands as the INVERSE retraction
-            pre_dels = (
-                _live_delete_actions(table_dir, v_now - 1)
-                if new_dels or batch_removed else []
+            pre = (
+                _snapshot(table_dir, v_now - 1)
+                if new_dels or batch_removed else None
             )
+            pre_dels = pre.deletes if pre is not None else ()
             del_history = {a["path"]: a for a in pre_dels
                            if a["path"] in batch_removed}
             # OVERLAP BASELINES (r16): a row dies (or resurrects)
@@ -1184,8 +1185,7 @@ def ivm_drain(
                 pre_base = _baseline_of(pre_dels)
                 post_base = _baseline_of(post_dels)
                 lives_seq = {
-                    ad["path"]: _seq_of(ad)
-                    for ad in _live_file_records(table_dir, v_now - 1)
+                    ad["path"]: _seq_of(ad) for ad in pre.files
                 }
                 for ad in batch_adds:
                     lives_seq[ad["path"]] = _seq_of(ad)
@@ -1728,15 +1728,16 @@ def optimize_table(
     and per-file key ranges stay disjoint (skip-plan tightness), all
     without breaking a single reader — a concurrent snapshot at any
     version sees exactly the files its replay names."""
-    _refuse_live_deletes(table_dir, "OPTIMIZE")
+    _refuse_live_deletes(_snapshot(table_dir), "OPTIMIZE")
     shutil.copytree(table_dir, dest_dir)
-    new_v = _latest_version(dest_dir) + 1
-    live = _live_file_records(dest_dir)
+    snap = _snapshot(dest_dir)
+    new_v = snap.version + 1
+    live = snap.files
     paths = sorted(r["path"] for r in live)
     # the shared reader: a single-footer read would silently drop
     # columns on a schema-divergent live set, and a widened one
     # needs the explicit declared-type schema
-    df = _table_reader(spark, dest_dir).parquet(
+    df = _table_reader(spark, snap).parquet(
         *[os.path.join(dest_dir, DATA_SUBDIR, p) for p in paths]
     )
     if zorder_by is not None:
@@ -1841,11 +1842,13 @@ def table_properties(
 ) -> dict[str, str]:
     """Table properties in force at ``version`` — latest action per
     key wins; a null value (an UNSET) removes the key."""
+    return _table_properties(_snapshot(table_dir, version))
+
+
+def _table_properties(snap: Snapshot) -> dict[str, str]:
     out: dict[str, str] = {}
-    for a in _meta_actions(table_dir):  # driver-side, no Spark job
+    for a in snap.meta:
         if a["a"] != "property":
-            continue
-        if version is not None and a["v"] > version:
             continue
         k = a["path"].split(":", 1)[1]
         if a["min_date"] is None:
@@ -1859,23 +1862,21 @@ def table_constraints(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> dict[str, str]:
     """Named CHECK predicates in force at ``version``."""
-    out: dict[str, str] = {}
-    for a in _meta_actions(table_dir):  # driver-side, no Spark job
-        if a["a"] != "constraint":
-            continue
-        if version is not None and a["v"] > version:
-            continue
-        out[a["path"].split(":", 1)[1]] = a["min_date"]
-    return out
+    return _table_constraints(_snapshot(table_dir, version))
 
 
-def _enforce_constraints(
-    spark: SparkSession, table_dir: str, df: DataFrame
-) -> None:
+def _table_constraints(snap: Snapshot) -> dict[str, str]:
+    return {
+        a["path"].split(":", 1)[1]: a["min_date"]
+        for a in snap.meta if a["a"] == "constraint"
+    }
+
+
+def _enforce_constraints(snap: Snapshot, df: DataFrame) -> None:
     """Commit-time CHECK enforcement: one validation pass over the
     incoming (LOGICAL-named) rows only — never a table rescan.
     Raises if any row violates any registered constraint."""
-    checks = table_constraints(spark, table_dir)
+    checks = _table_constraints(snap)
     if checks:
         cond = " AND ".join(f"({p})" for p in checks.values())
         n_bad = df.filter(~F.expr(cond)).count()
@@ -1918,36 +1919,11 @@ def _commit_ts_of(commit_path: str) -> float | None:
     return None if ts is None else float(ts)
 
 
-def _live_delete_actions(
-    table_dir: str, version: int | None = None
-) -> list[dict]:
-    """Live delete-file ACTIONS (``keydel``/``posdel``) at ``version``
-    — the last-action replay :func:`snapshot_delete_files` defines,
-    from cached per-file parses, as :func:`_log_record` dicts.  The
-    expired prefix can carry no keydel/posdel actions (expiry refuses
-    them until retired), so no checkpoint seeding is needed."""
-    last: dict[str, tuple[int, int, dict]] = {}
-    for p in sorted(
-        _glob.glob(os.path.join(table_dir, LOG_SUBDIR, "*.json"))
-    ):
-        for a in _action_lines_of(p):
-            if a.get("a") not in ("keydel", "posdel", "remove"):
-                continue
-            v = int(a["v"])
-            if version is not None and v > version:
-                continue
-            rank = (v, 1 if a["a"] == "remove" else 0)
-            cur = last.get(a["path"])
-            if cur is None or rank >= cur[:2]:
-                last[a["path"]] = (*rank, a)
-    return [_log_record(a) for (_, _, a) in last.values()
-            if a["a"] in ("keydel", "posdel")]
-
-
 #: per-commit-file FULL action-line parses — the one commit-file
-#: reader: every replay, the txn re-check and the in-commit timestamp
-#: read parse through it, so each costs cached dict lookups (O(new
-#: commit files) of parsing per call), not a Spark job.  A commit file
+#: reader: the one log walk (:func:`_snapshot`), the txn re-check, the
+#: in-commit timestamp read and expiry's refusal scan parse through
+#: it, so each costs cached dict lookups (O(new commit files) of
+#: parsing per call), not a Spark job.  A commit file
 #: is immutable once written, but a table directory can be deleted and
 #: recreated at the same path, so each entry is checked against the
 #: file's (inode, mtime, size)
@@ -2029,47 +2005,16 @@ def _checkpoint_actions(
     ).to_pylist()
 
 
-def _meta_actions(table_dir: str) -> list[dict]:
-    """Driver-side metadata actions (meta / protocol / constraint /
-    property) as :func:`_log_record` rows, ordered by commit version:
-    on an expired log the newest checkpoint's rows (original stamps
-    kept), then the retained commits above it.  Every metadata reader
-    below runs off this, so a DML verb or a read plans with zero
-    metadata jobs.  A MISSING log directory refuses like
-    :func:`read_log` — a typo'd table path must never answer the
-    none-yet defaults."""
-    if not os.path.isdir(os.path.join(table_dir, LOG_SUBDIR)):
-        raise ValueError(f"not a logged table (no {LOG_SUBDIR}/): "
-                         f"{table_dir}")
-    out: list[dict] = []
-    base_v = -1
-    present = _present_versions(table_dir)
-    if present and present[0] > 0:
-        ckpt_v = _latest_checkpoint_version(table_dir, None)
-        if ckpt_v is not None:
-            rows = _checkpoint_actions(table_dir, ckpt_v, _META_KINDS)
-            rows.sort(key=lambda r: r["v"])
-            out.extend(rows)
-            base_v = ckpt_v
-    for v in present:
-        if v > base_v:
-            out.extend(
-                a for a in _action_lines_of(
-                    os.path.join(table_dir, LOG_SUBDIR, f"{v:08d}.json"))
-                if a.get("a") in _META_KINDS
-            )
-    return [_log_record(a) for a in out]
-
-
 #: Bound on the driver-side metadata replay (r18, VERDICT r17 #5):
-#: _live_file_records materializes one dict per live file (on the
-#: driver, or in the IVM's expansion task) — the standard Delta-style
-#: metadata-on-driver trade, measured at ~500 B/record (tracemalloc,
-#: full add action with partition values).  The default bound (2M
-#: records ≈ ~1 GB on the 16 GB driver) covers ~2M-file tables; past
-#: it the replay REFUSES loudly instead of silently exhausting the
-#: driver — raise the env for bigger drivers, or checkpoint+expire the
-#: log so the live set shrinks.  SCALE.md documents the arithmetic.
+#: a :class:`Snapshot` materializes one dict per file record it holds
+#: (on the driver, or in the IVM's expansion task) — the standard
+#: Delta-style metadata-on-driver trade, measured at ~500 B/record
+#: (tracemalloc, full add action with partition values).  The default
+#: bound (2M records ≈ ~1 GB on the 16 GB driver) covers ~2M-file
+#: tables; past it the replay REFUSES loudly instead of silently
+#: exhausting the driver — raise the env for bigger drivers, or
+#: checkpoint+expire the log so the live set shrinks.  SCALE.md
+#: documents the arithmetic.
 _MAX_DRIVER_FILE_RECORDS = int(
     os.environ.get("GEMMSQL_MAX_DRIVER_FILE_RECORDS", "2000000")
 )
@@ -2086,26 +2031,49 @@ def _check_replay_bound(n: int, where: str) -> None:
         )
 
 
-def _live_file_records(
-    table_dir: str, version: int | None = None
-) -> list[dict]:
-    """The table's live file records at ``version`` (latest when
-    None) — the one snapshot every planning pass reads.  Checkpoint
-    seeding, expiry validation and the last-action-wins rule (remove
-    beats add inside one version) are those of
-    :func:`snapshot_files`, replayed on the driver from cached
-    per-commit parses, with no Spark job; records come back in the
-    :func:`_log_record` shape.  A MISSING log directory refuses like
-    :func:`read_log` — a typo'd table path must never read as an
-    empty table."""
+@dataclasses.dataclass(frozen=True)
+class Snapshot:
+    """One version of a table as its log states it — built by ONE
+    walk (:func:`_snapshot`) and handed to every planning step of a
+    call, so a call never mixes two versions however many commits
+    land while it plans.  Records are :func:`_log_record` dicts:
+
+    - ``files``: the live add records;
+    - ``deletes``: the live ``keydel``/``posdel`` records;
+    - ``meta``: the meta / protocol / constraint / property actions
+      at or below ``version``, in commit order;
+    - ``newest_add``: the path of the newest add among the retained
+      commits, live or not — the schema source of an emptied table."""
+
+    version: int
+    files: tuple[dict, ...]
+    deletes: tuple[dict, ...]
+    meta: tuple[dict, ...]
+    newest_add: str | None
+
+
+def _snapshot(table_dir: str, version: int | None = None) -> Snapshot:
+    """The table AS OF ``version`` (latest when None), from one walk
+    over the retained commits' cached parses — no Spark job.
+
+    The rules are those of :func:`snapshot_files` and
+    :func:`snapshot_delete_files`: per path the last action at or
+    below the version wins, a remove beating the other kinds inside
+    one version.  On an expired log, adds and metadata seed from the
+    newest checkpoint at or below the version (it carries both, with
+    their original stamps) and only later commits fold on top; deletes
+    fold from EVERY retained commit, since a checkpoint carries none
+    (expiry refuses to drop a commit holding one).  A version that
+    needs an expired commit refuses, and so does a MISSING log
+    directory, like :func:`read_log` — a typo'd table path must never
+    read as an empty table."""
     if not os.path.isdir(os.path.join(table_dir, LOG_SUBDIR)):
         raise ValueError(f"not a logged table (no {LOG_SUBDIR}/): "
                          f"{table_dir}")
     present = _present_versions(table_dir)
     ckpt_v = _latest_checkpoint_version(table_dir, version)
     truncated = bool(present) and present[0] > 0
-    use_ckpt = ckpt_v is not None and truncated
-    base_v = ckpt_v if use_ckpt else -1
+    base_v = ckpt_v if ckpt_v is not None and truncated else -1
     target = version if version is not None else (
         present[-1] if present else base_v
     )
@@ -2118,40 +2086,50 @@ def _live_file_records(
             f"{present[0] if present else None}, checkpoint: {ckpt_v})"
         )
     last: dict[str, tuple] = {}
+    meta: list[dict] = []
+    newest_add = None
 
     def fold(a: dict) -> None:
-        if a.get("a") not in ("add", "remove"):
-            return
-        v = int(a["v"])
-        if version is not None and v > version:
-            return
-        rank = (v, 0 if a["a"] == "remove" else -1)
+        rank = (int(a["v"]), a["a"] == "remove")
         cur = last.get(a["path"])
         if cur is None or rank >= cur[0]:
             last[a["path"]] = (rank, a)
 
-    if use_ckpt:
-        for r in _checkpoint_actions(table_dir, ckpt_v, ("add",)):
-            fold(r)
-        _check_replay_bound(len(last), "_live_file_records")
-    for p in sorted(
-        _glob.glob(os.path.join(table_dir, LOG_SUBDIR, "*.json"))
-    ):
-        if int(os.path.basename(p).split(".")[0]) <= base_v:
-            continue
-        for a in _action_lines_of(p):
-            fold(a)
-        _check_replay_bound(len(last), "_live_file_records")
-    return [_log_record(a) for (_, a) in last.values() if a["a"] == "add"]
+    if base_v >= 0:
+        for a in _checkpoint_actions(
+                table_dir, base_v, ("add", *_META_KINDS)):
+            if a["a"] == "add":
+                fold(a)
+            else:
+                meta.append(a)
+        meta.sort(key=lambda a: a["v"])
+        _check_replay_bound(len(last) + len(meta), "_snapshot")
+    for v in present:
+        if v > target:
+            break
+        for a in _action_lines_of(
+                os.path.join(table_dir, LOG_SUBDIR, f"{v:08d}.json")):
+            kind = a.get("a")
+            if kind == "add":
+                newest_add = a["path"]
+            if kind in ("keydel", "posdel", "remove") or (
+                    kind == "add" and v > base_v):
+                fold(a)
+            elif kind in _META_KINDS and v > base_v:
+                meta.append(a)
+        _check_replay_bound(len(last) + len(meta), "_snapshot")
+    return Snapshot(
+        version=target,
+        files=tuple(_log_record(a) for _, a in last.values()
+                    if a["a"] == "add"),
+        deletes=tuple(_log_record(a) for _, a in last.values()
+                      if a["a"] in ("keydel", "posdel")),
+        meta=tuple(_log_record(a) for a in meta),
+        newest_add=newest_add,
+    )
 
 
-def _live_delete_paths(
-    table_dir: str, version: int | None = None
-) -> set[str]:
-    return {a["path"] for a in _live_delete_actions(table_dir, version)}
-
-
-def _refuse_live_deletes(table_dir: str, op: str) -> None:
+def _refuse_live_deletes(snap: Snapshot, op: str) -> None:
     """Data-file-REWRITING ops refuse while delete files are live: a
     rewrite re-positions rows (breaking every positional delete's
     (file, pos) references — silent resurrection) and re-adds rows at
@@ -2159,7 +2137,7 @@ def _refuse_live_deletes(table_dir: str, op: str) -> None:
     sequence horizon — same resurrection, other flavor).  Iceberg
     splits its maintenance actions on exactly this line; the loud
     contract here is :func:`materialize_deletes` first."""
-    dels = _live_delete_paths(table_dir)
+    dels = {a["path"] for a in snap.deletes}
     if dels:
         raise ValueError(
             f"{op} refused: live delete files exist ({sorted(dels)}); "
@@ -2232,8 +2210,11 @@ def commit_actions(
         actions = [{"a": "txn", "path": txn_tag}, *actions]
     while True:
         found = sorted(_glob.glob(os.path.join(log_dir, "*.json")))
-        needed = required_writer_features(table_dir)
-        unknown = needed - set(writer_features)
+        # the commit-time check reads the log as it stands NOW, not
+        # the snapshot the caller planned from — that is its purpose
+        now = _snapshot(table_dir)
+        unknown = _required_features(now, "writer_features") \
+            - set(writer_features)
         # a protocol-carrying commit may declare the very features it
         # introduces — the migrating writer understands them
         unknown -= {
@@ -2254,8 +2235,8 @@ def commit_actions(
                 if first.get("a") == "txn" and first["path"] == txn_tag:
                     return int(os.path.basename(p).split(".")[0])
         if expects_live:
-            live = {r["path"] for r in _live_file_records(table_dir)}
-            gone = sorted(set(expects_live) - live)
+            gone = sorted(
+                set(expects_live) - {r["path"] for r in now.files})
             if gone:
                 raise ConcurrentModificationError(
                     f"commit conflicts: planned-against files no longer "
@@ -2317,14 +2298,11 @@ def commit_actions(
         return v
 
 
-def _required_features(
-    table_dir: str, version: int | None, kind: str
-) -> set[str]:
+def _required_features(snap: Snapshot, kind: str) -> set[str]:
     """Shared replay for both protocol halves (``kind`` is
     ``reader_features`` or ``writer_features``)."""
     return {
-        f for a in _meta_actions(table_dir)
-        if a["a"] == "protocol" and (version is None or a["v"] <= version)
+        f for a in snap.meta if a["a"] == "protocol"
         for f in a[kind] or ()
     }
 
@@ -2338,7 +2316,8 @@ def required_writer_features(
     a constrained table would land violating rows unchecked, and on
     a mapped table would land logical-named files.  Enforced at the
     :func:`commit_actions` choke point."""
-    return _required_features(table_dir, version, "writer_features")
+    return _required_features(
+        _snapshot(table_dir, version), "writer_features")
 
 
 def required_reader_features(
@@ -2350,7 +2329,8 @@ def required_reader_features(
     commit stay readable by old readers — time travel across a
     column-mapping migration keeps working for clients that predate
     it."""
-    return _required_features(table_dir, version, "reader_features")
+    return _required_features(
+        _snapshot(table_dir, version), "reader_features")
 
 
 def snapshot_read(
@@ -2367,58 +2347,58 @@ def snapshot_read(
     read fails LOUDLY (Delta's protocol contract) — the alternative
     is an old reader silently returning physical column names and
     dropped columns on a column-mapped table."""
-    _check_reader_features(table_dir, version, reader_features)
-    return _snapshot_read_with_live(
-        spark, table_dir, version, read_schema=read_schema
-    )[0]
+    return _snapshot_read(
+        spark, table_dir, _snapshot(table_dir, version),
+        reader_features=reader_features, read_schema=read_schema,
+    )
+
+
+def _snapshot_read(
+    spark: SparkSession, table_dir: str, snap: Snapshot,
+    *, reader_features: tuple[str, ...] = (), read_schema=None,
+) -> DataFrame:
+    _check_reader_features(snap, reader_features)
+    return _scan_files(spark, table_dir, snap, read_schema=read_schema)
 
 
 def _check_reader_features(
-    table_dir: str,
-    version: int | None,
-    reader_features: tuple[str, ...],
+    snap: Snapshot, reader_features: tuple[str, ...]
 ) -> None:
-    need = required_reader_features(table_dir, version)
+    need = _required_features(snap, "reader_features")
     unsupported = need - set(reader_features)
     if unsupported:
         raise ValueError(
             f"table requires reader features {sorted(unsupported)} at "
-            f"version {'latest' if version is None else version}; use "
-            "the feature-aware reader (e.g. snapshot_read_mapped for "
-            "column_mapping)"
+            f"version {snap.version}; use the feature-aware reader "
+            "(e.g. snapshot_read_mapped for column_mapping)"
         )
-    if "merge_on_read" not in reader_features:
+    if "merge_on_read" not in reader_features and snap.deletes:
         # STATE-based gate (stricter than a sticky protocol flag, so
         # it clears the moment deletes materialize): a plain read of
         # a table with LIVE delete files would silently resurrect
         # deleted rows — the worst failure class a table format has
-        live_dels = _live_delete_paths(table_dir, version)
-        if live_dels:
-            raise ValueError(
-                f"version {'latest' if version is None else version} "
-                f"has live delete files {sorted(live_dels)}; a plain "
-                "read would silently include deleted rows — use "
-                "snapshot_read_mor (or declare the merge_on_read "
-                "reader feature to read the raw physical set)"
-            )
+        raise ValueError(
+            f"version {snap.version} has live delete files "
+            f"{sorted(a['path'] for a in snap.deletes)}; a plain "
+            "read would silently include deleted rows — use "
+            "snapshot_read_mor (or declare the merge_on_read "
+            "reader feature to read the raw physical set)"
+        )
 
 
-def _snapshot_read_with_live(
-    spark: SparkSession, table_dir: str, version: int | None,
+def _scan_files(
+    spark: SparkSession, table_dir: str, snap: Snapshot,
     *, read_schema=None,
-) -> tuple[DataFrame, list]:
-    """The replay + scan shared by :func:`snapshot_read` and the MOR
-    reader — ONE live-set replay job serves both the scan's file
-    list and the MOR path's add-sequence map (a second replay here
-    doubled the read's planning cost, bench-caught).
+) -> DataFrame:
+    """The scan of a snapshot's live files, shared by
+    :func:`snapshot_read` and the MOR reader.
 
     ``read_schema`` (the mapped readers' explicit physical schema)
     replaces the ``mergeSchema`` footer union: required once a
     column TYPE has been widened (heterogeneous footers refuse to
     merge), and strictly cheaper even without one — no footer-merge
     pass, and unmapped columns never decode."""
-    live = _live_file_records(table_dir, version)  # driver replay
-    paths = sorted(r["path"] for r in live)
+    paths = sorted(r["path"] for r in snap.files)
     missing = [
         p for p in paths
         if not os.path.exists(os.path.join(table_dir, DATA_SUBDIR, p))
@@ -2427,8 +2407,7 @@ def _snapshot_read_with_live(
         # the vacuum contract's loud half: a time-travel read below
         # the vacuum horizon must fail, never return partial data
         raise ValueError(
-            f"version {'latest' if version is None else version} reads "
-            f"vacuumed files: {missing}"
+            f"version {snap.version} reads vacuumed files: {missing}"
         )
     reader = (
         spark.read.schema(read_schema) if read_schema is not None
@@ -2439,39 +2418,24 @@ def _snapshot_read_with_live(
         # state — DROP PARTITION of the last partition, a DELETE of
         # everything — and must read as an EMPTY frame, not crash the
         # zero-file scan.  Schema source: the explicit mapped schema
-        # when given, else the newest removed file's footer (removes
-        # are logical; the bytes are still there until vacuum)
+        # when given, else the footer of the newest add at or below
+        # the version (removes are logical; the bytes are still there
+        # until vacuum) — a time-travel read of an empty HISTORICAL
+        # version answers its schema from a footer of its own era,
+        # never from a future add (ADVICE r16 low)
         if read_schema is not None:
-            return spark.createDataFrame([], read_schema), live
-        # the footer lookup honors the requested version (ADVICE r16
-        # low): a time-travel read of an empty HISTORICAL version
-        # must answer its schema from a footer of its own era, never
-        # leak post-widening / auto-evolved columns from a future add
-        # — driver-side walk of the retained log, like read_log
-        newest_add = None
-        for lp in sorted(
-            _glob.glob(os.path.join(table_dir, LOG_SUBDIR, "*.json"))
-        ):
-            if (
-                version is not None
-                and int(os.path.basename(lp).split(".")[0]) > version
-            ):
-                continue
-            for a in _action_lines_of(lp):
-                if a.get("a") == "add":
-                    newest_add = a  # file order == version order
-        if newest_add is not None:
-            p = os.path.join(
-                table_dir, DATA_SUBDIR, newest_add["path"])
+            return spark.createDataFrame([], read_schema)
+        if snap.newest_add is not None:
+            p = os.path.join(table_dir, DATA_SUBDIR, snap.newest_add)
             if os.path.exists(p):
-                return spark.read.parquet(p).filter(F.lit(False)), live
+                return spark.read.parquet(p).filter(F.lit(False))
         raise ValueError(
             f"{table_dir} has no live files and no retained footer "
             "to answer a schema from (vacuumed empty table)"
         )
     return reader.parquet(
         *[os.path.join(table_dir, DATA_SUBDIR, p) for p in paths]
-    ), live
+    )
 
 
 def evolved_schema(
@@ -2481,10 +2445,8 @@ def evolved_schema(
     action at or below it (None when the log predates schema
     tracking — readers then fall back to the physical file schemas,
     which is exactly what :func:`snapshot_read` does anyway)."""
-    rows = [
-        a for a in _meta_actions(table_dir)  # driver-side
-        if a["a"] == "meta" and (version is None or a["v"] <= version)
-    ]
+    rows = [a for a in _snapshot(table_dir, version).meta
+            if a["a"] == "meta"]
     return rows[-1]["schema_cols"] if rows else None
 
 
@@ -2511,8 +2473,7 @@ def evolve_table(
     new = orders.filter(F.expr(f"o_orderkey div {width}") == 7).withColumn(
         "price_band", F.floor(F.col("o_totalprice") / 1000).cast("long")
     )
-    latest = int(read_log(spark, dest_dir).agg(F.max("v")).collect()[0][0])
-    new_v = latest + 1
+    new_v = _latest_version(dest_dir) + 1
     name = f"F{new_v}.parquet"
     dest = os.path.join(dest_dir, DATA_SUBDIR, name)
     _write_one_file(new, dest)
@@ -2571,43 +2532,45 @@ def column_mapping(
     indirection (Delta column mapping) make RENAME and DROP pure
     metadata: data files never rewrite, and every historical version
     stays readable under the names it had then."""
-    rows = _schema_map_actions(table_dir, version)  # driver-side
+    return _column_mapping(_snapshot(table_dir, version))
+
+
+def _column_mapping(snap: Snapshot) -> list[dict] | None:
+    rows = _schema_map_actions(snap)
     return _mapping_decode(list(rows[-1]["schema_map"])) if rows else None
 
 
-def _schema_map_actions(
-    table_dir: str, version: int | None
-) -> list[dict]:
-    """Every "meta" action carrying a ``schema_map`` at/below
-    ``version``, commit-ordered — the shared driver-side read behind
+def _schema_map_actions(snap: Snapshot) -> list[dict]:
+    """Every "meta" action carrying a ``schema_map`` in the snapshot,
+    commit-ordered — the shared driver-side read behind
     :func:`column_mapping` and the alias-history resolvers."""
     return [
-        a for a in _meta_actions(table_dir)
+        a for a in snap.meta
         if a["a"] == "meta" and a["schema_map"] is not None
-        and (version is None or a["v"] <= version)
     ]
 
 
-def _max_fid_ever(spark: SparkSession, table_dir: str) -> int:
-    """The largest field id in ANY historical meta action — dropped
-    columns keep their ids retired forever, so a later add can never
-    reuse a dropped column's physical name (whose data still lives
-    in old files).  An expired log's checkpoint carries its meta
-    actions, so retention never frees an id."""
+def _max_fid_ever(snap: Snapshot) -> int:
+    """The largest field id in ANY meta action up to the snapshot's
+    version (callers pass the latest) — dropped columns keep their
+    ids retired forever, so a later add can never reuse a dropped
+    column's physical name (whose data still lives in old files).  An
+    expired log's checkpoint carries its meta actions, so retention
+    never frees an id."""
     return max(
         (int(s.split("|", 1)[0])
-         for a in _meta_actions(table_dir) for s in a["schema_map"] or ()),
+         for a in snap.meta for s in a["schema_map"] or ()),
         default=-1,
     )
 
 
 def _current_mapping_or_identity(
-    spark: SparkSession, table_dir: str
+    spark: SparkSession, table_dir: str, snap: Snapshot
 ) -> list[dict]:
-    m = column_mapping(spark, table_dir)
+    m = _column_mapping(snap)
     if m is not None:
         return m
-    if not _present_versions(table_dir):
+    if snap.version < 0:
         # an unmapped table with no commits has NO schema to evolve —
         # raw Spark would throw UNABLE_TO_INFER_SCHEMA from the
         # empty scan; name the actual problem instead.  A table that
@@ -2620,8 +2583,8 @@ def _current_mapping_or_identity(
         )
     # schema inference only — delete files don't change the schema,
     # so this internal read declares merge_on_read legitimately
-    base = snapshot_read(
-        spark, table_dir, reader_features=("merge_on_read",)
+    base = _snapshot_read(
+        spark, table_dir, snap, reader_features=("merge_on_read",)
     )
     return [
         {
@@ -2633,7 +2596,7 @@ def _current_mapping_or_identity(
 
 
 def _refuse_constrained_column(
-    spark: SparkSession, table_dir: str, column: str, verb: str
+    snap: Snapshot, column: str, verb: str
 ) -> None:
     """Delta's rule: a column referenced by an active CHECK
     constraint cannot be renamed or dropped — the constraint would
@@ -2644,7 +2607,7 @@ def _refuse_constrained_column(
     import re as _re
 
     hit = sorted(
-        n for n, pred in table_constraints(spark, table_dir).items()
+        n for n, pred in _table_constraints(snap).items()
         if _re.search(rf"\b{_re.escape(column)}\b", pred)
     )
     if hit:
@@ -2655,7 +2618,7 @@ def _refuse_constrained_column(
 
 
 def _refuse_spec_source_column(
-    spark: SparkSession, table_dir: str, column: str, verb: str
+    snap: Snapshot, column: str, verb: str
 ) -> None:
     """The partition-spec twin of the constraint guard: a spec entry
     derives its values from a SOURCE column, so DROPPING that column
@@ -2667,7 +2630,7 @@ def _refuse_spec_source_column(
     the same commit and old recorded values resolve through the
     field-id alias map (r16, VERDICT r15 next #5)."""
     hit = sorted(
-        e for e in partition_spec(spark, table_dir)
+        e for e in _partition_spec(snap)
         if _parse_spec_entry(e)[1] == column
     )
     if hit:
@@ -2694,7 +2657,7 @@ def _refuse_case_collision(
             )
 
 
-def _mapping_actions(table_dir: str, entries: list[dict]) -> list[dict]:
+def _mapping_actions(snap: Snapshot, entries: list[dict]) -> list[dict]:
     """The action list committing a mapping change: the meta action,
     prepended by the column_mapping protocol action the FIRST time
     the table gains a mapping — from then on every read at/above
@@ -2702,7 +2665,7 @@ def _mapping_actions(table_dir: str, entries: list[dict]) -> list[dict]:
     separately from :func:`_mapping_commit` so a writer can land a
     schema change and its data in ONE commit (auto-evolving append)."""
     actions: list[dict] = []
-    if "column_mapping" not in required_reader_features(table_dir):
+    if "column_mapping" not in _required_features(snap, "reader_features"):
         actions.append({
             "a": "protocol", "reader_features": ["column_mapping"],
             # the writer half: a legacy writer that wouldn't
@@ -2723,7 +2686,7 @@ def _latest_version(table_dir: str) -> int:
 
 
 def _mapping_commit(
-    table_dir: str, entries: list[dict], planned_v: int | None = None
+    table_dir: str, snap: Snapshot, entries: list[dict]
 ) -> int:
     """Commit a mapping replacement under the SERIALIZABLE version
     pin: the schema_map meta action REPLACES the whole mapping, so
@@ -2731,16 +2694,13 @@ def _mapping_commit(
     silently drop each other's edits (the second writer's list lacks
     the first's column while its data file stays live) — the pin
     aborts the loser with ConcurrentModificationError instead, the
-    same rule Delta applies to metadata transactions.  ``planned_v``
-    is the version the caller read the mapping AT (captured BEFORE
-    the read, so the pin covers the whole read-edit-commit window);
-    a spurious abort from an interleaved append is the safe
-    direction — the caller replans."""
-    if planned_v is None:
-        planned_v = _latest_version(table_dir)
+    same rule Delta applies to metadata transactions.  ``snap`` is
+    the snapshot the caller read the mapping from, so the pin covers
+    the whole read-edit-commit window; a spurious abort from an
+    interleaved append is the safe direction — the caller replans."""
     return commit_actions(
-        table_dir, _mapping_actions(table_dir, entries),
-        expects_latest_version=planned_v,
+        table_dir, _mapping_actions(snap, entries),
+        expects_latest_version=snap.version,
     )
 
 
@@ -2759,9 +2719,9 @@ def rename_column(
     resolution (:func:`_spec_alias_map`) — so the rename round-trips
     through write, prune, and time travel instead of refusing.
     Returns the committed version."""
-    _refuse_constrained_column(spark, table_dir, old, "rename")
-    planned_v = _latest_version(table_dir)
-    entries = _current_mapping_or_identity(spark, table_dir)
+    snap = _snapshot(table_dir)
+    _refuse_constrained_column(snap, old, "rename")
+    entries = _current_mapping_or_identity(spark, table_dir, snap)
     logicals = {e["logical"] for e in entries}
     if old not in logicals:
         raise ValueError(f"no such column: {old!r}")
@@ -2778,7 +2738,7 @@ def rename_column(
     # spec entries deriving from the renamed column follow it in the
     # SAME commit (a separate property commit would leave a window
     # where the spec names a column that no longer exists)
-    spec = partition_spec(spark, table_dir)
+    spec = _partition_spec(snap)
     spec_acts: list[dict] = []
     if any(_parse_spec_entry(e)[1] == old for e in spec):
         new_spec = [
@@ -2790,8 +2750,8 @@ def rename_column(
             "min_date": ",".join(new_spec),
         }]
     return commit_actions(
-        table_dir, _mapping_actions(table_dir, entries) + spec_acts,
-        expects_latest_version=planned_v,
+        table_dir, _mapping_actions(snap, entries) + spec_acts,
+        expects_latest_version=snap.version,
     )
 
 
@@ -2800,16 +2760,16 @@ def drop_column(spark: SparkSession, table_dir: str, name: str) -> int:
     entry.  Its physical data stays in existing files (readable by
     time travel below this commit) and its field id is retired
     forever, so no later column can collide with it."""
-    _refuse_constrained_column(spark, table_dir, name, "drop")
-    _refuse_spec_source_column(spark, table_dir, name, "drop")
-    planned_v = _latest_version(table_dir)
-    entries = _current_mapping_or_identity(spark, table_dir)
+    snap = _snapshot(table_dir)
+    _refuse_constrained_column(snap, name, "drop")
+    _refuse_spec_source_column(snap, name, "drop")
+    entries = _current_mapping_or_identity(spark, table_dir, snap)
     if name not in {e["logical"] for e in entries}:
         raise ValueError(f"no such column: {name!r}")
     kept = [e for e in entries if e["logical"] != name]
     if not kept:
         raise ValueError("cannot drop the last column")
-    return _mapping_commit(table_dir, kept, planned_v)
+    return _mapping_commit(table_dir, snap, kept)
 
 
 def add_column_mapped(
@@ -2819,20 +2779,17 @@ def add_column_mapped(
     physical column (``fc{fid}``) that no historical file contains —
     old files NULL-backfill it at read time, the add-column half of
     evolution composed with mapping."""
-    planned_v = _latest_version(table_dir)
-    entries = _current_mapping_or_identity(spark, table_dir)
+    snap = _snapshot(table_dir)
+    entries = _current_mapping_or_identity(spark, table_dir, snap)
     if logical in {e["logical"] for e in entries}:
         raise ValueError(f"column already exists: {logical!r}")
     _refuse_case_collision(entries, [logical])
-    fid = max(
-        _max_fid_ever(spark, table_dir),
-        max(e["fid"] for e in entries),
-    ) + 1
+    fid = max(_max_fid_ever(snap), max(e["fid"] for e in entries)) + 1
     entries.append({
         "fid": fid, "physical": f"fc{fid}",
         "logical": logical, "type": sql_type,
     })
-    return _mapping_commit(table_dir, entries, planned_v)
+    return _mapping_commit(table_dir, snap, entries)
 
 
 #: TYPE WIDENING (Delta 3.x type widening / Iceberg schema
@@ -2908,11 +2865,11 @@ def widen_column_type(
     silently skip those files.  Integer-chain widenings keep the
     string form and stay legal on spec sources.  Returns the
     committed version."""
+    snap = _snapshot(table_dir)
     nl = new_type.lower().strip()
     if nl in ("float", "double") or _DECIMAL_RE.match(nl):
-        _refuse_spec_source_column(spark, table_dir, logical, "widen")
-    planned_v = _latest_version(table_dir)
-    entries = _current_mapping_or_identity(spark, table_dir)
+        _refuse_spec_source_column(snap, logical, "widen")
+    entries = _current_mapping_or_identity(spark, table_dir, snap)
     by_logical = {e["logical"]: e for e in entries}
     if logical not in by_logical:
         raise ValueError(f"no such column: {logical!r}")
@@ -2926,7 +2883,7 @@ def widen_column_type(
             "at scan time)"
         )
     by_logical[logical]["type"] = new_type
-    return _mapping_commit(table_dir, entries, planned_v)
+    return _mapping_commit(table_dir, snap, entries)
 
 
 def _mapping_read_schema(spark: SparkSession, m: list[dict]):
@@ -2943,20 +2900,18 @@ def _mapping_read_schema(spark: SparkSession, m: list[dict]):
     ]).schema
 
 
-def _table_reader(
-    spark: SparkSession, table_dir: str, version: int | None = None
-):
+def _table_reader(spark: SparkSession, snap: Snapshot):
     """A DataFrameReader for this table's data files: the explicit
     declared-type schema on a MAPPED table (required once a widen
     makes footers heterogeneous — mergeSchema refuses those), the
     usual mergeSchema footer union otherwise.  Shared by every
     data-path reader that scans raw physical files (partition /
     stats pruned reads, the storage-partitioned join, compaction),
-    so a type widening can't strand any of them.  ``version`` pins
-    the mapping AS OF a time-travel read — a versioned read below a
-    widen must decode (and answer in) the NARROW type of its day,
-    exactly like snapshot_read_mapped."""
-    m = column_mapping(spark, table_dir, version)
+    so a type widening can't strand any of them.  The mapping is the
+    snapshot's: a versioned read below a widen must decode (and
+    answer in) the NARROW type of its day, exactly like
+    snapshot_read_mapped."""
+    m = _column_mapping(snap)
     if m is not None:
         return spark.read.schema(_mapping_read_schema(spark, m))
     return spark.read.option("mergeSchema", "true")
@@ -2972,9 +2927,10 @@ def snapshot_read_mapped(
     carries yet) NULL-backfills with its declared type.  A version
     below the first mapping commit reads raw physical schemas —
     byte-identical to what that version always returned."""
-    m = column_mapping(spark, table_dir, version)
-    base = snapshot_read(
-        spark, table_dir, version,
+    snap = _snapshot(table_dir, version)
+    m = _column_mapping(snap)
+    base = _snapshot_read(
+        spark, table_dir, snap,
         reader_features=() if m is None else ("column_mapping",),
         read_schema=None if m is None else _mapping_read_schema(spark, m),
     )
@@ -3005,9 +2961,10 @@ def snapshot_read_mor_mapped(
     version: delete subtraction runs on frozen PHYSICAL names (keys
     and positions are physical by construction), then the mapping
     projects to that version's logical names."""
-    m = column_mapping(spark, table_dir, version)
-    data = snapshot_read_mor(
-        spark, table_dir, version,
+    snap = _snapshot(table_dir, version)
+    m = _column_mapping(snap)
+    data = _snapshot_read_mor(
+        spark, table_dir, snap,
         reader_features=() if m is None else ("column_mapping",),
         read_schema=None if m is None else _mapping_read_schema(spark, m),
     )
@@ -3022,8 +2979,9 @@ def append_mapped(
     writer converts logical names to their frozen physical names
     before the file lands, so files written across renames union
     cleanly under ``mergeSchema`` forever."""
-    _enforce_constraints(spark, table_dir, df)  # logical names
-    m = column_mapping(spark, table_dir)
+    snap = _snapshot(table_dir)
+    _enforce_constraints(snap, df)  # logical names
+    m = _column_mapping(snap)
     if m is not None:
         by_logical = {e["logical"]: e["physical"] for e in m}
         missing = [c for c in df.columns if c not in by_logical]
@@ -3066,16 +3024,15 @@ def append_auto_evolve(
     plain readers until something actually evolves)."""
     if key not in df.columns:
         raise ValueError(f"append frame must carry the key {key!r}")
-    _enforce_constraints(spark, table_dir, df)  # logical names
-    if not _present_versions(table_dir) \
-            and column_mapping(spark, table_dir) is None:
+    snap = _snapshot(table_dir)
+    _enforce_constraints(snap, df)  # logical names
+    mapped = _column_mapping(snap) is not None
+    if snap.version < 0 and not mapped:
         add = _write_with_add_action(df, table_dir, name, key=key)
         if add is None:
             raise ValueError("empty append")
         return commit_actions(table_dir, [add])
-    planned_v = _latest_version(table_dir)
-    mapped = column_mapping(spark, table_dir) is not None
-    entries = _current_mapping_or_identity(spark, table_dir)
+    entries = _current_mapping_or_identity(spark, table_dir, snap)
     by_logical = {e["logical"]: e for e in entries}
     types = dict(df.dtypes)
     changed = False
@@ -3108,10 +3065,7 @@ def append_auto_evolve(
     new_cols = [c for c in df.columns if c not in by_logical]
     if new_cols:
         _refuse_case_collision(entries, new_cols)
-        fid = max(
-            _max_fid_ever(spark, table_dir),
-            max(e["fid"] for e in entries),
-        ) + 1
+        fid = max(_max_fid_ever(snap), max(e["fid"] for e in entries)) + 1
         for c in new_cols:
             entries.append({
                 "fid": fid, "physical": f"fc{fid}",
@@ -3133,8 +3087,8 @@ def append_auto_evolve(
     # schema change + data in one commit, under the serializable pin
     # the mapping was read at (see _mapping_commit's lost-edit rule)
     return commit_actions(
-        table_dir, _mapping_actions(table_dir, entries) + [add],
-        expects_latest_version=planned_v,
+        table_dir, _mapping_actions(snap, entries) + [add],
+        expects_latest_version=snap.version,
     )
 
 
@@ -3488,7 +3442,7 @@ def pruned_scan_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     a file loses rows and moves the hash; the pruning itself is
     plan-pinned via ``inputFiles`` in tests."""
     table_dir = stage_versioned_table(spark, sf_dir)
-    live = _live_file_records(table_dir)
+    live = _snapshot(table_dir).files
     gmax = max(r["max_key"] for r in live)
     lo, hi = gmax * 35 // 100, gmax * 55 // 100
     cand = sorted(
@@ -3602,10 +3556,8 @@ def _rebuild_spec_entry(kind: str, col: str, arg) -> str:
     return f"{kind}({arg},{col})"  # bucket / truncate
 
 
-def _spec_alias_map(
-    spark: SparkSession, table_dir: str, version: int | None = None
-) -> dict[str, str]:
-    """alias entry string -> CURRENT (as-of-``version``) entry string
+def _spec_alias_map(snap: Snapshot) -> dict[str, str]:
+    """alias entry string -> CURRENT (as-of-the-snapshot) entry string
     for every entry of the spec in force, across every logical name
     the entry's source FIELD ID has ever carried (VERDICT r15 next
     #5: Iceberg specs reference sources by field id and survive
@@ -3613,17 +3565,17 @@ def _spec_alias_map(
     and resolves the history at plan time — driver-side metadata,
     one pass over the meta actions).  Identity map when the table is
     unmapped or never renamed."""
-    spec = partition_spec(spark, table_dir, version)
+    spec = _partition_spec(snap)
     out = {e: e for e in spec}
     if not spec:
         return out
-    m = column_mapping(spark, table_dir, version)
+    m = _column_mapping(snap)
     if m is None:
         return out
     fid_of = {e["logical"]: e["fid"] for e in m}
     hist = [
         _mapping_decode(list(a["schema_map"]))
-        for a in _schema_map_actions(table_dir, version)  # driver-side
+        for a in _schema_map_actions(snap)
     ]
     for entry in spec:
         kind, col, arg = _parse_spec_entry(entry)
@@ -3655,21 +3607,19 @@ def _spec_alias_map(
     return out
 
 
-def _source_alias_to_current(
-    spark: SparkSession, table_dir: str, version: int | None = None
-) -> dict[str, str]:
+def _source_alias_to_current(snap: Snapshot) -> dict[str, str]:
     """Any name a mapped field ever carried (logical history +
-    frozen physical) -> its CURRENT (as-of-``version``) logical name.
+    frozen physical) -> its CURRENT (as-of-the-snapshot) logical name.
     Lets :func:`partition_pruned_read_where` convert predicates for
     entries of an EARLIER spec whose source column was later renamed
     — the recorded entry speaks the old name, the caller speaks the
     new one.  Empty when unmapped."""
-    m = column_mapping(spark, table_dir, version)
+    m = _column_mapping(snap)
     if m is None:
         return {}
     cur_of_fid = {e["fid"]: e["logical"] for e in m}
     out: dict[str, str] = {}
-    for a in _schema_map_actions(table_dir, version):  # driver-side
+    for a in _schema_map_actions(snap):
         for e in _mapping_decode(list(a["schema_map"])):
             cur = cur_of_fid.get(e["fid"])
             if cur is not None:
@@ -3734,12 +3684,12 @@ def partition_spec(
 ) -> list[str]:
     """The partition spec entries in force at ``version`` ([] when
     the table is unpartitioned)."""
-    if not _present_versions(table_dir):
-        return []  # zero commits: unpartitioned, nothing to read
-    raw = table_properties(spark, table_dir, version).get(
-        PARTITION_SPEC_PROP, ""
-    )
-    return _split_spec(raw)
+    return _partition_spec(_snapshot(table_dir, version))
+
+
+def _partition_spec(snap: Snapshot) -> list[str]:
+    return _split_spec(
+        _table_properties(snap).get(PARTITION_SPEC_PROP, ""))
 
 
 _PART_VALUE_OK = re.compile(r"[A-Za-z0-9._\- ]+\Z")
@@ -3785,29 +3735,29 @@ def append_partitioned(
     a day's partitions), never corpus-bounded."""
     return commit_actions(
         table_dir,
-        _stage_partitioned_files(spark, table_dir, df, prefix, key=key),
+        _stage_partitioned_files(
+            spark, table_dir, _snapshot(table_dir), df, prefix, key=key),
     )
 
 
 def _stage_partitioned_files(
     spark: SparkSession,
     table_dir: str,
+    snap: Snapshot,
     df: DataFrame,
     prefix: str,
     *,
     key: str = "o_orderkey",
-    spec: list[str] | None = None,
 ) -> list[dict]:
-    """Write ``df`` one-file-per-partition-value under the current
+    """Write ``df`` one-file-per-partition-value under the snapshot's
     spec and return the add actions WITHOUT committing — shared by
     :func:`append_partitioned` (adds only) and
     :func:`replace_partitions` (removes + adds in one version).
     Staged files are invisible to readers until a commit references
-    them, so the split costs nothing in atomicity.  ``spec`` lets a
-    caller that already read the spec pin it — a concurrent spec
-    evolution between two reads would otherwise desync the staged
-    values from the caller's planning."""
-    m = column_mapping(spark, table_dir)
+    them, so the split costs nothing in atomicity.  Spec and mapping
+    come from the caller's snapshot, so a concurrent spec evolution
+    cannot desync the staged values from the caller's planning."""
+    m = _column_mapping(snap)
     log2phys: dict[str, str] | None = None
     if m is not None and any(e["physical"] != e["logical"] for e in m):
         # diverged mapping (renamed or fc-added fields): the writer
@@ -3824,8 +3774,7 @@ def _stage_partitioned_files(
                 "appends speak the logical schema"
             )
         log2phys = by_logical
-    if spec is None:
-        spec = partition_spec(spark, table_dir)
+    spec = _partition_spec(snap)
     if not spec:
         raise ValueError(
             f"{table_dir} has no partition spec "
@@ -3936,21 +3885,21 @@ def partition_candidate_files(
     degrades skip precision, not correctness.  Values recorded under
     a since-RENAMED source column's old name resolve through the
     field-id alias map, so a rename costs no pruning precision."""
-    # the versioned replay selects the checkpoint at-or-below
+    # the versioned snapshot seeds from the checkpoint at-or-below
     # ``version`` and validates expiry exactly like snapshot_files —
     # seeding from the latest checkpoint and filtering by v would
     # mis-resolve files removed/re-added in (version, ckpt_v] on a
     # truncated log, silently dropping rows from a time-travel read
     # through pruning (ADVICE r17).
-    live = sorted(
-        _live_file_records(table_dir, version),
-        key=lambda r: r["path"],
-    )
-    alias_map = _spec_alias_map(spark, table_dir, version)
+    return _partition_candidates(_snapshot(table_dir, version), eq)
+
+
+def _partition_candidates(snap: Snapshot, eq: dict[str, object]) -> list:
+    alias_map = _spec_alias_map(snap)
     want = {c: _encode_part_value(c, v).split("=", 1)[1]
             for c, v in eq.items()}
     out = []
-    for r in live:
+    for r in sorted(snap.files, key=lambda r: r["path"]):
         vals = _canon_part_vals(r["part"], alias_map)
         if all(c not in vals or vals[c] == w for c, w in want.items()):
             out.append(r)
@@ -3962,7 +3911,7 @@ def _pruned_mor_subtract(
     table_dir: str,
     data: DataFrame,
     cand: list,
-    version: int | None = None,
+    snap: Snapshot,
     key: str = "o_orderkey",
 ) -> DataFrame:
     """Apply the LIVE MOR delete state to a candidates-only pruned
@@ -3977,7 +3926,7 @@ def _pruned_mor_subtract(
     regardless of later renames); a table without live deletes pays
     nothing.  ``cand`` supplies the scanned files' sequence numbers
     for the keydel rule."""
-    dels = _live_delete_actions(table_dir, version)
+    dels = snap.deletes
     if not dels:
         return data
     tagged = data.select(
@@ -4002,17 +3951,25 @@ def partition_pruned_read(
     skip plan here), then applies ``eq`` as a residual DATA filter —
     exact on partition-matched files by construction (identity
     transform), load-bearing on files with no recorded value."""
-    cand = partition_candidate_files(spark, table_dir, eq, version)
+    return _partition_pruned_read(
+        spark, table_dir, _snapshot(table_dir, version), eq)
+
+
+def _partition_pruned_read(
+    spark: SparkSession, table_dir: str, snap: Snapshot,
+    eq: dict[str, object],
+) -> DataFrame:
+    cand = _partition_candidates(snap, eq)
     if not cand:
-        return _empty_snapshot(spark, table_dir, version)
-    data = _table_reader(spark, table_dir, version).parquet(
+        return _empty_snapshot(spark, table_dir, snap)
+    data = _table_reader(spark, snap).parquet(
         *[os.path.join(table_dir, DATA_SUBDIR, r["path"]) for r in cand]
     )
-    data = _pruned_mor_subtract(spark, table_dir, data, cand, version)
+    data = _pruned_mor_subtract(spark, table_dir, data, cand, snap)
     # project to LOGICAL names FIRST (r16): spec entries speak the
     # logical vocabulary as of the version, which a renamed source
     # column's physical name no longer matches
-    data = _project_logical(spark, table_dir, data, version)
+    data = _project_logical(data, snap)
     for c, v in eq.items():
         # the residual compares the spec entry's own VALUE expression
         # (identity or transform), so the filter and the recorded
@@ -4028,37 +3985,30 @@ def partition_pruned_read(
     return data
 
 
-def _project_logical(
-    spark: SparkSession,
-    table_dir: str,
-    data: DataFrame,
-    version: int | None = None,
-) -> DataFrame:
-    """Project a PHYSICAL-named pruned scan to the mapping's logical
-    names AS OF ``version`` (identity when unmapped), so the pruned
+def _project_logical(data: DataFrame, snap: Snapshot) -> DataFrame:
+    """Project a PHYSICAL-named pruned scan to the snapshot's logical
+    names (identity when unmapped), so the pruned
     readers answer in the same vocabulary as snapshot_read_mapped.
     The PARTITION readers project FIRST and filter after (r16: spec
     entries speak logical names, which a renamed source's physical
     name no longer matches); the cstats reader still filters first,
     on the written physical vocabulary its per-file stats record."""
-    m = column_mapping(spark, table_dir, version)
+    m = _column_mapping(snap)
     return data if m is None else _apply_mapping(data, m)
 
 
 def _empty_snapshot(
-    spark: SparkSession, table_dir: str, version: int | None = None
+    spark: SparkSession, table_dir: str, snap: Snapshot
 ) -> DataFrame:
     """A zero-row frame in the table's (mapped, logical) read schema
     — the pruned readers' no-candidates result.  Threads the
     explicit mapped schema so it cannot crash on a width-
     heterogeneous (type-widened) live set the way a mergeSchema
     footer union would."""
-    m = column_mapping(spark, table_dir, version)
+    m = _column_mapping(snap)
     rs = None if m is None else _mapping_read_schema(spark, m)
-    base, _ = _snapshot_read_with_live(
-        spark, table_dir, version, read_schema=rs
-    )
-    data = base.filter(F.lit(False))
+    data = _scan_files(spark, table_dir, snap, read_schema=rs) \
+        .filter(F.lit(False))
     return data if m is None else _apply_mapping(data, m)
 
 
@@ -4099,19 +4049,20 @@ def partition_pruned_read_where(
     ORIGINAL predicates apply as residual data filters.  A predicate
     on a column no spec entry derives from still narrows the data,
     it just can't prune files."""
-    live = _live_file_records(table_dir, version)
-    alias_map = _spec_alias_map(spark, table_dir, version)
+    snap = _snapshot(table_dir, version)
+    live = snap.files
+    alias_map = _spec_alias_map(snap)
     # convert for every derivable key: the CURRENT spec plus every
     # key any live file recorded (canonicalized through the rename
     # alias map) — files written under a PREVIOUS spec that also
     # derived from the filtered column prune too
-    keys = set(partition_spec(spark, table_dir, version))
+    keys = set(_partition_spec(snap))
     keys |= {
         alias_map.get(k, k)
         for r in live for p in (r["part"] or [])
         for k in (p.split("=", 1)[0],)
     }
-    col_alias = _source_alias_to_current(spark, table_dir, version)
+    col_alias = _source_alias_to_current(snap)
     eq: dict[str, str] = {}
     for entry in keys:
         try:
@@ -4137,15 +4088,15 @@ def partition_pruned_read_where(
         )
     ]
     if not cand:
-        return _empty_snapshot(spark, table_dir, version)
-    data = _table_reader(spark, table_dir, version).parquet(
+        return _empty_snapshot(spark, table_dir, snap)
+    data = _table_reader(spark, snap).parquet(
         *[os.path.join(table_dir, DATA_SUBDIR, r["path"])
           for r in cand]
     )
-    data = _pruned_mor_subtract(spark, table_dir, data, cand, version)
+    data = _pruned_mor_subtract(spark, table_dir, data, cand, snap)
     # logical names first (r16): source_eq speaks the vocabulary of
     # the requested version, renamed columns included
-    data = _project_logical(spark, table_dir, data, version)
+    data = _project_logical(data, snap)
     for c, v in source_eq.items():
         data = data.filter(
             F.col(c).isNull() if v is None
@@ -4186,16 +4137,14 @@ def replace_partitions(
     concurrently ADDED files matching the predicate; pinning the
     planning version is the log-level way to get the same
     guarantee)."""
-    spec = partition_spec(spark, table_dir)
-    planned_v = max(_present_versions(table_dir), default=-1)
+    snap = _snapshot(table_dir)
+    spec = _partition_spec(snap)
     adds = _stage_partitioned_files(
-        spark, table_dir, df, prefix, key=key, spec=spec
-    )
+        spark, table_dir, snap, df, prefix, key=key)
     touched = {tuple(a["part"]) for a in adds}
-    live = _live_file_records(table_dir, planned_v)
-    alias_map = _spec_alias_map(spark, table_dir)
+    alias_map = _spec_alias_map(snap)
     removes = []
-    for r in live:
+    for r in snap.files:
         # recorded values under a renamed source's old name resolve
         # to the current entry — an overwrite must replace them too,
         # or the touched partition would keep duplicate rows
@@ -4208,7 +4157,7 @@ def replace_partitions(
     actions += adds
     return commit_actions(
         table_dir, actions, expects_live=removes,
-        expects_latest_version=planned_v,
+        expects_latest_version=snap.version,
     )
 
 
@@ -4233,7 +4182,8 @@ def compact_partition(
     This is why partitions earn their place next to stats skipping:
     the maintenance planner lists one partition's files from
     metadata and never plans over the rest of a 100 TB live set."""
-    spec = partition_spec(spark, table_dir)
+    snap = _snapshot(table_dir)
+    spec = _partition_spec(snap)
     if not spec:
         raise ValueError(f"{table_dir} has no partition spec")
     if set(eq) != set(spec):
@@ -4242,14 +4192,13 @@ def compact_partition(
             f"{sorted(eq)}"
         )
     want = [_encode_part_value(c, eq[c]) for c in spec]
-    live = _live_file_records(table_dir)
-    alias_map = _spec_alias_map(spark, table_dir)
+    alias_map = _spec_alias_map(snap)
     canon_want = sorted(
         f"{alias_map.get(k, k)}={v}"
         for k, v in (w.split("=", 1) for w in want)
     )
     victims = [
-        r for r in live
+        r for r in snap.files
         if sorted(
             f"{c}={v}"
             for c, v in _canon_part_vals(r["part"], alias_map).items()
@@ -4269,7 +4218,7 @@ def compact_partition(
     # mergeSchema (or the mapped explicit schema): files in one
     # partition can diverge after schema evolution; a single-footer
     # read would silently drop the columns the chosen file lacks
-    data = _table_reader(spark, table_dir).parquet(*[
+    data = _table_reader(spark, snap).parquet(*[
         os.path.join(table_dir, DATA_SUBDIR, r["path"]) for r in victims
     ])
     _write_one_file(data.sortWithinPartitions(key), dest)
@@ -4432,8 +4381,10 @@ def storage_partitioned_join(
     through the shared table reader and projects to LOGICAL names
     (ADVICE r15 low: an auto-evolved bucket table would otherwise
     leak physical ``fcN`` names into the join output)."""
+    snaps = {d: _snapshot(d) for d in (dir_a, dir_b)}
+
     def _bucket_spec(d: str) -> int:
-        spec = partition_spec(spark, d)
+        spec = _partition_spec(snaps[d])
         if len(spec) != 1:
             raise ValueError(
                 f"storage-partitioned join needs a single-entry "
@@ -4456,7 +4407,7 @@ def storage_partitioned_join(
 
     def _files_by_bucket(d: str) -> dict[str, list[str]]:
         out: dict[str, list[str]] = {}
-        for r in _live_file_records(d):
+        for r in snaps[d].files:
             vals = dict(p.split("=", 1) for p in (r["part"] or []))
             b = vals.get(entry)
             if b is None:
@@ -4491,10 +4442,10 @@ def storage_partitioned_join(
     # type-widened bucket layout (heterogeneous footers) still joins,
     # then project to LOGICAL names (mapped tables would otherwise
     # leak fcN physical columns into the output)
-    rd_a = _table_reader(spark, dir_a)
-    rd_b = _table_reader(spark, dir_b)
-    m_a = column_mapping(spark, dir_a)
-    m_b = column_mapping(spark, dir_b)
+    rd_a = _table_reader(spark, snaps[dir_a])
+    rd_b = _table_reader(spark, snaps[dir_b])
+    m_a = _column_mapping(snaps[dir_a])
+    m_b = _column_mapping(snaps[dir_b])
     any_a = next(iter(fa.values()))[0]
     any_b = next(iter(fb.values()))[0]
     if max_branches < 1:
@@ -4549,11 +4500,11 @@ def drop_partitions(
         raise ValueError("drop_partitions needs at least one key")
     want = {c: _encode_part_value(c, v).split("=", 1)[1]
             for c, v in eq.items()}
-    live = _live_file_records(table_dir)
-    alias_map = _spec_alias_map(spark, table_dir)
+    snap = _snapshot(table_dir)
+    alias_map = _spec_alias_map(snap)
     blind = []
     victims = []
-    for r in live:
+    for r in snap.files:
         vals = _canon_part_vals(r["part"], alias_map)
         missing = [c for c in want if c not in vals]
         if missing:
@@ -4593,9 +4544,9 @@ def compact_partitions(
     partition needs compaction — the idempotent nightly-maintenance
     shape: at 100 TB the planner groups a metadata list, never scans
     data it won't rewrite."""
-    live = _live_file_records(table_dir)
+    snap = _snapshot(table_dir)
     groups: dict[tuple, list] = {}
-    for r in live:
+    for r in snap.files:
         if r["part"]:
             groups.setdefault(tuple(sorted(r["part"])), []).append(r)
     victims = {g: rs for g, rs in groups.items() if len(rs) >= 2}
@@ -4611,7 +4562,7 @@ def compact_partitions(
             raise ValueError(
                 f"data file exists: {name} — reuse a fresh prefix"
             )
-        data = _table_reader(spark, table_dir).parquet(*[
+        data = _table_reader(spark, snap).parquet(*[
             os.path.join(table_dir, DATA_SUBDIR, r["path"]) for r in rs
         ])
         _write_one_file(data.sortWithinPartitions(key), dest)
@@ -4704,10 +4655,13 @@ def candidate_files_where(
     hi`` against the generalized column bounds.  Files with no
     recorded bound for ``col`` ALWAYS stay candidates — the same
     never-lose-rows rule as partition and key-stats pruning."""
+    return _candidates_where(_snapshot(table_dir, version), col, lo, hi)
+
+
+def _candidates_where(snap: Snapshot, col: str, lo, hi) -> list:
     out = []
-    for r in _live_file_records(table_dir, version):
-        cs = r["cstats"] or {}
-        entry = cs.get(col)
+    for r in snap.files:
+        entry = (r["cstats"] or {}).get(col)
         if entry is None or _cstat_intersects(list(entry), lo, hi):
             out.append(r)
     return out
@@ -4724,18 +4678,19 @@ def stats_pruned_read_where(
     """Read under ``lo <= col <= hi`` with the generalized bounds
     doing the file pruning and the predicate applied as the residual
     data filter."""
-    cand = candidate_files_where(spark, table_dir, col, lo, hi, version)
+    snap = _snapshot(table_dir, version)
+    cand = _candidates_where(snap, col, lo, hi)
     if not cand:
-        return _empty_snapshot(spark, table_dir, version)
-    data = _table_reader(spark, table_dir, version).parquet(
+        return _empty_snapshot(spark, table_dir, snap)
+    data = _table_reader(spark, snap).parquet(
         *[os.path.join(table_dir, DATA_SUBDIR, r["path"]) for r in cand]
     )
-    data = _pruned_mor_subtract(spark, table_dir, data, cand, version)
+    data = _pruned_mor_subtract(spark, table_dir, data, cand, snap)
     if lo is not None:
         data = data.filter(F.col(col) >= F.lit(lo))
     if hi is not None:
         data = data.filter(F.col(col) <= F.lit(hi))
-    return _project_logical(spark, table_dir, data, version)
+    return _project_logical(data, snap)
 
 
 def stage_transform_table(spark: SparkSession, sf_dir: str) -> str:
@@ -4837,10 +4792,10 @@ def vacuum_plan(
     the latest version is protected, the pre-retention behavior).
     The protected set resolves driver-side from cached commit parses;
     no extra Spark jobs."""
+    latest = _snapshot(table_dir)
     if retain_versions is None:
         retain_versions = int(
-            table_properties(spark, table_dir)
-            .get("vacuum.retain_versions", "0")
+            _table_properties(latest).get("vacuum.retain_versions", "0")
         )
     log = read_log(spark, table_dir)
     # latest add per path (re-add-safe, ADVICE r12 #1): two adds of
@@ -4854,8 +4809,8 @@ def vacuum_plan(
     )
     protected: set[str] = set()
     for v in _present_versions(table_dir)[-(retain_versions + 1):]:
-        protected |= {r["path"] for r in _live_file_records(table_dir, v)}
-        protected |= _live_delete_paths(table_dir, v)
+        snap = latest if v == latest.version else _snapshot(table_dir, v)
+        protected |= {r["path"] for r in (*snap.files, *snap.deletes)}
     live = spark.createDataFrame(
         [(p,) for p in sorted(protected)], "path string"
     )
@@ -4952,21 +4907,20 @@ def restore_table(
     Fails loudly when ``to_version``'s bytes are gone: a re-added file
     that VACUUM already deleted aborts the restore before anything
     commits (Delta's missing-files check), and a target below the log-
-    retention horizon fails in :func:`snapshot_files`.  Commits with
+    retention horizon fails in :func:`_snapshot`.  Commits with
     snapshot isolation against the planned-from live set.  Returns the
     committed version."""
-    present = _present_versions(table_dir)
-    latest = present[-1] if present else -1
-    if to_version >= latest:
+    now = _snapshot(table_dir)
+    if to_version >= now.version:
         raise ValueError(
             f"RESTORE target v{to_version} is not below the current "
-            f"version v{latest}"
+            f"version v{now.version}"
         )
-    want = {r["path"]: r for r in _live_file_records(table_dir, to_version)}
-    have = {r["path"]: r for r in _live_file_records(table_dir)}
-    want_del = {r["path"]: r
-                for r in _live_delete_actions(table_dir, to_version)}
-    have_del = {r["path"]: r for r in _live_delete_actions(table_dir)}
+    then = _snapshot(table_dir, to_version)
+    want = {r["path"]: r for r in then.files}
+    have = {r["path"]: r for r in now.files}
+    want_del = {r["path"]: r for r in then.deletes}
+    have_del = {r["path"]: r for r in now.deletes}
     re_adds = sorted(set(want) - set(have))
     removes = sorted(set(have) - set(want))
     del_re_adds = sorted(set(want_del) - set(have_del))
@@ -5032,14 +4986,14 @@ def clone_table(
     Returns ``dest_dir``."""
     if os.path.exists(dest_dir):
         raise ValueError(f"clone destination exists: {dest_dir}")
-    live = _live_file_records(src_dir)
-    dels = _live_delete_actions(src_dir)
-    feats = sorted(required_reader_features(src_dir))
-    wfeats = sorted(required_writer_features(src_dir))
-    mapping = column_mapping(spark, src_dir)
-    checks = table_constraints(spark, src_dir)
-    props = table_properties(spark, src_dir)
-    sc_rows = [a for a in _meta_actions(src_dir)
+    snap = _snapshot(src_dir)
+    live, dels = snap.files, snap.deletes
+    feats = sorted(_required_features(snap, "reader_features"))
+    wfeats = sorted(_required_features(snap, "writer_features"))
+    mapping = _column_mapping(snap)
+    checks = _table_constraints(snap)
+    props = _table_properties(snap)
+    sc_rows = [a for a in snap.meta
                if a["a"] == "meta" and a["schema_cols"] is not None]
     # Build into a temp sibling and rename into place so a mid-loop
     # os.link failure (cross-device dest, permissions) can't leave a
@@ -5127,20 +5081,19 @@ def table_detail(spark: SparkSession, table_dir: str) -> DataFrame:
     driver-side metadata — the same replay every read plans with; no
     data file opens, so it answers in commit-log time on a 100 TB
     table."""
-    live = _live_file_records(table_dir)
-    dels = _live_delete_actions(table_dir)
-    m = column_mapping(spark, table_dir)
+    snap = _snapshot(table_dir)
+    live = snap.files
     return spark.createDataFrame(
         [(
-            max(_present_versions(table_dir)),
+            snap.version,
             len(live),
             int(sum(r["n_rows"] or 0 for r in live)),
             int(sum(r["n_bytes"] or 0 for r in live)),
-            len(dels),
-            len(table_constraints(spark, table_dir)),
-            m is not None,
-            sorted(required_reader_features(table_dir)),
-            sorted(required_writer_features(table_dir)),
+            len(snap.deletes),
+            len(_table_constraints(snap)),
+            _column_mapping(snap) is not None,
+            sorted(_required_features(snap, "reader_features")),
+            sorted(_required_features(snap, "writer_features")),
         )],
         "version long, n_live_files long, n_rows long, n_bytes long, "
         "n_delete_files long, n_constraints long, "
@@ -5480,8 +5433,9 @@ def merge_table(
     the old files (still served to time travel below the drop) and
     simply don't propagate into post-drop rewrites, exactly Delta's
     column-mapping rewrite semantics."""
-    _refuse_live_deletes(table_dir, "MERGE")
-    feats = required_reader_features(table_dir)
+    snap = _snapshot(table_dir)
+    _refuse_live_deletes(snap, "MERGE")
+    feats = _required_features(snap, "reader_features")
     if feats - {"column_mapping"}:
         raise ValueError(
             f"MERGE does not support reader features "
@@ -5503,9 +5457,8 @@ def merge_table(
         # aborts between the two).  Columns the source LACKS still
         # refuse below: a merge that can't state every target column
         # would have to guess.
-        planned_v = _latest_version(table_dir)
-        mapped0 = column_mapping(spark, table_dir) is not None
-        entries = _current_mapping_or_identity(spark, table_dir)
+        mapped0 = _column_mapping(snap) is not None
+        entries = _current_mapping_or_identity(spark, table_dir, snap)
         by_logical = {e["logical"]: e for e in entries}
         types = dict(source.dtypes)
         changed = False
@@ -5533,10 +5486,8 @@ def merge_table(
         extra = [c for c in source.columns if c not in by_logical]
         if extra:
             _refuse_case_collision(entries, extra)
-            fid = max(
-                _max_fid_ever(spark, table_dir),
-                max(e["fid"] for e in entries),
-            ) + 1
+            fid = max(_max_fid_ever(snap),
+                      max(e["fid"] for e in entries)) + 1
             for c in extra:
                 entries.append({
                     "fid": fid, "physical": f"fc{fid}",
@@ -5545,18 +5496,17 @@ def merge_table(
                 fid += 1
             changed = True
         if changed:
-            mapping_acts = _mapping_actions(table_dir, entries)
-            planned_map_v = planned_v
+            mapping_acts = _mapping_actions(snap, entries)
+            planned_map_v = snap.version
             evolved = entries
-    mapping = evolved if evolved is not None \
-        else column_mapping(spark, table_dir)
+    mapping = evolved if evolved is not None else _column_mapping(snap)
     if mapping is None:
         # the exact-schema contract holds for UNMAPPED tables too:
         # without this, an extra source column would silently land in
         # the insert file only (matched rewrites use target columns),
         # surfacing for half the rows — worse than refusing
-        tbl_cols = set(snapshot_read(
-            spark, table_dir, reader_features=("merge_on_read",)
+        tbl_cols = set(_snapshot_read(
+            spark, table_dir, snap, reader_features=("merge_on_read",)
         ).columns)
         missing = sorted(tbl_cols - set(source.columns))
         extra = sorted(set(source.columns) - tbl_cols)
@@ -5601,7 +5551,7 @@ def merge_table(
             "first"
         )
     lo, hi = bounds["lo"], bounds["hi"]
-    live = _live_file_records(table_dir)
+    live = snap.files
     cand = sorted(
         r["path"] for r in live
         if not (r["max_key"] < lo or r["min_key"] > hi)
@@ -5752,7 +5702,7 @@ def bloom_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # live set + global max from the driver-side log replay: it
     # already holds both answers as metadata, so no dead file is
     # scanned just to be dropped again
-    adds = sorted(_live_file_records(table_dir), key=lambda a: a["path"])
+    adds = sorted(_snapshot(table_dir).files, key=lambda a: a["path"])
     gmax = max(int(a["max_key"]) for a in adds)
     data = (
         spark.read.parquet(
@@ -5922,10 +5872,11 @@ def delete_keys_mor(
 def _live_logical_tagged(
     spark: SparkSession,
     table_dir: str,
+    snap: Snapshot,
     *,
     op: str,
     with_pos: bool = False,
-) -> tuple[DataFrame, list[dict] | None]:
+) -> tuple[DataFrame, list[dict] | None, dict[str, dict]]:
     """The shared front door of the predicate DML ops (UPDATE WHERE,
     DELETE WHERE, positional MOR delete): the live set tagged with
     its origin file name (``_path``, and optionally its row position
@@ -5934,18 +5885,18 @@ def _live_logical_tagged(
     feature gate refusing unknown protocol features BEFORE any data
     reads.  Returns (frame, mapping, live-record-by-path) — the live
     map lets rewrites carry each origin file's partition values."""
-    feats = required_reader_features(table_dir)
+    feats = _required_features(snap, "reader_features")
     if feats - {"column_mapping"}:
         raise ValueError(
             f"{op} does not support reader features "
             f"{sorted(feats - {'column_mapping'})}"
         )
-    mapping = column_mapping(spark, table_dir)
-    live = _live_file_records(table_dir)
+    mapping = _column_mapping(snap)
+    live = snap.files
     paths = sorted(r["path"] for r in live)
     # mapped tables scan under the explicit declared-type schema so
     # type-widened live sets (heterogeneous footers) stay readable —
-    # same rule as _snapshot_read_with_live
+    # same rule as _scan_files
     reader = (
         spark.read.schema(_mapping_read_schema(spark, mapping))
         if mapping is not None
@@ -6062,9 +6013,10 @@ def delete_where_cow(
     rewrites land under frozen physical names carrying only mapped
     columns (the merge/update-under-mapping semantics).  Returns the
     committed version."""
-    _refuse_live_deletes(table_dir, "DELETE")
+    snap = _snapshot(table_dir)
+    _refuse_live_deletes(snap, "DELETE")
     tagged, mapping, live_by_path = _live_logical_tagged(
-        spark, table_dir, op="DELETE"
+        spark, table_dir, snap, op="DELETE"
     )
     hit = F.expr(predicate)
     touched = sorted(
@@ -6117,9 +6069,10 @@ def update_where_cow(
     anything lands: an UPDATE that would write a violating value is
     rejected whole, never partially applied.  Returns the committed
     version."""
-    _refuse_live_deletes(table_dir, "UPDATE")
+    snap = _snapshot(table_dir)
+    _refuse_live_deletes(snap, "UPDATE")
     base, mapping, live_by_path = _live_logical_tagged(
-        spark, table_dir, op="UPDATE"
+        spark, table_dir, snap, op="UPDATE"
     )
     cols = [c for c in base.columns if c != "_path"]
     bad = sorted(set(set_exprs) - set(cols))
@@ -6151,9 +6104,7 @@ def update_where_cow(
     # (logical names — the constraint vocabulary), never a rescan of
     # untouched files
     _enforce_constraints(
-        spark, table_dir,
-        rewritten.filter("__hit").drop("__hit", "_path"),
-    )
+        snap, rewritten.filter("__hit").drop("__hit", "_path"))
     rewritten = rewritten.drop("__hit")
     rewritten, phys_key = _to_physical(rewritten, mapping, key)
     nonce = _next_version_nonce(table_dir)
@@ -6264,13 +6215,12 @@ def update_where_mor(
     applies (:func:`_mor_exclude_dead`).  ``set_exprs`` follows
     :func:`update_where_cow`'s simultaneous-assignment semantics and
     CHECK validation.  Returns the committed version."""
-    planned_v = _latest_version(table_dir)
-    dels = _live_delete_actions(table_dir, None)
-    tagged, mapping, live_map = _live_logical_tagged(
-        spark, table_dir, op="positional UPDATE", with_pos=True
+    snap = _snapshot(table_dir)
+    tagged, mapping, _ = _live_logical_tagged(
+        spark, table_dir, snap, op="positional UPDATE", with_pos=True
     )
     tagged = _mor_exclude_dead(
-        spark, table_dir, tagged, dels, list(live_map.values()), key
+        spark, table_dir, tagged, snap.deletes, snap.files, key
     )
     cols = [c for c in tagged.columns if c not in ("_path", "_pos")]
     bad = sorted(set(set_exprs) - set(cols))
@@ -6297,7 +6247,7 @@ def update_where_mor(
         if c in set_exprs else F.col(c)
         for c in cols
     ])
-    _enforce_constraints(spark, table_dir, updated)
+    _enforce_constraints(snap, updated)
     nonce = _next_version_nonce(table_dir)
 
     def _build(pdf):
@@ -6326,8 +6276,7 @@ def update_where_mor(
     if not n_dead:
         os.remove(pd_dest)
         raise ValueError("update predicate matched no rows")
-    spec = partition_spec(spark, table_dir)
-    if spec:
+    if _partition_spec(snap):
         # a PARTITIONED table's DML append routes one file per
         # touched partition value with ``part`` metadata recorded
         # (r17): without it every DML append is a never-pruned
@@ -6336,9 +6285,7 @@ def update_where_mor(
         # UPDATE that assigns a spec column records the NEW
         # partition — rows move partitions correctly by construction
         adds = _stage_partitioned_files(
-            spark, table_dir, updated, f"UPD{nonce}-mor", key=key,
-            spec=spec,
-        )
+            spark, table_dir, snap, updated, f"UPD{nonce}-mor", key=key)
     else:
         phys, phys_key = _to_physical(updated, mapping, key)
         adds = _write_with_add_actions(
@@ -6351,7 +6298,7 @@ def update_where_mor(
             "n_rows": n_dead, "n_bytes": os.path.getsize(pd_dest),
         },
         *adds,
-    ], expects_latest_version=planned_v)
+    ], expects_latest_version=snap.version)
 
 
 def merge_table_mor(
@@ -6383,13 +6330,12 @@ def merge_table_mor(
     Readers come through :func:`snapshot_read_mor`; the streaming
     IVM drains the commit as -matched/+source with no new
     machinery.  Returns the committed version."""
-    planned_v = _latest_version(table_dir)
-    dels = _live_delete_actions(table_dir, None)
-    tagged, mapping, live_map = _live_logical_tagged(
-        spark, table_dir, op="positional MERGE", with_pos=True
+    snap = _snapshot(table_dir)
+    tagged, mapping, _ = _live_logical_tagged(
+        spark, table_dir, snap, op="positional MERGE", with_pos=True
     )
     tagged = _mor_exclude_dead(
-        spark, table_dir, tagged, dels, list(live_map.values()), key
+        spark, table_dir, tagged, snap.deletes, snap.files, key
     )
     cols = [c for c in tagged.columns if c not in ("_path", "_pos")]
     missing = sorted(set(cols) - set(source.columns))
@@ -6417,7 +6363,7 @@ def merge_table_mor(
             f"{int(bounds['n'])} rows over {int(bounds['n_keys'])} "
             f"distinct {key!r} values — dedup the source first"
         )
-    _enforce_constraints(spark, table_dir, source)
+    _enforce_constraints(snap, source)
     matched = tagged.join(
         F.broadcast(source.select(key)), key
     ).select("_path", "_pos")
@@ -6446,14 +6392,13 @@ def merge_table_mor(
             "a": "posdel", "path": pd_name, "enc": "dv",
             "n_rows": n_dead, "n_bytes": os.path.getsize(pd_dest),
         })
-    spec = partition_spec(spark, table_dir)
-    if spec:
+    if _partition_spec(snap):
         # partitioned MERGE appends route per partition value too —
         # updates AND inserts land pruning-precise (see the UPDATE
         # note above)
         actions.extend(_stage_partitioned_files(
-            spark, table_dir, source.select(*cols),
-            f"MRG{nonce}-mor", key=key, spec=spec,
+            spark, table_dir, snap, source.select(*cols),
+            f"MRG{nonce}-mor", key=key,
         ))
     else:
         phys, phys_key = _to_physical(source.select(*cols), mapping, key)
@@ -6462,7 +6407,7 @@ def merge_table_mor(
             n_rows=int(bounds["n"]),
         ))
     return commit_actions(
-        table_dir, actions, expects_latest_version=planned_v
+        table_dir, actions, expects_latest_version=snap.version
     )
 
 
@@ -6488,8 +6433,9 @@ def delete_positions_mor(
     copy-on-write.  On a COLUMN-MAPPED table the predicate speaks
     LOGICAL names (positions are vocabulary-free, so the PD file
     needs no translation).  Returns the committed version."""
-    data, _, _live_unused = _live_logical_tagged(
-        spark, table_dir, op="positional DELETE", with_pos=True
+    data, _, _ = _live_logical_tagged(
+        spark, table_dir, _snapshot(table_dir),
+        op="positional DELETE", with_pos=True,
     )
     hits = (
         data.filter(F.expr(predicate))
@@ -6617,9 +6563,8 @@ def compact_delete_files(spark: SparkSession, table_dir: str) -> int:
     materialization between plan and commit aborts this compaction,
     which replans — the safe direction).  Returns the committed
     version."""
-    planned_v = _latest_version(table_dir)
-    dels = _live_delete_actions(table_dir, None)
-    pda = sorted((r for r in dels if r["a"] == "posdel"),
+    snap = _snapshot(table_dir)
+    pda = sorted((r for r in snap.deletes if r["a"] == "posdel"),
                  key=lambda r: r["path"])
     pdl = [r["path"] for r in pda]
     if len(pdl) < 2:
@@ -6656,7 +6601,7 @@ def compact_delete_files(spark: SparkSession, table_dir: str) -> int:
             "a": "posdel", "path": name, "enc": "dv",
             "n_rows": int(n), "n_bytes": os.path.getsize(dest),
         }],
-        expects_latest_version=planned_v,
+        expects_latest_version=snap.version,
     )
 
 
@@ -6668,7 +6613,7 @@ def snapshot_delete_files(
     liveness-bearing actions (a ``remove`` of the path — what
     materialization commits — retires it).  The DataFrame form, kept
     as the tests' reference; planning reads the driver-side
-    :func:`_live_delete_actions`."""
+    :class:`Snapshot`'s ``deletes``."""
     log = read_log(spark, table_dir)
     if version is not None:
         log = log.filter(F.col("v") <= version)
@@ -6712,14 +6657,27 @@ def snapshot_read_mor(
     after the delete is a new row, visible — without this, batch
     reads and the maintained streaming view diverge the first time
     an append lands after a delete."""
-    _check_reader_features(
-        table_dir, version,
-        tuple(reader_features) + ("merge_on_read",),
+    return _snapshot_read_mor(
+        spark, table_dir, _snapshot(table_dir, version), key=key,
+        reader_features=reader_features, read_schema=read_schema,
     )
-    data, live = _snapshot_read_with_live(
-        spark, table_dir, version, read_schema=read_schema
+
+
+def _snapshot_read_mor(
+    spark: SparkSession,
+    table_dir: str,
+    snap: Snapshot,
+    *,
+    key: str = "o_orderkey",
+    reader_features: tuple[str, ...] = (),
+    read_schema=None,
+) -> DataFrame:
+    data = _snapshot_read(
+        spark, table_dir, snap,
+        reader_features=tuple(reader_features) + ("merge_on_read",),
+        read_schema=read_schema,
     )
-    dels = _live_delete_actions(table_dir, version)
+    live, dels = snap.files, snap.deletes
     kd = sorted((r["path"], _seq_of(r))
                 for r in dels if r["a"] == "keydel")
     pda = sorted((r for r in dels if r["a"] == "posdel"),
@@ -6808,7 +6766,8 @@ def materialize_deletes(
     in ONE commit.  A plain :func:`snapshot_read` afterwards equals
     the :func:`snapshot_read_mor` view before (test-pinned).
     Returns the committed version."""
-    dels = _live_delete_actions(table_dir)
+    snap = _snapshot(table_dir)
+    dels = snap.deletes
     if not dels:
         raise ValueError("no live delete files to materialize")
     kd = sorted((r["path"], _seq_of(r))
@@ -6829,7 +6788,7 @@ def materialize_deletes(
             F.col("__path").alias("_path"),
             F.col("__pos").alias("_pos"),
         )
-    live = _live_file_records(table_dir)
+    live = snap.files
     cand: set[str] = set()
     if keys is not None:
         # the deleted keys' range from the keydel actions' recorded
@@ -6854,7 +6813,7 @@ def materialize_deletes(
         {"a": "remove", "path": r["path"]} for r in dels
     ]
     if cand:
-        tagged = _table_reader(spark, table_dir).parquet(
+        tagged = _table_reader(spark, snap).parquet(
             *[os.path.join(table_dir, DATA_SUBDIR, p) for p in cand]
         )
         tagged = tagged.select(
@@ -6966,16 +6925,16 @@ def posdel_compaction_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     move the hash.  The twin recomputes the surviving rows from
     ``orders`` with the two predicates in pure SQL."""
     d = stage_posdel_compact_table(spark, sf_dir)
-    n_del = len(_live_delete_actions(d, None))
+    snap = _snapshot(d)
     return (
-        snapshot_read_mor(spark, d)
+        _snapshot_read_mor(spark, d, snap)
         .groupBy("o_orderpriority")
         .agg(
             F.count("*").cast("long").alias("n_orders"),
             F.sum(F.expr(_CENTS)).cast("long").alias("sum_cents"),
         )
         .select(
-            F.lit(int(n_del)).cast("long").alias("n_delete_files"),
+            F.lit(len(snap.deletes)).cast("long").alias("n_delete_files"),
             "o_orderpriority", "n_orders", "sum_cents",
         )
     )
@@ -7051,18 +7010,17 @@ def mor_dml_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash; the twin recomputes the final state from ``orders`` in
     pure SQL."""
     d = stage_mor_dml_table(spark, sf_dir)
-    # driver-side log replay for the metadata scalar (see
-    # posdel_compaction_read)
-    n_del = len(_live_delete_actions(d, None))
+    # one snapshot answers the metadata scalar and plans the read
+    snap = _snapshot(d)
     return (
-        snapshot_read_mor(spark, d)
+        _snapshot_read_mor(spark, d, snap)
         .groupBy("o_orderpriority")
         .agg(
             F.count("*").cast("long").alias("n_orders"),
             F.sum(F.expr(_CENTS)).cast("long").alias("sum_cents"),
         )
         .select(
-            F.lit(int(n_del)).cast("long").alias("n_delete_files"),
+            F.lit(len(snap.deletes)).cast("long").alias("n_delete_files"),
             "o_orderpriority", "n_orders", "sum_cents",
         )
     )
@@ -7144,16 +7102,16 @@ def partition_mor_dml_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     old partition, or a lost DV all move the hash; the twin
     recomputes the final state from ``orders`` in pure SQL."""
     d = stage_partition_dml_table(spark, sf_dir)
-    n_del = len(_live_delete_actions(d))
+    snap = _snapshot(d)
     parts = sorted({
-        v for r in _live_file_records(d)
+        v for r in snap.files
         for p in (r["part"] or [])
         for v in (p.split("=", 1)[1],)
     })  # metadata-sized: the touched partition values
     out = None
     for val in parts:
         part = (
-            partition_pruned_read(spark, d, {"o_orderpriority": val})
+            _partition_pruned_read(spark, d, snap, {"o_orderpriority": val})
             .groupBy("o_orderpriority")
             .agg(
                 F.count("*").cast("long").alias("n_orders"),
@@ -7162,7 +7120,7 @@ def partition_mor_dml_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = part if out is None else out.unionByName(part)
     return out.select(
-        F.lit(int(n_del)).cast("long").alias("n_delete_files"),
+        F.lit(len(snap.deletes)).cast("long").alias("n_delete_files"),
         "o_orderpriority", "n_orders", "sum_cents",
     )
 

@@ -106,7 +106,7 @@ def test_legacy_row_list_pd_file_still_reads(spark, tmp_path):
         orders, d, "A.parquet")])
     # hand-write the LEGACY encoding for the same predicate
     tagged = (
-        tl._table_reader(spark, d).parquet(
+        tl._table_reader(spark, tl._snapshot(d)).parquet(
             os.path.join(d, tl.DATA_SUBDIR, "A.parquet"))
         .select(
             "*",
@@ -150,7 +150,7 @@ def test_encodings_agree_and_materialize(spark, tmp_path):
     tl.delete_positions_mor(spark, dirs["dv"], pred)
     d = dirs["legacy"]
     rows = (
-        tl._table_reader(spark, d).parquet(
+        tl._table_reader(spark, tl._snapshot(d)).parquet(
             os.path.join(d, tl.DATA_SUBDIR, "A.parquet"))
         .select(
             "*",

@@ -14,6 +14,8 @@ import json
 import os
 import shutil
 
+import pytest
+
 from tests.conftest import SF_SMOKE
 
 from gemmsql.pipeline import tablelog as tl
@@ -3053,7 +3055,8 @@ def test_partition_review_findings_r15(spark, tmp_path):
     # (3) overwrite vs concurrent append: serializable pin aborts
     planned_v = max(tl._present_versions(d))
     repl = orders.filter("o_year = '1995'")
-    adds = tl._stage_partitioned_files(spark, d, repl, "R1")
+    adds = tl._stage_partitioned_files(
+        spark, d, tl._snapshot(d), repl, "R1")
     tl.append_partitioned(spark, d, orders.filter(
         "o_year = '1995' AND o_orderkey % 5 = 0"), "CONC")
     with pytest.raises(tl.ConcurrentModificationError,
@@ -3865,7 +3868,7 @@ def test_merged_cstats_and_compaction_carry(spark, tmp_path):
     for tag, flt in (("A", "o_orderkey % 2 = 0"),
                      ("B", "o_orderkey % 2 = 1")):
         adds = tl._stage_partitioned_files(
-            spark, d, orders.filter(flt), tag)
+            spark, d, tl._snapshot(d), orders.filter(flt), tag)
         for add in adds:
             f = spark.read.parquet(
                 os.path.join(d, tl.DATA_SUBDIR, add["path"]))
@@ -3977,7 +3980,7 @@ def test_spec_alias_never_shadows_live_entry(spark, tmp_path):
     tl.append_partitioned(spark, d, fresh, "B")
     # identity seeds win: the live entry maps to ITSELF, never to
     # the renamed entry whose source once carried the name
-    am = tl._spec_alias_map(spark, d)
+    am = tl._spec_alias_map(tl._snapshot(d))
     assert am["o_orderpriority"] == "o_orderpriority"
     assert am["prio"] == "prio"
     # behavior: pruning on the RENAMED entry keeps every file of that
@@ -4089,7 +4092,7 @@ def test_posdel_actions_record_encoding_and_skip_footer_probe(
         {"o_totalprice": "o_totalprice + 1"},
     )
     # the committed actions carry the encoding
-    pds = [a for a in tl._live_delete_actions(d)
+    pds = [a for a in tl._snapshot(d).deletes
            if a["a"] == "posdel"]
     assert pds and all(a.get("enc") == "dv" for a in pds), pds
     # planning never probes a footer: the fallback refuses loudly
@@ -4105,7 +4108,7 @@ def test_posdel_actions_record_encoding_and_skip_footer_probe(
     tl.compact_delete_files(spark, d)
     # the compaction's merged DV carries enc too, and still plans
     # probe-free
-    pds2 = [a for a in tl._live_delete_actions(d)
+    pds2 = [a for a in tl._snapshot(d).deletes
             if a["a"] == "posdel"]
     assert len(pds2) == 1 and pds2[0].get("enc") == "dv"
     assert tl.snapshot_read_mor(spark, d).count() > 0
@@ -4157,7 +4160,7 @@ def test_restore_reemits_posdel_with_encoding(spark, tmp_path):
     want = tl.snapshot_read_mor(spark, d).count()
     tl.materialize_deletes(spark, d)  # retires the PD file
     tl.restore_table(spark, d, v_del)  # re-emits it
-    pds = [a for a in tl._live_delete_actions(d)
+    pds = [a for a in tl._snapshot(d).deletes
            if a["a"] == "posdel"]
     assert pds and all(a.get("enc") == "dv" for a in pds), pds
     assert tl.snapshot_read_mor(spark, d).count() == want
@@ -4347,7 +4350,7 @@ def test_footer_stats_match_aggregation(spark, tmp_path):
     # keydel stats from the written key file's footer
     keys = df.filter("o_orderkey % 2 = 1").select("o_orderkey")
     tl.delete_keys_mor(spark, d, keys)
-    kd = [r for r in tl._live_delete_actions(d) if r["a"] == "keydel"]
+    kd = [r for r in tl._snapshot(d).deletes if r["a"] == "keydel"]
     assert len(kd) == 1
     assert kd[0]["n_rows"] == 3
     assert kd[0]["min_key"] == 1 and kd[0]["max_key"] == 9
@@ -4395,17 +4398,17 @@ def test_driver_replay_bound_refuses_past_threshold(spark, tmp_path, monkeypatch
         1: [_add(1, f"g{i:05d}.parquet") for i in range(500)],
     })
     # comfortably under the default bound: replay works
-    recs = tl._live_file_records(d)
+    recs = tl._snapshot(d).files
     assert len(recs) == 1000
     # past a (monkeypatched) bound: loud, named refusal on both replays
     monkeypatch.setattr(tl, "_MAX_DRIVER_FILE_RECORDS", 999)
     with pytest.raises(ValueError, match="GEMMSQL_MAX_DRIVER_FILE_RECORDS"):
-        tl._live_file_records(d)
+        tl._snapshot(d).files
     with pytest.raises(ValueError, match="GEMMSQL_MAX_DRIVER_FILE_RECORDS"):
         tl.streaming_tablelog_gate_dir(spark, d)
     # at the bound exactly: fine (the bound is inclusive)
     monkeypatch.setattr(tl, "_MAX_DRIVER_FILE_RECORDS", 1000)
-    assert len(tl._live_file_records(d)) == 1000
+    assert len(tl._snapshot(d).files) == 1000
 
 
 def test_streaming_gate_over_a_log_without_adds(spark, tmp_path):
@@ -4432,10 +4435,12 @@ def _by_path(rows):
 def test_driver_snapshot_records_match_spark_replay(spark, tmp_path):
     """The driver-side snapshot every planner reads returns the
     LOG_SCHEMA row shape: at every version, and again from a
-    checkpoint after expiry, _live_file_records equals
-    snapshot_files' rows and _live_delete_actions equals
-    snapshot_delete_files' rows — cstats, part, seq (RESTORE re-emits)
-    and keydel records included."""
+    checkpoint after expiry, _snapshot's files equal snapshot_files'
+    rows and its deletes equal snapshot_delete_files' rows — cstats,
+    part, seq (RESTORE re-emits) and keydel records included.  A
+    checkpoint at or above a live keydel's commit seeds adds and
+    metadata only: the keydel still folds from its retained commit
+    and still subtracts in the MOR read."""
     from gemmsql.datamodel import load_table
 
     d = str(tmp_path / "shape")
@@ -4457,11 +4462,12 @@ def test_driver_snapshot_records_match_spark_replay(spark, tmp_path):
         orders.filter("o_orderkey % 7 = 0").select("o_orderkey"))
 
     def check(v):
-        got = _by_path(tl._live_file_records(d, v))
+        snap = tl._snapshot(d, v)
+        got = _by_path(snap.files)
         want = _by_path(r.asDict()
                         for r in tl.snapshot_files(spark, d, v).collect())
         assert got == want, v
-        got_d = _by_path(tl._live_delete_actions(d, v))
+        got_d = _by_path(snap.deletes)
         want_d = _by_path(r.asDict() for r in
                           tl.snapshot_delete_files(spark, d, v).collect())
         assert got_d == want_d, v
@@ -4473,11 +4479,20 @@ def test_driver_snapshot_records_match_spark_replay(spark, tmp_path):
     assert any(r["part"] for r in latest.values())
     assert any(r["cstats"] for r in latest.values())
     assert check(None) == latest
-    assert tl._live_delete_actions(d)[0]["a"] == "keydel"
+    assert tl._snapshot(d).deletes[0]["a"] == "keydel"
     # from a checkpoint: the pyarrow-read rows normalize to the same
     tl.expire_log(spark, d, 8)
     for v in (8, 9, None):
         assert check(v) == seen[8 if v == 8 else 9]
+    # the newest checkpoint now sits at the keydel's own version
+    n_mor = tl.snapshot_read_mor(spark, d).count()
+    tl.write_checkpoint(spark, d, 9)
+    for v in (8, 9, None):
+        assert check(v) == seen[8 if v == 8 else 9]
+    assert [r["a"] for r in tl._snapshot(d).deletes] == ["keydel"]
+    assert tl.snapshot_read_mor(spark, d).count() == n_mor
+    assert n_mor < tl.snapshot_read(
+        spark, d, reader_features=("merge_on_read",)).count()
 
 
 def _write_spark_file(spark, df, dest):
@@ -4532,7 +4547,7 @@ def test_footer_bounds_equal_spark_min_max(spark, tmp_path):
     os.makedirs(os.path.join(d, tl.DATA_SUBDIR))
     tl.append_with_stats(spark, d, spark.read.parquet(dest),
                          "S0.parquet", cols)
-    (rec,) = tl._live_file_records(d)
+    (rec,) = tl._snapshot(d).files
     assert {c: tuple(b[1:]) for c, b in rec["cstats"].items()} == {
         c: w for c, w in want.items() if w is not None}
     assert rec["cstats"]["x"][0] == "num"
@@ -4576,7 +4591,7 @@ def test_append_and_pruning_plan_without_metadata_jobs(spark, tmp_path):
         tl.append_with_stats(spark, d, src, "S0.parquet", stat_cols)))
     assert v == 0
     assert len(append_jobs) == len(write_jobs)
-    (rec,) = tl._live_file_records(d)
+    (rec,) = tl._snapshot(d).files
     assert rec["cstats"] == {
         "o_orderdate": ["str", "1995-01-01", "1995-07-19"],
         "o_totalprice": ["num", "10.0", "209.0"],
@@ -4622,7 +4637,7 @@ def test_merge_rewrites_keep_column_bounds(spark, tmp_path):
     ins = old.limit(3).withColumn(
         "o_orderkey", tl.F.col("o_orderkey") + kmax)
     tl.merge_table(spark, d, upd.unionByName(ins))
-    live = tl._live_file_records(d)
+    live = tl._snapshot(d).files
     mrg = [r for r in live if r["path"].startswith("MRG")]
     assert len(mrg) == 2  # the S0 rewrite and the inserts file
     for r in mrg:
@@ -4667,7 +4682,7 @@ def test_timestamp_orderdate_appends_with_day_bounds(spark, tmp_path):
         os.path.join(d, tl.DATA_SUBDIR, "S0.parquet")).metadata
     col = md.schema.column(md.schema.names.index("o_orderdate"))
     assert col.physical_type == "INT96"
-    bounds = {r["path"]: r for r in tl._live_file_records(d)}
+    bounds = {r["path"]: r for r in tl._snapshot(d).files}
     want = orders.groupBy(
         (tl.F.col("o_orderdate") < "1998-01-01").alias("early")
     ).agg(
@@ -4787,13 +4802,18 @@ def test_log_reads_go_through_one_commit_and_one_checkpoint_reader():
     cache checked by inode, mtime and size), and checkpoint parquet is
     read off Spark only in ``_checkpoint_actions``.  A second raw
     reader is how a path-keyed cache or a drifting replay rule comes
-    back."""
+    back.  Likewise ``_snapshot`` is the one walk over a table's
+    commits: the other callers of the commit reader are not replays
+    (the in-commit timestamp, the commit-time txn re-check, expiry's
+    refusal scan, the streaming gate's add index and the live-commit
+    gate's copy of one commit).  A second walk is how the replay
+    rules drift apart again."""
     import ast
     import inspect
 
     readers = {"read_parquet", "read_table", "ParquetFile",
                "ParquetDataset", "dataset", "read_metadata"}
-    loads, ckpt_reads = [], []
+    loads, ckpt_reads, walks = [], [], []
 
     def visit(node, fn):
         for child in ast.iter_child_nodes(node):
@@ -4809,8 +4829,75 @@ def test_log_reads_go_through_one_commit_and_one_checkpoint_reader():
                         and getattr(a.func, "id", "") == "_checkpoint_dir"
                         for a in child.args):
                     ckpt_reads.append(inner)
+            if isinstance(child, ast.Call) and getattr(
+                    child.func, "id", "") in (
+                        "_action_lines_of", "_checkpoint_actions"):
+                walks.append((child.func.id, inner))
             visit(child, inner)
 
     visit(ast.parse(inspect.getsource(tl)), None)
     assert loads == ["_action_lines_of"]
     assert ckpt_reads == ["_checkpoint_actions"]
+    assert sorted(fn for f, fn in walks if f == "_checkpoint_actions") \
+        == ["_snapshot"]
+    assert sorted(fn for f, fn in walks if f == "_action_lines_of") == [
+        "_commit_ts_of", "_snapshot", "commit_actions", "expire_log",
+        "streaming_cdf_ivm_gate", "streaming_tablelog_gate_dir",
+    ]
+
+
+def _table_rw_after_one_merge_and_delete(spark, tmp_path):
+    """The benchmark's table_rw step, seed 1, stopped before its
+    materialize: one append, one merge and one live keydel.  Returns
+    the workload (its model is the expected table) and the pruned
+    read's date window."""
+    import datetime as dt
+
+    from perfbench import gen
+    from perfbench.workloads import TableRW
+
+    w = TableRW(1)
+    w.prepare(spark, str(tmp_path))
+    for call in w.step(merge=True):
+        if call.name == "tablelog.materialize_deletes":
+            break
+        if call.name.endswith(("append_with_stats", "merge_table",
+                               "delete_keys_mor")):
+            call.act(call.plan())
+    day = (w.steps * gen.DAYS_PER_BATCH - w.window_days) // 2
+    lo = gen.DATE0 + dt.timedelta(days=day)
+    return w, lo, lo + dt.timedelta(days=w.window_days - 1)
+
+
+@pytest.mark.parametrize("reader", ["snapshot_read_mor",
+                                    "stats_pruned_read_where"])
+def test_read_is_pinned_to_one_version_under_a_racing_commit(
+        spark, tmp_path, monkeypatch, reader):
+    """A read at "latest" plans from one snapshot: a materialize that
+    commits between the read's planning and its data scan must not
+    make the read mix two versions.  The hook lands the commit on the
+    read's first parquet scan; the read still answers the version it
+    started from, with the keydel's rows subtracted."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from perfbench.workloads import _table_agg
+
+    w, lo, hi = _table_rw_after_one_merge_and_delete(spark, tmp_path)
+    d = w.table
+    orig = DataFrameReader.parquet
+    armed = [True]
+
+    def racing_parquet(self, *paths, **kw):
+        if armed[0]:
+            armed[0] = False
+            tl.materialize_deletes(spark, d)
+        return orig(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", racing_parquet)
+    if reader == "snapshot_read_mor":
+        got, want = tl.snapshot_read_mor(spark, d), w.model.summary()
+    else:
+        got = tl.stats_pruned_read_where(spark, d, "o_orderdate", lo, hi)
+        want = w.model.summary(lo, hi)
+    assert not armed[0]  # the commit landed inside the read
+    assert tuple(_table_agg(got)) == want

@@ -565,15 +565,15 @@ def test_concurrent_schema_changes_cannot_lose_edits(spark, tmp_path):
     base = _orders_qty(spark, "int")
     tl.append_auto_evolve(spark, d, base, "A.parquet")
     # writer 1 plans an ADD from the current base...
-    planned_v = tl._latest_version(d)
-    entries = tl._current_mapping_or_identity(spark, d)
+    planned = tl._snapshot(d)
+    entries = tl._current_mapping_or_identity(spark, d, planned)
     entries.append({"fid": 99, "physical": "fc99",
                     "logical": "w1_col", "type": "int"})
     # ...writer 2 lands a widen in between...
     tl.widen_column_type(spark, d, "o_qty", "bigint")
     # ...writer 1's commit must ABORT, not overwrite the widen
     with pytest.raises(tl.ConcurrentModificationError):
-        tl._mapping_commit(d, entries, planned_v)
+        tl._mapping_commit(d, planned, entries)
     m = {e["logical"]: e["type"]
          for e in tl.column_mapping(spark, d)}
     assert m["o_qty"] == "bigint"
