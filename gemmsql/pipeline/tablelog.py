@@ -4792,10 +4792,10 @@ def vacuum_plan(
     the latest version is protected, the pre-retention behavior).
     The protected set resolves driver-side from cached commit parses;
     no extra Spark jobs."""
-    latest = _snapshot(table_dir)
     if retain_versions is None:
         retain_versions = int(
-            _table_properties(latest).get("vacuum.retain_versions", "0")
+            table_properties(spark, table_dir)
+            .get("vacuum.retain_versions", "0")
         )
     log = read_log(spark, table_dir)
     # latest add per path (re-add-safe, ADVICE r12 #1): two adds of
@@ -4809,7 +4809,7 @@ def vacuum_plan(
     )
     protected: set[str] = set()
     for v in _present_versions(table_dir)[-(retain_versions + 1):]:
-        snap = latest if v == latest.version else _snapshot(table_dir, v)
+        snap = _snapshot(table_dir, v)
         protected |= {r["path"] for r in (*snap.files, *snap.deletes)}
     live = spark.createDataFrame(
         [(p,) for p in sorted(protected)], "path string"

@@ -4846,15 +4846,23 @@ def test_log_reads_go_through_one_commit_and_one_checkpoint_reader():
     ]
 
 
-def _table_rw_after_one_merge_and_delete(spark, tmp_path):
-    """The benchmark's table_rw step, seed 1, stopped before its
-    materialize: one append, one merge and one live keydel.  Returns
-    the workload (its model is the expected table) and the pruned
-    read's date window."""
+@pytest.mark.parametrize("reader", ["snapshot_read_mor",
+                                    "stats_pruned_read_where"])
+def test_read_is_pinned_to_one_version_under_a_racing_commit(
+        spark, tmp_path, monkeypatch, reader):
+    """A read at "latest" plans from one snapshot: a materialize that
+    commits between the read's planning and its data scan must not
+    make the read mix two versions.  The table is the benchmark's
+    table_rw step (seed 1) stopped before its materialize: one append,
+    one merge and one live keydel.  The hook lands the materialize on
+    the read's first parquet scan; the read still answers the version
+    it started from, with the keydel's rows subtracted."""
     import datetime as dt
 
+    from pyspark.sql.readwriter import DataFrameReader
+
     from perfbench import gen
-    from perfbench.workloads import TableRW
+    from perfbench.workloads import TableRW, _table_agg
 
     w = TableRW(1)
     w.prepare(spark, str(tmp_path))
@@ -4866,23 +4874,7 @@ def _table_rw_after_one_merge_and_delete(spark, tmp_path):
             call.act(call.plan())
     day = (w.steps * gen.DAYS_PER_BATCH - w.window_days) // 2
     lo = gen.DATE0 + dt.timedelta(days=day)
-    return w, lo, lo + dt.timedelta(days=w.window_days - 1)
-
-
-@pytest.mark.parametrize("reader", ["snapshot_read_mor",
-                                    "stats_pruned_read_where"])
-def test_read_is_pinned_to_one_version_under_a_racing_commit(
-        spark, tmp_path, monkeypatch, reader):
-    """A read at "latest" plans from one snapshot: a materialize that
-    commits between the read's planning and its data scan must not
-    make the read mix two versions.  The hook lands the commit on the
-    read's first parquet scan; the read still answers the version it
-    started from, with the keydel's rows subtracted."""
-    from pyspark.sql.readwriter import DataFrameReader
-
-    from perfbench.workloads import _table_agg
-
-    w, lo, hi = _table_rw_after_one_merge_and_delete(spark, tmp_path)
+    hi = lo + dt.timedelta(days=w.window_days - 1)
     d = w.table
     orig = DataFrameReader.parquet
     armed = [True]
