@@ -4403,7 +4403,7 @@ def test_driver_replay_bound_refuses_past_threshold(spark, tmp_path, monkeypatch
     # past a (monkeypatched) bound: loud, named refusal on both replays
     monkeypatch.setattr(tl, "_MAX_DRIVER_FILE_RECORDS", 999)
     with pytest.raises(ValueError, match="GEMMSQL_MAX_DRIVER_FILE_RECORDS"):
-        tl._snapshot(d).files
+        tl._snapshot(d)
     with pytest.raises(ValueError, match="GEMMSQL_MAX_DRIVER_FILE_RECORDS"):
         tl.streaming_tablelog_gate_dir(spark, d)
     # at the bound exactly: fine (the bound is inclusive)
