@@ -536,8 +536,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     bottom-k distinct sketch, gemmsql/sketches.py), the only one with
     set operations: per-event-type user-day reach plus pairwise
     union / Jaccard / intersection estimates from fixed-size monoid
-    state, built on the reference mk_GeMMMapReduce contract via
-    make_monoid_op pandas partials — in place of mixture_balance
+    state, built on the reference mk_GeMMMapReduce contract as two
+    grouped pandas steps — in place of mixture_balance
     (green r4-r6; the mixture family stays gated via
     mixture_temperature, and mixture_balance keeps its full hash gate
     in tests/test_rotation.py).

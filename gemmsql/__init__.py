@@ -14,8 +14,9 @@ Public surface:
 
 - :mod:`gemmsql.session` — SparkSession builder tuned for the engine.
 - :mod:`gemmsql.datamodel` — COO / vector-row / block matrix DataFrames.
-- :mod:`gemmsql.monoid` — ``make_monoid_op``: the ``mk_GeMMMapReduce``
-  analog (reference core.py:15-64) over Spark aggregation.
+- :func:`gemmsql.ops._blocked.fold` — the ``mk_GeMMMapReduce`` analog
+  (reference core.py:15-64): each op declares its kernel / merge /
+  finish once and this one executor runs it.
 - :mod:`gemmsql.ops` — matmul, relu_matmul, mlp, attention, xentropy,
   entropy, sampling (reference operator inventory, SURVEY.md §2).
 - :mod:`gemmsql.pipeline` — LLM-data-pipeline operators: dedup,
@@ -42,7 +43,6 @@ _EXPORTS = {
     "xentropy": "gemmsql.ops",
     "row_entropy": "gemmsql.ops",
     "sample_categorical": "gemmsql.ops",
-    "make_monoid_op": "gemmsql.monoid",
     "check": "gemmsql.check",
     "check_equality": "gemmsql.check",
     "check_speed": "gemmsql.check",
@@ -89,7 +89,6 @@ _EXPORTS = {
     "streaming_quarantine_gate": "gemmsql.streaming.windows",
     # transaction-log table format (r12 births)
     "read_log": "gemmsql.pipeline.tablelog",
-    "snapshot_files": "gemmsql.pipeline.tablelog",
     "time_travel_read": "gemmsql.pipeline.tablelog",
     "table_history_audit": "gemmsql.pipeline.tablelog",
     "stats_skipping_audit": "gemmsql.pipeline.tablelog",
@@ -109,7 +108,6 @@ _EXPORTS = {
     "vacuum_table": "gemmsql.pipeline.tablelog",
     "delete_keys_mor": "gemmsql.pipeline.tablelog",
     "snapshot_read_mor": "gemmsql.pipeline.tablelog",
-    "snapshot_delete_files": "gemmsql.pipeline.tablelog",
     "materialize_deletes": "gemmsql.pipeline.tablelog",
     "mor_delete_read": "gemmsql.pipeline.tablelog",
     "bloom_skipping_audit": "gemmsql.pipeline.tablelog",

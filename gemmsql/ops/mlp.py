@@ -1,15 +1,10 @@
 """Two-layer ReLU MLP: ``relu(X @ P) @ Q`` (reference mlp.py:59-60).
 
 The reference chunks over batch and the hidden dim with a plain
-sum-monoid merge (mlp.py:18-21) — in Spark that merge is literally the
-built-in ``sum`` (Catalyst partial+final agg).  Strategies:
-
-- :func:`mlp_coo` — fully relational: matmul join/agg, ``greatest(h,0)``
-  (the ReLU, reference mlp.py:6), second matmul join/agg.
-- :func:`mlp` — weights as small broadcast ndarrays, one fused NumPy
-  GEMM-ReLU-GEMM per Arrow batch (reference's "fused projection and
-  fold", README.md:36-37); zero shuffle, the 100 TB path when X is huge
-  and P/Q are model weights.
+sum-monoid merge (mlp.py:18-21).  :func:`mlp` keeps the weights as small
+broadcast ndarrays and runs one fused NumPy GEMM-ReLU-GEMM per Arrow
+batch (reference's "fused projection and fold", README.md:36-37): zero
+shuffle, the 100 TB path when X is huge and P/Q are model weights.
 """
 
 from __future__ import annotations
@@ -17,17 +12,8 @@ from __future__ import annotations
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from gemmsql.ops._blocked import vec_mat
-from gemmsql.ops.matmul import coo_matmul, vector_matmul
-
-
-def mlp_coo(x: DataFrame, p: DataFrame, q: DataFrame) -> DataFrame:
-    """COO inputs -> COO output ``(i, j, v)`` = relu(X P) Q."""
-    h = coo_matmul(x, p, broadcast_right=True)
-    h = h.withColumn("v", F.greatest(F.col("v"), F.lit(0.0)))
-    return coo_matmul(h, q, broadcast_right=True)
 
 
 def mlp(

@@ -335,71 +335,6 @@ def read_log(spark: SparkSession, table_dir: str) -> DataFrame:
     return spark.read.schema(LOG_SCHEMA).json(pat)
 
 
-def _last_action_live(actions: DataFrame, extra_keys: list[str]) -> DataFrame:
-    """Delta replay rule over an action frame: last action per
-    (``*extra_keys``, path) by version wins; remove beats add inside
-    one version; live iff that action is an add."""
-    w = Window.partitionBy(*extra_keys, "path").orderBy(
-        F.col("v").desc(),
-        F.when(F.col("a") == "remove", 0).otherwise(1),
-    )
-    return (
-        actions.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("a") == "add"))
-        .drop("rn")
-    )
-
-
-def snapshot_files(
-    spark: SparkSession,
-    table_dir: str,
-    version: int | None = None,
-    *,
-    from_checkpoint: bool = False,
-) -> DataFrame:
-    """Live file records at ``version`` (latest when None) as a
-    DataFrame.  With ``from_checkpoint`` the replay starts from the
-    newest checkpoint at or below ``version`` and applies only later
-    commits.
-
-    This is the DataFrame form of the snapshot, for
-    :func:`write_checkpoint` (which unions it with the metadata
-    actions) and for tests, which use it as the reference replay.
-    Planning never collects it: every planning pass reads the
-    driver-side :class:`Snapshot` (:func:`_snapshot`), the same
-    replay with no Spark job."""
-    present = _present_versions(table_dir)
-    ckpt_v = _latest_checkpoint_version(table_dir, version)
-    truncated = bool(present) and present[0] > 0
-    use_ckpt = ckpt_v is not None and (from_checkpoint or truncated)
-    base_v = ckpt_v if use_ckpt else -1
-    target = version if version is not None else (
-        present[-1] if present else base_v
-    )
-    pset = set(present)
-    missing = [v for v in range(base_v + 1, target + 1) if v not in pset]
-    if missing:
-        # the log-retention contract's loud half (the vacuum rule's
-        # metadata twin): a replay that would need expired commits
-        # fails, never returns a partial live set
-        raise ValueError(
-            f"log expired: version {target} needs commits {missing} "
-            f"(earliest retained: "
-            f"{present[0] if present else None}, checkpoint: {ckpt_v})"
-        )
-    log = read_log(spark, table_dir)
-    if version is not None:
-        log = log.filter(F.col("v") <= version)
-    if use_ckpt:
-        base = spark.read.parquet(_checkpoint_dir(table_dir, ckpt_v))
-        # allowMissingColumns: a checkpoint written before a LOG_SCHEMA
-        # widening (writer_features, seq) must stay readable forever
-        log = base.unionByName(
-            log.filter(F.col("v") > ckpt_v), allowMissingColumns=True
-        )
-    return _last_action_live(log, [])
-
-
 def _checkpoint_dir(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, LOG_SUBDIR, f"ckpt-{version:08d}")
 
@@ -422,20 +357,17 @@ def write_checkpoint(
     parquet under ``_log/`` — the replay shortcut.  The checkpoint
     keeps each record's original add action (its commit version and
     stats), so replay-from-checkpoint and full replay are the same
-    window over different prefixes — and it CARRIES the metadata
+    fold over different prefixes — and it CARRIES the metadata
     actions (meta / protocol / constraint) at or below ``version``,
     original versions stamped, so schema evolution, column mapping,
     reader-feature gating, and CHECK constraints all survive log
     expiry (chained: an existing checkpoint's metadata rows flow into
     the next through :func:`_snapshot`)."""
     dest = _checkpoint_dir(table_dir, version)
-    live = snapshot_files(spark, table_dir, version)
-    metadata = spark.createDataFrame(
-        list(_snapshot(table_dir, version).meta), LOG_SCHEMA
-    )
-    live.unionByName(metadata, allowMissingColumns=True).coalesce(
-        1
-    ).write.mode("overwrite").parquet(dest)
+    snap = _snapshot(table_dir, version)
+    spark.createDataFrame(
+        [*snap.files, *snap.meta], LOG_SCHEMA
+    ).coalesce(1).write.mode("overwrite").parquet(dest)
     return dest
 
 
@@ -452,9 +384,9 @@ def expire_log(
     """Log RETENTION (Delta's metadata cleanup): checkpoint the state
     at ``before_version - 1`` and physically delete the commit files
     below ``before_version``.  After expiry, replay at retained
-    versions is checkpoint + retained commits (the default
-    :func:`snapshot_files` path detects the truncation); replay
-    BELOW the horizon raises loudly.
+    versions is checkpoint + retained commits (:func:`_snapshot`
+    detects the truncation); replay BELOW the horizon raises
+    loudly.
 
     The checkpoint CARRIES metadata actions (meta / protocol /
     constraint) from the expired prefix with their original versions,
@@ -505,16 +437,6 @@ def expire_log(
 
 # ----------------------------------------------------------------- ops
 
-def _per_version_live(spark: SparkSession, table_dir: str) -> DataFrame:
-    """(version, path) liveness for EVERY version in the log — the
-    metadata frame each data-touching op broadcasts.  Versions × log
-    actions is commit-count², all metadata."""
-    log = read_log(spark, table_dir)
-    versions = log.select(F.col("v").alias("version")).distinct()
-    acts = versions.join(log, F.col("v") <= F.col("version"))
-    return _last_action_live(acts, ["version"])
-
-
 def _file_basename(col) -> "F.Column":
     """The scanned file's BASENAME with URI percent-encoding decoded
     (r17): ``_metadata.file_path`` / ``input_file_name()`` are URIs,
@@ -549,7 +471,13 @@ def time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay (missed remove, wrong tiebreak, dead file read) moves the
     hash."""
     table_dir = stage_versioned_table(spark, sf_dir)
-    live = _per_version_live(spark, table_dir).select("version", "path")
+    # (version, path) liveness for every version: commits² metadata
+    # pairs, one driver walk per version
+    pairs: list[tuple[int, str]] = []
+    for v in _present_versions(table_dir):
+        pairs += [(v, a["path"]) for a in _snapshot(table_dir, v).files]
+        _check_replay_bound(len(pairs), "time_travel_read")
+    live = spark.createDataFrame(pairs, "version long, path string")
     perfile = (
         _data_with_path(spark, table_dir)
         .groupBy("path", "o_orderpriority")
@@ -1966,7 +1894,7 @@ _LOG_LISTS = frozenset(
 
 def _log_record(a: dict) -> dict:
     """One replayed action in the ``LOG_SCHEMA`` row shape, i.e. what
-    ``Row.asDict()`` gives for a :func:`snapshot_files` row: every
+    ``Row.asDict()`` gives for a ``LOG_SCHEMA`` row: every
     field present (None when absent), ints as ``int``, ``ts`` as a
     float, array fields as lists and ``cstats`` as a dict of lists —
     whether the action came from a JSON commit or a checkpoint
@@ -2056,21 +1984,27 @@ def _snapshot(table_dir: str, version: int | None = None) -> Snapshot:
     """The table AS OF ``version`` (latest when None), from one walk
     over the retained commits' cached parses — no Spark job.
 
-    The rules are those of :func:`snapshot_files` and
-    :func:`snapshot_delete_files`: per path the last action at or
-    below the version wins, a remove beating the other kinds inside
-    one version.  On an expired log, adds and metadata seed from the
+    Per path the last action at or below the version wins, a remove
+    beating the other kinds inside one version; the path is a live
+    file when that action is an add, a live delete file when it is a
+    ``keydel``/``posdel``.  On an expired log, adds and metadata seed from the
     newest checkpoint at or below the version (it carries both, with
     their original stamps) and only later commits fold on top; deletes
     fold from EVERY retained commit, since a checkpoint carries none
     (expiry refuses to drop a commit holding one).  A version that
-    needs an expired commit refuses, and so does a MISSING log
-    directory, like :func:`read_log` — a typo'd table path must never
-    read as an empty table."""
+    needs an expired commit refuses, and so does a version past the
+    latest commit (naming the latest) or a MISSING log directory,
+    like :func:`read_log` — a typo'd table path must never read as an
+    empty table."""
     if not os.path.isdir(os.path.join(table_dir, LOG_SUBDIR)):
         raise ValueError(f"not a logged table (no {LOG_SUBDIR}/): "
                          f"{table_dir}")
     present = _present_versions(table_dir)
+    if version is not None and (not present or version > present[-1]):
+        raise ValueError(
+            f"version {version} does not exist: the latest version is "
+            f"{present[-1] if present else None}"
+        )
     ckpt_v = _latest_checkpoint_version(table_dir, version)
     truncated = bool(present) and present[0] > 0
     base_v = ckpt_v if ckpt_v is not None and truncated else -1
@@ -3886,7 +3820,7 @@ def partition_candidate_files(
     a since-RENAMED source column's old name resolve through the
     field-id alias map, so a rename costs no pruning precision."""
     # the versioned snapshot seeds from the checkpoint at-or-below
-    # ``version`` and validates expiry exactly like snapshot_files —
+    # ``version`` and validates expiry exactly like snapshot_read —
     # seeding from the latest checkpoint and filtering by v would
     # mis-resolve files removed/re-added in (version, ckpt_v] on a
     # truncated log, silently dropping rows from a time-travel read
@@ -6602,30 +6536,6 @@ def compact_delete_files(spark: SparkSession, table_dir: str) -> int:
             "n_rows": int(n), "n_bytes": os.path.getsize(dest),
         }],
         expects_latest_version=snap.version,
-    )
-
-
-def snapshot_delete_files(
-    spark: SparkSession, table_dir: str, version: int | None = None
-) -> DataFrame:
-    """Live delete files at ``version`` — the same last-action replay
-    as :func:`snapshot_files`, with ``keydel``/``posdel`` as the
-    liveness-bearing actions (a ``remove`` of the path — what
-    materialization commits — retires it).  The DataFrame form, kept
-    as the tests' reference; planning reads the driver-side
-    :class:`Snapshot`'s ``deletes``."""
-    log = read_log(spark, table_dir)
-    if version is not None:
-        log = log.filter(F.col("v") <= version)
-    w = Window.partitionBy("path").orderBy(
-        F.col("v").desc(),
-        F.when(F.col("a") == "remove", 0).otherwise(1),
-    )
-    return (
-        log.filter(F.col("a").isin("keydel", "posdel", "remove"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & F.col("a").isin("keydel", "posdel"))
-        .drop("rn")
     )
 
 

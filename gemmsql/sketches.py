@@ -701,54 +701,31 @@ def kmv_sketch(
     key: str = "event_type",
     id_col: str = "user_id",
     k: int = KMV_K,
-    strategy: str = "pandas",
 ) -> DataFrame:
     """``(key, s)`` with ``s`` = the ``k`` smallest DISTINCT 60-bit
-    hashes of ``id_col`` per key, ascending — built as a
-    ``make_monoid_op`` instance (the reference ``mk_GeMMMapReduce``
-    contract, ref core.py:15-64): ``zero`` = empty set, ``proj_fold``
-    = per-tile bottom-k, ``binary_reduce`` = union-then-cut (closed,
-    associative, commutative — a true monoid, so the result is
-    IDENTICAL under any partitioning / merge order, which is what lets
-    the DuckDB twin replay it with a window rank).
+    hashes of ``id_col`` per key, ascending — the reference
+    ``mk_GeMMMapReduce`` contract (ref core.py:15-64) as two grouped
+    steps: ``zero`` = empty set, ``proj_fold`` = per-tile bottom-k,
+    ``binary_reduce`` = union-then-cut (closed, associative,
+    commutative — a true monoid, so the result is IDENTICAL under any
+    partitioning / merge order, which is what lets the DuckDB twin
+    replay it with a window rank).
 
-    Scale shape: the Arrow path computes one bottom-k per (key, input
-    partition) — state k longs per group per tile, NEVER the distinct
-    key set — and the final merge shuffles only those partials:
-    exchanged volume is O(groups x partitions x k), independent of id
-    cardinality.  ``strategy="rows"`` runs the row-at-a-time
-    ``aggregateByKey`` twin (compatibility path; equality of the two
-    is pinned in tests/test_sketch_kmv.py).
+    Scale shape: one bottom-k per (key, input partition) — state k
+    longs per group per tile, NEVER the distinct key set — and the
+    final merge shuffles only those partials: exchanged volume is
+    O(groups x partitions x k), independent of id cardinality.
     """
-    from gemmsql.monoid import make_monoid_op
-
     key_t = dict(zip(df.schema.names, df.schema))[key].dataType.simpleString()
     out_schema = f"{key} {key_t}, s array<long>"
     hashed = df.select(key, _h60_expr(id_col).alias("h60"))
 
-    if strategy == "rows":
-        op = make_monoid_op(
-            zero=tuple,
-            lift=lambda row, acc: tuple(sorted(set(acc) | {row["h60"]})[:k]),
-            merge=lambda a, b: tuple(sorted(set(a) | set(b))[:k]),
-            finish=lambda acc: {"s": list(acc)},
-            schema=out_schema,
-        )
-        return op(hashed, [key])
-
-    def partials(sdf: DataFrame, keys):
+    def cut(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import numpy as np
         import pandas as pd
 
-        def cut(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            u = np.unique(pdf["h60"].to_numpy())[:k]
-            return pd.DataFrame({key: [pdf[key].iloc[0]], "s": [u]})
-
-        return (
-            sdf.withColumn("_pid", F.spark_partition_id())
-            .groupBy(key, "_pid")
-            .applyInPandas(cut, f"{key} {key_t}, s array<long>")
-        )
+        u = np.unique(pdf["h60"].to_numpy())[:k]
+        return pd.DataFrame({key: [pdf[key].iloc[0]], "s": [u]})
 
     def merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import numpy as np
@@ -757,15 +734,13 @@ def kmv_sketch(
         u = np.unique(np.concatenate(list(pdf["s"])))[:k]
         return pd.DataFrame({key: [pdf[key].iloc[0]], "s": [u]})
 
-    op = make_monoid_op(
-        zero=tuple,
-        lift=lambda row, acc: acc,
-        merge=lambda a, b: a,
-        pandas_partials=partials,
-        pandas_merge=merge,
-        pandas_merge_schema=out_schema,
+    return (
+        hashed.withColumn("_pid", F.spark_partition_id())
+        .groupBy(key, "_pid")
+        .applyInPandas(cut, out_schema)
+        .groupBy(key)
+        .applyInPandas(merge, out_schema)
     )
-    return op(hashed, [key])
 
 
 def _kmv_est(s, k: int = KMV_K):
@@ -1069,8 +1044,6 @@ def sample_quantile_sketch(
     partials: O(groups x partitions x k), independent of group size.
     Values ride as exact micros so the estimator is integer-exact
     until the final /1e6."""
-    from gemmsql.monoid import make_monoid_op
-
     key_t = dict(zip(df.schema.names, df.schema))[key].dataType.simpleString()
     out_schema = f"{key} {key_t}, hs array<long>, vs array<long>"
     hashed = df.select(
@@ -1086,21 +1059,11 @@ def sample_quantile_sketch(
         order = np.argsort(h, kind="stable")[:k]
         return h[order], v[order]
 
-    def partials(sdf: DataFrame, keys):
-        import numpy as np
+    def cut(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import pandas as pd
 
-        def cut(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            h, v = _cut(pdf["h60"].to_numpy(), pdf["vm"].to_numpy())
-            return pd.DataFrame(
-                {key: [pdf[key].iloc[0]], "hs": [h], "vs": [v]}
-            )
-
-        return (
-            sdf.withColumn("_pid", F.spark_partition_id())
-            .groupBy(key, "_pid")
-            .applyInPandas(cut, out_schema)
-        )
+        h, v = _cut(pdf["h60"].to_numpy(), pdf["vm"].to_numpy())
+        return pd.DataFrame({key: [pdf[key].iloc[0]], "hs": [h], "vs": [v]})
 
     def merge(pdf: "pd.DataFrame"):
         import numpy as np
@@ -1111,15 +1074,13 @@ def sample_quantile_sketch(
         h, v = _cut(h, v)
         return pd.DataFrame({key: [pdf[key].iloc[0]], "hs": [h], "vs": [v]})
 
-    op = make_monoid_op(
-        zero=tuple,
-        lift=lambda row, acc: acc,
-        merge=lambda a, b: a,
-        pandas_partials=partials,
-        pandas_merge=merge,
-        pandas_merge_schema=out_schema,
+    return (
+        hashed.withColumn("_pid", F.spark_partition_id())
+        .groupBy(key, "_pid")
+        .applyInPandas(cut, out_schema)
+        .groupBy(key)
+        .applyInPandas(merge, out_schema)
     )
-    return op(hashed, [key])
 
 
 #: quantile fractions as exact integer (numerator, denominator) pairs

@@ -24,6 +24,7 @@ from tests.conftest import SF_SMOKE
 
 from gemmsql.datamodel import load_table
 from gemmsql.pipeline import tablelog as tl
+from tests import spark_replay as sr
 from gemmsql.pipeline.dvbitmap import (
     cardinality,
     decode_positions,
@@ -184,11 +185,8 @@ def test_compact_delete_files(spark, tmp_path):
     unchanged, the live delete-file count drops to 1, and the
     mid-stream IVM nets ZERO row deltas from the compaction commit
     (retiring posdels expand as inverse +1 against the new -1)."""
-    from gemmsql.pipeline.tablelog import (
-        ivm_drain,
-        ivm_view,
-        snapshot_delete_files,
-    )
+    from gemmsql.pipeline.tablelog import ivm_drain, ivm_view
+    from tests.spark_replay import snapshot_delete_files
 
     d = str(tmp_path / "dvcompact")
     os.makedirs(os.path.join(d, tl.LOG_SUBDIR))
@@ -364,7 +362,7 @@ def test_update_where_mor_equals_cow(spark, tmp_path):
     want = sorted(tl.snapshot_read(spark, dirs["cow"]).collect())
     assert got == want and len(got) == orders.count()
     # ZERO data files rewritten: both original files still live
-    live = {r["path"] for r in tl.snapshot_files(spark, dm).collect()}
+    live = {r["path"] for r in sr.snapshot_files(spark, dm).collect()}
     assert {"A.parquet", "B.parquet"} <= live
     # the IVM drains the commit as -old/+new
     ivm_drain(spark, dm, ckpt, em)
@@ -477,7 +475,7 @@ def test_merge_table_mor_equals_cow(spark, tmp_path):
     want = sorted(tl.snapshot_read(spark, dirs["cow"]).collect())
     assert got == want and len(got) > orders.count()
     # zero rewrites: both original files still live
-    live = {r["path"] for r in tl.snapshot_files(spark, dm).collect()}
+    live = {r["path"] for r in sr.snapshot_files(spark, dm).collect()}
     assert {"A.parquet", "B.parquet"} <= live
     # IVM parity across the merge commit
     ivm_drain(spark, dm, ckpt, em)
@@ -588,10 +586,10 @@ def test_clone_and_vacuum_compose_with_dv_state(spark, tmp_path):
     files while the merged DV keeps subtracting."""
     from gemmsql.pipeline.tablelog import (
         clone_table,
-        snapshot_delete_files,
         vacuum_plan,
         vacuum_table,
     )
+    from tests.spark_replay import snapshot_delete_files
 
     d = str(tmp_path / "dvclone_src")
     os.makedirs(os.path.join(d, tl.LOG_SUBDIR))

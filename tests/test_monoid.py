@@ -1,5 +1,5 @@
-"""Tests for the make_monoid_op factory (the mk_GeMMMapReduce analog)
-and the numerics kernels."""
+"""Tests for the numerics kernels (the monoid merges the folds run) and
+the matrix data model."""
 
 from __future__ import annotations
 
@@ -7,47 +7,27 @@ import math
 
 import numpy as np
 
-from gemmsql.monoid import make_monoid_op
 from gemmsql.numerics import group_logsumexp, logaddexp
 from pyspark.sql import functions as F
 
 
-def test_monoid_sum_op(spark):
-    df = spark.range(100).select(
-        (F.col("id") % 7).alias("k"), F.col("id").cast("double").alias("v")
-    )
-    op = make_monoid_op(
-        zero=lambda: 0.0,
-        lift=lambda row, acc: acc + row["v"],
-        merge=lambda a, b: a + b,
-        finish=lambda a: {"total": a},
-        schema="k long, total double",
-    )
-    got = {r["k"]: r["total"] for r in op(df, ["k"]).collect()}
-    want = {}
-    for i in range(100):
-        want[i % 7] = want.get(i % 7, 0.0) + float(i)
-    assert got == want
-
-
 def test_monoid_logsumexp_op_matches_sql_kernel(spark):
+    """The SQL logsumexp kernel equals the logaddexp monoid folded per
+    key in NumPy."""
     rng = np.random.default_rng(0)
     data = [(int(i % 5), float(v)) for i, v in enumerate(rng.normal(size=200) * 3)]
     df = spark.createDataFrame(data, "k int, s double")
-    op = make_monoid_op(
-        zero=lambda: float("-inf"),
-        lift=lambda row, acc: np.logaddexp(acc, row["s"]),
-        merge=lambda a, b: float(np.logaddexp(a, b)),
-        finish=lambda a: {"lse": float(a)},
-        schema="k int, lse double",
-    )
-    got = {r["k"]: r["lse"] for r in op(df, ["k"]).collect()}
-    sql = {
+    want = {
+        k: float(np.logaddexp.reduce([v for kk, v in data if kk == k]))
+        for k in {kk for kk, _ in data}
+    }
+    got = {
         r["k"]: r["lse"]
         for r in group_logsumexp(df, ["k"], "s", "lse").collect()
     }
-    for k in got:
-        assert math.isclose(got[k], sql[k], rel_tol=1e-12)
+    assert got.keys() == want.keys()
+    for k in want:
+        assert math.isclose(got[k], want[k], rel_tol=1e-12)
 
 
 def test_logaddexp_column_expr(spark):

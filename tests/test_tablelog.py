@@ -19,6 +19,7 @@ import pytest
 from tests.conftest import SF_SMOKE
 
 from gemmsql.pipeline import tablelog as tl
+from tests import spark_replay as sr
 
 
 def _mklog(tmp_path, commits):
@@ -44,7 +45,7 @@ def _rm(v, path):
 
 def _live(spark, d, version=None):
     return sorted(
-        r["path"] for r in tl.snapshot_files(spark, d, version).collect()
+        r["path"] for r in sr.snapshot_files(spark, d, version).collect()
     )
 
 
@@ -182,7 +183,7 @@ def test_fixture_compaction_preserves_rows_delete_drops_them(spark):
     # v3 delete: strictly fewer rows come back than go (D0 < B0),
     # net of the concurrent E0 append
     snap = {r["path"]: r["n_rows"] for r in
-            tl.snapshot_files(spark, d).collect()}
+            sr.snapshot_files(spark, d).collect()}
     log = {r["path"]: r["n_rows"] for r in
            tl.read_log(spark, d).filter("a = 'add'").collect()}
     assert snap["D0.parquet"] < log["B0.parquet"]
@@ -197,14 +198,14 @@ def test_checkpoint_replay_equals_full_replay(spark):
     try:
         ck = tl.write_checkpoint(spark, d, 2)
         for v in (2, 3, None):
-            full = sorted(map(tuple, tl.snapshot_files(spark, d, v).collect()))
-            fast = sorted(map(tuple, tl.snapshot_files(
+            full = sorted(map(tuple, sr.snapshot_files(spark, d, v).collect()))
+            fast = sorted(map(tuple, sr.snapshot_files(
                 spark, d, v, from_checkpoint=True).collect()))
             assert full == fast, f"version {v}"
         # a checkpoint AFTER the asked-for version must not be used
-        before = sorted(map(tuple, tl.snapshot_files(
+        before = sorted(map(tuple, sr.snapshot_files(
             spark, d, 1, from_checkpoint=True).collect()))
-        plain = sorted(map(tuple, tl.snapshot_files(spark, d, 1).collect()))
+        plain = sorted(map(tuple, sr.snapshot_files(spark, d, 1).collect()))
         assert before == plain
     finally:
         if ck:
@@ -237,7 +238,7 @@ def test_time_travel_version_rowcounts_match_live_stats(spark):
         by_v[r["version"]] = by_v.get(r["version"], 0) + r["n_orders"]
     for v in range(4):
         stat_rows = sum(
-            r["n_rows"] for r in tl.snapshot_files(spark, d, v).collect()
+            r["n_rows"] for r in sr.snapshot_files(spark, d, v).collect()
         )
         assert by_v[v] == stat_rows, f"version {v}"
 
@@ -326,7 +327,7 @@ def test_optimize_is_transactional_and_change_free(spark, tmp_path):
     # the rewrite collapsed six files to two with disjoint key ranges
     snap = sorted(
         (r["min_key"], r["max_key"]) for r in
-        tl.snapshot_files(spark, dest).collect()
+        sr.snapshot_files(spark, dest).collect()
     )
     assert len(snap) == 2
     assert snap[0][1] < snap[1][0]
@@ -334,7 +335,7 @@ def test_optimize_is_transactional_and_change_free(spark, tmp_path):
     hist = {r["version"]: r["live_rows"] for r in
             tl.table_history_audit(spark, SF_SMOKE).collect()}
     new_rows = sum(r["n_rows"] for r in
-                   tl.snapshot_files(spark, dest).collect())
+                   sr.snapshot_files(spark, dest).collect())
     assert new_rows == hist[3]
 
 
@@ -362,7 +363,7 @@ def test_schema_evolution_is_metadata_plus_new_data(spark, tmp_path):
     n_new = tl.snapshot_read(spark, dest).filter(
         "price_band IS NOT NULL").count()
     added = {r["path"]: r["n_rows"] for r in
-             tl.snapshot_files(spark, dest).collect()}
+             sr.snapshot_files(spark, dest).collect()}
     assert n_new == added["F4.parquet"] > 0
     # and the pre-evolution read has no such column at all
     assert "price_band" not in tl.snapshot_read(spark, dest, 3).columns
@@ -560,7 +561,7 @@ def test_mor_delete_lifecycle(spark, tmp_path):
     removes = sorted(r["path"] for r in log_m if r["a"] == "remove")
     # bucket-3 keys live only in A3; the KD file retires with it
     assert removes == [f"A3.parquet", f"KD{v}.parquet"]
-    assert tl.snapshot_delete_files(spark, d).count() == 0
+    assert sr.snapshot_delete_files(spark, d).count() == 0
     assert sorted(
         map(tuple, tl.snapshot_read(spark, d).collect())) == mor_rows
     assert sorted(
@@ -1219,7 +1220,7 @@ def test_log_expiry_lifecycle(spark, tmp_path):
     # below the checkpoint: loud, named error (v1 stays readable —
     # it IS the checkpoint state; v0 is gone)
     with pytest.raises(ValueError, match="log expired"):
-        tl.snapshot_files(spark, d, 0).collect()
+        tl.snapshot_read(spark, d, 0)
     # v1 state == checkpoint base exactly (checkpoint at horizon-1)
     assert _live(spark, d, 1) == sorted(
         r["path"] for r in spark.read.parquet(
@@ -1570,10 +1571,10 @@ def test_full_lakehouse_lifecycle_composes(spark, tmp_path):
     # moved), then forward to the copy-on-write state
     tl.restore_table(spark, d, v_mat - 1)
     assert n(tl.snapshot_read_mor_mapped(spark, d)) == live_n
-    assert tl.snapshot_delete_files(spark, d).count() == 1
+    assert sr.snapshot_delete_files(spark, d).count() == 1
     tl.restore_table(spark, d, v_mat)
     assert n(tl.snapshot_read_mapped(spark, d)) == live_n
-    assert tl.snapshot_delete_files(spark, d).count() == 0
+    assert sr.snapshot_delete_files(spark, d).count() == 0
     # OPTIMIZE ZORDER in place (dest pattern needs a fresh dir)
     d2 = str(tmp_path / "life_opt")
     tl.optimize_table(spark, d, d2, n_files=3,
@@ -1785,7 +1786,7 @@ def test_restore_lifecycle(spark, tmp_path):
     assert adds and set(adds) <= set(_live(spark, d, 3))
     # re-adds carry the ORIGINAL stats (skip-planning stays precise)
     v3_stats = {r["path"]: (r["n_rows"], r["min_key"], r["max_key"])
-                for r in tl.snapshot_files(spark, d, 3).collect()}
+                for r in sr.snapshot_files(spark, d, 3).collect()}
     for r in log:
         if r["a"] == "add":
             assert (r["n_rows"], r["min_key"], r["max_key"]) == \
@@ -1814,10 +1815,10 @@ def test_restore_reinstates_mor_state(spark, tmp_path):
     assert n_mor < n3
     tl.restore_table(spark, d, v_kd - 1)
     assert tl.snapshot_read_mor(spark, d).count() == n3
-    assert tl.snapshot_delete_files(spark, d).count() == 0
+    assert sr.snapshot_delete_files(spark, d).count() == 0
     tl.restore_table(spark, d, v_kd)
     assert tl.snapshot_read_mor(spark, d).count() == n_mor
-    assert tl.snapshot_delete_files(spark, d).count() == 1
+    assert sr.snapshot_delete_files(spark, d).count() == 1
 
 
 def test_restore_refuses_vacuumed_target(spark, tmp_path):
@@ -1915,9 +1916,9 @@ def test_clone_is_zero_copy_and_reads_equal(spark, tmp_path):
         assert src.st_nlink >= 2
     # stats cloned intact
     src_stats = {r["path"]: (r["n_rows"], r["min_key"], r["max_key"])
-                 for r in tl.snapshot_files(spark, d).collect()}
+                 for r in sr.snapshot_files(spark, d).collect()}
     dst_stats = {r["path"]: (r["n_rows"], r["min_key"], r["max_key"])
-                 for r in tl.snapshot_files(spark, c).collect()}
+                 for r in sr.snapshot_files(spark, c).collect()}
     assert src_stats == dst_stats
     # the clone's history starts at the clone: one version, v0
     assert tl._present_versions(c) == [0]
@@ -2106,7 +2107,7 @@ def test_table_detail_describes_current_state(spark, tmp_path):
     halves as the table evolves."""
     d = _fixture_copy(spark, tmp_path, "detail")
     r = tl.table_detail(spark, d).collect()[0]
-    live = tl.snapshot_files(spark, d).collect()
+    live = sr.snapshot_files(spark, d).collect()
     assert r["version"] == 3
     assert r["n_live_files"] == len(live)
     assert r["n_rows"] == sum(x["n_rows"] for x in live)
@@ -2381,7 +2382,7 @@ def test_restore_sequencing_with_live_keydel(spark, tmp_path):
     # keydel survives untouched
     tl.restore_table(spark, d, v_app - 1)
     assert tl.snapshot_read_mor(spark, d).count() == n_with - 1
-    assert tl.snapshot_delete_files(spark, d).count() == 1
+    assert sr.snapshot_delete_files(spark, d).count() == 1
     # restore FORWARD to the append version: the reborn file re-adds
     # ABOVE the keydel — visible again, original rows still deleted
     tl.restore_table(spark, d, v_app)
@@ -2708,7 +2709,7 @@ def test_partition_pruning_reads_only_matching_files(spark):
     assert names == sorted(
         ["P-o_year=1995.parquet"]
         + [p for p in (r["path"] for r in
-                       tl.snapshot_files(spark, d).collect())
+                       sr.snapshot_files(spark, d).collect())
            if p.startswith("Q-")]
     )
     # the scan's actual inputs are exactly the candidates (plan pin)
@@ -2740,7 +2741,7 @@ def test_partition_spec_evolution_prunes_per_spec(spark):
     assert [p for p in cand if p.startswith("Q-")] == \
         ["Q-o_orderpriority=5-LOW.parquet"]
     assert len([p for p in cand if p.startswith("P-")]) == \
-        len([r for r in tl.snapshot_files(spark, d).collect()
+        len([r for r in sr.snapshot_files(spark, d).collect()
              if r["path"].startswith("P-")])
     got = tl.partition_pruned_read(
         spark, d, {"o_orderpriority": "5-LOW"}).count()
@@ -2869,7 +2870,7 @@ def test_replace_partitions_is_atomic_and_exact(spark, tmp_path):
     )
     v = tl.replace_partitions(spark, d, repl, "R")
     assert v == v_before + 1  # one atomic version
-    live = tl.snapshot_files(spark, d).collect()
+    live = sr.snapshot_files(spark, d).collect()
     by_name = {r["path"] for r in live}
     # the old 5-LOW file is gone, the new one is live, the other
     # priorities and ALL year files (different spec — never
@@ -3093,7 +3094,7 @@ def test_hidden_partitioning_transforms(spark, tmp_path):
         "o_orderpriority",
     )
     tl.append_partitioned(spark, d, orders, "H")
-    live = tl.snapshot_files(spark, d).collect()
+    live = sr.snapshot_files(spark, d).collect()
     # every file records BOTH derived values under the entry keys
     for r in live:
         ks = sorted(p.split("=", 1)[0] for p in r["part"])
@@ -3143,7 +3144,7 @@ def test_partition_transform_read_scans_one_month_file(spark):
         spark, d, {"month(o_orderdate)": "1995-03"})
     inputs = {os.path.basename(p) for p in df.inputFiles()}
     assert inputs == {"M-month(o_orderdate)=1995-03.parquet"}
-    n_all = len(tl.snapshot_files(spark, d).collect())
+    n_all = len(sr.snapshot_files(spark, d).collect())
     assert n_all > 12  # genuinely many months staged
 
 
@@ -3318,7 +3319,7 @@ def test_generalized_column_bounds_prune_and_round_trip(spark, tmp_path):
     # a file WITHOUT bounds (plain writer) must stay a candidate
     tl.constrained_append(
         spark, d, orders.filter("o_orderkey % 97 = 0"), "NB.parquet")
-    live = tl.snapshot_files(spark, d).collect()
+    live = sr.snapshot_files(spark, d).collect()
     assert sum(1 for r in live if r["cstats"]) == 4
     # numeric range prune on o_totalprice
     prices = sorted(
@@ -3395,11 +3396,11 @@ def test_compact_partitions_whole_table(spark, tmp_path):
         spark, d, orders.filter("o_orderkey % 3 = 0"), "T")
     before = sorted(
         tuple(r) for r in tl.snapshot_read(spark, d).collect())
-    n_year = len([r for r in tl.snapshot_files(spark, d).collect()
+    n_year = len([r for r in sr.snapshot_files(spark, d).collect()
                   if r["path"].startswith("P-")])
     v = tl.compact_partitions(spark, d, "CA")
     assert v is not None
-    live = tl.snapshot_files(spark, d).collect()
+    live = sr.snapshot_files(spark, d).collect()
     # every priority partition is now ONE CA- file with part kept
     pr = [r for r in live if "o_orderpriority=" in r["path"]]
     assert all(r["path"].startswith("CA-") for r in pr)
@@ -3488,13 +3489,13 @@ def test_drop_partitions_metadata_only_and_loud(spark, tmp_path):
     )
     tl.append_partitioned(spark, d, orders, "Y")
     v_before = max(tl._present_versions(d))
-    n_files = len(tl.snapshot_files(spark, d).collect())
+    n_files = len(sr.snapshot_files(spark, d).collect())
     want_left = orders.filter(
         tl.F.date_format("o_orderdate", "yyyy") != "1995").count()
     v = tl.drop_partitions(spark, d, {"year(o_orderdate)": "1995"})
     assert v == v_before + 1
     assert tl.snapshot_read(spark, d).count() == want_left
-    assert len(tl.snapshot_files(spark, d).collect()) == n_files - 1
+    assert len(sr.snapshot_files(spark, d).collect()) == n_files - 1
     # zero bytes moved: the dropped file still exists on disk and
     # time travel below the drop reads it
     assert tl.snapshot_read(spark, d, v_before).count() == \
@@ -3600,9 +3601,9 @@ def test_cow_dml_carries_partition_values(spark, tmp_path):
         "o_orderdate", "o_orderpriority",
     ).withColumn("o_year", tl.F.date_format("o_orderdate", "yyyy"))
     tl.append_partitioned(spark, d, orders, "P")
-    n_years = len(tl.snapshot_files(spark, d).collect())
+    n_years = len(sr.snapshot_files(spark, d).collect())
     tl.delete_where_cow(spark, d, "o_orderkey % 5 = 0")
-    live = tl.snapshot_files(spark, d).collect()
+    live = sr.snapshot_files(spark, d).collect()
     assert all(r["part"] for r in live), \
         "a CoW delete rewrite dropped partition values"
     # pruning is as tight as before the delete
@@ -3615,7 +3616,7 @@ def test_cow_dml_carries_partition_values(spark, tmp_path):
     tl.update_where_cow(
         spark, d, "o_orderkey % 7 = 0",
         {"o_orderpriority": "'9-UPD'"})
-    live2 = tl.snapshot_files(spark, d).collect()
+    live2 = sr.snapshot_files(spark, d).collect()
     assert all(r["part"] for r in live2)
     assert len(tl.partition_candidate_files(
         spark, d, {"o_year": "1995"})) == 1
@@ -3657,7 +3658,7 @@ def test_update_of_partition_column_drops_stale_carry(spark, tmp_path):
         "the rewrite carried its origin's stale o_year"
     )
     # and the rewritten file no longer claims the stale value
-    live = tl.snapshot_files(spark, d).collect()
+    live = sr.snapshot_files(spark, d).collect()
     rewrites = [r for r in live if r["path"].startswith("UPD")]
     assert rewrites
     for r in rewrites:
@@ -3707,7 +3708,7 @@ def test_update_of_transform_source_drops_stale_carry(spark, tmp_path):
     # untouched months keep their carried values (precision survives
     # for entries the update did not invalidate... the spec has one
     # entry here, so only rewrites lose it)
-    live = tl.snapshot_files(spark, d).collect()
+    live = sr.snapshot_files(spark, d).collect()
     untouched = [r for r in live if r["path"].startswith("M-")]
     assert untouched and all(r["part"] for r in untouched)
 
@@ -3733,7 +3734,7 @@ def test_merge_drops_nonkey_carry_keeps_bucket(spark, tmp_path):
     source = orders.filter("o_orderkey % 11 = 0").withColumn(
         "o_orderpriority", tl.F.lit("9-MRG"))
     tl.merge_table(spark, d, source)
-    live = tl.snapshot_files(spark, d).collect()
+    live = sr.snapshot_files(spark, d).collect()
     rewrites = [r for r in live if r["path"].startswith("MRG")
                 and not r["path"].endswith("-ins.parquet")]
     assert rewrites
@@ -3790,7 +3791,7 @@ def test_cstats_carry_through_dml(spark, tmp_path):
             spark, d, part, f"S{i}.parquet",
             ["o_totalprice", "o_orderpriority"],
         )
-    n_files = len(tl.snapshot_files(spark, d).collect())
+    n_files = len(sr.snapshot_files(spark, d).collect())
     assert n_files >= 2
     # bounds prune before DML
     cand0 = tl.candidate_files_where(
@@ -3822,7 +3823,7 @@ def test_cstats_carry_through_dml(spark, tmp_path):
     assert got9 == moved, (
         "update-moved rows were lost to a stale carried bound"
     )
-    live = tl.snapshot_files(spark, d).collect()
+    live = sr.snapshot_files(spark, d).collect()
     upd = [r for r in live if r["path"].startswith("UPD")]
     assert upd
     for r in upd:
@@ -3878,7 +3879,7 @@ def test_merged_cstats_and_compaction_carry(spark, tmp_path):
                 "o_totalprice": ["num", str(st["mn"]), str(st["mx"])]}
         tl.commit_actions(d, adds)
     assert tl.compact_partitions(spark, d, "C") is not None
-    live = tl.snapshot_files(spark, d).collect()
+    live = sr.snapshot_files(spark, d).collect()
     compacted = [r for r in live if r["path"].startswith("C-")]
     assert compacted
     for r in compacted:
@@ -4362,7 +4363,7 @@ def test_versioned_pruning_respects_checkpoint_horizon(spark, tmp_path):
     checkpoint and filtering by v would mis-resolve files removed or
     re-added in (V, ckpt_v] on a truncated log — a time-travel read
     through pruning silently losing rows.  Below the horizon it must
-    raise like snapshot_files; at a retained version it must name
+    raise like snapshot_read; at a retained version it must name
     exactly the snapshot's files."""
     import pytest
 
@@ -4411,6 +4412,20 @@ def test_driver_replay_bound_refuses_past_threshold(spark, tmp_path, monkeypatch
     assert len(tl._snapshot(d).files) == 1000
 
 
+def test_version_past_the_latest_commit_refuses_naming_the_latest(
+        spark, tmp_path):
+    """A version above the latest commit was never written: the
+    refusal names the asked and the latest version, not an expiry."""
+    d = _mklog(tmp_path, {0: [_add(0, "a.parquet")],
+                          1: [_add(1, "b.parquet")]})
+    for read in (lambda: tl._snapshot(d, 5),
+                 lambda: tl.snapshot_read(spark, d, 5)):
+        with pytest.raises(ValueError,
+                           match="version 5 .*latest version is 1") as e:
+            read()
+        assert "log expired" not in str(e.value)
+
+
 def test_streaming_gate_over_a_log_without_adds(spark, tmp_path):
     """A log holding only metadata actions has an empty add index: the
     gate must still analyze (no untyped empty map lookup) and count
@@ -4435,8 +4450,9 @@ def _by_path(rows):
 def test_driver_snapshot_records_match_spark_replay(spark, tmp_path):
     """The driver-side snapshot every planner reads returns the
     LOG_SCHEMA row shape: at every version, and again from a
-    checkpoint after expiry, _snapshot's files equal snapshot_files'
-    rows and its deletes equal snapshot_delete_files' rows — cstats,
+    checkpoint after expiry, _snapshot's files equal the Spark
+    replay's snapshot_files rows and its deletes equal its
+    snapshot_delete_files rows (tests/spark_replay.py) — cstats,
     part, seq (RESTORE re-emits) and keydel records included.  A
     checkpoint at or above a live keydel's commit seeds adds and
     metadata only: the keydel still folds from its retained commit
@@ -4465,11 +4481,11 @@ def test_driver_snapshot_records_match_spark_replay(spark, tmp_path):
         snap = tl._snapshot(d, v)
         got = _by_path(snap.files)
         want = _by_path(r.asDict()
-                        for r in tl.snapshot_files(spark, d, v).collect())
+                        for r in sr.snapshot_files(spark, d, v).collect())
         assert got == want, v
         got_d = _by_path(snap.deletes)
         want_d = _by_path(r.asDict() for r in
-                          tl.snapshot_delete_files(spark, d, v).collect())
+                          sr.snapshot_delete_files(spark, d, v).collect())
         assert got_d == want_d, v
         return got
 
@@ -4807,13 +4823,15 @@ def test_log_reads_go_through_one_commit_and_one_checkpoint_reader():
     (the in-commit timestamp, the commit-time txn re-check, expiry's
     refusal scan, the streaming gate's add index and the live-commit
     gate's copy of one commit).  A second walk is how the replay
-    rules drift apart again."""
+    rules drift apart again.  The Spark scan of the whole log
+    (``read_log``) serves only the per-version audit and the vacuum
+    plan, so a Spark liveness replay cannot come back unnoticed."""
     import ast
     import inspect
 
     readers = {"read_parquet", "read_table", "ParquetFile",
                "ParquetDataset", "dataset", "read_metadata"}
-    loads, ckpt_reads, walks = [], [], []
+    loads, ckpt_reads, walks, log_scans = [], [], [], []
 
     def visit(node, fn):
         for child in ast.iter_child_nodes(node):
@@ -4833,6 +4851,9 @@ def test_log_reads_go_through_one_commit_and_one_checkpoint_reader():
                     child.func, "id", "") in (
                         "_action_lines_of", "_checkpoint_actions"):
                 walks.append((child.func.id, inner))
+            if isinstance(child, ast.Call) and getattr(
+                    child.func, "id", "") == "read_log":
+                log_scans.append(inner)
             visit(child, inner)
 
     visit(ast.parse(inspect.getsource(tl)), None)
@@ -4844,6 +4865,7 @@ def test_log_reads_go_through_one_commit_and_one_checkpoint_reader():
         "_commit_ts_of", "_snapshot", "commit_actions", "expire_log",
         "streaming_cdf_ivm_gate", "streaming_tablelog_gate_dir",
     ]
+    assert sorted(log_scans) == ["table_history_audit_dir", "vacuum_plan"]
 
 
 @pytest.mark.parametrize("reader", ["snapshot_read_mor",

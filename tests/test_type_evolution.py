@@ -20,6 +20,7 @@ from tests.conftest import SF_SMOKE
 
 from gemmsql.datamodel import load_table
 from gemmsql.pipeline import tablelog as tl
+from tests import spark_replay as sr
 
 
 def _fresh(tmp_path, name):
@@ -863,7 +864,7 @@ def test_spec_source_rename_roundtrip(spark, tmp_path):
     assert "qty2" in got.columns and "o_qty" not in got.columns
     # the candidate list actually PRUNED (not scan-everything)
     cand = tl.partition_candidate_files(spark, d, {"qty2": probe})
-    all_live = tl.snapshot_files(spark, d).count()
+    all_live = sr.snapshot_files(spark, d).count()
     assert 0 < len(cand) < all_live
     # source-predicate conversion prunes through the rename too
     got_w = tl.partition_pruned_read_where(spark, d, {"qty2": probe})
@@ -1040,7 +1041,7 @@ def test_pruned_read_where_converts_for_earlier_spec_renamed_source(
     # and the old-spec files actually PRUNED: fewer input files than
     # the live count (P files mismatching the probe value skip)
     n_inputs = len(got.inputFiles())
-    all_live = tl.snapshot_files(spark, d).count()
+    all_live = sr.snapshot_files(spark, d).count()
     assert 0 < n_inputs < all_live
 
 
