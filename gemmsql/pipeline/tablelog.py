@@ -1987,15 +1987,15 @@ def _snapshot(table_dir: str, version: int | None = None) -> Snapshot:
     Per path the last action at or below the version wins, a remove
     beating the other kinds inside one version; the path is a live
     file when that action is an add, a live delete file when it is a
-    ``keydel``/``posdel``.  On an expired log, adds and metadata seed from the
-    newest checkpoint at or below the version (it carries both, with
-    their original stamps) and only later commits fold on top; deletes
-    fold from EVERY retained commit, since a checkpoint carries none
-    (expiry refuses to drop a commit holding one).  A version that
-    needs an expired commit refuses, and so does a version past the
-    latest commit (naming the latest) or a MISSING log directory,
-    like :func:`read_log` — a typo'd table path must never read as an
-    empty table."""
+    ``keydel``/``posdel``.  On an expired log, adds and metadata seed
+    from the newest checkpoint at or below the version (it carries
+    both, with their original stamps) and only later commits fold on
+    top; deletes fold from EVERY retained commit, since a checkpoint
+    carries none (expiry refuses to drop a commit holding one).  A
+    version that needs an expired commit refuses, and so does a
+    version past the latest commit (naming the latest) or a MISSING
+    log directory, like :func:`read_log` — a typo'd table path must
+    never read as an empty table."""
     if not os.path.isdir(os.path.join(table_dir, LOG_SUBDIR)):
         raise ValueError(f"not a logged table (no {LOG_SUBDIR}/): "
                          f"{table_dir}")
