@@ -184,6 +184,23 @@ def _table_dir(sf_dir: str) -> str:
     )
 
 
+class SplitFileError(RuntimeError):
+    """A write meant to produce one data file produced several part
+    files (``spark.sql.files.maxRecordsPerFile`` splits a task's
+    output); publishing any one of them would drop the others' rows."""
+
+
+def _one_part(scratch: str) -> str:
+    """The single part file Spark wrote under ``scratch``."""
+    parts = _glob.glob(os.path.join(scratch, "part-*.parquet"))
+    if len(parts) != 1:
+        raise SplitFileError(
+            f"{scratch}: {len(parts)} part files where one data file "
+            "is due (is spark.sql.files.maxRecordsPerFile set?)"
+        )
+    return parts[0]
+
+
 def _write_one_file(
     df: DataFrame, dest: str, *, sort_key: str = "o_orderkey"
 ) -> None:
@@ -197,9 +214,10 @@ def _write_one_file(
         .write.mode("overwrite")
         .parquet(scratch)
     )
-    part = _glob.glob(os.path.join(scratch, "part-*.parquet"))[0]
-    os.replace(part, dest)
-    shutil.rmtree(scratch, ignore_errors=True)
+    try:
+        os.replace(_one_part(scratch), dest)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # the lifecycle: slice name -> (key-range bucket, commit version).
@@ -1573,14 +1591,7 @@ def streaming_txn_sink_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         name = f"B{int(st['mn'])}.parquet"
         dest = os.path.join(table, DATA_SUBDIR, name)
-        scratch = f"{dest}.scratch{batch_id}"
-        (
-            bdf.coalesce(1).sortWithinPartitions("event_id")
-            .write.mode("overwrite").parquet(scratch)
-        )
-        part = _glob.glob(os.path.join(scratch, "part-*.parquet"))[0]
-        os.replace(part, dest)
-        shutil.rmtree(scratch, ignore_errors=True)
+        _write_one_file(bdf, dest, sort_key="event_id")
         commit_actions(table, [{
             "a": "add", "path": name, "n_rows": int(st["n"]),
             "n_bytes": os.path.getsize(dest),
@@ -1682,33 +1693,21 @@ def optimize_table(
         gmax = max(r["max_key"] for r in live)
         bucket_col, src = "o_orderkey", df
     width = (gmax - gmin) // n_files + 1
+    # an empty key-range bucket writes neither a data file nor an add
+    # action (ADVICE r12 #2); every column a live file bounds stays
+    # bounded, from each new file's footer, so pruning survives
+    bounded = {c for r in live for c in (r["cstats"] or {})}
+    adds = _write_tagged(
+        src.withColumn(
+            _OUT, F.expr(f"({bucket_col} - {gmin}) div {width}")
+        ).drop("__z"),
+        dest_dir,
+        [f"OPT{new_v}-{k}.parquet" for k in range(n_files)],
+        stat_cols=sorted(bounded & set(df.columns)),
+    )
     lines = [json.dumps({"v": new_v, "a": "remove", "path": p})
              for p in paths]
-    for k in range(n_files):
-        name = f"OPT{new_v}-{k}.parquet"
-        part = src.filter(
-            F.expr(f"({bucket_col} - {gmin}) div {width}") == k
-        ).drop("__z")
-        st = part.agg(
-            F.count("*").alias("n"),
-            F.min("o_orderkey").alias("mnk"),
-            F.max("o_orderkey").alias("mxk"),
-            F.min(F.date_format("o_orderdate", "yyyy-MM-dd")).alias("mnd"),
-            F.max(F.date_format("o_orderdate", "yyyy-MM-dd")).alias("mxd"),
-        ).collect()[0]  # 1-row write-time stats
-        if not st["n"]:
-            # an empty key-range bucket has no stats (min/max are
-            # NULL) and must produce neither a data file nor an add
-            # action (ADVICE r12 #2)
-            continue
-        dest = os.path.join(dest_dir, DATA_SUBDIR, name)
-        _write_one_file(part, dest)
-        lines.append(json.dumps({
-            "v": new_v, "a": "add", "path": name,
-            "n_rows": int(st["n"]), "n_bytes": os.path.getsize(dest),
-            "min_key": int(st["mnk"]), "max_key": int(st["mxk"]),
-            "min_date": st["mnd"], "max_date": st["mxd"],
-        }))
+    lines += [json.dumps({"v": new_v, **a}) for a in adds if a]
     with open(
         os.path.join(dest_dir, LOG_SUBDIR, f"{new_v:08d}.json"), "w"
     ) as f:
@@ -3755,52 +3754,44 @@ def _stage_partitioned_files(
     if "o_orderdate" in df.columns:
         date_col = (log2phys or {}).get("o_orderdate", "o_orderdate")
 
-    by_dir: dict[tuple, list[str]] = {}
-    for fp in sorted(_glob.glob(os.path.join(
-        scratch, *(["*"] * len(spec)), "part-*.parquet"
-    ))):
-        rel = os.path.relpath(os.path.dirname(fp), scratch)
-        by_dir.setdefault(tuple(rel.split(os.sep)), []).append(fp)
-    if not by_dir:
-        # the append_mapped rule: an empty write must refuse, not
-        # burn a version on a zero-action (blank) commit file
+    leaves = sorted(
+        (tuple(x.split("=", 1)[1] for x in
+               os.path.relpath(d, scratch).split(os.sep)), d)
+        for d in _glob.glob(os.path.join(
+            scratch, *[f"{s}=*" for s in shadow]))
+    )
+    try:
+        if not leaves:
+            # the append_mapped rule: an empty write must refuse, not
+            # burn a version on a zero-action (blank) commit file
+            raise ValueError("empty append")
+        moves, part_of = [], {}
+        for vals, d in leaves:
+            for e, v in zip(spec, vals):
+                if (v != "__HIVE_DEFAULT_PARTITION__"
+                        and not _PART_VALUE_OK.match(v)):
+                    raise ValueError(
+                        f"unencodable partition value {e}={v!r}")
+            parts = [f"{e}={v}" for e, v in zip(spec, vals)]
+            name = f"{prefix}-{'-'.join(parts)}.parquet"
+            if os.path.exists(os.path.join(table_dir, DATA_SUBDIR, name)):
+                # loud: overwriting bytes a previous version still
+                # references would corrupt time travel — every write
+                # batch picks a fresh prefix (the immutable-file rule)
+                raise ValueError(
+                    f"data file exists: {name} — reuse a fresh prefix "
+                    "per write batch"
+                )
+            # repartition-by-value puts each value in one task, so
+            # only a file-size cap can split it
+            moves.append((_one_part(d), name))
+            part_of[name] = parts
+        actions = _publish(
+            spark, table_dir, moves, sort_key, date_col=date_col)
+    finally:
         shutil.rmtree(scratch, ignore_errors=True)
-        raise ValueError("empty append")
-    actions = []
-    for comps in sorted(
-        by_dir, key=lambda c: tuple(x.split("=", 1)[1] for x in c)
-    ):
-        vals = [c.split("=", 1)[1] for c in comps]
-        for e, v in zip(spec, vals):
-            if v != "__HIVE_DEFAULT_PARTITION__" and not _PART_VALUE_OK.match(v):
-                shutil.rmtree(scratch, ignore_errors=True)
-                raise ValueError(f"unencodable partition value {e}={v!r}")
-        parts = [f"{e}={v}" for e, v in zip(spec, vals)]
-        files = sorted(by_dir[comps])
-        name = f"{prefix}-{'-'.join(parts)}.parquet"
-        dest = os.path.join(table_dir, DATA_SUBDIR, name)
-        if os.path.exists(dest):
-            # loud: overwriting bytes a previous version still
-            # references would corrupt time travel — every write
-            # batch picks a fresh prefix (the immutable-file rule)
-            shutil.rmtree(scratch, ignore_errors=True)
-            raise ValueError(
-                f"data file exists: {name} — reuse a fresh prefix "
-                "per write batch"
-            )
-        if len(files) == 1:
-            os.replace(files[0], dest)
-        else:
-            # hash-collision fallback: two values landed in one task
-            # and the writer split them — still one file per value,
-            # merged here only if Spark ever splits a value (it does
-            # not under repartition-by-value; kept for safety)
-            _write_one_file(spark.read.parquet(*files), dest)
-        act = _file_add_action(
-            spark, dest, name, sort_key, date_col=date_col)
-        act["part"] = parts
-        actions.append(act)
-    shutil.rmtree(scratch, ignore_errors=True)
+    for act in actions:
+        act["part"] = part_of[act["path"]]
     return actions
 
 
@@ -5309,23 +5300,113 @@ def _write_with_add_actions(
         .write.mode("overwrite")
         .parquet(scratch)
     )
-    adds: list[dict] = []
-    idx = 0
     # part files sort in partition-index order == ascending key
     # ranges (repartitionByRange), so publication order is the
-    # clustered order; per-file stats from each written footer (r17
-    # — the grouped _metadata scan was one more job per commit)
-    for part in sorted(
-            _glob.glob(os.path.join(scratch, "part-*.parquet"))):
-        fname = f"{base}-{idx:05d}.parquet"
-        add = _file_add_action(df.sparkSession, part, fname, key)
-        if add is None:
-            continue  # empty task file
-        os.replace(part, os.path.join(table_dir, DATA_SUBDIR, fname))
+    # clustered order; an empty range writes no part file
+    parts = sorted(_glob.glob(os.path.join(scratch, "part-*.parquet")))
+    try:
+        adds = _publish(df.sparkSession, table_dir, [
+            (p, f"{base}-{i:05d}.parquet") for i, p in enumerate(parts)
+        ], key)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+    return [a for a in adds if a]
+
+
+def _publish(
+    spark: SparkSession,
+    table_dir: str,
+    moves: list[tuple[str, str]],
+    key: str,
+    stat_types: dict[str, str] | None = None,
+    *,
+    date_col: str | None = "o_orderdate",
+) -> list[dict | None]:
+    """Publish written part files as data files: for each ``(part,
+    name)``, the add action from the part's own footer
+    (:func:`_file_add_action`) and the part moved to ``name``; an
+    empty part publishes nothing (None)."""
+    adds: list[dict | None] = []
+    for part, name in moves:
+        add = _file_add_action(
+            spark, part, name, key, stat_types, date_col=date_col)
+        if add is not None:
+            os.replace(part, os.path.join(table_dir, DATA_SUBDIR, name))
         adds.append(add)
-        idx += 1
-    shutil.rmtree(scratch, ignore_errors=True)
     return adds
+
+
+#: the output-index column of :func:`_write_tagged` frames
+_OUT = "__out"
+
+
+def _by_origin(df: DataFrame, origins: list[str]) -> DataFrame:
+    """``df``'s rows from the ``origins`` files, their ``_path``
+    replaced by the origin's index (:data:`_OUT`), for
+    :func:`_write_tagged`; rows of other files drop out."""
+    idx = F.array_position(
+        F.array(*[F.lit(p) for p in origins]), F.col("_path")
+    ).cast("int") - 1
+    return (df.withColumn(_OUT, idx).filter(F.col(_OUT) >= 0)
+            .drop("_path"))
+
+
+def _write_tagged(
+    df: DataFrame,
+    table_dir: str,
+    names: list[str],
+    *,
+    key: str = "o_orderkey",
+    stat_cols=(),
+) -> list[dict | None]:
+    """Write the rows of ``df`` whose :data:`_OUT` index is ``i`` as
+    the data file ``names[i]``, each sorted by ``key``, all in ONE
+    job, and return each file's add action (``cstats`` bounds for
+    every ``stat_cols`` column) in ``names`` order.  An index with no
+    rows writes no file (None); an index split over several part
+    files refuses (:class:`SplitFileError`).
+
+    One hash repartition on the index puts each output whole into one
+    task, and ``partitionBy`` keeps the index out of the files — so a
+    rewrite of N files scans its inputs once, not once per file."""
+    scratch = os.path.join(table_dir, DATA_SUBDIR, f"{names[0]}.scratch")
+    (
+        df.repartition(len(names), _OUT)
+        .sortWithinPartitions(_OUT, key)
+        .write.mode("overwrite")
+        .partitionBy(_OUT)
+        .parquet(scratch)
+    )
+    types = dict(df.dtypes)
+    written = {
+        int(d.rsplit("=", 1)[1]): d
+        for d in _glob.glob(os.path.join(scratch, f"{_OUT}=*"))
+    }
+    try:
+        adds = dict(zip(sorted(written), _publish(
+            df.sparkSession, table_dir,
+            [(_one_part(written[i]), names[i]) for i in sorted(written)],
+            key, {c: _cstat_type(types[c]) for c in stat_cols},
+        )))
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+    return [adds.get(i) for i in range(len(names))]
+
+
+def _replace_actions(
+    origins: list[str], adds: list, live_by_path: dict,
+    assigned: frozenset = frozenset(),
+) -> list[dict]:
+    """Each origin file's remove, then its rewrite's add (none for an
+    origin left empty) carrying what stays true of it
+    (:func:`_carry_part`)."""
+    actions: list[dict] = []
+    for name, add in zip(origins, adds):
+        actions.append({"a": "remove", "path": name})
+        if add:
+            _carry_part(add, live_by_path.get(name), assigned)
+            actions.append(add)
+    return actions
 
 
 # ------------------------------------------------------------ MERGE
@@ -5523,19 +5604,10 @@ def merge_table(
         )  # bounded by candidate count
 
     nonce = _next_version_nonce(table_dir)
-    # every rewrite bounds each column any live file bounds, from its
-    # own footer: matched rows take source values, so an origin's
-    # bound no longer holds, and without one pruning stops at a merge
-    bounded = {c for r in live for c in (r["cstats"] or {})}
-
-    def _stats_and_add(df: DataFrame, name: str) -> dict | None:
-        return _write_with_add_action(
-            df, table_dir, name, key=key,
-            stat_cols=sorted(bounded & set(df.columns)),
-        )
-
-    actions: list[dict] = []
-    inserts = source
+    names = [f"MRG{nonce}-{k}.parquet" for k in range(len(touched))]
+    names.append(f"MRG{nonce}-ins.parquet")
+    out = source.withColumn(_OUT, F.lit(len(touched)))
+    assigned: frozenset = frozenset()
     if touched:
         tgt = tagged.filter(F.col("_path").isin(touched))
         upd_cols = [c for c in tgt.columns if c not in (key, "_path")]
@@ -5553,34 +5625,36 @@ def merge_table(
                 for c in upd_cols
             ],
         )
-        part_of = {r["path"]: r for r in live}
         # MERGE assigns every non-key column on matched rows, so only
         # key-derived partition values (bucket specs) survive the
         # carry — see _carry_part's loss rule; column bounds come from
-        # each rewrite's own footer (_stats_and_add)
+        # each rewrite's own footer
         assigned = set(upd_cols)
         if mapping is not None:
             phys2log = {e["physical"]: e["logical"] for e in mapping}
             assigned |= {phys2log[c] for c in upd_cols if c in phys2log}
         assigned = frozenset(assigned)
-        for k, name in enumerate(touched):
-            # per-ORIGIN-file rewrite preserves the table's
-            # clustering: each touched file maps to one replacement
-            # file carrying exactly its (updated) rows
-            part = rewritten.filter(F.col("_path") == name).drop("_path")
-            add = _stats_and_add(part, f"MRG{nonce}-{k}.parquet")
-            actions.append({"a": "remove", "path": name})
-            if add:
-                _carry_part(add, part_of.get(name), assigned)
-                actions.append(add)
         # inserts = source keys matching NO live row; a source key can
         # only collide with candidate rows (stats bound every file),
         # and any collision makes its file touched — so the touched
         # files' keys are exactly the matched keys
         inserts = source.join(tgt.select(key), key, "left_anti")
-    ins_add = _stats_and_add(inserts, f"MRG{nonce}-ins.parquet")
-    if ins_add:
-        actions.append(ins_add)
+        # per-ORIGIN-file rewrite preserves the table's clustering:
+        # each touched file maps to one replacement file carrying
+        # exactly its (updated) rows; the inserts file rides the same
+        # write job, so it takes the rewrites' column order
+        out = _by_origin(rewritten, touched).unionByName(
+            inserts.withColumn(_OUT, F.lit(len(touched))))
+    # every rewrite bounds each column any live file bounds, from its
+    # own footer: matched rows take source values, so an origin's
+    # bound no longer holds, and without one pruning stops at a merge
+    bounded = {c for r in live for c in (r["cstats"] or {})}
+    adds = _write_tagged(out, table_dir, names, key=key,
+                         stat_cols=sorted(bounded & set(out.columns)))
+    actions = _replace_actions(
+        touched, adds, {r["path"]: r for r in live}, assigned)
+    if adds[-1]:
+        actions.append(adds[-1])
     if not actions:
         raise ValueError("merge produced no actions")
     # snapshot-isolation: abort if a concurrent commit rewrote any
@@ -5778,29 +5852,17 @@ def delete_keys_mor(
     write-amplification trade every modern table format ships.
 
     Returns the committed version."""
-    import pyarrow.parquet as _pq
-
     nonce = _next_version_nonce(table_dir)
     name = f"KD{nonce}.parquet"
     dest = os.path.join(table_dir, DATA_SUBDIR, name)
     _write_one_file(keys.select(F.col(key).alias("o_orderkey")), dest)
-    # key-range stats from the written file's parquet footer, exact
-    # for int64 — materialize_deletes plans its candidates from them
-    md = _pq.ParquetFile(dest).metadata
-    if not md.num_rows:
+    # key-range stats from the written file's parquet footer —
+    # materialize_deletes plans its candidates from them
+    add = _file_add_action(spark, dest, name, "o_orderkey", date_col=None)
+    if add is None:
         os.remove(dest)
         raise ValueError("empty delete key set")
-    bounds, inexact = _footer_bounds(md, ["o_orderkey"])
-    if inexact or bounds["o_orderkey"] is None:
-        # same loud contract as _file_add_action: a silent wrong bound
-        # would let a skip plan resurrect rows
-        raise ValueError(f"{dest}: no exact o_orderkey stats in the footer")
-    mnk, mxk = bounds["o_orderkey"]
-    return commit_actions(table_dir, [{
-        "a": "keydel", "path": name,
-        "n_rows": int(md.num_rows), "n_bytes": os.path.getsize(dest),
-        "min_key": int(mnk), "max_key": int(mxk),
-    }])
+    return commit_actions(table_dir, [{**add, "a": "keydel"}])
 
 
 def _live_logical_tagged(
@@ -5960,19 +6022,15 @@ def delete_where_cow(
     if not touched:
         raise ValueError("delete predicate matched no rows")
     nonce = _next_version_nonce(table_dir)
-    actions: list[dict] = []
-    for k, name in enumerate(touched):
-        part = tagged.filter(F.col("_path") == name).filter(~hit)
-        part, phys_key = _to_physical(part, mapping, key)
-        add = _write_with_add_action(
-            part.drop("_path"), table_dir,
-            f"DEL{nonce}-{k}.parquet", key=phys_key,
-        )
-        actions.append({"a": "remove", "path": name})
-        if add:  # a fully-deleted file just removes
-            _carry_part(add, live_by_path.get(name))
-            actions.append(add)
-    return commit_actions(table_dir, actions, expects_live=touched)
+    kept, phys_key = _to_physical(tagged.filter(~hit), mapping, key)
+    adds = _write_tagged(
+        _by_origin(kept, touched), table_dir,
+        [f"DEL{nonce}-{k}.parquet" for k in range(len(touched))],
+        key=phys_key,
+    )
+    return commit_actions(
+        table_dir, _replace_actions(touched, adds, live_by_path),
+        expects_live=touched)
 
 
 def update_where_cow(
@@ -6042,23 +6100,22 @@ def update_where_cow(
     rewritten = rewritten.drop("__hit")
     rewritten, phys_key = _to_physical(rewritten, mapping, key)
     nonce = _next_version_nonce(table_dir)
-    actions: list[dict] = []
-    for k, name in enumerate(touched):
-        part = rewritten.filter(F.col("_path") == name).drop("_path")
-        add = _write_with_add_action(
-            part, table_dir, f"UPD{nonce}-{k}.parquet", key=phys_key
-        )
-        actions.append({"a": "remove", "path": name})
-        # assigned columns (logical AND frozen physical names) can't
-        # carry their origin's partition values / bounds — see
-        # _carry_part's loss rule
-        assigned = set(set_exprs)
-        if mapping is not None:
-            log2phys = {e["logical"]: e["physical"] for e in mapping}
-            assigned |= {log2phys[c] for c in set_exprs if c in log2phys}
-        _carry_part(add, live_by_path.get(name), frozenset(assigned))
-        actions.append(add)  # same rows back — never empty
-    return commit_actions(table_dir, actions, expects_live=touched)
+    adds = _write_tagged(
+        _by_origin(rewritten, touched), table_dir,
+        [f"UPD{nonce}-{k}.parquet" for k in range(len(touched))],
+        key=phys_key,
+    )
+    # assigned columns (logical AND frozen physical names) can't
+    # carry their origin's partition values / bounds — see
+    # _carry_part's loss rule
+    assigned = set(set_exprs)
+    if mapping is not None:
+        log2phys = {e["logical"]: e["physical"] for e in mapping}
+        assigned |= {log2phys[c] for c in set_exprs if c in log2phys}
+    return commit_actions(
+        table_dir,
+        _replace_actions(touched, adds, live_by_path, frozenset(assigned)),
+        expects_live=touched)
 
 
 def _mor_exclude_dead(
@@ -6691,7 +6748,7 @@ def materialize_deletes(
         # its newest deleting sequence, and subtraction applies only
         # to files sequenced strictly below it — materialization must
         # drop exactly what the MOR read hides, nothing newer
-        keys = _keydel_keys_with_seq(spark, table_dir, kd, key)
+        keys = _keydel_keys_with_seq(spark, table_dir, kd, "__del_key")
     dv = None
     if pdl:
         dv = _posdel_pairs(spark, table_dir, pda).select(
@@ -6731,60 +6788,41 @@ def materialize_deletes(
             _file_basename(F.col("_metadata.file_path")).alias("_path"),
             F.col("_metadata.row_index").alias("_pos"),
         )
-        doomed = tagged
-        addv = {r["path"]: _seq_of(r) for r in live}
-        live_by_path = {r["path"]: r for r in live}
+        hits, kept = [], tagged
         if keys is not None:
-            # a file is touched only by keys whose deleting sequence
-            # is strictly above the file's sequence (the rule) — a
+            # a key deletes a row only when its deleting sequence is
+            # strictly above the row's file sequence (the rule) — a
             # file appended after every delete never rewrites
             addv_df = spark.createDataFrame(
-                sorted(addv.items()), "_path string, _add_v long"
+                sorted((r["path"], _seq_of(r)) for r in live),
+                "_path string, _add_v long",
             )
-            k_hits = (
-                tagged.join(F.broadcast(keys), key)
-                .join(F.broadcast(addv_df), "_path")
-                .filter(F.col("__kd_v") > F.col("_add_v"))
-                .select("_path")
-            )
+            seq_tagged = tagged.join(F.broadcast(addv_df), "_path")
+            rule = ((F.col(key) == F.col("__del_key"))
+                    & (F.col("__kd_v") > F.col("_add_v")))
+            hits.append(seq_tagged.join(F.broadcast(keys), rule))
+            kept = (seq_tagged.join(F.broadcast(keys), rule, "left_anti")
+                    .drop("_add_v"))
         if dv is not None:
-            p_hits = dv.select("_path")
-        hits = (
-            k_hits.unionByName(p_hits) if keys is not None and
-            dv is not None else (k_hits if keys is not None else p_hits)
-        )
-        touched = sorted(
-            r["_path"] for r in hits.distinct().collect()
-        )
+            hits.append(dv)
+            kept = kept.join(F.broadcast(dv), ["_path", "_pos"], "left_anti")
+        hit = hits[0].select("_path")
+        for h in hits[1:]:
+            hit = hit.unionByName(h.select("_path"))
+        touched = sorted(r["_path"] for r in hit.distinct().collect())
         nonce = _next_version_nonce(table_dir)
-        for k, name in enumerate(touched):
-            part = doomed.filter(F.col("_path") == name)
-            if dv is not None:
-                part = part.join(
-                    F.broadcast(dv), ["_path", "_pos"], "left_anti"
-                )
-            if keys is not None:
-                part = part.join(
-                    F.broadcast(
-                        keys.filter(
-                            F.col("__kd_v") > int(addv[name])
-                        ).drop("__kd_v")
-                    ),
-                    key, "left_anti",
-                )
-            part = part.drop("_path", "_pos")
-            add = _write_with_add_action(
-                part, table_dir, f"MAT{nonce}-{k}.parquet", key=key
-            )
-            # a materialized rewrite holds EXACTLY a subset of its
-            # origin's rows — carry the origin's partition values and
-            # column bounds (r17; nothing is assigned here), or
-            # materialization silently degrades pruning on
-            # partitioned/stats-bounded tables
-            _carry_part(add, live_by_path.get(name))
-            actions.append({"a": "remove", "path": name})
-            if add:
-                actions.append(add)
+        adds = _write_tagged(
+            _by_origin(kept.drop("_pos"), touched), table_dir,
+            [f"MAT{nonce}-{k}.parquet" for k in range(len(touched))],
+            key=key,
+        )
+        # a materialized rewrite holds EXACTLY a subset of its
+        # origin's rows — carry the origin's partition values and
+        # column bounds (r17; nothing is assigned here), or
+        # materialization silently degrades pruning on
+        # partitioned/stats-bounded tables
+        actions += _replace_actions(
+            touched, adds, {r["path"]: r for r in live})
         return commit_actions(table_dir, actions, expects_live=touched)
     return commit_actions(table_dir, actions)
 

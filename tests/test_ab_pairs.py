@@ -106,3 +106,22 @@ def test_paired_ratio_and_its_bootstrap_interval(tmp_path, capsys):
     path.write_text("".join(json.dumps(r) + "\n" for r in runs))
     assert ab_pairs.main(["--summarize", str(path)]) == 0
     assert f"head/base {cells['ratio']:.4g} [" in capsys.readouterr().out
+
+
+def test_runs_counted_by_calls_attempted(tmp_path, capsys):
+    """A run that fits one more cycle attempts more calls; the summary
+    counts each side's runs by calls attempted."""
+    runs, _, _ = _canned()
+    for r in runs:
+        if r["side"] == "head" and r["seed"] in (302, 305):
+            r["result"]["attempted"] = 34
+        elif r["side"] == "base" and r["seed"] == 309:
+            r["result"]["attempted"] = 34
+    assert ab_pairs.attempt_counts(runs) == {
+        "fold": {"base": "10×9 34×1", "head": "10×8 34×2"}}
+
+    path = tmp_path / "runs.jsonl"
+    path.write_text("".join(json.dumps(r) + "\n" for r in runs))
+    assert ab_pairs.main(["--summarize", str(path)]) == 0
+    assert "attempted×runs: base 10×9 34×1  head 10×8 34×2" in (
+        capsys.readouterr().out)

@@ -4915,3 +4915,226 @@ def test_read_is_pinned_to_one_version_under_a_racing_commit(
         want = w.model.summary(lo, hi)
     assert not armed[0]  # the commit landed inside the read
     assert tuple(_table_agg(got)) == want
+
+
+# ------------------------------------------- one-job per-origin rewrites
+
+_RW_SCHEMA = ("o_orderkey long, o_orderstatus string, o_totalprice double, "
+              "o_orderdate date, o_orderpriority string")
+
+
+def _rw_rows(keys, status=None):
+    import datetime as dt
+
+    return [(k, status or "OF"[k % 2], 100.0 + k,
+             dt.date(1995, 1, 1) + dt.timedelta(days=k), f"{k % 5}-P")
+            for k in keys]
+
+
+def _rw_table(spark, tmp_path, name, ranges):
+    """One append_with_stats file F<i> per key range, o_totalprice
+    (100 + key) bounded."""
+    d = str(tmp_path / name)
+    os.makedirs(os.path.join(d, tl.LOG_SUBDIR))
+    os.makedirs(os.path.join(d, tl.DATA_SUBDIR))
+    for i, (lo, hi) in enumerate(ranges):
+        tl.append_with_stats(
+            spark, d, spark.createDataFrame(_rw_rows(range(lo, hi)), _RW_SCHEMA),
+            f"F{i}.parquet", ["o_totalprice"])
+    return d
+
+
+def _price_bound(rows):
+    return {"o_totalprice": ["num", str(min(r[2] for r in rows)),
+                             str(max(r[2] for r in rows))]}
+
+
+def _check_rewrite(d, version, removes, expected, cstats):
+    """The commit at ``version`` removes ``removes`` and adds exactly
+    the files of ``expected`` (name -> rows in key order): each file
+    holds those rows in that order, and its add action equals one
+    built from those rows (``cstats``: name -> expected bounds)."""
+    import pyarrow.parquet as pq
+
+    with open(os.path.join(d, tl.LOG_SUBDIR, f"{version:08d}.json")) as f:
+        acts = [json.loads(ln) for ln in f if ln.strip()]
+    assert [a["path"] for a in acts if a["a"] == "remove"] == removes
+    adds = [a for a in acts if a["a"] == "add"]
+    assert [a["path"] for a in adds] == list(expected)
+    for a in adds:
+        rows = expected[a["path"]]
+        path = os.path.join(d, tl.DATA_SUBDIR, a["path"])
+        got = [tuple(r.values()) for r in pq.read_table(path).to_pylist()]
+        assert got == rows, a["path"]
+        ref = {"a": "add", "path": a["path"], "n_rows": len(rows),
+               "n_bytes": os.path.getsize(path),
+               "min_key": min(r[0] for r in rows),
+               "max_key": max(r[0] for r in rows),
+               "min_date": str(min(r[3] for r in rows)),
+               "max_date": str(max(r[3] for r in rows)),
+               "cstats": cstats[a["path"]]}
+        assert {k: v for k, v in a.items() if k not in ("v", "ts")} == ref
+    assert not [p for p in os.listdir(os.path.join(d, tl.DATA_SUBDIR))
+                if p.endswith(".scratch")]
+
+
+_RW_RANGES = [(0, 50), (50, 100), (100, 150), (300, 350)]
+
+
+@pytest.mark.parametrize("verb", [
+    "delete_where_cow", "update_where_cow", "merge_table",
+    "materialize_deletes", "optimize_table"])
+def test_rewrite_verbs_write_each_output_file_from_its_origin(
+        spark, tmp_path, verb):
+    """Each rewrite verb writes all its output files in one job: per
+    touched origin (or OPTIMIZE bucket) one file of exactly its rows,
+    sorted by key, under the verb's names, with an add action that
+    matches the file; an origin or bucket left without rows writes no
+    file and no add (F1 here, OPTIMIZE's bucket 2)."""
+    d = _rw_table(spark, tmp_path, "t", _RW_RANGES)
+    origin = {f"F{i}.parquet": _rw_rows(range(lo, hi))
+              for i, (lo, hi) in enumerate(_RW_RANGES)}
+    names = sorted(origin)
+    carried = {}  # output file -> its origin's recorded bounds
+
+    def keep(pred, prefix, paths=names):
+        out = {}
+        for k, p in enumerate(paths):
+            rows = [r for r in origin[p] if not pred(r[0])]
+            if rows:
+                out[f"{prefix}-{k}.parquet"] = rows
+                carried[f"{prefix}-{k}.parquet"] = _price_bound(origin[p])
+        return out
+
+    if verb == "delete_where_cow":
+        v = tl.delete_where_cow(
+            spark, d, "o_orderkey BETWEEN 50 AND 99 OR o_orderkey % 10 = 3")
+        want = keep(lambda k: 50 <= k <= 99 or k % 10 == 3, "DEL4")
+        _check_rewrite(d, v, names, want, carried)
+    elif verb == "update_where_cow":
+        v = tl.update_where_cow(spark, d, "o_orderkey % 10 = 3",
+                                {"o_orderstatus": "'U'"})
+        want = {f"UPD4-{k}.parquet": [
+            (r[0], "U", *r[2:]) if r[0] % 10 == 3 else r for r in origin[p]]
+            for k, p in enumerate(names)}
+        # o_totalprice is not assigned: the origin's bound carries
+        _check_rewrite(d, v, names, want, {
+            f"UPD4-{k}.parquet": _price_bound(origin[p])
+            for k, p in enumerate(names)})
+    elif verb == "merge_table":
+        import datetime as dt
+
+        new = {k: (k, "X", 999.0, dt.date(1998, 1, 1), "9-Z")
+               for k in (3, 60, 120, 303, 500, 501)}
+        # the source's columns in another order: the insert file shares
+        # the rewrites' write job, so it takes the table's column order
+        src = spark.createDataFrame(list(new.values()), _RW_SCHEMA).select(
+            "o_orderpriority", "o_orderkey", "o_orderdate",
+            "o_totalprice", "o_orderstatus")
+        v = tl.merge_table(spark, d, src)
+        want = {f"MRG4-{k}.parquet": [new.get(r[0], r) for r in origin[p]]
+                for k, p in enumerate(names)}
+        want["MRG4-ins.parquet"] = [new[500], new[501]]
+        _check_rewrite(d, v, names, want,
+                       {n: _price_bound(rows) for n, rows in want.items()})
+    elif verb == "materialize_deletes":
+        tl.delete_keys_mor(spark, d, spark.createDataFrame(
+            [(k,) for k in [3, 303, *range(50, 100)]], "o_orderkey long"))
+        v = tl.materialize_deletes(spark, d)
+        # F2 lies inside the deleted keys' range but holds none of them
+        touched = ["F0.parquet", "F1.parquet", "F3.parquet"]
+        want = keep(lambda k: k in (3, 303) or 50 <= k <= 99, "MAT5",
+                    touched)
+        assert list(want) == ["MAT5-0.parquet", "MAT5-2.parquet"]
+        _check_rewrite(d, v, ["KD4.parquet", *touched], want, carried)
+    else:
+        dest = d + "_opt"
+        tl.optimize_table(spark, d, dest, n_files=4)
+        rows = sorted(r for p in names for r in origin[p])
+        width = 349 // 4 + 1  # (max key - min key) div n_files + 1
+        want = {}
+        for b in range(4):
+            part = [r for r in rows if r[0] // width == b]
+            if part:
+                want[f"OPT4-{b}.parquet"] = part
+        assert list(want) == ["OPT4-0.parquet", "OPT4-1.parquet",
+                              "OPT4-3.parquet"]
+        _check_rewrite(dest, 4, names, want,
+                       {n: _price_bound(r) for n, r in want.items()})
+
+
+def _rewrite_call(spark, d, verb, n):
+    """A zero-argument call of ``verb`` that touches every file of the
+    n-file table ``d`` (keys 100*i .. 100*i + 19 in file i)."""
+    hit = [100 * i + 3 for i in range(n)]
+    if verb == "delete_where_cow":
+        return lambda: tl.delete_where_cow(spark, d, "o_orderkey % 10 = 3")
+    if verb == "update_where_cow":
+        return lambda: tl.update_where_cow(
+            spark, d, "o_orderkey % 10 = 3", {"o_orderstatus": "'U'"})
+    if verb == "merge_table":
+        src = spark.createDataFrame(
+            _rw_rows([*hit, 10_000], status="X"), _RW_SCHEMA)
+        return lambda: tl.merge_table(spark, d, src)
+    if verb == "materialize_deletes":
+        tl.delete_keys_mor(spark, d, spark.createDataFrame(
+            [(k,) for k in hit], "o_orderkey long"))
+        return lambda: tl.materialize_deletes(spark, d)
+    return lambda: tl.optimize_table(spark, d, d + "_opt", n_files=n)
+
+
+@pytest.mark.parametrize("verb", [
+    "delete_where_cow", "update_where_cow", "merge_table",
+    "materialize_deletes", "optimize_table"])
+def test_rewrite_verbs_start_as_many_jobs_for_2_files_as_for_6(
+        spark, tmp_path, verb):
+    """One write job per call: a rewrite of 6 files starts no more
+    Spark jobs than a rewrite of 2."""
+    jobs = []
+    for n in (2, 6):
+        d = _rw_table(spark, tmp_path, f"t{n}",
+                      [(100 * i, 100 * i + 20) for i in range(n)])
+        call = _rewrite_call(spark, d, verb, n)
+        v, ids = _jobs_in(spark, f"{verb}-{n}", call)
+        jobs.append(len(ids))
+    assert jobs[0] == jobs[1], jobs
+
+
+def test_split_writes_refuse_instead_of_dropping_rows(spark, tmp_path):
+    """Under ``spark.sql.files.maxRecordsPerFile`` a write due to land
+    as one file splits into several part files; publishing one of them
+    would drop the others' rows (and record the one file's count), so
+    the single-file writer and the one-job rewrite both refuse, typed,
+    leaving no file and no commit behind."""
+    d = _rw_table(spark, tmp_path, "t", [(0, 300)])
+    dest = str(tmp_path / "one.parquet")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "100")
+    try:
+        with pytest.raises(tl.SplitFileError):
+            tl._write_one_file(spark.range(1000).withColumnRenamed(
+                "id", "o_orderkey"), dest)
+        with pytest.raises(tl.SplitFileError):
+            tl.delete_where_cow(spark, d, "o_orderkey = 3")
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+    assert os.listdir(os.path.join(d, tl.DATA_SUBDIR)) == ["F0.parquet"]
+    assert tl._latest_version(d) == 0
+
+
+def test_optimize_keeps_the_column_bounds_pruning_uses(spark, tmp_path):
+    """OPTIMIZE's adds bound every column a live file bounds, from each
+    new file's footer, so a stats-pruned read keeps skipping files
+    after the rewrite (before, the adds carried key and date bounds
+    only, and every new file stayed a candidate)."""
+    d = _rw_table(spark, tmp_path, "t",
+                  [(0, 100), (100, 200), (200, 300), (300, 400)])
+
+    def kept(t):
+        return [r["path"] for r in
+                tl.candidate_files_where(spark, t, "o_totalprice", 120, 180)]
+
+    assert kept(d) == ["F0.parquet"]
+    tl.optimize_table(spark, d, d + "_opt", n_files=4)
+    assert kept(d + "_opt") == ["OPT4-0.parquet"]
+    assert len(tl._snapshot(d + "_opt").files) == 4

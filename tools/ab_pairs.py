@@ -20,7 +20,10 @@ RNG seed, so a summary repeats exactly), the pairs the head side wins
 (by the metric's ``better`` in ``BENCHMARK.json``), and whether the
 claim rule holds: the head wins at least 9 of every 10 pairs and its
 median beats the base median by more than the base side's
-interquartile range.
+interquartile range.  Above the metrics it prints each side's runs
+counted by calls attempted (``22×9 34×1``: nine runs of 22 calls, one
+of 34): a run whose window fits one more whole cycle shifts the tail
+and per-row metrics, and the counts show how often each side did.
 """
 
 from __future__ import annotations
@@ -137,9 +140,25 @@ def summarize(runs: list[dict], better: dict[str, str]) -> dict:
     return out
 
 
-def print_summary(summary: dict) -> None:
+def attempt_counts(runs: list[dict]) -> dict[str, dict[str, str]]:
+    """Per workload and side, its runs counted by calls attempted, as
+    ``"22×9 34×1"`` (attempted × runs, fewest attempted first)."""
+    tally: dict[str, dict[str, dict[int, int]]] = {}
+    for r in runs:
+        side = tally.setdefault(r["workload"], {}).setdefault(r["side"], {})
+        n = r["result"]["attempted"]
+        side[n] = side.get(n, 0) + 1
+    return {wl: {s: " ".join(f"{n}×{k}" for n, k in sorted(c.items()))
+                 for s, c in by.items()}
+            for wl, by in tally.items()}
+
+
+def print_summary(summary: dict, counts: dict | None = None) -> None:
     for wl, per in summary.items():
         print(f"workload {wl}")
+        if counts and wl in counts:
+            print("  attempted×runs: " + "  ".join(
+                f"{s} {counts[wl][s]}" for s in SIDES if s in counts[wl]))
         for name, row in per.items():
             sides = "  ".join(
                 f"{s} {row[s]['median']:.6g} [{row[s]['q1']:.6g}-{row[s]['q3']:.6g}]"
@@ -186,7 +205,7 @@ def main(argv=None) -> int:
                         f.write(line + "\n")
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-    print_summary(summarize(runs, directions()))
+    print_summary(summarize(runs, directions()), attempt_counts(runs))
     return 0
 
 
