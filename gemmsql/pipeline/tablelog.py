@@ -1694,13 +1694,15 @@ def optimize_table(
         bucket_col, src = "o_orderkey", df
     width = (gmax - gmin) // n_files + 1
     # an empty key-range bucket writes neither a data file nor an add
-    # action (ADVICE r12 #2); every column a live file bounds stays
-    # bounded, from each new file's footer, so pruning survives
+    # action (ADVICE r12 #2); a NULL key, in no range, joins bucket 0
+    # (no key predicate matches it, so the bucket's bounds stay true);
+    # every column a live file bounds stays bounded, from each new
+    # file's footer, so pruning survives
     bounded = {c for r in live for c in (r["cstats"] or {})}
     adds = _write_tagged(
-        src.withColumn(
-            _OUT, F.expr(f"({bucket_col} - {gmin}) div {width}")
-        ).drop("__z"),
+        src.withColumn(_OUT, F.coalesce(
+            F.expr(f"({bucket_col} - {gmin}) div {width}"), F.lit(0)
+        )).drop("__z"),
         dest_dir,
         [f"OPT{new_v}-{k}.parquet" for k in range(n_files)],
         stat_cols=sorted(bounded & set(df.columns)),
@@ -5378,11 +5380,11 @@ def _write_tagged(
         .parquet(scratch)
     )
     types = dict(df.dtypes)
-    written = {
-        int(d.rsplit("=", 1)[1]): d
-        for d in _glob.glob(os.path.join(scratch, f"{_OUT}=*"))
-    }
     try:
+        written = {
+            int(d.rsplit("=", 1)[1]): d
+            for d in _glob.glob(os.path.join(scratch, f"{_OUT}=*"))
+        }
         adds = dict(zip(sorted(written), _publish(
             df.sparkSession, table_dir,
             [(_one_part(written[i]), names[i]) for i in sorted(written)],
@@ -5606,7 +5608,7 @@ def merge_table(
     nonce = _next_version_nonce(table_dir)
     names = [f"MRG{nonce}-{k}.parquet" for k in range(len(touched))]
     names.append(f"MRG{nonce}-ins.parquet")
-    out = source.withColumn(_OUT, F.lit(len(touched)))
+    inserts = source
     assigned: frozenset = frozenset()
     if touched:
         tgt = tagged.filter(F.col("_path").isin(touched))
@@ -5639,12 +5641,13 @@ def merge_table(
         # and any collision makes its file touched — so the touched
         # files' keys are exactly the matched keys
         inserts = source.join(tgt.select(key), key, "left_anti")
-        # per-ORIGIN-file rewrite preserves the table's clustering:
-        # each touched file maps to one replacement file carrying
-        # exactly its (updated) rows; the inserts file rides the same
-        # write job, so it takes the rewrites' column order
-        out = _by_origin(rewritten, touched).unionByName(
-            inserts.withColumn(_OUT, F.lit(len(touched))))
+    # per-ORIGIN-file rewrite preserves the table's clustering: each
+    # touched file maps to one replacement file carrying exactly its
+    # (updated) rows; the inserts file rides the same write job, so
+    # it takes the rewrites' column order
+    out = inserts.withColumn(_OUT, F.lit(len(touched)))
+    if touched:
+        out = _by_origin(rewritten, touched).unionByName(out)
     # every rewrite bounds each column any live file bounds, from its
     # own footer: matched rows take source values, so an origin's
     # bound no longer holds, and without one pruning stops at a merge

@@ -5138,3 +5138,21 @@ def test_optimize_keeps_the_column_bounds_pruning_uses(spark, tmp_path):
     tl.optimize_table(spark, d, d + "_opt", n_files=4)
     assert kept(d + "_opt") == ["OPT4-0.parquet"]
     assert len(tl._snapshot(d + "_opt").files) == 4
+
+
+def test_optimize_keeps_rows_with_a_null_key(spark, tmp_path):
+    """A NULL key falls in no key-range bucket: OPTIMIZE writes its row
+    into the first bucket (it dropped the row before)."""
+    import datetime as dt
+
+    d = _rw_table(spark, tmp_path, "t", [(0, 10)])
+    tl.append_with_stats(spark, d, spark.createDataFrame(
+        _rw_rows(range(10, 20)) + [(None, "O", 5.0, dt.date(1995, 1, 2), "1-P")],
+        _RW_SCHEMA), "F1.parquet", ["o_totalprice"])
+    tl.optimize_table(spark, d, d + "_opt", n_files=2)
+    got = tl.snapshot_read(spark, d + "_opt").select(
+        "o_orderkey", tl.F.input_file_name().alias("f")).collect()
+    assert sorted((r["o_orderkey"] for r in got), key=str) == sorted(
+        [*range(20), None], key=str)
+    (null_row,) = [r for r in got if r["o_orderkey"] is None]
+    assert null_row["f"].endswith("OPT2-0.parquet")
