@@ -58,7 +58,7 @@ import re
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -201,6 +201,21 @@ def _one_part(scratch: str) -> str:
     return parts[0]
 
 
+#: the table log's parquet format, for every data file and checkpoint
+#: it writes: zstd column chunks in v2 pages, whose delta encodings
+#: store a sorted key column in a few bytes per page.  Readers need no
+#: setting, so a snapshot may mix these files with ones written in
+#: Spark's default (snappy, v1 pages) format.
+_PARQUET_FORMAT = {"compression": "zstd", "parquet.writer.version": "v2"}
+
+
+def _parquet_writer(df: DataFrame) -> DataFrameWriter:
+    """``df``'s overwriting writer in the table log's parquet format
+    (:data:`_PARQUET_FORMAT`); every table-log parquet write starts
+    here."""
+    return df.write.options(**_PARQUET_FORMAT).mode("overwrite")
+
+
 def _write_one_file(
     df: DataFrame, dest: str, *, sort_key: str = "o_orderkey"
 ) -> None:
@@ -208,12 +223,8 @@ def _write_one_file(
     ``dest`` (Spark names its own part files, so write to a scratch
     dir and move the one part out)."""
     scratch = f"{dest}.scratch"
-    (
-        df.coalesce(1)
-        .sortWithinPartitions(sort_key)
-        .write.mode("overwrite")
-        .parquet(scratch)
-    )
+    _parquet_writer(df.coalesce(1).sortWithinPartitions(sort_key)).parquet(
+        scratch)
     try:
         os.replace(_one_part(scratch), dest)
     finally:
@@ -383,9 +394,9 @@ def write_checkpoint(
     the next through :func:`_snapshot`)."""
     dest = _checkpoint_dir(table_dir, version)
     snap = _snapshot(table_dir, version)
-    spark.createDataFrame(
+    _parquet_writer(spark.createDataFrame(
         [*snap.files, *snap.meta], LOG_SCHEMA
-    ).coalesce(1).write.mode("overwrite").parquet(dest)
+    ).coalesce(1)).parquet(dest)
     return dest
 
 
@@ -3739,13 +3750,12 @@ def _stage_partitioned_files(
         )
         sort_key = log2phys[key]
     scratch = os.path.join(table_dir, DATA_SUBDIR, f"{prefix}.scratch")
-    (
+    # the sort leads with the partition columns, so the planned
+    # write's own sort on them keeps each file's key order
+    _parquet_writer(
         routed.repartition(*[F.col(s) for s in shadow])
-        .sortWithinPartitions(sort_key)
-        .write.mode("overwrite")
-        .partitionBy(*shadow)
-        .parquet(scratch)
-    )
+        .sortWithinPartitions(*shadow, sort_key)
+    ).partitionBy(*shadow).parquet(scratch)
     # per-partition stats from the WRITTEN files (_file_add_action).
     # Partition values come from the scratch directory names, which
     # equal str(value) by the _encode_part_value charset contract —
@@ -5296,12 +5306,9 @@ def _write_with_add_actions(
         return [add] if add else []
     base = name[:-8] if name.endswith(".parquet") else name
     scratch = os.path.join(table_dir, DATA_SUBDIR, f"{base}.scratch")
-    (
-        df.repartitionByRange(n_files, key)
-        .sortWithinPartitions(key)
-        .write.mode("overwrite")
-        .parquet(scratch)
-    )
+    _parquet_writer(
+        df.repartitionByRange(n_files, key).sortWithinPartitions(key)
+    ).parquet(scratch)
     # part files sort in partition-index order == ascending key
     # ranges (repartitionByRange), so publication order is the
     # clustered order; an empty range writes no part file
@@ -5368,17 +5375,15 @@ def _write_tagged(
     rows writes no file (None); an index split over several part
     files refuses (:class:`SplitFileError`).
 
-    One hash repartition on the index puts each output whole into one
-    task, and ``partitionBy`` keeps the index out of the files — so a
-    rewrite of N files scans its inputs once, not once per file."""
+    ``repartitionById`` sends index ``i`` to task ``i``, so each
+    output is written whole by a task of its own, and ``partitionBy``
+    keeps the index out of the files — so a rewrite of N files scans
+    its inputs once, not once per file."""
     scratch = os.path.join(table_dir, DATA_SUBDIR, f"{names[0]}.scratch")
-    (
-        df.repartition(len(names), _OUT)
+    _parquet_writer(
+        df.repartitionById(len(names), F.col(_OUT).cast("int"))
         .sortWithinPartitions(_OUT, key)
-        .write.mode("overwrite")
-        .partitionBy(_OUT)
-        .parquet(scratch)
-    )
+    ).partitionBy(_OUT).parquet(scratch)
     types = dict(df.dtypes)
     try:
         written = {
@@ -6025,7 +6030,9 @@ def delete_where_cow(
     if not touched:
         raise ValueError("delete predicate matched no rows")
     nonce = _next_version_nonce(table_dir)
-    kept, phys_key = _to_physical(tagged.filter(~hit), mapping, key)
+    # SQL DELETE keeps a row whose predicate is NULL
+    kept, phys_key = _to_physical(
+        tagged.filter(~F.coalesce(hit, F.lit(False))), mapping, key)
     adds = _write_tagged(
         _by_origin(kept, touched), table_dir,
         [f"DEL{nonce}-{k}.parquet" for k in range(len(touched))],

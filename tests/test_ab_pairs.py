@@ -125,3 +125,30 @@ def test_runs_counted_by_calls_attempted(tmp_path, capsys):
     assert ab_pairs.main(["--summarize", str(path)]) == 0
     assert "attempted×runs: base 10×9 34×1  head 10×8 34×2" in (
         capsys.readouterr().out)
+
+
+def test_medians_within_each_attempted_group(tmp_path, capsys):
+    """Runs that differ in calls attempted get each side's median per
+    attempted group, so a bimodal metric is compared like with like;
+    a workload whose runs all attempt the same calls gets none."""
+    runs, _, _ = _canned()
+    assert ab_pairs.medians_by_attempted(runs) == {}
+    for r in runs:
+        two = r["seed"] in (302, 305) or (r["side"] == "base" and r["seed"] == 309)
+        if two:
+            r["result"]["attempted"] = 34
+        scale = 0.5 if r["side"] == "head" else 1.0
+        r["result"]["metrics"]["disk_bytes_per_row"] = {
+            "value": scale * (42.2 if two else 26.35), "unit": "B/row"}
+    got = ab_pairs.medians_by_attempted(runs)["fold"]["disk_bytes_per_row"]
+    assert got == {10: {"base": 26.35, "head": 13.175},
+                   34: {"base": 42.2, "head": 21.1}}
+    cells = ab_pairs.medians_by_attempted(runs)["fold"]["cells_per_s"]
+    assert cells[34] == {"base": float(np.median([7.0, 6.8, 6.4])),
+                         "head": float(np.median([8.5, 8.9]))}
+
+    path = tmp_path / "runs.jsonl"
+    path.write_text("".join(json.dumps(r) + "\n" for r in runs))
+    assert ab_pairs.main(["--summarize", str(path)]) == 0
+    assert "disk_bytes_per_row 10: 26.35 → 13.175, 34: 42.2 → 21.1" in (
+        capsys.readouterr().out)

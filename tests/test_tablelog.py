@@ -5156,3 +5156,286 @@ def test_optimize_keeps_rows_with_a_null_key(spark, tmp_path):
         [*range(20), None], key=str)
     (null_row,) = [r for r in got if r["o_orderkey"] is None]
     assert null_row["f"].endswith("OPT2-0.parquet")
+
+
+def _chunks(path):
+    """``{column path: (compression, encodings)}`` of every column
+    chunk in the parquet file at ``path``."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    out = {}
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for c in range(rg.num_columns):
+            ch = rg.column(c)
+            comp, enc = out.get(ch.path_in_schema, (set(), set()))
+            out[ch.path_in_schema] = (comp | {ch.compression},
+                                      enc | set(ch.encodings))
+    return out
+
+
+def _codec(path):
+    """The one compression codec of every column chunk in ``path``."""
+    (codec,) = set.union(*[comp for comp, _ in _chunks(path).values()])
+    return codec
+
+
+def _assert_log_format(path, key):
+    """Every column chunk of ``path`` is zstd in v2 pages (no v1-only
+    encoding names), and ``key`` is delta-encoded."""
+    chunks = _chunks(path)
+    for col, (comp, enc) in chunks.items():
+        assert comp == {"ZSTD"}, (path, col, comp)
+        assert not enc & {"PLAIN_DICTIONARY", "BIT_PACKED"}, (path, col, enc)
+    assert "DELTA_BINARY_PACKED" in chunks[key][1], (path, chunks[key])
+
+
+def _written_files(spark, d, path):
+    """The data files a writer path wrote on the table ``d``, and the
+    key they are sorted by."""
+    import glob
+
+    data = os.path.join(d, tl.DATA_SUBDIR)
+    before = set(os.listdir(data))
+    if path == "append_with_stats":
+        tl.append_with_stats(spark, d, spark.createDataFrame(
+            _rw_rows(range(400, 700)), _RW_SCHEMA), "N.parquet",
+            ["o_totalprice"])
+    elif path == "delete_keys_mor":
+        tl.delete_keys_mor(spark, d, spark.createDataFrame(
+            [(k,) for k in range(10, 40)], "o_orderkey long"))
+    elif path == "merge_table":
+        tl.merge_table(spark, d, spark.createDataFrame(
+            _rw_rows([*range(5, 25), *range(900, 950)], status="X"),
+            _RW_SCHEMA))
+    elif path == "materialize_deletes":
+        tl.delete_keys_mor(spark, d, spark.createDataFrame(
+            [(k,) for k in range(10, 40)], "o_orderkey long"))
+        before = set(os.listdir(data))
+        tl.materialize_deletes(spark, d)
+    elif path == "_write_with_add_actions":
+        adds = tl._write_with_add_actions(
+            spark.createDataFrame(_rw_rows(range(400, 700)), _RW_SCHEMA),
+            d, "W.parquet", n_rows=300, max_rows_per_file=100)
+        assert len(adds) == 3
+    elif path == "append_partitioned":
+        tl.set_partition_spec(d, ["o_orderstatus"])
+        tl.append_partitioned(spark, d, spark.createDataFrame(
+            _rw_rows(range(400, 700)), _RW_SCHEMA), "P")
+    else:
+        dest = tl.write_checkpoint(spark, d, tl._latest_version(d))
+        return glob.glob(os.path.join(dest, "part-*.parquet")), "n_rows"
+    return [os.path.join(data, p)
+            for p in sorted(set(os.listdir(data)) - before)], "o_orderkey"
+
+
+_WRITER_PATHS = ["append_with_stats", "delete_keys_mor", "merge_table",
+                 "materialize_deletes", "_write_with_add_actions",
+                 "append_partitioned", "write_checkpoint"]
+
+
+@pytest.mark.parametrize("path", _WRITER_PATHS)
+def test_every_writer_path_writes_zstd_v2_pages(spark, tmp_path, path):
+    """Each table-log writer writes its files in the log's parquet
+    format: zstd column chunks in v2 pages, the sorted key (a
+    checkpoint's row counts) delta-encoded."""
+    d = _rw_table(spark, tmp_path, "t", [(0, 100), (100, 300)])
+    files, key = _written_files(spark, d, path)
+    assert files
+    for f in files:
+        _assert_log_format(f, key)
+
+
+def test_a_snapshot_mixing_both_parquet_formats_reads_like_its_model(
+        spark, tmp_path, monkeypatch):
+    """Files written in Spark's default format (snappy, v1 pages)
+    stay readable beside zstd/v2 ones: a table whose live files mix
+    both reads equal to its model through the MOR and pruned reads, a
+    version read, MERGE and materialize, and DuckDB reads the live
+    files to the same rows."""
+    import datetime as dt
+
+    import duckdb
+
+    def rows_of(df):
+        return sorted(tuple(r) for r in df.select(
+            "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate",
+            "o_orderpriority").collect())
+
+    def snappy_v1(fn):
+        with monkeypatch.context() as m:
+            m.setattr(tl, "_PARQUET_FORMAT", {
+                "compression": "snappy", "parquet.writer.version": "v1"})
+            return fn()
+
+    d = snappy_v1(lambda: _rw_table(
+        spark, tmp_path, "t", [(0, 100), (100, 200)]))
+    tl.append_with_stats(spark, d, spark.createDataFrame(
+        _rw_rows(range(200, 300)), _RW_SCHEMA), "F2.parquet",
+        ["o_totalprice"])
+    model = {r[0]: r for r in _rw_rows(range(300))}
+    v_three_files = tl._latest_version(d)
+
+    def check():
+        assert rows_of(tl.snapshot_read_mor(spark, d)) == sorted(
+            model.values())
+        lo, hi = dt.date(1995, 3, 1), dt.date(1995, 6, 30)
+        assert rows_of(tl.stats_pruned_read_where(
+            spark, d, "o_orderdate", lo, hi)) == sorted(
+            r for r in model.values() if lo <= r[3] <= hi)
+
+    # keys 50..59 (old file F0) and 250..259 (new file F2) deleted MOR
+    snappy_v1(lambda: tl.delete_keys_mor(spark, d, spark.createDataFrame(
+        [(k,) for k in range(50, 60)], "o_orderkey long")))
+    tl.delete_keys_mor(spark, d, spark.createDataFrame(
+        [(k,) for k in range(250, 260)], "o_orderkey long"))
+    for k in [*range(50, 60), *range(250, 260)]:
+        del model[k]
+    check()
+    tl.materialize_deletes(spark, d)
+    check()
+    new = _rw_rows([*range(260, 270), 1000, 1001], status="X")
+    tl.merge_table(spark, d, spark.createDataFrame(new, _RW_SCHEMA))
+    model.update({r[0]: r for r in new})
+    check()
+    assert rows_of(tl.snapshot_read(spark, d, v_three_files)) == sorted(
+        _rw_rows(range(300)))
+
+    live = [os.path.join(d, tl.DATA_SUBDIR, r["path"])
+            for r in tl._snapshot(d).files]
+    # F1 untouched; F0, F2's rewrite and MERGE's insert file zstd
+    assert sorted(_codec(p) for p in live) == ["SNAPPY", *["ZSTD"] * 3]
+    got = duckdb.sql(
+        "SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderdate, "
+        "o_orderpriority FROM read_parquet(["
+        + ", ".join(f"'{p}'" for p in live) + "])").fetchall()
+    assert sorted(got) == sorted(model.values())
+
+
+def test_time_travel_over_a_staged_table_of_both_formats_matches_duckdb(
+        spark, tmp_path, monkeypatch):
+    """The staged lifecycle with its first two versions' files in
+    Spark's default format (snappy, v1 pages) and the rest zstd/v2:
+    ``time_travel_read`` equals its DuckDB twin at every version."""
+    import duckdb
+
+    from tests.conftest import SF_SMOKE
+
+    write = tl._write_one_file
+
+    def mixed(df, dest, **kw):
+        if os.path.basename(dest)[0] in "AB":
+            with monkeypatch.context() as m:
+                m.setattr(tl, "_PARQUET_FORMAT", {
+                    "compression": "snappy",
+                    "parquet.writer.version": "v1"})
+                return write(df, dest, **kw)
+        return write(df, dest, **kw)
+
+    monkeypatch.setattr(tl, "_table_dir", lambda sf: str(tmp_path / "tt"))
+    monkeypatch.setattr(tl, "_write_one_file", mixed)
+    got = sorted(tuple(r) for r in
+                 tl.time_travel_read(spark, SF_SMOKE).collect())
+    data = os.path.join(str(tmp_path / "tt"), tl.DATA_SUBDIR)
+    codec = {p[:2]: _codec(os.path.join(data, p)) for p in os.listdir(data)}
+    assert codec["A0"] == codec["B1"] == "SNAPPY"
+    assert codec["C0"] == codec["E0"] == "ZSTD"
+    want = sorted(duckdb.sql(tl.time_travel_read_sql(SF_SMOKE)).fetchall())
+    assert got == want and {r[0] for r in got} == {0, 1, 2, 3}
+
+
+def test_every_parquet_write_goes_through_the_format_helper():
+    """Every DataFrame ``.write`` in ``tablelog.py`` sits in
+    ``_parquet_writer``, so one constant decides the table log's
+    parquet format; the one exception is the streaming IVM gate's
+    emission sink (``upsert``), which writes no table-log file."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(tl))
+    called = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+    writes = []
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            if (isinstance(child, ast.Attribute) and child.attr == "write"
+                    and id(child) not in called):
+                writes.append(scope)
+            visit(child, inner)
+
+    visit(tree, None)
+    assert sorted(writes) == ["_parquet_writer", "upsert"]
+
+
+@pytest.mark.parametrize("n", [2, 4])
+def test_tagged_write_runs_one_task_per_output_file(
+        spark, tmp_path, monkeypatch, n):
+    """``_write_tagged`` writes output ``i`` in task ``i``: no two
+    published files come from one write task (a hash repartition on
+    the index put 2 outputs both in task 1, and 3 of 4 in task 3)."""
+    import re
+
+    d = _rw_table(spark, tmp_path, "t", [(0, 10)])
+    parts = []
+    one_part = tl._one_part
+
+    def record(scratch):
+        part = one_part(scratch)
+        parts.append(os.path.basename(part))
+        return part
+
+    monkeypatch.setattr(tl, "_one_part", record)
+    df = spark.createDataFrame(_rw_rows(range(200)), _RW_SCHEMA).withColumn(
+        tl._OUT, (tl.F.col("o_orderkey") % n).cast("int"))
+    adds = tl._write_tagged(df, d, [f"T{i}.parquet" for i in range(n)])
+    assert [a["n_rows"] for a in adds] == [200 // n] * n
+    tasks = [int(re.match(r"part-(\d+)-", p).group(1)) for p in parts]
+    assert sorted(tasks) == list(range(n)), parts
+
+
+def test_partitioned_append_files_are_key_sorted(spark, tmp_path):
+    """``append_partitioned`` sorts each file by key: the partition
+    columns lead the sort, so the planned write's own sort on them
+    keeps the key order (it dropped it before)."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    d = _rw_table(spark, tmp_path, "t", [(0, 10)])
+    tl.set_partition_spec(d, ["o_orderpriority"])
+    keys = list(range(10, 5010))
+    random.Random(7).shuffle(keys)
+    rows = [(*r[:4], f"{r[0] % 4}-P") for r in _rw_rows(keys)]
+    tl.append_partitioned(
+        spark, d, spark.createDataFrame(rows, _RW_SCHEMA), "P")
+    files = [p for p in os.listdir(os.path.join(d, tl.DATA_SUBDIR))
+             if p.startswith("P-")]
+    assert len(files) == 4
+    for p in files:
+        got = pq.read_table(os.path.join(d, tl.DATA_SUBDIR, p)).column(
+            "o_orderkey").to_pylist()
+        assert len(got) == 1250 and got == sorted(got), p
+
+
+def test_delete_where_keeps_rows_whose_predicate_is_null(spark, tmp_path):
+    """SQL DELETE ... WHERE keeps a row whose predicate is NULL; the
+    copy-on-write delete dropped the NULL-status rows with the hits."""
+    import datetime as dt
+
+    d = str(tmp_path / "t")
+    os.makedirs(os.path.join(d, tl.LOG_SUBDIR))
+    os.makedirs(os.path.join(d, tl.DATA_SUBDIR))
+    status = ["O"] * 5 + ["F"] * 10 + [None] * 5
+    rows = [(k, s, 1.0, dt.date(1995, 1, 1), "1-P")
+            for k, s in enumerate(status)]
+    tl.append_with_stats(spark, d, spark.createDataFrame(rows, _RW_SCHEMA),
+                         "F0.parquet", [])
+    tl.delete_where_cow(spark, d, "o_orderstatus = 'O'")
+    got = tl.snapshot_read(spark, d).select(
+        "o_orderkey", "o_orderstatus").collect()
+    assert sorted(r["o_orderkey"] for r in got) == list(range(5, 20))
+    assert sum(r["o_orderstatus"] is None for r in got) == 5

@@ -24,6 +24,10 @@ interquartile range.  Above the metrics it prints each side's runs
 counted by calls attempted (``22×9 34×1``: nine runs of 22 calls, one
 of 34): a run whose window fits one more whole cycle shifts the tail
 and per-row metrics, and the counts show how often each side did.
+When a workload's runs differ in calls attempted, it also prints each
+metric's base → head medians within each attempted group
+(``disk_bytes_per_row 22: 26.35 → 13.02, 34: 42.2 → 20.87``), so a
+metric that is bimodal on the cycle count is compared like with like.
 """
 
 from __future__ import annotations
@@ -153,7 +157,29 @@ def attempt_counts(runs: list[dict]) -> dict[str, dict[str, str]]:
             for wl, by in tally.items()}
 
 
-def print_summary(summary: dict, counts: dict | None = None) -> None:
+def medians_by_attempted(runs: list[dict]) -> dict[str, dict[str, dict]]:
+    """Per workload whose runs differ in calls attempted, per metric:
+    ``{attempted: {side: median}}`` over the runs of that many calls
+    (a side with no such run has no entry)."""
+    out: dict[str, dict[str, dict]] = {}
+    for wl in dict.fromkeys(r["workload"] for r in runs):
+        mine = [r for r in runs if r["workload"] == wl]
+        if len({r["result"]["attempted"] for r in mine}) < 2:
+            continue
+        vals: dict[str, dict[int, dict[str, list[float]]]] = {}
+        for r in mine:
+            for name, m in r["result"]["metrics"].items():
+                vals.setdefault(name, {}).setdefault(
+                    r["result"]["attempted"], {}).setdefault(
+                    r["side"], []).append(m["value"])
+        out[wl] = {name: {n: {s: float(np.median(v)) for s, v in by.items()}
+                          for n, by in sorted(groups.items())}
+                   for name, groups in vals.items()}
+    return out
+
+
+def print_summary(summary: dict, counts: dict | None = None,
+                  grouped: dict | None = None) -> None:
     for wl, per in summary.items():
         print(f"workload {wl}")
         if counts and wl in counts:
@@ -169,6 +195,13 @@ def print_summary(summary: dict, counts: dict | None = None) -> None:
                        f"  claim {'holds' if row['claim'] else 'fails'}"
                        if "wins" in row else "")
             print(f"  {name}: {sides}{ratio}{verdict}")
+        if grouped and wl in grouped:
+            print("  medians by calls attempted (base → head):")
+            for name, groups in grouped[wl].items():
+                print(f"    {name} " + ", ".join(
+                    f"{n}: " + " → ".join(
+                        f"{by[s]:.6g}" if s in by else "-" for s in SIDES)
+                    for n, by in groups.items()))
 
 
 def main(argv=None) -> int:
@@ -205,7 +238,8 @@ def main(argv=None) -> int:
                         f.write(line + "\n")
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-    print_summary(summarize(runs, directions()), attempt_counts(runs))
+    print_summary(summarize(runs, directions()), attempt_counts(runs),
+                  medians_by_attempted(runs))
     return 0
 
 
