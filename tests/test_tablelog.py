@@ -5247,6 +5247,11 @@ def test_every_writer_path_writes_zstd_v2_pages(spark, tmp_path, path):
         _assert_log_format(f, key)
 
 
+#: Spark's default parquet format, which table-log files had before
+#: :data:`tl._PARQUET_FORMAT`
+_SPARK_DEFAULT_FORMAT = {"compression": "snappy", "parquet.writer.version": "v1"}
+
+
 def test_a_snapshot_mixing_both_parquet_formats_reads_like_its_model(
         spark, tmp_path, monkeypatch):
     """Files written in Spark's default format (snappy, v1 pages)
@@ -5265,8 +5270,7 @@ def test_a_snapshot_mixing_both_parquet_formats_reads_like_its_model(
 
     def snappy_v1(fn):
         with monkeypatch.context() as m:
-            m.setattr(tl, "_PARQUET_FORMAT", {
-                "compression": "snappy", "parquet.writer.version": "v1"})
+            m.setattr(tl, "_PARQUET_FORMAT", _SPARK_DEFAULT_FORMAT)
             return fn()
 
     d = snappy_v1(lambda: _rw_table(
@@ -5320,16 +5324,12 @@ def test_time_travel_over_a_staged_table_of_both_formats_matches_duckdb(
     ``time_travel_read`` equals its DuckDB twin at every version."""
     import duckdb
 
-    from tests.conftest import SF_SMOKE
-
     write = tl._write_one_file
 
     def mixed(df, dest, **kw):
         if os.path.basename(dest)[0] in "AB":
             with monkeypatch.context() as m:
-                m.setattr(tl, "_PARQUET_FORMAT", {
-                    "compression": "snappy",
-                    "parquet.writer.version": "v1"})
+                m.setattr(tl, "_PARQUET_FORMAT", _SPARK_DEFAULT_FORMAT)
                 return write(df, dest, **kw)
         return write(df, dest, **kw)
 
